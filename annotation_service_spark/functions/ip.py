@@ -172,16 +172,6 @@ def range_to_cidr(low: pd.Series, high: pd.Series) -> pd.Series:
     )
 
 
-@F.pandas_udf(T.BinaryType())
-def ip_plus_one(s: pd.Series) -> pd.Series:
-    return s.map(py_plus_one, na_action="ignore")
-
-
-@F.pandas_udf(T.BinaryType())
-def ip_minus_one(s: pd.Series) -> pd.Series:
-    return s.map(py_minus_one, na_action="ignore")
-
-
 # ---------------------------------------------------------------------------
 # Native (JVM/codegen) expressions — no Python in these paths
 # ---------------------------------------------------------------------------

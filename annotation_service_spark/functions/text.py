@@ -31,11 +31,6 @@ def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 
 
-def whitespace_token_count(text: Column) -> Column:
-    """BPE-ish proxy: split on runs of whitespace only."""
-    return F.size(F.filter(F.split(text, r"\s+"), lambda w: w != ""))
-
-
 def stopword_ratio(text: Column, lang: str = "en") -> Column:
     toks = tokens(text)
     stops = F.array(*[F.lit(w) for w in LANG_PROFILES[lang]])

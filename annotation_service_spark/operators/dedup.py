@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from annotation_service_spark.caching import scoped_cache
+from annotation_service_spark.operators.banding import band_join, fingerprint_bands
 
 TOKEN_SPLIT = "[^a-z0-9]+"
 
@@ -47,12 +48,6 @@ def word_ngrams(text: Column, n: int = 3) -> Column:
             ),
         ),
     ).otherwise(F.array().cast("array<string>"))
-
-
-def seeded_hash(col: Column, seed: int) -> Column:
-    """Deterministic portable hash: md5 of 'seed|value' (hex string;
-    lexicographic min over these == uniform min-hash)."""
-    return F.md5(F.concat(F.lit(f"{seed}|"), col))
 
 
 def dedup_exact(
@@ -152,9 +147,9 @@ def _minhash_banded_rows(
     sig: DataFrame, num_hashes: int, bands: int, extra_cols: list[str]
 ) -> DataFrame:
     """Shared banding block of the MinHash family: signature table →
-    (id, *extra_cols, band, bucket) rows, one per band, bucket = md5
-    of the band's rows_per_band minima (effectively unbounded
-    keyspace)."""
+    (id, *extra_cols, band, key) rows for ``band_join``, one per band,
+    key = md5 of the band's rows_per_band minima (effectively
+    unbounded keyspace)."""
     rows_per_band = num_hashes // bands
     band_cols = []
     for b in range(bands):
@@ -164,12 +159,12 @@ def _minhash_banded_rows(
         band_cols.append(
             F.struct(
                 F.lit(b).alias("band"),
-                F.md5(F.concat_ws("|", *parts)).alias("bucket"),
+                F.md5(F.concat_ws("|", *parts)).alias("key"),
             )
         )
     return sig.select(
         "id", *extra_cols, F.explode(F.array(*band_cols)).alias("bb")
-    ).select("id", *extra_cols, "bb.band", "bb.bucket")
+    ).select("id", *extra_cols, "bb.band", "bb.key")
 
 
 def minhash_candidates(
@@ -192,15 +187,7 @@ def minhash_candidates(
     sig = scoped_cache(
         "dedup.minhash_candidates.sig", minhash_signatures(sh, num_hashes)
     )
-    banded = _minhash_banded_rows(sig, num_hashes, bands, [])
-    left = banded.select(F.col("id").alias("id_a"), "band", "bucket")
-    right = banded.select(F.col("id").alias("id_b"), "band", "bucket")
-    return (
-        left.join(right, ["band", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    return band_join(_minhash_banded_rows(sig, num_hashes, bands, []))
 
 
 def minhash_lsh_pairs(
@@ -266,43 +253,22 @@ def minhash_lsh_pairs(
     )
     if truth_pairs is not None:
         sig = minhash_signatures(sh, num_hashes)
-        banded = _minhash_banded_rows(sig, num_hashes, bands, [])
-        cand_ids = (
-            banded.select(F.col("id").alias("id_a"), "band", "bucket")
-            .join(
-                banded.select(F.col("id").alias("id_b"), "band", "bucket"),
-                ["band", "bucket"],
-            )
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
+        cand_ids = band_join(_minhash_banded_rows(sig, num_hashes, bands, []))
         return cand_ids.join(truth_pairs, ["id_a", "id_b"])
     sig = minhash_signatures(sh, num_hashes, include_size=True)
 
     # the per-doc shingle count n rides the band rows (2 extra longs
     # per row), so the Jaccard denominator needs NO extra aggregation
     # or re-join later — the sizes come out of the candidate join.
-    banded = _minhash_banded_rows(sig, num_hashes, bands, ["n"])
-
-    left = banded.select(
-        F.col("id").alias("id_a"), F.col("n").alias("na"), "band", "bucket"
-    )
-    right = banded.select(
-        F.col("id").alias("id_b"), F.col("n").alias("nb"), "band", "bucket"
-    )
-    cand = (
-        left.join(right, ["band", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "na", "nb")
-        .distinct()
+    cand = band_join(
+        _minhash_banded_rows(sig, num_hashes, bands, ["n"]), carry=["n"]
     )
 
     common = (
         cand.join(sh.select(F.col("id").alias("id_a"), "s"), "id_a")
         .join(sh.select(F.col("id").alias("id_b"), F.col("s").alias("s2")), "id_b")
         .where(F.col("s") == F.col("s2"))
-        .groupBy("id_a", "id_b", "na", "nb")
+        .groupBy("id_a", "id_b", "n_a", "n_b")
         .agg(F.count(F.lit(1)).alias("common"))
     )
     out = (
@@ -311,7 +277,7 @@ def minhash_lsh_pairs(
             "id_b",
             (
                 F.col("common").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("common"))
+                / (F.col("n_a") + F.col("n_b") - F.col("common"))
             ).alias("jaccard"),
         )
         .where(F.col("jaccard") >= threshold)
@@ -1074,51 +1040,15 @@ def band_candidates_from_fingerprints(
 ) -> DataFrame:
     """Generic banded candidate join over ANY (id, sh) fingerprint
     table (simhash, image phash, audio fingerprint): shift+mask band
-    keys, multi-probe self-equi-join, deduped (id_a, id_b) pairs
-    (optionally carrying both fingerprints for a hamming verify).
-    Fingerprints are signed longs; arithmetic shiftright's sign fill
-    lands above the band mask, so keys are correct for any bit
-    pattern with bit 63 clear."""
-    from annotation_service_spark.operators.similarity import _probe_keys
-
-    bits_per_band = bits // bands
-    mask = (1 << bits_per_band) - 1
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftright(F.col("sh"), (bands - 1 - b) * bits_per_band)
-                .bitwiseAND(F.lit(mask))
-                .alias("key"),
-            )
-            for b in range(bands)
-        ]
-    )
+    keys, multi-probe ``band_join``, deduped (id_a, id_b) pairs
+    (optionally carrying both fingerprints, sh_a / sh_b, for a
+    hamming verify)."""
     sig_cols = ["sh"] if carry_sig else []
+    band_arr = fingerprint_bands(F.col("sh"), bits, bands)
     banded = sh.select("id", *sig_cols, F.explode(band_arr).alias("bb")).select(
         "id", *sig_cols, "bb.band", "bb.key"
     )
-    left = banded.select(
-        F.col("id").alias("id_a"),
-        *([F.col("sh").alias("sh_a")] if carry_sig else []),
-        "band",
-        F.explode(_probe_keys(F.col("key"), bits_per_band, probe_bits)).alias(
-            "key"
-        ),
-    )
-    right = banded.select(
-        F.col("id").alias("id_b"),
-        *([F.col("sh").alias("sh_b")] if carry_sig else []),
-        "band",
-        "key",
-    )
-    out_cols = ["id_a", "id_b"] + (["sh_a", "sh_b"] if carry_sig else [])
-    return (
-        left.join(right, ["band", "key"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select(*out_cols)
-        .distinct()
-    )
+    return band_join(banded, carry=sig_cols, probe=(bits // bands, probe_bits))
 
 
 def simhash_candidates(
@@ -1655,15 +1585,7 @@ def weighted_minhash_candidates(
         "dedup.weighted_minhash_candidates.sig",
         minhash_signatures(expanded, num_hashes),
     )
-    banded = _minhash_banded_rows(sig, num_hashes, bands, [])
-    left = banded.select(F.col("id").alias("id_a"), "band", "bucket")
-    right = banded.select(F.col("id").alias("id_b"), "band", "bucket")
-    return (
-        left.join(right, ["band", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    return band_join(_minhash_banded_rows(sig, num_hashes, bands, []))
 
 
 def weighted_minhash_pairs(
@@ -1721,34 +1643,14 @@ def weighted_minhash_pairs(
     expanded = _tf_expand(capped)
     if truth_pairs is not None:
         sig = minhash_signatures(expanded, num_hashes)
-        banded = _minhash_banded_rows(sig, num_hashes, bands, [])
-        cand_ids = (
-            banded.select(F.col("id").alias("id_a"), "band", "bucket")
-            .join(
-                banded.select(F.col("id").alias("id_b"), "band", "bucket"),
-                ["band", "bucket"],
-            )
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
+        cand_ids = band_join(_minhash_banded_rows(sig, num_hashes, bands, []))
         return cand_ids.join(truth_pairs, ["id_a", "id_b"])
     # include_size=True: n = count of expanded rows per doc = Σ ctf =
     # the capped total weight W — the denominator rides the signature
     # groupBy, exactly like the set form's size piggyback
     sig = minhash_signatures(expanded, num_hashes, include_size=True)
-    banded = _minhash_banded_rows(sig, num_hashes, bands, ["n"])
-    left = banded.select(
-        F.col("id").alias("id_a"), F.col("n").alias("wa"), "band", "bucket"
-    )
-    right = banded.select(
-        F.col("id").alias("id_b"), F.col("n").alias("wb"), "band", "bucket"
-    )
-    cand = (
-        left.join(right, ["band", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "wa", "wb")
-        .distinct()
+    cand = band_join(
+        _minhash_banded_rows(sig, num_hashes, bands, ["n"]), carry=["n"]
     )
     inter = (
         cand.join(
@@ -1764,7 +1666,7 @@ def weighted_minhash_pairs(
             "id_b",
         )
         .where(F.col("s") == F.col("s2"))
-        .groupBy("id_a", "id_b", "wa", "wb")
+        .groupBy("id_a", "id_b", "n_a", "n_b")
         .agg(F.sum(F.least("tfa", "tfb")).alias("i"))
     )
     return (
@@ -1773,7 +1675,7 @@ def weighted_minhash_pairs(
             "id_b",
             (
                 F.col("i").cast("double")
-                / (F.col("wa") + F.col("wb") - F.col("i"))
+                / (F.col("n_a") + F.col("n_b") - F.col("i"))
             ).alias("wjaccard"),
         )
         .where(F.col("wjaccard") >= threshold)
@@ -1974,14 +1876,10 @@ def incremental_minhash_dedup(
     )
     mh_cols = [f"mh{i}" for i in range(num_hashes)]
     need = int(-(-threshold * num_hashes // 1))  # ceil(threshold·n)
-
-    def matches(a_prefix: str, b_prefix: str) -> Column:
-        m = F.lit(0)
-        for c in mh_cols:
-            m = m + F.when(
-                F.col(f"{a_prefix}{c}") == F.col(f"{b_prefix}{c}"), 1
-            ).otherwise(0)
-        return m
+    agree = F.lit(0)
+    for c in mh_cols:
+        agree = agree + F.when(F.col(f"{c}_a") == F.col(f"{c}_b"), 1).otherwise(0)
+    is_dup = agree >= need
 
     # r13 (guide §2.4): the banded rows CARRY their signature (the
     # simhash_pairs carry_sig shape), so the dup decision is one band
@@ -1993,28 +1891,13 @@ def incremental_minhash_dedup(
     # 16-term estimator once per collision instead of once per
     # distinct pair — trivially cheaper than the two shuffles it
     # replaces; the decision (and so the survivor set) is identical.
-    banded_new = _minhash_banded_rows(sig_new, num_hashes, bands, mh_cols)
-    seen = seen_sigs.select(
-        F.col(id_col).alias("id"), *mh_cols
-    )
-    banded_seen = _minhash_banded_rows(seen, num_hashes, bands, mh_cols)
-    a_side = banded_new.select(
-        F.col("id").alias("new_id"),
-        *[F.col(c).alias(f"a_{c}") for c in mh_cols],
-        "band",
-        "bucket",
-    )
-    b_side = banded_seen.select(
-        F.col("id").alias("seen_id"),
-        *[F.col(c).alias(f"b_{c}") for c in mh_cols],
-        "band",
-        "bucket",
-    )
-    dup_vs_seen = (
-        a_side.join(b_side, ["band", "bucket"])
-        .where(matches("a_", "b_") >= need)
-        .select(F.col("new_id").alias("id"))
-        .distinct()
+    seen = seen_sigs.select(F.col(id_col).alias("id"), *mh_cols)
+    dup_vs_seen = band_join(
+        _minhash_banded_rows(sig_new, num_hashes, bands, mh_cols),
+        carry=mh_cols,
+        other=_minhash_banded_rows(seen, num_hashes, bands, mh_cols),
+        where=is_dup,
+        out=[F.col("id_a").alias("id")],
     )
     # r14 (guide §2.4/§5): ``fresh`` feeds THREE plan legs — both
     # sides of the in-batch dominance self-join and the final
@@ -2028,24 +1911,11 @@ def incremental_minhash_dedup(
     # in-batch pair dominance among the still-fresh rows: same
     # carried-signature band self-join (the two legs are identical
     # subtrees, so the exchange is planned once and reused)
-    banded_fresh = _minhash_banded_rows(fresh, num_hashes, bands, mh_cols)
-    fa = banded_fresh.select(
-        F.col("id").alias("id_a"),
-        *[F.col(c).alias(f"a_{c}") for c in mh_cols],
-        "band",
-        "bucket",
-    )
-    fb = banded_fresh.select(
-        F.col("id").alias("id_b"),
-        *[F.col(c).alias(f"b_{c}") for c in mh_cols],
-        "band",
-        "bucket",
-    )
-    dominated = (
-        fa.join(fb, ["band", "bucket"])
-        .where((F.col("id_a") < F.col("id_b")) & (matches("a_", "b_") >= need))
-        .select(F.col("id_b").alias("id"))
-        .distinct()
+    dominated = band_join(
+        _minhash_banded_rows(fresh, num_hashes, bands, mh_cols),
+        carry=mh_cols,
+        where=is_dup,
+        out=[F.col("id_b").alias("id")],
     )
     return fresh.join(dominated, "id", "left_anti").select("id", *mh_cols)
 

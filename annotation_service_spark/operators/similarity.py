@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from annotation_service_spark.caching import scoped_cache
+from annotation_service_spark.operators.banding import band_join, fingerprint_bands
 
 
 def as_double(vec: Column) -> Column:
@@ -722,19 +723,6 @@ def lsh_signature_kernel(planes: np.ndarray):
     return sig
 
 
-def _probe_keys(key: Column, bits_per_band: int, probe_bits: int) -> Column:
-    """Multi-probe key set: the exact band key plus every key within
-    hamming ≤ probe_bits of it. Only probe_bits ∈ {0, 1} are
-    implemented (hamming-1 probing is the standard recall/cost point:
-    it multiplies query-side band rows by 1+bits_per_band while the
-    random-collision rate stays ∝ 2^-bits_per_band)."""
-    if probe_bits == 0:
-        return F.array(key)
-    if probe_bits != 1:
-        raise ValueError("probe_bits must be 0 or 1")
-    return F.array(key, *[key.bitwiseXOR(F.lit(1 << j)) for j in range(bits_per_band)])
-
-
 def _lsh_base_and_candidates(
     embeddings: DataFrame,
     id_col: str,
@@ -757,25 +745,13 @@ def _lsh_base_and_candidates(
     full 2^b (scale-safe: random collisions grow only (1+b)×)."""
     dim = _vec_dim(embeddings, vec_col)
     planes = _hyperplanes(dim, n_planes, seed)
-    bits_per_band = n_planes // bands
-    mask = (1 << bits_per_band) - 1
 
     base = embeddings.select(
         F.col(id_col).alias("id"),
         as_double(F.col(vec_col)).alias("ve"),
         lsh_signature_kernel(planes)(as_double(F.col(vec_col))).alias("sig"),
     ).withColumn("nrm", F.sqrt(dot("ve", "ve", dim)))
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftright(F.col("sig"), (bands - 1 - b) * bits_per_band)
-                .bitwiseAND(F.lit(mask))
-                .alias("key"),
-            )
-            for b in range(bands)
-        ]
-    )
+    band_arr = fingerprint_bands(F.col("sig"), n_planes, bands)
     # the band join and the DISTINCT dedup carry ONLY (id, band, key)
     # / (qid, nid) — never the vectors. Deduping rows that still carry
     # two dim-wide arrays shuffles |cands|·2·dim doubles and hashes
@@ -792,21 +768,12 @@ def _lsh_base_and_candidates(
         ),
     )
     qf = query_filter if query_filter is not None else (F.col("id") % 50 == 0)
-    qb = (
-        banded.where(qf)
-        .select(
-            F.col("id").alias("qid"),
-            "band",
-            F.explode(_probe_keys(F.col("key"), bits_per_band, probe_bits)).alias(
-                "key"
-            ),
-        )
-    )
-    cand = (
-        banded.join(qb, ["band", "key"])
-        .where(F.col("id") != F.col("qid"))
-        .select("qid", F.col("id").alias("nid"))
-        .distinct()
+    cand = band_join(
+        banded,
+        probe=(n_planes // bands, probe_bits),
+        other=banded.where(qf),
+        where=F.col("id_a") != F.col("id_b"),
+        out=[F.col("id_b").alias("qid"), F.col("id_a").alias("nid")],
     )
     return base, cand
 

@@ -10,7 +10,7 @@ geolite2v2/geo-ip.go:99-176, asn/asn-annotator.go:29-92):
       → asn range join (J1) → AS decode (P8/P9) → AS-name join (J4)
       → GeolocationIP/ASData struct projection (P13)
       → Missing backfill (P15)
-      → JSON shaping (S11/P17)
+      → JSON shaping (S11)
 
 Family routing (J7) is implicit: the canonical 16-byte v4-mapped
 representation makes v4 and v6 ranges disjoint in one sorted table,
@@ -254,10 +254,18 @@ def to_v2_response_document(
     ``batch_col`` groups rows into response documents (None = one
     document for the whole DataFrame); AnnotatorDate = the min
     snapshot date used, mirroring CompositeAnnotator's earliest-date
-    rule (directory/directory.go:76-85)."""
+    rule (directory/directory.go:76-85).
+
+    A batch that repeats an IP yields one map key for it: the
+    reference fills a Go map keyed by IP, and entries for one IP on
+    one date are identical, so ``array_distinct`` drops the repeats
+    inside the same aggregate (a duplicate key would otherwise fail
+    the whole document with DUPLICATED_MAP_KEY)."""
     gcols = [batch_col] if batch_col else []
     entries = F.map_from_entries(
-        F.collect_list(F.struct(F.col(ip_col), F.struct("geo", "network")))
+        F.array_distinct(
+            F.collect_list(F.struct(F.col(ip_col), F.struct("geo", "network")))
+        )
     )
     date_agg = (
         F.min(annotator_date_col)
@@ -275,15 +283,4 @@ def to_v2_response_document(
                 F.col("annotations").alias("Annotations"),
             )
         ).alias("response_json"),
-    )
-
-
-def to_v1_response_keys(
-    annotated: DataFrame, ip_col: str = "ip", ts_col: str = "ts"
-) -> DataFrame:
-    """P17: legacy v1 response keyed ip+base36(epoch)
-    (handler/handler.go:142-174)."""
-    return annotated.withColumn(
-        "response_key",
-        ipf.base36_key(F.col(ip_col), F.unix_timestamp(F.col(ts_col))),
     )

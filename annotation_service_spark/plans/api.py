@@ -113,13 +113,16 @@ def go_v2_response_document(
     RFC3339, "Annotations": {ip: GeoData…}}`` — map keys in sorted
     order (Go sorts map keys when marshalling; sort_array on the
     entry structs reproduces it), omitempty per field, empty ASData
-    as ``{}``."""
+    as ``{}``. A repeated IP is one key, as in the reference's Go map
+    (its entries are identical within a one-date batch)."""
     entries = F.map_from_entries(
         F.sort_array(
-            F.collect_list(
-                F.struct(
-                    F.col(ip_col),
-                    go_annotations_struct(F.col("geo"), F.col("network")),
+            F.array_distinct(
+                F.collect_list(
+                    F.struct(
+                        F.col(ip_col),
+                        go_annotations_struct(F.col("geo"), F.col("network")),
+                    )
                 )
             )
         )

@@ -136,12 +136,13 @@ def test_v2_response_json(spark, tables):
 
 
 def test_v2_response_document(spark, tables):
-    """Full wire shape: one JSON doc with the ip→annotations map."""
+    """Full wire shape: one JSON doc with the ip→annotations map. A
+    repeated IP is one map key (the reference answers into a Go map)."""
     import json
 
     geo_ranges, locs, asn_ranges, names = tables
     requests = spark.createDataFrame(
-        [("1.0.0.5",), ("9.9.9.9",)], "ip string"
+        [("1.0.0.5",), ("9.9.9.9",), ("1.0.0.5",)], "ip string"
     )
     out = plan.annotate(requests, geo_ranges, locs, asn_ranges, names)
     doc = plan.to_v2_response_document(out).collect()

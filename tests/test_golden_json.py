@@ -231,9 +231,10 @@ def test_v2_document_golden(spark):
         "struct<ip_prefix:string,cidr:string,as_number:bigint,as_name:string,"
         "missing:boolean,systems:array<struct<asns:array<bigint>>>>"
     )
-    # note: map insertion deliberately unsorted — sort_array must fix it
+    # note: map insertion deliberately unsorted — sort_array must fix
+    # it; the repeated 8.8.8.8 must collapse to one key
     df = spark.createDataFrame(
-        [("8.8.8.8", geo, net), ("147.1.2.3", geo, net)],
+        [("8.8.8.8", geo, net), ("147.1.2.3", geo, net), ("8.8.8.8", geo, net)],
         f"ip string, geo {geo_t}, network {net_t}",
     )
     doc = go_v2_response_document(

@@ -383,7 +383,7 @@ def test_html_family_plans(spark):
     # (A/B 0.74x). Everything else stays projection-only: no joins,
     # no keyed shuffles.
     assert "Join" not in p
-    assert p.count("Exchange") <= 1
+    assert p.count("Exchange") == p.count("RoundRobinPartitioning") == 1
     assert "hashpartitioning" not in p
     p2 = _plan(em.q_html_links(spark, SF))
     _assert_no_blowups(p2)
