@@ -33,12 +33,24 @@ long-typed bounds and used for DuckDB-oracle differential checks.
 (≤ a few GB), the probe side is the 100 TB stream, so the scalable
 plan is a BROADCAST of the sorted ranges + a vectorized binary search
 per Arrow batch (np.searchsorted, O(log n) per probe, zero shuffle)
-— the distributed analog of the reference's in-memory search. A
-bucketed shuffle variant covers build tables too big to broadcast.
+— the distributed analog of the reference's in-memory search. Like
+the reference, which loads each dataset once and only searches per
+request (directory/directory.go:230-240, manager/manager.go:38-57),
+the broadcast is built ONCE per published ``ranges`` DataFrame and
+lives exactly as long as that DataFrame: later requests on the same
+table run no Spark job before their own action, and a refresh that
+publishes a new DataFrame gets a new build. This holds while
+Catalyst's size estimate of the whole table fits the broadcast gate;
+past it each call prunes the table to the snapshots its probes
+reference, and a bucketed shuffle variant covers build tables still
+too big to broadcast.
 """
 
 from __future__ import annotations
 
+import threading
+import weakref
+from collections import deque
 from collections.abc import Sequence
 
 import numpy as np
@@ -382,30 +394,66 @@ def merge_adjacent_equal(
 
 
 def _pruned_ranges(
-    probes: DataFrame,
-    ranges: DataFrame,
-    keys: list[str],
-    prune_keys: bool,
-    probe_keys_df: DataFrame | None,
+    probes: DataFrame, ranges: DataFrame, keys: list[str]
 ) -> DataFrame:
     """Restrict the build table to the snapshot key groups the probe
     set actually references before anything is collected.
 
-    Without this, a multi-snapshot build (the reference's real corpus
-    is ~176 snapshots × ~4M rows) would be collected and broadcast in
-    full even when the probe batch touches two snapshots — the
-    single-node in-memory model smuggled into Spark. The semi-join
-    costs one map-side-combinable distinct over the probe stream
-    (or nothing, when the caller passes ``probe_keys_df`` — e.g. the
-    registry dates that survived the as-of join)."""
-    if not keys or not prune_keys:
+    Used only when the whole table is too big to broadcast: a
+    multi-snapshot build (the reference's real corpus is ~176
+    snapshots × ~4M rows) must not be collected in full when the probe
+    batch touches two snapshots. The semi-join costs one
+    map-side-combinable distinct over the probe stream."""
+    if not keys:
         return ranges
-    ref = (
-        probe_keys_df.select(*keys).distinct()
-        if probe_keys_df is not None
-        else probes.select(*keys).distinct()
-    )
+    ref = probes.select(*keys).distinct()
     return ranges.join(F.broadcast(ref), keys, "left_semi")
+
+
+def _estimated_bytes(df: DataFrame) -> int:
+    """Catalyst's ``sizeInBytes`` for ``df``: free (no job), an
+    overestimate, and Long.MaxValue when the source has no size."""
+    try:
+        return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    except Exception:
+        return 1 << 63
+
+
+class _Build:
+    """One memoized build: its broadcast, and a lock so concurrent
+    misses on the same (table, signature) build once."""
+
+    __slots__ = ("lock", "bc")
+
+    def __init__(self) -> None:
+        self.lock = threading.Lock()
+        self.bc = None
+
+
+# ranges DataFrame (by identity) -> {(low, high, payload, keys): _Build}
+_BUILDS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_BUILDS_LOCK = threading.Lock()
+# broadcasts whose table has died, unpersisted by the next build: a
+# finalizer runs inside the garbage collector, where py4j must not be
+# re-entered
+_RELEASED: deque = deque()
+
+
+def _built_once(ranges: DataFrame, signature: tuple, build):
+    """The broadcast ``build()`` makes for ``ranges``, built on the
+    first call per (``ranges`` object, ``signature``) and shared by
+    every later one. The entry dies with ``ranges``; its broadcast is
+    then unpersisted, never destroyed, because a task still running
+    may re-fetch it from the driver."""
+    with _BUILDS_LOCK:
+        while _RELEASED:
+            _RELEASED.popleft().unpersist()
+        slot = _BUILDS.setdefault(ranges, {}).setdefault(signature, _Build())
+    with slot.lock:
+        if slot.bc is None:
+            slot.bc = build()
+            weakref.finalize(ranges, _RELEASED.append, slot.bc)
+    return slot.bc
 
 
 def range_join_broadcast(
@@ -418,20 +466,30 @@ def range_join_broadcast(
     how: str = "left",
     keys: Sequence[str] = (),
     parse_ips: bool = False,
-    prune_keys: bool = True,
-    probe_keys_df: DataFrame | None = None,
     max_broadcast_bytes: int = 512 << 20,
 ) -> DataFrame:
     """J1 via broadcast + vectorized binary search
     (iputils/iputils.go:111-128 distributed analog).
 
-    ``ranges`` (sorted disjoint per key group) is collected once and
+    ``ranges`` (sorted disjoint per key group) is collected and
     broadcast to every executor; each probe Arrow batch does
     np.searchsorted — O(log n) per probe, NO shuffle of the 100 TB
     probe side, no Python-per-row cost. This is the plan a
     1000-executor cluster wants whenever the build table fits in
     executor memory (MaxMind snapshots do: ~4M rows ≪ broadcast
     limits).
+
+    Build once per published table: when Catalyst's free size
+    estimate of the WHOLE ``ranges`` table fits ``max_broadcast_bytes``,
+    the build is memoized on the ``ranges`` object itself (by identity,
+    per low/high/payload/keys). The first call collects and broadcasts
+    it; every later call on the same DataFrame goes straight to the
+    probe with no Spark job before the caller's action — the
+    reference's load-once directory (directory/directory.go:230-240).
+    The entry lives exactly as long as that DataFrame: a refresh that
+    publishes a new DataFrame (``SnapshotStore.swap``) gets a new
+    build, and the old broadcast is unpersisted once in-flight
+    requests drop the old one.
 
     ``keys``: optional equi-join columns shared by probes and ranges
     (e.g. ``dataset_date`` after an as-of join) — the broadcast holds
@@ -447,67 +505,58 @@ def range_join_broadcast(
     ArrowEvalPython + MapInPandas — measured ~2x probe throughput on
     the annotate hot path.
 
-    Scale guards: with ``keys`` the build table is SEMI-JOINED to the
-    distinct key groups the probes reference before collection
-    (``prune_keys``; pass ``probe_keys_df`` to supply the referenced
-    keys without a probe-side pass), and the collected size is
-    estimated first — past ``max_broadcast_bytes`` the call falls
-    back to ``range_join_bucketed`` (long bounds) instead of
-    broadcasting a build table that belongs in a shuffle join.
+    Past the size gate nothing is memoized: with ``keys`` the build
+    table is SEMI-JOINED per call to the key groups the probes
+    reference, one ``count()`` makes the estimate precise, and a
+    build still over ``max_broadcast_bytes`` falls back to
+    ``range_join_bucketed`` (long bounds) instead of broadcasting a
+    table that belongs in a shuffle join.
     """
     payload = list(payload)
     keys = list(keys)
     is_long = isinstance(ranges.schema[low].dataType, (T.LongType, T.IntegerType))
     width = 8 if is_long else 16
 
-    pruned = _pruned_ranges(probes, ranges, keys, prune_keys, probe_keys_df)
+    def build(table: DataFrame):
+        # Arrow toPandas: an order of magnitude faster than collect() for
+        # wide/binary build tables (measured ~3s -> ~0.3s at 20k ranges)
+        rpdf = table.select(*keys, low, high, *payload).orderBy(*keys, low).toPandas()
 
-    # size gate, two tiers: Catalyst's sizeInBytes estimate is FREE
-    # (no job, no double execution of the build subplan); only when
-    # that (over)estimate crosses the threshold do we pay one count()
-    # job for a precise per-row-bytes estimate before falling back —
-    # so the common small-build path stays zero-extra-jobs.
-    try:
-        est_bytes = int(
-            str(pruned._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-    except Exception:
-        est_bytes = max_broadcast_bytes + 1  # unknown → verify by count
-    if est_bytes > max_broadcast_bytes:
-        n_ranges = pruned.count()
-        est_bytes = n_ranges * (2 * width + 64 * len(payload) + 16 * len(keys))
-    if est_bytes > max_broadcast_bytes:
-        if is_long and not parse_ips:
-            return range_join_bucketed(
-                probes, pruned, probe_col, low=low, high=high,
-                payload=payload, how=how, keys=keys,
-            )
-        raise ValueError(
-            f"range_join_broadcast: build table ~{est_bytes >> 20} MiB exceeds "
-            f"max_broadcast_bytes ({max_broadcast_bytes >> 20} MiB) and no "
-            "bucketed fallback exists for binary bounds / parse_ips — "
-            "flatten per snapshot and use range_join_bucketed on long bounds"
-        )
+        def build_group(g: pd.DataFrame):
+            lows = _u8_to_s(_to_u8(g[low], width, is_long))
+            highs = _u8_to_s(_to_u8(g[high], width, is_long))
+            return lows, highs, g[payload].reset_index(drop=True)
 
-    # Arrow toPandas: an order of magnitude faster than collect() for
-    # wide/binary build tables (measured ~3s -> ~0.3s at 20k ranges)
-    rpdf = (
-        pruned.select(*keys, low, high, *payload).orderBy(*keys, low).toPandas()
-    )
+        if keys:
+            bc_val = {
+                (k if isinstance(k, tuple) else (k,)): build_group(g)
+                for k, g in rpdf.groupby(keys, sort=False)
+            }
+        else:
+            bc_val = {(): build_group(rpdf)} if len(rpdf) else {}
+        return probes.sparkSession.sparkContext.broadcast(bc_val)
 
-    def build_group(g: pd.DataFrame):
-        lows = _u8_to_s(_to_u8(g[low], width, is_long))
-        highs = _u8_to_s(_to_u8(g[high], width, is_long))
-        return lows, highs, g[payload].reset_index(drop=True)
-
-    if keys:
-        bc_val = {
-            (k if isinstance(k, tuple) else (k,)): build_group(g)
-            for k, g in rpdf.groupby(keys, sort=False)
-        }
+    if _estimated_bytes(ranges) <= max_broadcast_bytes:
+        signature = (low, high, tuple(payload), tuple(keys))
+        bc = _built_once(ranges, signature, lambda: build(ranges))
     else:
-        bc_val = {(): build_group(rpdf)} if len(rpdf) else {}
-    bc = probes.sparkSession.sparkContext.broadcast(bc_val)
+        pruned = _pruned_ranges(probes, ranges, keys)
+        # Catalyst (over)estimates the semi-join at the whole table's
+        # size; one count() job gives the per-row-bytes estimate
+        est_bytes = pruned.count() * (2 * width + 64 * len(payload) + 16 * len(keys))
+        if est_bytes > max_broadcast_bytes:
+            if is_long and not parse_ips:
+                return range_join_bucketed(
+                    probes, pruned, probe_col, low=low, high=high,
+                    payload=payload, how=how, keys=keys,
+                )
+            raise ValueError(
+                f"range_join_broadcast: build table ~{est_bytes >> 20} MiB exceeds "
+                f"max_broadcast_bytes ({max_broadcast_bytes >> 20} MiB) and no "
+                "bucketed fallback exists for binary bounds / parse_ips — "
+                "flatten per snapshot and use range_join_bucketed on long bounds"
+            )
+        bc = build(pruned)
 
     out_fields = list(probes.schema.fields) + [
         T.StructField(c, ranges.schema[c].dataType, True) for c in payload

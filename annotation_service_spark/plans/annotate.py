@@ -17,11 +17,17 @@ representation makes v4 and v6 ranges disjoint in one sorted table,
 so a single binary search replaces the reference's per-family lists
 (manager/manager.go:213-226 becomes a representation choice).
 
-Scale notes: the probe side (the 100 TB stream) flows through ONE
-mapInPandas (broadcast binary search, possibly keyed by snapshot) and
-TWO broadcast hash joins (locations, asnames). No probe-side shuffle
-anywhere. Snapshot tables are partitioned by ``dataset_date``;
-partition pruning keeps a narrow-date query from touching history.
+Scale notes: the probe side (the 100 TB stream) flows through two
+mapInPandas binary searches (geo, ASN; keyed by snapshot after the
+as-of join) and TWO broadcast hash joins (locations, asnames). No
+probe-side shuffle anywhere. The range tables are broadcast once per
+published DataFrame, not once per request: a server that passes the
+tables it holds in ``SnapshotStore`` plans every request after the
+first with no Spark job before the response action, and a refresh's
+``swap`` publishes a new DataFrame, so the next request builds from
+the new snapshot (``range_join_broadcast``). Tables whose size
+estimate exceeds the broadcast gate are instead pruned per request
+to the snapshots the probes reference.
 """
 
 from __future__ import annotations

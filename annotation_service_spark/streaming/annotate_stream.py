@@ -1,4 +1,4 @@
-"""Request-stream annotation + streaming operational metrics (ST6, A1/A2).
+"""Request-stream annotation + streaming operational metrics (ST6, A2).
 
 Reference: each HTTP batch is annotated against slowly-changing
 dataset tables (handler/handler.go:194-243); late event-time (old
@@ -45,28 +45,6 @@ def annotate_stream(
         ip_col=ip_col,
         date_col=date_col,
         registry=registry,
-    )
-
-
-def annotation_metrics(
-    annotated_stream: DataFrame,
-    ts_col: str = "ts",
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """A1 streaming: windowed request counts classified like
-    trackMissingResponses (handler/handler.go:352-379): per window,
-    how many requests had geo/network/both missing."""
-    cls = (
-        F.when(F.col("geo.missing") & F.col("network.missing"), "both_missing")
-        .when(F.col("geo.missing"), "geo_missing")
-        .when(F.col("network.missing"), "network_missing")
-        .otherwise("ok")
-    )
-    return (
-        annotated_stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window), cls.alias("status"))
-        .agg(F.count(F.lit(1)).alias("n"))
     )
 
 

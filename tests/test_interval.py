@@ -252,7 +252,7 @@ def test_range_join_broadcast_prunes_unreferenced_snapshots(spark):
     """VERDICT r1 #3: the broadcast must hold only the snapshots the
     probe set references — not every snapshot in the build table."""
     dates, ranges, probes = _snapshot_fixture(spark)
-    pruned = iv._pruned_ranges(probes, ranges, ["dataset_date"], True, None)
+    pruned = iv._pruned_ranges(probes, ranges, ["dataset_date"])
     got_dates = {r.dataset_date for r in pruned.select("dataset_date").distinct().collect()}
     assert got_dates == {dates[0], dates[1]}  # 2021 snapshot never collected
 
@@ -262,13 +262,6 @@ def test_range_join_broadcast_prunes_unreferenced_snapshots(spark):
     )
     for r in out.collect():
         assert r.payload == f"{r.dataset_date.isoformat()}:p{r.v // 100}"
-
-
-def test_range_join_broadcast_probe_keys_df_avoids_probe_pass(spark):
-    dates, ranges, probes = _snapshot_fixture(spark)
-    reg = spark.createDataFrame([(dates[0],), (dates[1],)], "dataset_date date")
-    pruned = iv._pruned_ranges(probes, ranges, ["dataset_date"], True, reg)
-    assert pruned.select("dataset_date").distinct().count() == 2
 
 
 def test_range_join_broadcast_size_gate_falls_back_to_bucketed(spark):
@@ -300,6 +293,150 @@ def test_range_join_broadcast_size_gate_raises_for_binary(spark):
             probes, ranges, probe_col="ipb", payload=["payload"],
             max_broadcast_bytes=1,
         )
+
+
+# --- J1 build once per published table --------------------------------------
+
+MEMO_KW = dict(
+    probe_col="v", low="low", high="high", payload=["payload"], keys=["dataset_date"]
+)
+
+
+def _published(spark, tmp_path, df, name):
+    """``df`` written and read back as parquet, the way a refresh
+    publishes a snapshot table: the file scan gives Catalyst a real
+    size estimate, so the build-once path applies."""
+    path = str(tmp_path / name)
+    df.write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def sql_executions(spark, calls):
+    """(number of SQL executions started while ``calls()`` ran, its
+    result). Counts by execution id, so it holds after the status
+    store starts evicting old executions."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def newest() -> int:
+        bus.waitUntilEmpty()
+        n = store.executionsCount()
+        return int(store.executionsList(n - 1, 1).head().executionId()) if n else -1
+
+    before = newest()
+    out = calls()
+    return newest() - before, out
+
+
+def _payloads(out):
+    return sorted((r.pid, r.payload) for r in out.collect())
+
+
+def _expected(probes, suffix=""):
+    return sorted(
+        (r.pid, f"{r.dataset_date.isoformat()}:p{r.v // 100}{suffix}")
+        for r in probes.collect()
+    )
+
+
+def test_range_join_broadcast_builds_once_per_table(spark, tmp_path):
+    dates, ranges, probes = _snapshot_fixture(spark)
+    ranges = _published(spark, tmp_path, ranges, "v1")
+    n, outs = sql_executions(
+        spark, lambda: [iv.range_join_broadcast(probes, ranges, **MEMO_KW) for _ in range(3)]
+    )
+    assert n == 1  # the one build; the later calls reuse it
+    for out in outs:
+        assert _payloads(out) == _expected(probes)
+
+    # a newly published table (changed payloads) is a new build
+    fresh = _published(
+        spark, tmp_path, ranges.withColumn("payload", F.concat("payload", F.lit("-v2"))), "v2"
+    )
+    n, out = sql_executions(spark, lambda: iv.range_join_broadcast(probes, fresh, **MEMO_KW))
+    assert n == 1
+    assert _payloads(out) == _expected(probes, "-v2")
+
+
+def test_range_join_broadcast_build_dies_with_table(spark, tmp_path):
+    import gc
+    import weakref
+
+    dates, ranges, probes = _snapshot_fixture(spark)
+    ranges = _published(spark, tmp_path, ranges, "v1")
+    out = iv.range_join_broadcast(probes, ranges, **MEMO_KW)
+    assert ranges in iv._BUILDS
+    entries, alive = len(iv._BUILDS), weakref.ref(ranges)
+    del ranges
+    gc.collect()
+    assert alive() is None
+    assert len(iv._BUILDS) == entries - 1
+    assert iv._RELEASED
+    # the next build unpersists the dead table's broadcast; a plan made
+    # from it still answers (executors re-fetch from the driver)
+    other = _published(spark, tmp_path, _snapshot_fixture(spark)[1], "other")
+    iv.range_join_broadcast(probes, other, **MEMO_KW)
+    assert not iv._RELEASED
+    assert _payloads(out) == _expected(probes)
+
+
+def test_range_join_broadcast_concurrent_misses_build_once(spark, tmp_path):
+    """More client threads than cores miss together on two cold
+    tables: each table is built exactly once, and every caller of one
+    table gets the same answer."""
+    import sys
+    import threading
+
+    dates, ranges, probes = _snapshot_fixture(spark)
+    tables = [
+        _published(spark, tmp_path, ranges, "v1"),
+        _published(spark, tmp_path, ranges.withColumn(
+            "payload", F.concat("payload", F.lit("-v2"))), "v2"),
+    ]
+    n_threads = 8
+    barrier = threading.Barrier(n_threads)
+    outs = [None] * n_threads
+
+    def call(i):
+        barrier.wait(timeout=60)
+        outs[i] = iv.range_join_broadcast(probes, tables[i % 2], **MEMO_KW)
+
+    def run_all():
+        threads = [threading.Thread(target=call, args=(i,)) for i in range(n_threads)]
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=300)
+        finally:
+            sys.setswitchinterval(interval)
+        assert not any(t.is_alive() for t in threads)
+
+    n, _ = sql_executions(spark, run_all)
+    assert n == 2  # one build per table
+    for i, out in enumerate(outs):
+        assert _payloads(out) == _expected(probes, "-v2" if i % 2 else "")
+
+
+def test_range_join_broadcast_memo_matches_pruned_path(spark, tmp_path):
+    """Past the size gate each call prunes to the snapshots its probes
+    reference; under it the whole table is built once. Same answer."""
+    dates, ranges, probes = _snapshot_fixture(spark)
+    # a third snapshot, heavier than the other two and never probed
+    unreferenced = spark.createDataFrame(
+        [(dates[2], i * 100, i * 100 + 99, f"x{i}") for i in range(20, 2000)],
+        ranges.schema,
+    )
+    ranges = _published(spark, tmp_path, ranges.unionByName(unreferenced), "v1")
+    gate = iv._estimated_bytes(ranges) - 1  # the whole table no longer fits
+    pruned = iv.range_join_broadcast(probes, ranges, max_broadcast_bytes=gate, **MEMO_KW)
+    assert ranges not in iv._BUILDS
+    assert "MapInPandas" in pruned._jdf.queryExecution().executedPlan().toString()
+    memo = iv.range_join_broadcast(probes, ranges, **MEMO_KW)
+    assert ranges in iv._BUILDS
+    assert _payloads(memo) == _payloads(pruned) == _expected(probes)
 
 
 # ---------------------------------------------------------------------------

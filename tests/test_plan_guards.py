@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import __spark_entry__ as em
 from annotation_service_spark.operators import graph as g
+from tests.test_sources import fixture_dir  # noqa: F401 (fixture reuse)
 
 SF = "/root/testdata/sf0.001"
 
@@ -440,3 +441,62 @@ def test_robots_filter_plan(spark):
     _assert_no_blowups(p)
     assert "BroadcastHashJoin" in p
     assert "SinglePartition" not in p
+
+
+def test_annotate_serving_plans_run_no_spark_work(spark, tmp_path, fixture_dir):  # noqa: F811
+    """ROADMAP rule on the serving path: once a published table has
+    served one request, planning the next request on it runs no Spark
+    work before the action — the range-join broadcasts are built once
+    per published table (the reference loads a dataset once,
+    manager/manager.go:38-57). After a refresh swaps in a snapshot
+    with different payloads, the next request answers from it."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    from annotation_service_spark.plans import annotate as plan
+    from annotation_service_spark.sources import dims, geolite2, routeviews
+    from annotation_service_spark.streaming.refresh import SnapshotStore
+    from tests.test_interval import sql_executions
+
+    snapshot = dt.date(2017, 9, 7)
+    locs = geolite2.geolite2_locations(spark, str(fixture_dir / "locations.csv"))
+    names = dims.asnames(spark, str(fixture_dir / "asnames.csv"))
+    geo = geolite2.build_geo_ranges(
+        geolite2.geolite2_blocks(spark, str(fixture_dir / "blocks.csv")), locs
+    ).withColumn("dataset_date", F.lit(snapshot))
+    asn = routeviews.build_asn_ranges(
+        routeviews.routeviews_pfx2as(spark, str(fixture_dir / "pfx2as.tsv"))
+    ).withColumn("dataset_date", F.lit(snapshot))
+
+    store = SnapshotStore()
+
+    def publish(table, df, version):
+        path = str(tmp_path / f"{table}-{version}")
+        df.write.parquet(path)
+        store.swap(table, spark.read.parquet(path))
+
+    publish("geo", geo, 1)
+    publish("asn", asn, 1)
+
+    def request():
+        geo_t, asn_t = store.get("geo"), store.get("asn")
+        req = spark.createDataFrame(
+            [("1.0.0.5", dt.date(2018, 1, 1))], "ip string, req_date date"
+        )
+        return plan.annotate(
+            req, geo_t, locs, asn_t, names,
+            date_col="req_date", registry=geo_t.select("dataset_date").distinct(),
+        )
+
+    request().collect()  # warm-up: the first request builds both tables
+    n, out = sql_executions(spark, request)
+    assert n == 0
+    (row,) = out.collect()
+    assert row.geo.postal_code == "3095"
+    assert row.network.as_number == 13335
+
+    publish("geo", geo.withColumn("postal_code", F.concat("postal_code", F.lit("-v2"))), 2)
+    (row,) = request().collect()
+    assert row.geo.postal_code == "3095-v2"
+    assert row.network.as_number == 13335
