@@ -28,6 +28,7 @@ Reference parity notes (file:line cites are into /root/reference):
 from __future__ import annotations
 
 import ipaddress
+import socket
 
 import pandas as pd
 from pyspark.sql import Column
@@ -37,13 +38,31 @@ from pyspark.sql import types as T
 V4_MAPPED_PREFIX = b"\x00" * 10 + b"\xff\xff"
 V4_MAPPED_PREFIX_HEX = V4_MAPPED_PREFIX.hex().upper()
 
+_inet_pton, _AF_INET, _AF_INET6 = socket.inet_pton, socket.AF_INET, socket.AF_INET6
+
 
 # ---------------------------------------------------------------------------
 # Python-side scalar helpers (shared by the pandas UDFs and by tests)
 # ---------------------------------------------------------------------------
 
 def py_ip_to_bytes16(text: str | None) -> bytes | None:
-    """Parse an address to canonical 16 bytes; None on invalid/empty."""
+    """Parse an address to canonical 16 bytes; None on invalid/empty.
+
+    The accept set and the bytes are those of
+    ``ipaddress.ip_address(text.strip())``. C-level ``inet_pton``
+    answers first (about 10x faster per row): every string it accepts —
+    a strict dotted quad without leading zeros, or RFC 4291 v6 text —
+    ipaddress accepts with the same bytes. Only its rejects (surrounding
+    whitespace, zone-scoped v6 like ``fe80::1%eth0``, embedded NULs,
+    garbage) pay for the ipaddress parse, so both paths answer alike."""
+    try:
+        return V4_MAPPED_PREFIX + _inet_pton(_AF_INET, text)
+    except (OSError, TypeError, ValueError):
+        pass
+    try:
+        return _inet_pton(_AF_INET6, text)
+    except (OSError, TypeError, ValueError):
+        pass
     if not text:
         return None
     try:
@@ -53,6 +72,23 @@ def py_ip_to_bytes16(text: str | None) -> bytes | None:
     if addr.version == 4:
         return V4_MAPPED_PREFIX + addr.packed
     return addr.packed
+
+
+def py_ip6to4(b: bytes | None) -> bytes | None:
+    """P4 on canonical bytes: 2002:xxyy:zzww::/16 → the embedded v4
+    address, else unchanged (the scalar twin of ``ip6to4``)."""
+    if b is not None and b[:2] == b"\x20\x02":
+        return V4_MAPPED_PREFIX + b[2:6]
+    return b
+
+
+def parse_ip_series(s: pd.Series, six_to_four: bool = False) -> pd.Series:
+    """P3 (and P4 when ``six_to_four``) over a Series of address text:
+    canonical 16 bytes, None where invalid. The one parser behind both
+    the ``ip_to_bytes`` UDF and ``range_join_broadcast(parse_ips=True)``."""
+    if six_to_four:
+        return s.map(lambda t: py_ip6to4(py_ip_to_bytes16(t)), na_action="ignore")
+    return s.map(py_ip_to_bytes16, na_action="ignore")
 
 
 def py_bytes16_to_ip(b: bytes | None) -> str | None:
@@ -136,7 +172,7 @@ def py_minus_one(b: bytes) -> bytes:
 def ip_to_bytes(s: pd.Series) -> pd.Series:
     """P3: text → canonical 16-byte binary; NULL on invalid (caller
     counts/filters NULLs, mirroring the reference's error metric)."""
-    return s.map(py_ip_to_bytes16, na_action="ignore")
+    return parse_ip_series(s)
 
 
 @F.pandas_udf(T.StringType())

@@ -9,7 +9,7 @@ built by aligning k sorted snapshot lists on their union of dates
 
 Spark design: snapshots are a tiny dimension (hundreds of rows) —
 convert to VALIDITY WINDOWS ``[valid_from, valid_to)`` once with a
-window function, then the as-of join is a broadcast range join the
+date-sorted aggregate, then the as-of join is a broadcast range join the
 probe stream flows through without shuffling. At 100 TB of probes
 this stays a map-side operation; the alternative join-then-rank
 formulation would shuffle the probe table and is deliberately
@@ -43,17 +43,25 @@ def validity_windows(
       (valid_to IS NULL OR date <= valid_to)``
     with valid_from = dataset_date of this snapshot and valid_to =
     dataset_date of the next — i.e. interval (this, next].
+
+    Built as one date-sorted array of rows per partition and its
+    ``posexplode``, where each element's successor gives ``valid_to``.
+    A window over a constant key would do the same, but Catalyst folds
+    the key away and Spark logs "No Partition Defined for Window" for
+    every request that plans it. The array sorts whole rows, so
+    snapshot columns must be orderable (no map columns).
     """
     part = list(partition_by)
-    w = Window.partitionBy(*part or [F.lit(1)]).orderBy(date_col)
-    return (
-        snapshots.withColumn("__rn", F.row_number().over(w))
-        .withColumn(
-            "valid_from",
-            F.when(F.col("__rn") == 1, F.lit(None)).otherwise(F.col(date_col)),
-        )
-        .withColumn("valid_to", F.lead(date_col).over(w))
-        .drop("__rn")
+    cols = snapshots.columns
+    rows = F.sort_array(
+        F.collect_list(F.struct(F.col(date_col).alias("d"), F.struct(*cols).alias("r")))
+    )
+    arr = snapshots.groupBy(*part).agg(rows.alias("__w"))
+    i, e = F.col("__i"), F.col("__e")
+    return arr.select("__w", F.posexplode("__w").alias("__i", "__e")).select(
+        *[e["r"][c].alias(c) for c in cols],
+        F.when(i > 0, e["d"]).alias("valid_from"),
+        F.get("__w", i + 1)["d"].alias("valid_to"),
     )
 
 
@@ -113,8 +121,10 @@ def merge_sources(
     SIZE CONTRACT: inputs are snapshot REGISTRIES — file listings in
     the hundreds of rows (the reference's whole directory is ~200
     entries). The global-order window below deliberately runs in one
-    partition (constant partition key, so WindowExec doesn't warn and
-    the plan states the intent); do NOT reuse this operator for
+    partition: Catalyst folds the constant partition key away, so the
+    plan is a single-partition window and Spark logs "No Partition
+    Defined for Window" for each evaluation (the key states the intent;
+    it does not stop the warning). Do NOT reuse this operator for
     fact-scale inputs.
     """
     payload = list(payload)

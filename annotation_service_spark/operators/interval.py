@@ -48,6 +48,7 @@ too big to broadcast.
 
 from __future__ import annotations
 
+import functools
 import threading
 import weakref
 from collections import deque
@@ -58,6 +59,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..functions.ip import parse_ip_series
 
 # ---------------------------------------------------------------------------
 # numpy helpers on big-endian fixed-width byte bounds ('S16' / 'S8')
@@ -458,7 +461,7 @@ def _built_once(ranges: DataFrame, signature: tuple, build):
 
 def range_join_broadcast(
     probes: DataFrame,
-    ranges: DataFrame,
+    ranges: DataFrame | Sequence[tuple[DataFrame, Sequence[str]]],
     probe_col: str,
     low: str = "ip_low",
     high: str = "ip_high",
@@ -479,17 +482,31 @@ def range_join_broadcast(
     executor memory (MaxMind snapshots do: ~4M rows ≪ broadcast
     limits).
 
+    Several tables, one crossing: ``ranges`` may also be a sequence of
+    ``(table, payload)`` pairs (``payload`` then stays empty). Every
+    table shares ``low``/``high``/``keys`` and is probed by the same
+    ``probe_col`` inside ONE ``mapInPandas``: each Arrow batch is
+    parsed once, then each table gets one ``searchsorted`` per key
+    group. The output is the probe columns followed by each table's
+    payload in order — the same rows as chaining one single-table call
+    per table, minus a Python crossing per extra table (the reference
+    answers a request with one parse and one search per dataset,
+    iputils/iputils.go:111-128). ``how='inner'`` keeps rows hit in
+    every table.
+
     Build once per published table: when Catalyst's free size
-    estimate of the WHOLE ``ranges`` table fits ``max_broadcast_bytes``,
-    the build is memoized on the ``ranges`` object itself (by identity,
-    per low/high/payload/keys). The first call collects and broadcasts
-    it; every later call on the same DataFrame goes straight to the
-    probe with no Spark job before the caller's action — the
-    reference's load-once directory (directory/directory.go:230-240).
-    The entry lives exactly as long as that DataFrame: a refresh that
-    publishes a new DataFrame (``SnapshotStore.swap``) gets a new
-    build, and the old broadcast is unpersisted once in-flight
-    requests drop the old one.
+    estimate of a WHOLE table fits ``max_broadcast_bytes``, its build
+    is memoized on the table object itself (by identity, per
+    low/high/payload/keys). The first call collects and broadcasts
+    it; every later call on the same DataFrame — alone or beside other
+    tables — goes straight to the probe with no Spark job before the
+    caller's action — the reference's load-once directory
+    (directory/directory.go:230-240). The entry lives exactly as long
+    as that DataFrame: a refresh that publishes a new DataFrame
+    (``SnapshotStore.swap``) gets a new build, and the old broadcast
+    is unpersisted once in-flight requests drop the old one. Each
+    table of a multi-table call is gated on its own estimate, so
+    swapping one table rebuilds only that one.
 
     ``keys``: optional equi-join columns shared by probes and ranges
     (e.g. ``dataset_date`` after an as-of join) — the broadcast holds
@@ -500,32 +517,49 @@ def range_join_broadcast(
     mirroring ErrNodeNotFound handling (geolite2v2/geo-ip.go:162).
 
     ``parse_ips=True`` fuses P3 (text parse) + P4 (6to4 rewrite) into
-    this same Arrow batch: the probe column is IP TEXT and the whole
+    this same Arrow batch: the probe column is IP TEXT, parsed by
+    ``functions.ip.parse_ip_series`` — the parser behind the
+    ``ip_to_bytes`` UDF, so both accept the same text — and the whole
     parse→rewrite→search path runs in ONE Python crossing instead of
     ArrowEvalPython + MapInPandas — measured ~2x probe throughput on
     the annotate hot path.
 
-    Past the size gate nothing is memoized: with ``keys`` the build
-    table is SEMI-JOINED per call to the key groups the probes
-    reference, one ``count()`` makes the estimate precise, and a
-    build still over ``max_broadcast_bytes`` falls back to
+    Past the size gate a table is not memoized: with ``keys`` it is
+    SEMI-JOINED per call to the key groups the probes reference, one
+    ``count()`` makes the estimate precise, and a single-table build
+    still over ``max_broadcast_bytes`` falls back to
     ``range_join_bucketed`` (long bounds) instead of broadcasting a
-    table that belongs in a shuffle join.
+    table that belongs in a shuffle join. A multi-table call raises
+    there instead; probe that table alone to get the fallback.
     """
-    payload = list(payload)
+    if isinstance(ranges, DataFrame):
+        tables = [(ranges, list(payload))]
+    elif payload:
+        raise ValueError("range_join_broadcast: pass payload inside each (table, payload) pair")
+    else:
+        tables = [(t, list(p)) for t, p in ranges]
+    payloads = [pl for _, pl in tables]
+    names = [c for pl in payloads for c in pl]
+    if len(set(names)) != len(names):
+        raise ValueError(f"range_join_broadcast: payload columns repeat across tables: {names}")
     keys = list(keys)
-    is_long = isinstance(ranges.schema[low].dataType, (T.LongType, T.IntegerType))
+    bound_kinds = {
+        isinstance(t.schema[low].dataType, (T.LongType, T.IntegerType)) for t, _ in tables
+    }
+    if len(bound_kinds) != 1:
+        raise ValueError("range_join_broadcast: every table needs the same bound type")
+    is_long = bound_kinds.pop()
     width = 8 if is_long else 16
 
-    def build(table: DataFrame):
+    def build(table: DataFrame, pl: list[str]):
         # Arrow toPandas: an order of magnitude faster than collect() for
         # wide/binary build tables (measured ~3s -> ~0.3s at 20k ranges)
-        rpdf = table.select(*keys, low, high, *payload).orderBy(*keys, low).toPandas()
+        rpdf = table.select(*keys, low, high, *pl).orderBy(*keys, low).toPandas()
 
         def build_group(g: pd.DataFrame):
             lows = _u8_to_s(_to_u8(g[low], width, is_long))
             highs = _u8_to_s(_to_u8(g[high], width, is_long))
-            return lows, highs, g[payload].reset_index(drop=True)
+            return lows, highs, {c: g[c].to_numpy(dtype=object) for c in pl}
 
         if keys:
             bc_val = {
@@ -536,106 +570,76 @@ def range_join_broadcast(
             bc_val = {(): build_group(rpdf)} if len(rpdf) else {}
         return probes.sparkSession.sparkContext.broadcast(bc_val)
 
-    if _estimated_bytes(ranges) <= max_broadcast_bytes:
-        signature = (low, high, tuple(payload), tuple(keys))
-        bc = _built_once(ranges, signature, lambda: build(ranges))
-    else:
-        pruned = _pruned_ranges(probes, ranges, keys)
+    bcs = []
+    for table, pl in tables:
+        if _estimated_bytes(table) <= max_broadcast_bytes:
+            signature = (low, high, tuple(pl), tuple(keys))
+            bcs.append(_built_once(table, signature, functools.partial(build, table, pl)))
+            continue
+        pruned = _pruned_ranges(probes, table, keys)
         # Catalyst (over)estimates the semi-join at the whole table's
         # size; one count() job gives the per-row-bytes estimate
-        est_bytes = pruned.count() * (2 * width + 64 * len(payload) + 16 * len(keys))
+        est_bytes = pruned.count() * (2 * width + 64 * len(pl) + 16 * len(keys))
         if est_bytes > max_broadcast_bytes:
-            if is_long and not parse_ips:
+            if is_long and not parse_ips and len(tables) == 1:
                 return range_join_bucketed(
                     probes, pruned, probe_col, low=low, high=high,
-                    payload=payload, how=how, keys=keys,
+                    payload=pl, how=how, keys=keys,
                 )
             raise ValueError(
                 f"range_join_broadcast: build table ~{est_bytes >> 20} MiB exceeds "
                 f"max_broadcast_bytes ({max_broadcast_bytes >> 20} MiB) and no "
-                "bucketed fallback exists for binary bounds / parse_ips — "
-                "flatten per snapshot and use range_join_bucketed on long bounds"
+                "bucketed fallback exists for binary bounds / parse_ips / several "
+                "tables — flatten per snapshot and use range_join_bucketed on long bounds"
             )
-        bc = build(pruned)
+        bcs.append(build(pruned, pl))
 
     out_fields = list(probes.schema.fields) + [
-        T.StructField(c, ranges.schema[c].dataType, True) for c in payload
+        T.StructField(c, t.schema[c].dataType, True) for t, pl in tables for c in pl
     ]
     out_schema = T.StructType(out_fields)
     probe_names = [f.name for f in probes.schema.fields]
 
-    def parse_series(pv: pd.Series) -> pd.Series:
-        """P3+P4 in-kernel: text → canonical bytes → 6to4 rewrite.
-
-        Parsing goes through C-level ``inet_pton`` (strict, same
-        accept/reject set as the ipaddress module — measured 10x
-        faster per row, the hot-path win at 10M+ probes/batch); the
-        one divergence, zone-scoped v6 ("fe80::1%eth0", which
-        ipaddress accepts), falls back to the ipaddress path."""
-        import socket
-
-        from ..functions.ip import V4_MAPPED_PREFIX, py_ip_to_bytes16
-
-        inet_pton = socket.inet_pton
-        af4, af6 = socket.AF_INET, socket.AF_INET6
-
-        def conv(t):
-            try:
-                return V4_MAPPED_PREFIX + inet_pton(af4, t)
-            except (OSError, TypeError):
-                pass
-            try:
-                b = inet_pton(af6, t)
-            except (OSError, TypeError):
-                if isinstance(t, str) and "%" in t:
-                    b = py_ip_to_bytes16(t)  # zone-scoped v6
-                else:
-                    return None
-                if b is None:
-                    return None
-            if b[:2] == b"\x20\x02":
-                return V4_MAPPED_PREFIX + b[2:6]
-            return b
-
-        return pv.map(conv, na_action="ignore")
-
-    def lookup_one(tables, pdf, res):
-        pv = pdf[probe_col]
-        if parse_ips:
-            pv = parse_series(pv)
-        valid_mask = pv.notna().to_numpy()
-        if not valid_mask.any():
-            return
-        lows_b, highs_b, pl_b = tables
+    def search(table, pl, pb, pos, res):
+        """One table's binary search: write the payload of every probe
+        ``pb`` (at batch rows ``pos``) that falls inside a range."""
+        lows_b, highs_b, pl_b = table
         if not len(lows_b):
             return
-        pb = _u8_to_s(_to_u8(pv[valid_mask], width, is_long))
         idx = np.searchsorted(lows_b, pb, side="right") - 1
         ok = idx >= 0
         safe = np.where(ok, idx, 0)
         ok &= highs_b[safe] >= pb
-        hit_pos = pdf.index.to_numpy()[valid_mask][ok]
-        hit_idx = safe[ok]
-        for c in payload:
-            col_vals = pl_b[c].to_numpy(dtype=object)
-            res.loc[hit_pos, c] = col_vals[hit_idx]
+        hit_pos, hit_idx = pos[ok], safe[ok]
+        for c in pl:
+            res[c][hit_pos] = pl_b[c][hit_idx]
 
     def lookup(it):
-        tables_by_key = bc.value
+        by_key = [bc.value for bc in bcs]
         for pdf in it:
-            pdf = pdf.reset_index(drop=True)
-            res = pd.DataFrame(index=pdf.index, columns=payload, dtype=object)
-            if keys:
-                for kv, sub in pdf.groupby(keys, dropna=False, sort=False):
+            pv = pdf[probe_col]
+            if parse_ips:
+                pv = parse_ip_series(pv, six_to_four=True)
+            res = {c: np.full(len(pdf), None, dtype=object) for c in names}
+            valid = pv.notna().to_numpy()
+            if valid.any():
+                pos = np.flatnonzero(valid)
+                pb = _u8_to_s(_to_u8(pv[valid], width, is_long))
+                if keys:
+                    groups = pdf.loc[valid, keys].groupby(keys, dropna=False, sort=False).indices
+                else:
+                    groups = {(): np.arange(len(pos))}
+                for kv, ix in groups.items():
                     kt = kv if isinstance(kv, tuple) else (kv,)
-                    tables = tables_by_key.get(kt)
-                    if tables is not None:
-                        lookup_one(tables, sub, res)
-            elif tables_by_key:
-                lookup_one(tables_by_key[()], pdf, res)
-            out = pd.concat([pdf[probe_names], res], axis=1)
-            if how == "inner" and payload:
-                out = out[out[payload[0]].notna()]
+                    for tables_by_key, pl in zip(by_key, payloads):
+                        table = tables_by_key.get(kt)
+                        if table is not None:
+                            search(table, pl, pb[ix], pos[ix], res)
+            out = pd.concat([pdf[probe_names], pd.DataFrame(res, index=pdf.index)], axis=1)
+            if how == "inner":
+                for pl in payloads:
+                    if pl:
+                        out = out[out[pl[0]].notna()]
             yield out
 
     return probes.mapInPandas(lookup, out_schema)

@@ -4,10 +4,11 @@ Reference flow (handler/handler.go:194-243, manager/manager.go:49-57,
 geolite2v2/geo-ip.go:99-176, asn/asn-annotator.go:29-92):
 
     requests(date, ip)
-      → parse/validate (P3) → 6to4 rewrite (P4)
       → as-of snapshot selection (J2)
-      → geo range join (J1) → location dim join (J3 tail)
-      → asn range join (J1) → AS decode (P8/P9) → AS-name join (J4)
+      → parse/validate (P3) → 6to4 rewrite (P4)
+        → geo range join (J1) + asn range join (J1), one probe pass
+      → location dim join (J3 tail)
+      → AS decode (P8/P9) → AS-name join (J4)
       → GeolocationIP/ASData struct projection (P13)
       → Missing backfill (P15)
       → JSON shaping (S11)
@@ -17,17 +18,20 @@ representation makes v4 and v6 ranges disjoint in one sorted table,
 so a single binary search replaces the reference's per-family lists
 (manager/manager.go:213-226 becomes a representation choice).
 
-Scale notes: the probe side (the 100 TB stream) flows through two
-mapInPandas binary searches (geo, ASN; keyed by snapshot after the
-as-of join) and TWO broadcast hash joins (locations, asnames). No
-probe-side shuffle anywhere. The range tables are broadcast once per
-published DataFrame, not once per request: a server that passes the
-tables it holds in ``SnapshotStore`` plans every request after the
-first with no Spark job before the response action, and a refresh's
-``swap`` publishes a new DataFrame, so the next request builds from
-the new snapshot (``range_join_broadcast``). Tables whose size
-estimate exceeds the broadcast gate are instead pruned per request
-to the snapshots the probes reference.
+Scale notes: the probe side (the 100 TB stream) crosses into Python
+ONCE: a single mapInPandas parses each IP (P3 + P4) and binary-searches
+both the geo and the ASN table (keyed by snapshot after the as-of
+join), like the reference's one parse and two searches per IP
+(iputils/iputils.go:111-128). Then it flows through TWO broadcast hash
+joins (locations, asnames). No probe-side shuffle anywhere. The range
+tables are broadcast once per published DataFrame, not once per
+request: a server that passes the tables it holds in ``SnapshotStore``
+plans every request after the first with no Spark job before the
+response action, and a refresh's ``swap`` publishes a new DataFrame,
+so the next request builds from the new snapshot
+(``range_join_broadcast``). Tables whose size estimate exceeds the
+broadcast gate are instead pruned per request to the snapshots the
+probes reference.
 """
 
 from __future__ import annotations
@@ -40,6 +44,7 @@ from ..operators.asof import asof_join
 from ..operators.interval import range_join_broadcast
 
 GEO_PAYLOAD = ["gid", "postal_code", "latitude", "longitude"]
+ASN_PAYLOAD = ["as_string", "cidr"]
 
 # the v4-mapped /96: canonical home of every v4 address (J7)
 _V4_SPAN_LOW = b"\x00" * 10 + b"\xff\xff" + b"\x00" * 4
@@ -182,47 +187,38 @@ def annotate(
     ``dataset_date`` (J2∘J1); otherwise the single-snapshot tables
     are used directly.
     """
-    probes = prepare_probes(requests, ip_col)
-    keys: list[str] = []
+    probes, keys = requests, []
     if date_col is not None and registry is not None:
-        probes = asof_join(probes, registry, probe_date=date_col)
+        probes = asof_join(requests, registry, probe_date=date_col)
         keys = ["dataset_date"]
 
-    geo_hit = range_join_broadcast(
+    # P3 + P4 and both J1 searches in one Python crossing
+    hits = range_join_broadcast(
         probes,
-        geo_ranges,
-        probe_col="__eff",
-        payload=GEO_PAYLOAD,
+        [(geo_ranges, GEO_PAYLOAD), (asn_ranges, ASN_PAYLOAD)],
+        probe_col=ip_col,
         how="left",
         keys=keys,
+        parse_ips=True,
     )
-    loc_dim = locations
-    with_loc = geo_hit.join(
-        F.broadcast(loc_dim), on=geo_hit["gid"] == loc_dim["geoname_id"], how="left"
+    with_loc = hits.join(
+        F.broadcast(locations), on=hits["gid"] == locations["geoname_id"], how="left"
     ).drop("geoname_id")
-
-    asn_hit = range_join_broadcast(
-        with_loc.withColumn("geo", geolocation_struct(with_loc)).drop(
-            *GEO_PAYLOAD,
-            "continent_code",
-            "country_code",
-            "country_name",
-            "subdivision_1_iso_code",
-            "subdivision_1_name",
-            "subdivision_2_iso_code",
-            "subdivision_2_name",
-            "city_name",
-            "metro_code",
-            "accuracy_radius_km",
-        ),
-        asn_ranges,
-        probe_col="__eff",
-        payload=["as_string", "cidr"],
-        how="left",
-        keys=keys,
+    with_geo = with_loc.withColumn("geo", geolocation_struct(with_loc)).drop(
+        *GEO_PAYLOAD,
+        "continent_code",
+        "country_code",
+        "country_name",
+        "subdivision_1_iso_code",
+        "subdivision_1_name",
+        "subdivision_2_iso_code",
+        "subdivision_2_name",
+        "city_name",
+        "metro_code",
+        "accuracy_radius_km",
     )
     systems = ipf.asn_decode(F.col("as_string"))
-    with_asname = asn_hit.withColumn(
+    with_asname = with_geo.withColumn(
         "__best", ipf.best_asn(systems)
     ).join(
         F.broadcast(asnames.select("asn", "as_name")),
@@ -230,7 +226,7 @@ def annotate(
         how="left",
     )
     out = with_asname.withColumn("network", asdata_struct()).drop(
-        "as_string", "cidr", "as_name", "asn", "__best", "__ipb", "__eff"
+        *ASN_PAYLOAD, "as_name", "asn", "__best"
     )
     return out
 

@@ -439,6 +439,133 @@ def test_range_join_broadcast_memo_matches_pruned_path(spark, tmp_path):
     assert _payloads(memo) == _payloads(pruned) == _expected(probes)
 
 
+# --- J1 several tables in one probe ------------------------------------------
+
+
+def _ip_tables(spark):
+    """Two dated binary range tables for parsed-text probes: ``a`` has
+    snapshots d1 and d2 (v4 and v6 ranges), ``b`` only d1."""
+    import datetime as dt
+
+    d1, d2 = dt.date(2020, 1, 1), dt.date(2021, 1, 1)
+
+    def rows(d, spans, tag):
+        out = []
+        for cidr, pl in spans:
+            lo, hi = ipf.py_cidr_to_range(cidr)
+            out.append((d, lo, hi, f"{tag}{d.year}:{pl}"))
+        return out
+
+    a_spans = [("1.0.0.0/24", "au"), ("8.8.8.0/24", "us"), ("2001:db8::/32", "doc")]
+    b_spans = [("1.0.0.0/16", "as1"), ("2001:db8::/48", "as2")]
+    schema = "dataset_date date, ip_low binary, ip_high binary, {} string"
+    a = spark.createDataFrame(
+        rows(d1, a_spans, "a") + rows(d2, a_spans, "a"), schema.format("geo")
+    )
+    b = spark.createDataFrame(rows(d1, b_spans, "b"), schema.format("net"))
+    probes = spark.createDataFrame(
+        [
+            (i, ip, d)
+            for d in (d1, d2)
+            for i, ip in enumerate(
+                [
+                    "1.0.0.5",             # v4, in both tables
+                    "1.0.9.9",             # v4, only b
+                    "8.8.8.8",             # v4, only a
+                    "2001:db8::1",         # v6, in both
+                    "2001:db8:1::1",       # v6, only a
+                    "2002:0100:0005::1",   # 6to4 of 1.0.0.5
+                    " 1.0.0.5",            # whitespace: parses like the UDF
+                    "junk",                # invalid text
+                    None,
+                    "9.9.9.9",             # miss
+                ],
+                start=100 * d.year,
+            )
+        ],
+        "pid long, ip string, dataset_date date",
+    )
+    return a, b, probes
+
+
+def _rows(df):
+    return sorted(
+        (tuple(r) for r in df.collect()), key=lambda t: tuple(str(v) for v in t)
+    )
+
+
+@pytest.mark.parametrize("how", ["left", "inner"])
+def test_range_join_broadcast_several_tables_equals_composition(spark, how):
+    """One multi-table call answers exactly like two chained single-table
+    calls: v4, v6, 6to4, invalid text, and a key group (d2) that only
+    one table has."""
+    a, b, probes = _ip_tables(spark)
+    kw = dict(probe_col="ip", keys=["dataset_date"], parse_ips=True, how=how)
+    multi = iv.range_join_broadcast(probes, [(a, ["geo"]), (b, ["net"])], **kw)
+    chained = iv.range_join_broadcast(
+        iv.range_join_broadcast(probes, a, payload=["geo"], **kw), b, payload=["net"], **kw
+    )
+    assert multi.columns == ["pid", "ip", "dataset_date", "geo", "net"]
+    assert _rows(multi) == _rows(chained)
+    if how == "left":
+        got = {(r.dataset_date.year, r.ip): (r.geo, r.net) for r in multi.collect()}
+        assert got[(2020, "1.0.0.5")] == ("a2020:au", "b2020:as1")
+        assert got[(2020, "2002:0100:0005::1")] == ("a2020:au", "b2020:as1")
+        assert got[(2020, " 1.0.0.5")] == ("a2020:au", "b2020:as1")
+        assert got[(2020, "2001:db8:1::1")] == ("a2020:doc", None)
+        assert got[(2021, "1.0.0.5")] == ("a2021:au", None)  # b has no d2
+        assert got[(2021, "junk")] == got[(2021, None)] == (None, None)
+    else:
+        assert {r.ip for r in multi.collect()} == {
+            "1.0.0.5", "2001:db8::1", "2002:0100:0005::1", " 1.0.0.5"
+        }
+
+
+def test_range_join_broadcast_several_tables_reuse_single_builds(spark, tmp_path):
+    """The multi-table call shares each table's memoized build with the
+    single-table calls: after one call per table it runs no Spark job,
+    and publishing a new second table rebuilds only that one."""
+    dates, ranges, probes = _snapshot_fixture(spark)
+    geo = _published(spark, tmp_path, ranges, "geo")
+    asn = _published(spark, tmp_path, ranges.withColumnRenamed("payload", "net"), "asn")
+    kw = dict(probe_col="v", low="low", high="high", keys=["dataset_date"])
+    iv.range_join_broadcast(probes, geo, payload=["payload"], **kw)
+    iv.range_join_broadcast(probes, asn, payload=["net"], **kw)
+
+    n, out = sql_executions(
+        spark, lambda: iv.range_join_broadcast(probes, [(geo, ["payload"]), (asn, ["net"])], **kw)
+    )
+    assert n == 0
+    assert sorted((r.pid, r.payload, r.net) for r in out.collect()) == [
+        (pid, p, p) for pid, p in _expected(probes)
+    ]
+
+    asn2 = _published(
+        spark, tmp_path, ranges.select("dataset_date", "low", "high",
+                                       F.concat("payload", F.lit("-v2")).alias("net")), "asn2"
+    )
+    n, out = sql_executions(
+        spark, lambda: iv.range_join_broadcast(probes, [(geo, ["payload"]), (asn2, ["net"])], **kw)
+    )
+    assert n == 1  # the new ASN table's build; geo is reused
+    assert sorted((r.pid, r.payload, r.net) for r in out.collect()) == [
+        (pid, p, p + "-v2") for pid, p in _expected(probes)
+    ]
+
+
+def test_range_join_broadcast_several_tables_past_gate_raises(spark):
+    """A table past the gate has no bucketed fallback inside a
+    multi-table call; alone, the same table still falls back."""
+    dates, ranges, probes = _snapshot_fixture(spark)
+    kw = dict(probe_col="v", low="low", high="high", keys=["dataset_date"], max_broadcast_bytes=1)
+    with pytest.raises(ValueError, match="several tables"):
+        iv.range_join_broadcast(
+            probes, [(ranges, ["payload"]), (ranges.withColumnRenamed("payload", "p2"), ["p2"])], **kw
+        )
+    alone = iv.range_join_broadcast(probes, ranges, payload=["payload"], **kw)
+    assert _payloads(alone) == _expected(probes)
+
+
 # ---------------------------------------------------------------------------
 # General interval×interval overlap join (grid-cell blocked)
 # ---------------------------------------------------------------------------

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import ipaddress
 
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from annotation_service_spark.functions import ip as ipf
@@ -217,3 +218,98 @@ def test_cidr_roundtrip_reference_fixture_v6():
     for cidr in _reference_cidr_fixture("ipv6-cidr.csv"):
         lo, hi = ipf.py_cidr_to_range(cidr)
         assert ipf.py_range_to_cidr(lo, hi) == cidr, cidr
+
+
+# ---------------------------------------------------------------------------
+# One parser: the range-join kernel's parse (P3 + P4) against the UDF's
+# ---------------------------------------------------------------------------
+
+ADVERSARIAL_IP_TEXT = [
+    " 1.2.3.4", "1.2.3.4 ", "1.2.3.4\n", "\t::1", " 1.2.3.4",
+    "01.2.3.4", "1.2.3.04", "::ffff:1.2.3.04", "1.2.3", "1.2.3.4.5",
+    "0x1.2.3.4", "256.1.1.1", "1..2.3",
+    "fe80::1%eth0", "fe80::1%", "1.2.3.4%eth0",
+    "::ffff:1.2.3.4", "::1.2.3.4", "1:2:3:4:5:6:1.2.3.4",
+    "2002:0100:0005::1", "2002:c000:0204::", " 2002:0100:0005::1 ",
+    "::", "0.0.0.0", "255.255.255.255", "00001::", "ABCD::", "1::2::3",
+    "1:2:3:4:5:6:7::", "::1:2:3:4:5:6:7", "1:2:3:4:5:6:7:8:9",
+    "1.2.3.4/32", "[::1]", "1.2.3.4\x00", "\x00", "１.2.3.4",
+    "", None,
+]
+
+
+def _ipaddress_reference(text):
+    """The reference accept set: ``ipaddress`` on the stripped text."""
+    if not text:
+        return None
+    try:
+        addr = ipaddress.ip_address(text.strip())
+    except ValueError:
+        return None
+    return ipf.V4_MAPPED_PREFIX + addr.packed if addr.version == 4 else addr.packed
+
+
+_ip_like = st.one_of(
+    st.ip_addresses().map(str),
+    st.ip_addresses(v=6).map(lambda a: a.exploded),
+    st.ip_addresses(v=4).map(lambda a: f"2002:{a.packed.hex()[:4]}:{a.packed.hex()[4:]}::1"),
+    st.tuples(st.ip_addresses(), st.sampled_from([" ", "\t", "\n", "%eth0", "0", ":", "."]))
+    .map(lambda t: str(t[0]) + t[1]),
+    st.text(alphabet="0123456789abcdefABCDEF:.%x \t", max_size=24),
+    st.text(max_size=12),
+)
+
+
+@settings(max_examples=600, deadline=None)
+@given(_ip_like)
+def test_py_parse_matches_ipaddress_reference(text):
+    """The ``inet_pton`` fast path never changes an answer: the shared
+    parser accepts exactly what ``ipaddress.ip_address(text.strip())``
+    accepts, with the same bytes."""
+    assert ipf.py_ip_to_bytes16(text) == _ipaddress_reference(text)
+
+
+def test_py_parse_adversarial_list():
+    for text in ADVERSARIAL_IP_TEXT:
+        assert ipf.py_ip_to_bytes16(text) == _ipaddress_reference(text), repr(text)
+
+
+def _kernel_vs_udf(spark, texts):
+    """For each text: the payload the parse_ips range-join kernel finds,
+    and the payload the UDF path (``ip_to_bytes`` + ``ip6to4``) says it
+    must find. The build table tiles the whole address space: one point
+    range per address the UDF path produced, "gap" ranges between them,
+    so a kernel parse that differs in any way lands on another payload."""
+    from annotation_service_spark.operators import interval as iv
+
+    df = spark.createDataFrame(list(enumerate(texts)), "i long, t string")
+    want = {
+        r.i: r.b
+        for r in df.select("i", ipf.ip6to4(ipf.ip_to_bytes(F.col("t"))).alias("b")).collect()
+    }
+    points = sorted({b for b in want.values() if b is not None})
+    lo, rows = bytes(16), []
+    for p in points:
+        if p > lo:
+            rows.append((lo, ipf.py_minus_one(p), "gap"))
+        rows.append((p, p, p.hex()))
+        lo = ipf.py_plus_one(p)
+    if not points or points[-1] != b"\xff" * 16:
+        rows.append((lo, b"\xff" * 16, "gap"))
+    ranges = spark.createDataFrame(rows, "ip_low binary, ip_high binary, hx string")
+    got = iv.range_join_broadcast(df, ranges, probe_col="t", payload=["hx"], parse_ips=True)
+    return (
+        {r.i: r.hx for r in got.collect()},
+        {i: (b.hex() if b is not None else None) for i, b in want.items()},
+    )
+
+
+@settings(max_examples=8, deadline=None)
+@given(st.lists(_ip_like, min_size=1, max_size=40))
+def test_kernel_parse_matches_udf_parse(spark, texts):
+    """Differential: ``range_join_broadcast(parse_ips=True)``'s in-kernel
+    parse + 6to4 equals ``ip6to4(ip_to_bytes(text))`` on hypothesis
+    text plus a fixed adversarial list (whitespace, leading zeros,
+    short and hex v4, zone-scoped v6, v4-mapped, 6to4, empty, NULL)."""
+    got, want = _kernel_vs_udf(spark, texts + ADVERSARIAL_IP_TEXT)
+    assert got == want

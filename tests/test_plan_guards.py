@@ -500,3 +500,49 @@ def test_annotate_serving_plans_run_no_spark_work(spark, tmp_path, fixture_dir):
     (row,) = request().collect()
     assert row.geo.postal_code == "3095-v2"
     assert row.network.as_number == 13335
+
+
+def test_annotate_request_stage_crosses_into_python_once(spark, fixture_dir):  # noqa: F811
+    """The probe stage of ``annotate()`` is ONE Python crossing: IP
+    parse, 6to4 and the geo and ASN range searches share a single
+    MapInPandas, with no ArrowEvalPython / BatchEvalPython before it
+    — in the single-snapshot form and in the as-of form."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    from annotation_service_spark.plans import annotate as plan
+    from annotation_service_spark.sources import dims, geolite2, routeviews
+
+    snapshot = dt.date(2017, 9, 7)
+    locs = geolite2.geolite2_locations(spark, str(fixture_dir / "locations.csv"))
+    names = dims.asnames(spark, str(fixture_dir / "asnames.csv"))
+    geo = geolite2.build_geo_ranges(
+        geolite2.geolite2_blocks(spark, str(fixture_dir / "blocks.csv")), locs
+    )
+    asn = routeviews.build_asn_ranges(
+        routeviews.routeviews_pfx2as(spark, str(fixture_dir / "pfx2as.tsv"))
+    )
+    req = spark.createDataFrame(
+        [("1.0.0.5", dt.date(2018, 1, 1)), ("junk", dt.date(2018, 1, 1))],
+        "ip string, req_date date",
+    )
+
+    def dated(t):
+        return t.withColumn("dataset_date", F.lit(snapshot))
+
+    forms = {
+        "single": plan.annotate(req, geo, locs, asn, names),
+        "asof": plan.annotate(
+            req, dated(geo), locs, dated(asn), names, date_col="req_date",
+            registry=spark.createDataFrame([(snapshot,)], "dataset_date date"),
+        ),
+    }
+    for form, out in forms.items():
+        p = _plan(out)
+        assert p.count("MapInPandas") == 1, (form, p)
+        assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p, (form, p)
+        got = {r.ip: r for r in out.collect()}
+        assert got["1.0.0.5"].geo.postal_code == "3095", form
+        assert got["1.0.0.5"].network.as_number == 13335, form
+        assert got["junk"].geo.missing and got["junk"].network.missing, form
