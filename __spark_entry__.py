@@ -3739,11 +3739,7 @@ def q_html_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "entry.html_pipeline.staged",
         ext.join(bw_keep, "doc_id").join(gq_pass, "doc_id"),
     )
-    # cache_units=False: staged is already cached — re-splitting it
-    # beats materializing a second corpus-sized units cache (A/B r13)
-    return cu.remove_boilerplate_lines(
-        staged, max_line_df=15, cache_units=False
-    )
+    return cu.remove_boilerplate_lines(staged, max_line_df=15)
 
 
 def q_stream_sentence_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4002,11 +3998,7 @@ def _web_pipeline(
     staged = scoped_cache(
         f"entry.web_pipeline.staged.rep{with_repetition}", staged
     )
-    # cache_units=False: staged is already cached — re-splitting it
-    # beats materializing a second corpus-sized units cache (A/B r13)
-    return cu.remove_boilerplate_lines(
-        staged, max_line_df=15, cache_units=False
-    )
+    return cu.remove_boilerplate_lines(staged, max_line_df=15)
 
 
 def q_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -34,6 +34,13 @@ from pyspark.sql import DataFrame
 _live_caches: dict[str, DataFrame] = {}
 
 
+def is_cached(df: DataFrame) -> bool:
+    """True when the session's cache manager holds ``df``'s plan — a
+    plan lookup, it runs nothing."""
+    sl = df.storageLevel
+    return sl.useMemory or sl.useDisk
+
+
 def scoped_cache(key: str, df: DataFrame) -> DataFrame:
     """Cache ``df`` under ``key``, releasing the previous holder.
 
@@ -52,8 +59,7 @@ def scoped_cache(key: str, df: DataFrame) -> DataFrame:
             # an external catalog.clearCache() already dropped the data
             # — returning an unpersisted handle would silently disable
             # caching for the rest of the pipeline.
-            sl = prev.storageLevel
-            same = (sl.useMemory or sl.useDisk) and (
+            same = is_cached(prev) and (
                 prev._jdf.queryExecution()
                 .analyzed()
                 .sameResult(df._jdf.queryExecution().analyzed())

@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from annotation_service_spark.caching import scoped_cache
 from annotation_service_spark.operators.dedup import tokens
 
 
@@ -102,7 +103,9 @@ def perceptron_scores(
     ranking; keeping the sum instead of the mean keeps every margin
     int64-exact."""
     spark = docs.sparkSession
-    feat = hashed_bow(docs, id_col, text_col, n_buckets, seed).cache()
+    feat = scoped_cache(
+        "classify.perceptron.feat", hashed_bow(docs, id_col, text_col, n_buckets, seed)
+    )
     lab = docs.select(F.col(id_col).alias("id"), label.cast("long").alias("y"))
 
     w = {b: 0 for b in range(n_buckets + 1)}

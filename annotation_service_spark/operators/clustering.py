@@ -45,6 +45,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from annotation_service_spark.caching import scoped_cache
+
 
 def _local_components(src, dst) -> dict[int, int]:
     """Driver-local union-find (path halving + union-by-min) over two
@@ -418,7 +420,9 @@ def kmeans_fixed(
     c_sum) where inertia = Σ member distances under the FINAL
     centroids and c_sum = Σ centroid components — together they pin
     both the assignment and the centroid values exactly."""
-    q = _quantized(embeddings, vec_col, id_col, scale).cache()
+    q = scoped_cache(
+        "clustering.kmeans_fixed.q", _quantized(embeddings, vec_col, id_col, scale)
+    )
     centroids = kmeans_centroids(
         embeddings, k, iterations, vec_col, id_col, scale, quantized=q
     )

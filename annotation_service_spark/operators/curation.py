@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from annotation_service_spark.caching import scoped_cache
+from annotation_service_spark.caching import is_cached, scoped_cache
 
 
 def concat_chunk_map(
@@ -542,9 +542,12 @@ def dsir_weights(
     # explode over the corpus (measured 16 s → 3 s at sf0.1). Size is
     # ≤ Σ per-doc distinct buckets (one count per (doc, bucket)),
     # far below the exploded gram stream it replaces.
-    doc_feats = feats.groupBy("id", "b").agg(
-        F.count(F.lit(1)).alias("c"), F.first("is_target").alias("is_target")
-    ).cache()
+    doc_feats = scoped_cache(
+        "curation.dsir.doc_feats",
+        feats.groupBy("id", "b").agg(
+            F.count(F.lit(1)).alias("c"), F.first("is_target").alias("is_target")
+        ),
+    )
     raw = doc_feats.groupBy("b").agg(F.sum("c").alias("rc"))
     tgt = (
         doc_feats.where("is_target")
@@ -607,12 +610,15 @@ def dsir_resample(
     ) / F.lit(float((1 << 40) + 1))
     # cached: consumed by the percentile reduce AND the output select
     # (one slim row per doc)
-    scored = w.select(
-        "id",
-        "n_feats",
-        "logw",
-        round_fixed(F.col("logw") - F.log(-F.log(u)), 6).alias("gscore"),
-    ).cache()
+    scored = scoped_cache(
+        "curation.dsir.scored",
+        w.select(
+            "id",
+            "n_feats",
+            "logw",
+            round_fixed(F.col("logw") - F.log(-F.log(u)), 6).alias("gscore"),
+        ),
+    )
     # threshold rounded onto the same 1e-6 grid as the scores before
     # comparing: the interpolated percentile is the one double here
     # computed by different expression orders on the two engines
@@ -798,10 +804,7 @@ def token_budget_sample(
     )
 
 
-def _doc_lines(
-    docs: DataFrame, id_col: str, text_col: str, sep: str,
-    spread: bool = True,
-) -> DataFrame:
+def _doc_lines(docs: DataFrame, id_col: str, text_col: str, sep: str) -> DataFrame:
     """(id, n_lines, line_no, line, norm) — documents split into lines
     with a whitespace-collapsed lowercase normalization key. Linear
     explode; everything downstream keys on the norm's CONTENT, never on
@@ -818,11 +821,7 @@ def _doc_lines(
 
     # r14: a single-row-group corpus scan pins the split+explode to
     # one task (A/B: boilerplate_lines cold 0.69x with the spread).
-    # The composed pipelines pass spread=False — their input is a
-    # cached upstream relation and the extra exchange measured ~8%
-    # WORSE there (same lesson as q_pipeline_full's scan).
-    if spread:
-        docs = spread_underparallel(docs)
+    docs = spread_underparallel(docs)
     arr = F.split(F.col(text_col), sep)
     return (
         docs.select(
@@ -844,7 +843,6 @@ def remove_boilerplate_lines(
     sep: str = "\n",
     max_line_df: int = 30,
     hot_broadcast_limit: int = 100_000,
-    cache_units: bool = True,
 ) -> DataFrame:
     """Line-level boilerplate removal (the CCNet/RefinedWeb line-hash
     family; public: Wenzek et al. 2020 "CCNet", Penedo et al. 2023
@@ -872,17 +870,16 @@ def remove_boilerplate_lines(
     all-pairs anywhere; a line shared by 10^9 documents is one
     aggregation key, not a fan-out.
 
-    ``cache_units`` (r13, guide §5): the hot-set probe executes the
-    unit explode's upstream once before the main action does — with
-    the default True the unit table is scoped-cached so that upstream
-    (parquet scan + synthesis + split) runs ONCE (A/B: bare-gate cold
-    ~0.75x, warm ~0.3x). Callers whose input is ALREADY cached (the
-    composed pipelines cache their staged survivors) pass False: a
-    re-split of a cached input is cheaper than materializing a second
-    corpus-sized cache (A/B: html_pipeline regressed ~10% with the
-    double cache)."""
-    lines = _doc_lines(docs, id_col, text_col, sep, spread=cache_units)
-    if cache_units:
+    Unit cache (r13, guide §5): the hot-set probe executes the unit
+    explode's upstream once before the main action does, so the unit
+    table is scoped-cached and that upstream (parquet scan + synthesis
+    + split) runs ONCE (A/B: bare-gate cold ~0.75x, warm ~0.3x) —
+    unless ``docs`` is itself cached (the composed pipelines cache
+    their staged survivors): a re-split of a cached input is cheaper
+    than materializing a second corpus-sized cache (A/B: html_pipeline
+    regressed ~10% with the double cache)."""
+    lines = _doc_lines(docs, id_col, text_col, sep)
+    if not is_cached(docs):
         lines = scoped_cache("curation.boilerplate.units", lines)
     hot = scoped_cache(
         "curation.boilerplate.hot",
@@ -952,8 +949,7 @@ def dedup_lines_keep_first(
     (``_doc_lines``), so there is no second scan of ``docs``."""
     lines = _doc_lines(docs, id_col, text_col, sep)
     return _keep_first_units(
-        lines, sep, broadcast_dup_limit,
-        units_cache_key="curation.keep_first.units.lines",
+        lines, sep, broadcast_dup_limit, "curation.keep_first.units.lines"
     )
 
 
@@ -961,7 +957,7 @@ def _keep_first_units(
     lines: DataFrame,
     sep: str,
     broadcast_dup_limit: int,
-    units_cache_key: str | None = None,
+    units_cache_key: str,
 ) -> DataFrame:
     """Shared keep-first core over any (id, n_lines, line_no, line,
     norm) unit table (lines OR sentences): duplicated norms keep
@@ -977,16 +973,13 @@ def _keep_first_units(
     final rows directly (null-line rows from the outer explode keep
     empty/null-text docs in the output without a join).
 
-    ``units_cache_key``: when set, the unit table itself is
-    scoped-cached so the broadcast probe's materialization of the
-    dup subset and the main action's join left side read ONE
-    execution of the upstream (parquet scan + text synthesis +
-    split) instead of two (guide §5 — reused AND expensive to
-    recompute; the cache spills to disk above memory). Callers on
-    corpora too large to spill can pass None to keep the
-    two-scan/no-cache shape."""
-    if units_cache_key is not None:
-        lines = scoped_cache(units_cache_key, lines)
+    The unit table itself is scoped-cached under ``units_cache_key``
+    so the broadcast probe's materialization of the dup subset and
+    the main action's join left side read ONE execution of the
+    upstream (parquet scan + text synthesis + split) instead of two
+    (guide §5 — reused AND expensive to recompute; the cache spills
+    to disk above memory)."""
+    lines = scoped_cache(units_cache_key, lines)
     dup_first = scoped_cache(
         "curation.keep_first.dup_first",
         lines.where(F.col("norm") != "")
@@ -1036,8 +1029,7 @@ def _keep_first_units(
 
 
 def _doc_sentences(
-    docs: DataFrame, id_col: str, text_col: str, outer: bool = False,
-    spread: bool = True,
+    docs: DataFrame, id_col: str, text_col: str, outer: bool = False
 ) -> DataFrame:
     """(id, line_no, line, norm) at SENTENCE granularity — the unit
     table the keep-first core consumes, cut by a deterministic,
@@ -1062,10 +1054,8 @@ def _doc_sentences(
     from annotation_service_spark.partitioning import spread_underparallel
 
     # r14: parallelize the regex segmentation + explode (A/B:
-    # sentence_dedup cold 0.66x). On a STREAMING df the helper's
-    # .rdd probe raises and it no-ops — the stream keeps its plan.
-    if spread:
-        docs = spread_underparallel(docs)
+    # sentence_dedup cold 0.66x).
+    docs = spread_underparallel(docs)
     arr = F.regexp_extract_all(
         F.col(text_col), F.lit(r"[^.!?]+[.!?]*"), F.lit(0)
     )
@@ -1107,8 +1097,7 @@ def dedup_sentences_keep_first(
     base scan (a second full pass over ``docs``) is gone."""
     sents = _doc_sentences(docs, id_col, text_col, outer=True)
     out = _keep_first_units(
-        sents, " ", broadcast_dup_limit,
-        units_cache_key="curation.keep_first.units.sents",
+        sents, " ", broadcast_dup_limit, "curation.keep_first.units.sents"
     )
     return out.withColumnRenamed("n_lines", "n_sents")
 

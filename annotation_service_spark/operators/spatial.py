@@ -122,7 +122,7 @@ def grid_radius_join(
     # candidates BELOW any exchange — an under-parallel left side
     # (e.g. a one-task upstream scan or Arrow kernel) pins it to that
     # task count (A/B: annotate_nearest_site cold 0.77x with the
-    # spread). Already-shuffled inputs trip the guard and stay as-is.
+    # spread).
     left = spread_underparallel(left)
 
     lcols = [F.col(c).alias(c + suffixes[0]) for c in left.columns]

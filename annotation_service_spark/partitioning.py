@@ -7,12 +7,20 @@ every NARROW transform above the scan (regex tokenize + explode,
 per-pair vector arithmetic, hash/vote expressions) is pinned to those
 few cores until the first exchange. ``spread_underparallel`` applies
 the guide's remedy — "fix at the source if you can; otherwise
-repartition immediately after the read" — with a trigger DERIVED from
-the input layout and core count, never a constant: inputs that
-already plan at least ``target/factor`` splits are returned
-untouched, so at production scale (thousands of splits) this is a
-no-op and only genuinely under-parallel reads pay the one bounded
-exchange.
+repartition immediately after the read".
+
+The trigger is read off the input's physical plan; the plan is never
+executed (no ``.rdd``, no job):
+
+- a streaming input, a cached input, or a plan that already holds an
+  Exchange or an in-memory scan is returned as it is — its partition
+  count is the exchange's or the cache's business, not the scan's;
+- otherwise the narrow chain's partition count is planned from its
+  leaves (file-scan splits, RDD/local/range slice counts), summed
+  over a Union and capped by a Coalesce. Only a count at least
+  ``_FACTOR`` times below ``defaultParallelism`` pays the one bounded
+  round-robin exchange, so at production scale (thousands of splits)
+  this is a no-op.
 
 Call sites are deliberately the COMPUTE-BOUND operators, not the
 generic reader: interleaved A/B (r14) measured blanket spreading as a
@@ -28,21 +36,64 @@ the reader does not.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 
+from annotation_service_spark.caching import is_cached
 
-def spread_underparallel(df: DataFrame, factor: int = 4) -> DataFrame:
+_FACTOR = 4
+_FILE_SCANS = ("FileSourceScanExec", "BatchScanExec")
+
+
+def _children(plan) -> list:
+    kids = plan.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def _is_settled(plan) -> bool:
+    """True when the plan holds an Exchange (or, after AQE ran, a
+    query stage) or an in-memory scan anywhere."""
+    name = plan.getClass().getSimpleName()
+    if "Exchange" in name or "QueryStage" in name or name == "InMemoryTableScanExec":
+        return True
+    return any(_is_settled(c) for c in _children(plan))
+
+
+def _planned_partitions(plan) -> int:
+    """Partition count of an exchange-free physical plan, from its
+    leaves: building a leaf's RDD lists its splits and runs nothing."""
+    name = plan.getClass().getSimpleName()
+    kids = _children(plan)
+    if not kids:
+        rdd = plan.inputRDD() if name in _FILE_SCANS else plan.execute()
+        return rdd.getNumPartitions()
+    counts = [_planned_partitions(c) for c in kids]
+    if name == "CoalesceExec":
+        return min(plan.numPartitions(), counts[0])
+    if name == "UnionExec":
+        return sum(counts)
+    return max(counts)
+
+
+def spread_underparallel(df: DataFrame) -> DataFrame:
     """Round-robin repartition ``df`` to the session's default
-    parallelism iff its planned partition count is more than
-    ``factor`` below it. Content-neutral (sort-before-repartition
-    keeps the assignment deterministic under task retry); cost when
-    it fires is one exchange of at most (splits x maxPartitionBytes),
-    bounded by the trigger to under target/factor splits."""
-    try:
-        n = df.rdd.getNumPartitions()
-        target = df.sparkSession.sparkContext.defaultParallelism
-    except Exception:  # planning failure — never block the data path
+    parallelism iff its planned partition count is at least
+    ``_FACTOR`` times below it (see the module docstring for the
+    plan rule). Content-neutral (sort-before-repartition keeps the
+    assignment deterministic under task retry); cost when it fires
+    is one exchange of at most (splits x maxPartitionBytes)."""
+    if df.isStreaming or is_cached(df):
         return df
-    if n * factor <= target:
+    try:
+        plan = df._jdf.queryExecution().executedPlan()
+        if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            plan = plan.executedPlan()  # the initial plan until it runs
+        if _is_settled(plan):
+            return df
+        n = _planned_partitions(plan)
+        target = df.sparkSession.sparkContext.defaultParallelism
+    except Py4JError:  # planning failure — never block the data path
+        return df
+    if n * _FACTOR <= target:
         return df.repartition(target)
     return df

@@ -93,7 +93,12 @@ def geolite2_blocks(spark: SparkSession, path: str, strict: bool = True) -> Data
     # cache: Spark disallows plans whose pruned file scan reads only
     # `_corrupt_record` (e.g. a count() after our malformed-row filter);
     # caching the parsed result is the documented workaround, and these
-    # are small ingest files, never probe-scale data.
+    # are small ingest files, never probe-scale data. It is also what
+    # keeps malformed records visible: uncached, column pruning hides
+    # `_corrupt_record`, so the strict budget passes a malformed file
+    # and count() disagrees with collect()
+    # (test_sources.py::test_blocks_malformed_records). The cache is
+    # never released — one persisted RDD per loaded file.
     raw = spark.read.csv(
         path,
         header=True,

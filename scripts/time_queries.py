@@ -1,8 +1,10 @@
 """Targeted per-query timing for optimization A/B runs (guide §1.4):
 times each named query end-to-end with the noop sink, cold (cache
 cleared before every iteration) and one warm run, plus a warm
-tpch_q1 canary so ambient-load inflation is visible. Prints one JSON
-line. Run from the repo root to be measured.
+tpch_q1 canary so ambient-load inflation is visible. ``plan_jobs``
+is the most Spark jobs any cold iteration started while building the
+query's DataFrame, before its write — work done during planning.
+Prints one JSON line. Run from the repo root to be measured.
 
 Usage: python scripts/time_queries.py <iters> <query> [...]
 """
@@ -29,25 +31,41 @@ def main() -> None:
     spark = get_session("time_queries")
     qs = em.queries()
 
-    def run(name: str) -> float:
-        spark.sparkContext.setJobDescription(name)
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+
+    def jobs() -> set[int]:
+        bus.waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup(None))
+
+    def run(name: str) -> tuple[float, int]:
+        """(seconds, Spark jobs started while the DataFrame was built);
+        counting the jobs is kept out of the timed span."""
+        sc.setJobDescription(name)
+        before = jobs()
         t0 = time.perf_counter()
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return round(time.perf_counter() - t0, 3)
+        df = qs[name](spark, sf_dir)
+        built = time.perf_counter() - t0
+        planned = len(jobs() - before)
+        t0 = time.perf_counter()
+        df.write.format("noop").mode("overwrite").save()
+        return round(built + time.perf_counter() - t0, 3), planned
 
     run("tpch_q1")  # JVM warmup
-    canary = sorted(run("tpch_q1") for _ in range(3))[1]
+    canary = sorted(run("tpch_q1")[0] for _ in range(3))[1]
     out: dict[str, object] = {"canary_q1": canary}
     for name in names:
-        cold = []
+        cold, plan_jobs = [], 0
         for _ in range(iters):
             spark.catalog.clearCache()
             release_caches()
-            cold.append(run(name))
+            secs, planned = run(name)
+            cold.append(secs)
+            plan_jobs = max(plan_jobs, planned)
             gc.collect()
-        warm = run(name)
-        out[name] = {"cold": cold, "warm": warm}
-    out["canary_q1_end"] = sorted(run("tpch_q1") for _ in range(3))[1]
+        warm = run(name)[0]
+        out[name] = {"cold": cold, "warm": warm, "plan_jobs": plan_jobs}
+    out["canary_q1_end"] = sorted(run("tpch_q1")[0] for _ in range(3))[1]
     print(json.dumps(out))
 
 

@@ -91,3 +91,19 @@ def test_cleared_cache_is_recached_on_reentry(spark):
     assert sl.useMemory or sl.useDisk
     assert b.count() == 9
     caching.release_caches()
+
+
+def test_gate_caches_are_released(spark):
+    """The caches these gates build go through ``scoped_cache``, so
+    after a gate's action ``release_caches()`` leaves no persisted RDD
+    behind."""
+    import __spark_entry__ as em
+    from tests.test_plan_guards import SF
+
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    caching.release_caches()
+    baseline = len(persisted())
+    for gate in (em.q_dsir_resample, em.q_kmeans_fixed, em.q_perceptron_filter):
+        gate(spark, SF).collect()
+        caching.release_caches()
+        assert len(persisted()) == baseline, gate.__name__

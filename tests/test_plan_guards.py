@@ -8,6 +8,7 @@ against DuckDB; these pin the PHYSICAL shape that survives 100x.
 from __future__ import annotations
 
 import __spark_entry__ as em
+from annotation_service_spark import caching
 from annotation_service_spark.operators import graph as g
 from tests.test_sources import fixture_dir  # noqa: F401 (fixture reuse)
 
@@ -420,6 +421,21 @@ def test_html_pipeline_plan(spark):
     assert any(j in p for j in EQUI_JOINS)
     assert "BroadcastHashJoin" in p
     assert "SinglePartition" not in p
+
+
+def test_unit_cache_and_spread_follow_the_input(spark):
+    """The boilerplate stage derives its unit cache and its spread
+    from its input: the composition hands it cached survivors, so
+    it adds no second corpus-sized cache and no RoundRobin exchange;
+    the bare gate's uncached input still gets the unit cache."""
+    caching.release_caches()
+    p = _plan(em.q_html_pipeline(spark, SF))
+    assert "curation.boilerplate.units" not in caching._live_caches
+    assert "RoundRobinPartitioning" not in p
+    caching.release_caches()
+    em.q_boilerplate_lines(spark, SF)
+    assert "curation.boilerplate.units" in caching._live_caches
+    caching.release_caches()
 
 
 def test_sentence_dedup_plan(spark):

@@ -345,3 +345,24 @@ def test_zorder_key_properties(spark):
     # global span is 63 on both axes; z-clustered partitions must be
     # materially tighter on BOTH (a plain sort would leave one at 63)
     assert avg_wa < 40 and avg_wb < 40, (avg_wa, avg_wb)
+
+
+def test_blocks_malformed_records(spark, tmp_path):
+    """Malformed CSV records (here an extra-columns row and an
+    unterminated quote) abort a strict load and are dropped from a
+    lenient one — consistently across actions. Both hold only because
+    the parsed file is cached: without the cache, column pruning
+    hides ``_corrupt_record`` from the budget check and from
+    ``count()``."""
+    hdr = "network,geoname_id,registered_country_geoname_id,represented_country_geoname_id,is_anonymous_proxy,is_satellite_provider,postal_code,latitude,longitude,accuracy_radius\n"
+    ok_row = "1.0.0.0/24,1,2,,0,0,x,1.0,10.0,5\n"
+    extra_cols = "1.0.1.0/24,1,2,,0,0,x,1.0,10.0,5,surplus,columns\n"
+    open_quote = '1.0.2.0/24,1,2,,0,0,"x,1.0,10.0,5\n'
+    p = tmp_path / "malformed.csv"
+    p.write_text(hdr + ok_row + extra_cols + open_quote)
+    with pytest.raises(geolite2.ErrTooManyErrors, match="2 malformed"):
+        geolite2.geolite2_blocks(spark, str(p), strict=True)
+    df = geolite2.geolite2_blocks(spark, str(p), strict=False)
+    rows = df.collect()
+    assert [r.network for r in rows] == ["1.0.0.0/24"]
+    assert df.count() == len(rows)
