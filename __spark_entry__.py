@@ -4703,23 +4703,12 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_annotate(spark, "/root/testdata/sf0.001")
 
 
-DRIVER_WINDOW = 50  # the correctness driver hash-verifies the FIRST this-many
-
-
-def _window_gates() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """The exactly-DRIVER_WINDOW gates the r13 driver run verifies
-    (rows + schema + value-hash vs the DuckDB oracle).  Composition,
-    per VERDICT r12 item 1: the new r13 gate first, then the gates
-    whose implementing source r13 code changes touch (blank-line
-    exclusion + broadcast keep-first shape in the line family, URL
-    percent-encoding normalization + parameterized tracker list,
-    streaming hot-line TTL plumbing), then the FULL 33-gate cohort
-    whose newest driver evidence was round 9, then a fill of the
-    oldest round-10 gates (9 — the second new gate takes the tenth
-    slot). `queries()` asserts the count so a rotation edit can never
-    silently misplace the boundary."""
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Gate registry: name -> builder ``fn(spark, sf_dir) -> DataFrame``.
+    Every gate has its DuckDB oracle under the same name in
+    ``oracle_sql()``; ``scripts/check_oracle.py --evidence`` runs them
+    all and writes the ``CORRECTNESS_r*.json`` rows."""
     return {
-        # -- NEW round-13 operators --------------------------------------
         "web_pipeline_full": q_web_pipeline_full,
         "url_host_filter": q_url_host_filter,
         "html_extract": q_html_extract,
@@ -4730,16 +4719,12 @@ def _window_gates() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "stream_sentence_dedup": q_stream_sentence_dedup,
         "kn_nll": q_kn_nll,
         "badword_filter": q_badword_filter,
-        # -- touched by round-13 code (empty-norm exclusion + broadcast
-        #    keep-first in curation.py, pct_normalize + tracker-param
-        #    parameter in url.py, TTL in streaming_hot_lines) ----------
         "boilerplate_lines": q_boilerplate_lines,
         "line_dedup_keep_first": q_line_dedup_keep_first,
         "url_dedup": q_url_dedup,
         "stream_url_dedup": q_stream_url_dedup,
         "web_pipeline": q_web_pipeline,
         "stream_hot_lines": q_stream_hot_lines,
-        # -- the 33 gates whose newest driver row was round 9 ----------
         "anti_join": q_anti_join,
         "attribution_join": q_attribution_join,
         "bigram_nll": q_bigram_nll,
@@ -4773,25 +4758,7 @@ def _window_gates() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "span_dedup": q_span_dedup,
         "span_dedup_apply": q_span_dedup_apply,
         "upsert_merge": q_upsert_merge,
-        # -- fill: the oldest round-10 gates (4 slots ceded to the new
-        #    r13 html/kn/badword gates — never-verified gates must sit
-        #    in the window; the displaced r10 gates rejoin the backlog
-        #    head at exactly the rotation horizon) ----------------------
         "pipeline_full": q_pipeline_full,
-    }
-
-
-def _backlog_gates() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Gates below the driver window — every one hash-green in an
-    earlier round's CORRECTNESS_r*.json over since-unchanged source.
-    Ordered oldest evidence first so the next rotation is a straight
-    slice: the remaining round-10 gates head the r14 window, then the
-    r11 cohort, then the gates the r12 driver verified (rotated out
-    this round, freshest evidence)."""
-    return {
-        # -- remaining round-10 gates (head of the r14 rotation; the
-        #    first four were displaced from the r13 fill by the new
-        #    html/kn/badword gates) --------------------------------------
         "dedup_keep_best": q_dedup_keep_best,
         "leakage_safe_split": q_leakage_safe_split,
         "dedup_jaccard_prefix": q_dedup_jaccard_prefix,
@@ -4836,7 +4803,6 @@ def _backlog_gates() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "first_last_ignore_nulls": q_first_last_ignore_nulls,
         "fuzzy_match": q_fuzzy_match,
         "interval_overlap_join": q_interval_overlap_join,
-        # -- the r11 cohort (rotated out of the r12 window) -------------
         "span_dedup_keep_first": q_span_dedup_keep_first,
         "geo_radius_join": q_geo_radius_join,
         "annotate_nearest_site": q_annotate_nearest_site,
@@ -4879,7 +4845,6 @@ def _backlog_gates() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kcore": q_kcore,
         "lang_id": q_lang_id,
         "legacy_annotate": q_legacy_annotate,
-        # -- the r12 cohort (rotated out of the r13 window) -------------
         "token_budget_sample_tokens": q_token_budget_sample_tokens,
         "gopher_quality": q_gopher_quality,
         "c4_filter": q_c4_filter,
@@ -4925,23 +4890,6 @@ def _backlog_gates() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_embedding_lsh": q_dedup_embedding_lsh,
         "semantic_dedup": q_semantic_dedup,
     }
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Gate registry.  ORDER MATTERS: the correctness driver verifies the
-    FIRST DRIVER_WINDOW entries, so staleness rotation is done by editing
-    `_window_gates` / `_backlog_gates`; the asserts below make a
-    miscounted rotation fail every pytest run instead of silently
-    shifting the boundary (VERDICT r10 nit 1)."""
-    window = _window_gates()
-    backlog = _backlog_gates()
-    assert len(window) == DRIVER_WINDOW, (
-        f"_window_gates must hold exactly {DRIVER_WINDOW} gates, "
-        f"got {len(window)}"
-    )
-    dup = window.keys() & backlog.keys()
-    assert not dup, f"gates listed in both window and backlog: {sorted(dup)}"
-    return {**window, **backlog}
 
 
 def _shingle_cte(n: int = 3) -> str:

@@ -1,6 +1,6 @@
 """Capture .explain('formatted') for named queries into per-query
-files — the r13 optimization-round evidence artifacts
-(plans/r13/<query>_<tag>.txt).
+files (<out_dir>/<query>_<tag>.txt), e.g. before/after plans for an
+optimization's evidence.
 
 Usage: python scripts/capture_query_plans.py <out_dir> <tag> <query> [...]
 (run from the repo root whose __spark_entry__ should be captured)
