@@ -505,15 +505,11 @@ def q_dedup_eval_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 3-gram shingle relation — tokenize+explode+distinct the corpus
     # ONCE and share the cached table (before: each method built and
     # separately cached its own copy — two redundant corpus passes)
-    sh = scoped_cache(
-        "entry.eval_report.shingles",
-        dd.shingle_table(docs, "doc_id", "text", 3),
-    )
+    sh = scoped_cache(dd.shingle_table(docs, "doc_id", "text", 3))
     # cache each PAIR SET (tiny: the near-dup pairs, not the corpus) —
     # without it every count/intersection replays the whole pipeline
     # (measured 21.5 s -> the cached form's cost is one run of each)
     exact = scoped_cache(
-        "entry.eval_report.exact",
         dd.ngram_jaccard_pairs(docs, ngram=3, threshold=0.5, shingles=sh)
         .select("id_a", "id_b"),
     )
@@ -530,7 +526,6 @@ def q_dedup_eval_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         # catch a prefix-filter bug.
         "minhash": (
             scoped_cache(
-                "entry.eval_report.minhash",
                 dd.minhash_lsh_pairs(
                     docs, ngram=3, num_hashes=16, bands=8, threshold=0.5,
                     shingles=sh, truth_pairs=exact,
@@ -540,7 +535,6 @@ def q_dedup_eval_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "prefix": (
             scoped_cache(
-                "entry.eval_report.prefix",
                 dd.prefix_filter_jaccard_pairs(
                     docs, ngram=3, threshold=0.5, shingles=sh
                 ).select("id_a", "id_b"),
@@ -607,15 +601,11 @@ def q_dedup_eval_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 (guide §2.3): both methods consume the SAME (id, s, tf)
     # relation — tokenize once, share the cached table (before: the
     # minhash path re-built its own tf table from the raw text)
-    tf = scoped_cache(
-        "entry.eval_weighted.tf",
-        dd.shingle_tf_table(docs, "doc_id", "text", 3),
-    )
+    tf = scoped_cache(dd.shingle_tf_table(docs, "doc_id", "text", 3))
     capped = tf.select(
         "id", "s", F.least(F.col("tf"), F.lit(8)).alias("tf")
     )
     exact = scoped_cache(
-        "entry.eval_weighted.exact",
         dd.weighted_jaccard_pairs(
             docs, ngram=3, threshold=0.5, tf_table=capped
         ).select("id_a", "id_b"),
@@ -623,7 +613,6 @@ def q_dedup_eval_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 (guide §2.4): verify = candidates ⨝ exact (same set by
     # definition — see weighted_minhash_pairs' truth_pairs contract)
     approx = scoped_cache(
-        "entry.eval_weighted.minhash",
         dd.weighted_minhash_pairs(
             docs, ngram=3, num_hashes=16, bands=8, threshold=0.5, tf_cap=8,
             tf_table=tf, truth_pairs=exact,
@@ -804,19 +793,14 @@ def q_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench = docs.where(F.col("doc_id") % 100 == 0)
     # tokenize+shingle the corpus ONCE; decontam and the jaccard
     # pair stage both consume the shared cached table
-    csh = scoped_cache(
-        "entry.pipeline_full.shingles",
-        dd.shingle_table(corpus, "doc_id", "text", 3),
-    )
+    csh = scoped_cache(dd.shingle_table(corpus, "doc_id", "text", 3))
     rep_keep = (
         txt.repetition_metrics_table(corpus)
         .where(F.col("keep"))
         .select(F.col("id").alias("doc_id"))
     )
     not_contaminated = (
-        dc.contamination_check(
-            corpus, bench, ngram=3, threshold=0.1, corpus_shingles=csh
-        )
+        dc.contamination_check(corpus, bench, ngram=3, threshold=0.1)
         .where(~F.col("contaminated"))
         .select("doc_id")
     )
@@ -1808,7 +1792,6 @@ def q_cms_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode instead was measured 1.28x WORSE cold — a corpus-sized
     # cache write costs more than the scans it saves.)
     exact = scoped_cache(
-        "entry.cms_counts.exact",
         tok.groupBy("token").agg(F.count(F.lit(1)).cast("long").alias("cnt")),
     )
     sketch = sk.count_min_build(
@@ -3735,10 +3718,7 @@ def q_html_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # staged survivors so the probe's execution is the one the main
     # query reuses (without it the HTML extraction ran twice; A/B
     # showed the probe regressing this composition ~+2.5 s cold).
-    staged = scoped_cache(
-        "entry.html_pipeline.staged",
-        ext.join(bw_keep, "doc_id").join(gq_pass, "doc_id"),
-    )
+    staged = scoped_cache(ext.join(bw_keep, "doc_id").join(gq_pass, "doc_id"))
     return cu.remove_boilerplate_lines(staged, max_line_df=15)
 
 
@@ -3995,9 +3975,7 @@ def _web_pipeline(
     # r13: same probe-reuse cache as q_html_pipeline — the boilerplate
     # stage's hot-set limit probe otherwise re-executes the whole
     # synthesize+C4+Gopher upstream a second time.
-    staged = scoped_cache(
-        f"entry.web_pipeline.staged.rep{with_repetition}", staged
-    )
+    staged = scoped_cache(staged)
     return cu.remove_boilerplate_lines(staged, max_line_df=15)
 
 
@@ -4338,7 +4316,6 @@ def q_dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # it's a full shingle+minhash pipeline worth computing once
     seen_sigs = (
         scoped_cache(
-            "entry.incremental_minhash.seen_sig",
             dd.minhash_signatures(
                 dd.shingle_table(seen_docs, "doc_id", "text", 3), 16
             ).withColumnRenamed("id", "doc_id"),

@@ -426,10 +426,7 @@ def unigram_nll_table(
     # r14 (guide §2.4/§5): ``vocab`` feeds two legs (the total and the
     # probability projection), each of which otherwise replays the
     # corpus tokenize+explode+groupBy; it is vocabulary-sized — cache.
-    vocab = scoped_cache(
-        "text.unigram_nll.vocab",
-        tok.groupBy("token").agg(F.count(F.lit(1)).alias("cnt")),
-    )
+    vocab = scoped_cache(tok.groupBy("token").agg(F.count(F.lit(1)).alias("cnt")))
     total = vocab.agg(F.sum("cnt").cast("double").alias("t"))
     p = vocab.crossJoin(F.broadcast(total)).select(
         "token", (F.col("cnt") / F.col("t")).alias("p")
@@ -525,10 +522,7 @@ def bigram_nll_table(
     # vocabulary-sized) feeds the context aggregate AND the
     # probability projection; uncached each leg replays the corpus
     # bigram explode.
-    cab = scoped_cache(
-        "text.bigram_nll.cab",
-        big.groupBy("bg").agg(F.count(F.lit(1)).alias("c_ab")),
-    )
+    cab = scoped_cache(big.groupBy("bg").agg(F.count(F.lit(1)).alias("c_ab")))
     ca = cab.groupBy(F.split("bg", " ")[0].alias("a")).agg(
         F.sum("c_ab").alias("c_a")
     )
@@ -616,10 +610,7 @@ def kneser_ney_nll_table(
     # replayed the corpus tokenize+zip_with+explode (measured: 10
     # parquet scans / 24 Exchanges in the kn_nll gate plan). One row
     # per DISTINCT bigram — vocabulary-sized, cache it.
-    cab = scoped_cache(
-        "text.kn_nll.cab",
-        big.groupBy("bg").agg(F.count(F.lit(1)).alias("c_ab")),
-    )
+    cab = scoped_cache(big.groupBy("bg").agg(F.count(F.lit(1)).alias("c_ab")))
     # cab has one row per DISTINCT bigram: count(*) grouped by a is
     # N1+(a·), grouped by b is N1+(·b), ungrouped is N1+(··).
     ca = cab.groupBy(F.split("bg", " ")[0].alias("a")).agg(
@@ -704,12 +695,8 @@ def pmi_collocations(
     # r14 (guide §2.4/§5): ``cab`` feeds the total and the scored
     # projection, ``uni`` both unigram lookup joins — uncached, each
     # leg replays a corpus tokenize+explode. Both are vocab-sized.
-    cab = scoped_cache(
-        "text.pmi.cab",
-        big.groupBy("bg").agg(F.count(F.lit(1)).alias("n_pair")),
-    )
+    cab = scoped_cache(big.groupBy("bg").agg(F.count(F.lit(1)).alias("n_pair")))
     uni = scoped_cache(
-        "text.pmi.uni",
         df.select(F.explode(tokens(F.col(text_col))).alias("t"))
         .groupBy("t")
         .agg(F.count(F.lit(1)).alias("c")),
@@ -780,10 +767,7 @@ def source_kl_table(
     # marginal, the per-source totals, and the smoothed probability
     # legs — cache the |sources|x|vocab|-bounded relation so the
     # corpus tokenize runs once.
-    st = scoped_cache(
-        "text.source_kl.st",
-        tok.groupBy("src", "t").agg(F.count(F.lit(1)).alias("c_st")),
-    )
+    st = scoped_cache(tok.groupBy("src", "t").agg(F.count(F.lit(1)).alias("c_st")))
     marg = st.groupBy("t").agg(F.sum("c_st").alias("c_t"))
     top = marg.orderBy(F.desc("c_t"), F.asc("t")).limit(top_v)
     # totals restricted to the top-V support (so p and q both

@@ -113,19 +113,19 @@ def merge_sources(
     (the reference only emits composites once every list has an
     element ≤ d; filter NULLs downstream to match).
 
-    Pure window code: union all (source, date, payload) rows, then
-    per source ``last_value(ignoreNulls)`` over the global date
-    order. Output column per source: ``{source}_{payload_col}`` plus
-    ``{source}_date``.
+    Union all (source, date, payload) rows and pivot one row per
+    date; then, as in ``validity_windows``, one date-sorted array of
+    those rows and its ``posexplode``: each element takes, per source,
+    the last non-NULL payload among the elements up to it. Output
+    column per source: ``{source}_{payload_col}`` plus
+    ``{source}_date``. Payload columns must be orderable (the array
+    sorts whole rows).
 
     SIZE CONTRACT: inputs are snapshot REGISTRIES — file listings in
     the hundreds of rows (the reference's whole directory is ~200
-    entries). The global-order window below deliberately runs in one
-    partition: Catalyst folds the constant partition key away, so the
-    plan is a single-partition window and Spark logs "No Partition
-    Defined for Window" for each evaluation (the key states the intent;
-    it does not stop the warning). Do NOT reuse this operator for
-    fact-scale inputs.
+    entries). The whole registry is one array in one row, and each
+    element scans the prefix before it. Do NOT reuse this operator
+    for fact-scale inputs.
     """
     payload = list(payload)
     parts = []
@@ -148,15 +148,16 @@ def merge_sources(
             "__d", F.col("__pl").alias(f"__pl_{name}")
         )
         pivoted = pivoted.join(src_rows, "__d", "left")
-    w = Window.partitionBy(F.lit(1)).orderBy("__d").rowsBetween(
-        Window.unboundedPreceding, 0
+    pl = [f"__pl_{name}" for name in registries]
+    rows = F.sort_array(F.collect_list(F.struct("__d", *pl)))
+    out = pivoted.agg(rows.alias("__w")).select(
+        "__w", F.posexplode("__w").alias("__i", "__e")
     )
-    out = pivoted
-    for name in registries:
-        out = out.withColumn(
-            f"__pl_{name}", F.last(f"__pl_{name}", ignorenulls=True).over(w)
-        )
-    sel = [F.col("__d").alias(date_col)]
+    upto = F.slice("__w", F.lit(1), F.col("__i") + 1)
+    for c in pl:
+        hits = F.filter(upto, lambda e: e[c].isNotNull())
+        out = out.withColumn(c, F.get(hits, F.size(hits) - 1)[c])
+    sel = [F.col("__e.__d").alias(date_col)]
     for name in registries:
         sel.append(F.col(f"__pl_{name}.date").alias(f"{name}_date"))
         sel.extend(

@@ -103,9 +103,7 @@ def perceptron_scores(
     ranking; keeping the sum instead of the mean keeps every margin
     int64-exact."""
     spark = docs.sparkSession
-    feat = scoped_cache(
-        "classify.perceptron.feat", hashed_bow(docs, id_col, text_col, n_buckets, seed)
-    )
+    feat = scoped_cache(hashed_bow(docs, id_col, text_col, n_buckets, seed))
     lab = docs.select(F.col(id_col).alias("id"), label.cast("long").alias("y"))
 
     w = {b: 0 for b in range(n_buckets + 1)}

@@ -45,6 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from annotation_service_spark import caching
 from annotation_service_spark.caching import scoped_cache
 
 
@@ -366,7 +367,6 @@ def kmeans_centroids(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     scale: int = FIXED_SCALE,
-    quantized: DataFrame | None = None,
 ) -> list[list[int]]:
     """Run the distributed Lloyd iterations and return the final
     integer centroids (init = the k vectors with smallest ids).
@@ -375,35 +375,34 @@ def kmeans_centroids(
     the table is cached for the loop — without it every Lloyd pass
     (plus the init scan) re-reads and re-quantizes the source parquet,
     which the cache-cleared cold bench showed dominating the k-means
-    family's runtime. Callers that already hold a cached quantized
-    table pass it via ``quantized`` and no local cache is created."""
-    local_q = quantized is None
-    q = _quantized(embeddings, vec_col, id_col, scale).cache() if local_q else quantized
-    init = q.orderBy("id").limit(k).collect()
-    centroids = [[int(v) for v in r.qv] for r in init]
-    dim = len(centroids[0])
+    family's runtime. The loop runs in its own cache scope, so the
+    cache goes when the loop ends or raises; a caller that already
+    holds the same quantized plan cached keeps it (found by plan)."""
+    with caching.scope():
+        q = scoped_cache(_quantized(embeddings, vec_col, id_col, scale))
+        init = q.orderBy("id").limit(k).collect()
+        centroids = [[int(v) for v in r.qv] for r in init]
+        dim = len(centroids[0])
 
-    for _ in range(iterations):
-        sums = (
-            q.select("qv")
-            .mapInPandas(_partial_sums_fn(centroids), "c int, i int, s long, n long")
-            .groupBy("c", "i")
-            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-            .collect()
-        )
-        by_c: dict[int, dict[int, int]] = {}
-        n_by_c: dict[int, int] = {}
-        for r in sums:
-            by_c.setdefault(r.c, {})[r.i] = r.s
-            n_by_c[r.c] = r.n
-        centroids = [
-            [by_c[j][i] // n_by_c[j] for i in range(dim)]
-            if j in n_by_c
-            else centroids[j]
-            for j in range(k)
-        ]
-    if local_q:
-        q.unpersist()
+        for _ in range(iterations):
+            sums = (
+                q.select("qv")
+                .mapInPandas(_partial_sums_fn(centroids), "c int, i int, s long, n long")
+                .groupBy("c", "i")
+                .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
+                .collect()
+            )
+            by_c: dict[int, dict[int, int]] = {}
+            n_by_c: dict[int, int] = {}
+            for r in sums:
+                by_c.setdefault(r.c, {})[r.i] = r.s
+                n_by_c[r.c] = r.n
+            centroids = [
+                [by_c[j][i] // n_by_c[j] for i in range(dim)]
+                if j in n_by_c
+                else centroids[j]
+                for j in range(k)
+            ]
     return centroids
 
 
@@ -420,12 +419,8 @@ def kmeans_fixed(
     c_sum) where inertia = Σ member distances under the FINAL
     centroids and c_sum = Σ centroid components — together they pin
     both the assignment and the centroid values exactly."""
-    q = scoped_cache(
-        "clustering.kmeans_fixed.q", _quantized(embeddings, vec_col, id_col, scale)
-    )
-    centroids = kmeans_centroids(
-        embeddings, k, iterations, vec_col, id_col, scale, quantized=q
-    )
+    q = scoped_cache(_quantized(embeddings, vec_col, id_col, scale))
+    centroids = kmeans_centroids(embeddings, k, iterations, vec_col, id_col, scale)
     c_sum = {j: sum(c) for j, c in enumerate(centroids)}
     spark = embeddings.sparkSession
     csum_df = spark.createDataFrame(

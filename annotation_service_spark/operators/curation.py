@@ -242,13 +242,13 @@ def temperature_mix(
     Scale: the rate table is one row per stratum (broadcast); the
     corpus is filtered in place — zero corpus shuffles.
     """
-    w = Window.partitionBy()
     counts = docs.groupBy(stratum_col).agg(F.count(F.lit(1)).alias("_n"))
+    counts = counts.crossJoin(F.broadcast(counts.agg(F.min("_n").alias("_min"))))
     if abs(alpha - 0.5) < 1e-12:
-        rate = F.sqrt(F.min("_n").over(w).cast("double") / F.col("_n"))
+        rate = F.sqrt(F.col("_min").cast("double") / F.col("_n"))
     else:
         rate = F.pow(
-            F.col("_n").cast("double") / F.min("_n").over(w), F.lit(alpha - 1.0)
+            F.col("_n").cast("double") / F.col("_min"), F.lit(alpha - 1.0)
         )
     rates = counts.select(
         stratum_col, F.floor(rate * 10000).cast("long").alias("_thr")
@@ -543,7 +543,6 @@ def dsir_weights(
     # ≤ Σ per-doc distinct buckets (one count per (doc, bucket)),
     # far below the exploded gram stream it replaces.
     doc_feats = scoped_cache(
-        "curation.dsir.doc_feats",
         feats.groupBy("id", "b").agg(
             F.count(F.lit(1)).alias("c"), F.first("is_target").alias("is_target")
         ),
@@ -611,7 +610,6 @@ def dsir_resample(
     # cached: consumed by the percentile reduce AND the output select
     # (one slim row per doc)
     scored = scoped_cache(
-        "curation.dsir.scored",
         w.select(
             "id",
             "n_feats",
@@ -880,9 +878,8 @@ def remove_boilerplate_lines(
     regressed ~10% with the double cache)."""
     lines = _doc_lines(docs, id_col, text_col, sep)
     if not is_cached(docs):
-        lines = scoped_cache("curation.boilerplate.units", lines)
+        lines = scoped_cache(lines)
     hot = scoped_cache(
-        "curation.boilerplate.hot",
         lines.where(F.col("norm") != "")
         .groupBy("norm")
         .agg(F.count_distinct("id").alias("docs"))
@@ -948,16 +945,11 @@ def dedup_lines_keep_first(
     either way. r13: the per-doc line total rides the explode
     (``_doc_lines``), so there is no second scan of ``docs``."""
     lines = _doc_lines(docs, id_col, text_col, sep)
-    return _keep_first_units(
-        lines, sep, broadcast_dup_limit, "curation.keep_first.units.lines"
-    )
+    return _keep_first_units(lines, sep, broadcast_dup_limit)
 
 
 def _keep_first_units(
-    lines: DataFrame,
-    sep: str,
-    broadcast_dup_limit: int,
-    units_cache_key: str,
+    lines: DataFrame, sep: str, broadcast_dup_limit: int
 ) -> DataFrame:
     """Shared keep-first core over any (id, n_lines, line_no, line,
     norm) unit table (lines OR sentences): duplicated norms keep
@@ -973,15 +965,13 @@ def _keep_first_units(
     final rows directly (null-line rows from the outer explode keep
     empty/null-text docs in the output without a join).
 
-    The unit table itself is scoped-cached under ``units_cache_key``
-    so the broadcast probe's materialization of the dup subset and
-    the main action's join left side read ONE execution of the
-    upstream (parquet scan + text synthesis + split) instead of two
-    (guide §5 — reused AND expensive to recompute; the cache spills
-    to disk above memory)."""
-    lines = scoped_cache(units_cache_key, lines)
+    The unit table itself is scoped-cached so the broadcast probe's
+    materialization of the dup subset and the main action's join left
+    side read ONE execution of the upstream (parquet scan + text
+    synthesis + split) instead of two (guide §5 — reused AND expensive
+    to recompute; the cache spills to disk above memory)."""
+    lines = scoped_cache(lines)
     dup_first = scoped_cache(
-        "curation.keep_first.dup_first",
         lines.where(F.col("norm") != "")
         .groupBy("norm")
         .agg(
@@ -1096,9 +1086,7 @@ def dedup_sentences_keep_first(
     the per-doc sentence count rides the explode, so the old separate
     base scan (a second full pass over ``docs``) is gone."""
     sents = _doc_sentences(docs, id_col, text_col, outer=True)
-    out = _keep_first_units(
-        sents, " ", broadcast_dup_limit, "curation.keep_first.units.sents"
-    )
+    out = _keep_first_units(sents, " ", broadcast_dup_limit)
     return out.withColumnRenamed("n_lines", "n_sents")
 
 

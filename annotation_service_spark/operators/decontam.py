@@ -40,16 +40,16 @@ def contamination_check(
     ngram: int = 3,
     threshold: float = 0.1,
     broadcast_benchmark: bool = True,
-    corpus_shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Per corpus document: distinct-shingle total, how many of those
     shingles appear anywhere in the benchmark set, the contaminated
     fraction, and a flag at ``hit_frac >= threshold``.
 
     Returns (doc_id, n_shingles, n_hits, hit_frac, contaminated),
-    one row per corpus doc with at least one shingle.
-    ``corpus_shingles`` accepts a shared (id, s) table so composite
-    pipelines tokenize the corpus once.
+    one row per corpus doc with at least one shingle. A composite
+    pipeline that caches the corpus shingle table (``scoped_cache``)
+    tokenizes the corpus once: Spark matches this plan's identical
+    shingle subtree to that cache.
     """
     bsh = (
         shingle_table(benchmark, id_col, text_col, ngram)
@@ -59,13 +59,9 @@ def contamination_check(
     )
     if broadcast_benchmark:
         bsh = F.broadcast(bsh)
-    csh = (
-        corpus_shingles
-        if corpus_shingles is not None
-        else shingle_table(corpus, id_col, text_col, ngram)
-    )
     return (
-        csh.join(bsh, "s", "left")
+        shingle_table(corpus, id_col, text_col, ngram)
+        .join(bsh, "s", "left")
         .groupBy(F.col("id").alias(id_col))
         .agg(
             F.count(F.lit(1)).alias("n_shingles"),
@@ -218,7 +214,6 @@ def decontaminate_spans(
     # tokenize→gram→broadcast-join→two-window pipeline (measured:
     # 16 Window nodes / 10 corpus scans in the gate's plan).
     merged = scoped_cache(
-        "decontam.spans.merged",
         spans.withColumn("grp", grp)
         .groupBy("id", "grp")
         .agg(F.min("lo").alias("lo"), F.max("hi").alias("hi")),

@@ -184,9 +184,7 @@ def minhash_candidates(
     tests/test_candidate_bounds.py pins the bound on a planted-dup
     corpus."""
     sh = shingle_table(df, id_col, text_col, ngram)
-    sig = scoped_cache(
-        "dedup.minhash_candidates.sig", minhash_signatures(sh, num_hashes)
-    )
+    sig = scoped_cache(minhash_signatures(sh, num_hashes))
     return band_join(_minhash_banded_rows(sig, num_hashes, bands, []))
 
 
@@ -246,10 +244,7 @@ def minhash_lsh_pairs(
     sh = (
         shingles
         if shingles is not None
-        else scoped_cache(
-            "dedup.minhash_lsh.shingles",
-            shingle_table(df, id_col, text_col, ngram),
-        )
+        else scoped_cache(shingle_table(df, id_col, text_col, ngram))
     )
     if truth_pairs is not None:
         sig = minhash_signatures(sh, num_hashes)
@@ -286,7 +281,7 @@ def minhash_lsh_pairs(
 
 
 def _span_grams(
-    df: DataFrame, id_col: str, text_col: str, k: int, cache: bool = False
+    df: DataFrame, id_col: str, text_col: str, k: int
 ) -> tuple[DataFrame, DataFrame]:
     """Shared span machinery: (token positions, k-gram table).
 
@@ -295,16 +290,13 @@ def _span_grams(
     start position (lead() over the per-doc position window, one
     shuffle keyed by doc id).
 
-    ``cache=True`` scoped-caches BOTH relations (guide §2.4/§5): the
-    span consumers reference ``grams`` from two plan legs (the dup
-    aggregate + the mark join-back) and ``tok`` from a third (the
-    left_anti rebuild), so uncached each leg replays the regex
-    tokenize + posexplode (+ the per-doc window for the gram legs)
-    over the whole corpus. Same precedent as the cached shingle
-    tables in ngram_jaccard_pairs — token-grain relations, spillable,
-    and released by release_caches(). Callers that consume the gram
-    table only once (shared_passage_anchors caches its own CAPPED
-    copy) keep the default uncached lazy plans.
+    Both relations are lazy plans. Callers that read them from more
+    than one plan leg ``scoped_cache`` them (guide §2.4/§5): the span
+    consumers reference ``grams`` from two legs (the dup aggregate +
+    the mark join-back) and ``tok`` from a third (the left_anti
+    rebuild), so uncached each leg replays the regex tokenize +
+    posexplode (+ the per-doc window for the gram legs) over the
+    whole corpus.
 
     r13 measurement note (guide §1.1): the line family's
     carry-n-through-an-outer-explode + flag-join rebuild was tried
@@ -327,8 +319,6 @@ def _span_grams(
         F.col(id_col).alias("id"),
         F.posexplode(tokens(F.col(text_col))).alias("pos", "tok"),
     )
-    if cache:
-        tok = scoped_cache("dedup.span.tok", tok)
     w = Window.partitionBy("id").orderBy("pos")
     parts = [F.col("tok")] + [F.lead("tok", j).over(w) for j in range(1, k)]
     grams = (
@@ -341,8 +331,6 @@ def _span_grams(
         .where(F.col("_last").isNotNull())
         .drop("_last")
     )
-    if cache:
-        grams = scoped_cache("dedup.span.grams", grams)
     return tok, grams
 
 
@@ -353,7 +341,8 @@ def _span_tokens_and_marks(
     (id, pos) of every k-gram occurrence whose gram appears >= twice
     corpus-wide (hash groupBy + equi-join — both shuffles keyed by
     content hash)."""
-    tok, grams = _span_grams(df, id_col, text_col, k, cache=True)
+    tok, grams = _span_grams(df, id_col, text_col, k)
+    tok, grams = scoped_cache(tok), scoped_cache(grams)
     dup = (
         grams.groupBy("gh")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -389,7 +378,7 @@ def shared_passage_anchors(
     # SAME capped gram table — cache it so the tokenize+window gram
     # pipeline runs once, not once per leg (measured: 4 scans / 3
     # Window nodes in the shared_passages plan before).
-    g = scoped_cache("dedup.shared_passages.anchor_grams", g)
+    g = scoped_cache(g)
     a = g.select(F.col("id").alias("id_a"), F.col("pos").alias("pa"), "gh")
     b = g.select(F.col("id").alias("id_b"), F.col("pos").alias("pb"), "gh")
     return (
@@ -680,7 +669,7 @@ def shared_passages(
     )
     if merge_cap_splits and max_df is not None:
         _tok, grams = _span_grams(df, id_col, text_col, k)
-        grams = scoped_cache("dedup.shared_passages.merge_grams", grams)
+        grams = scoped_cache(grams)
         pieces = _merge_cap_split_runs(pieces, grams, k, merge_gap_limit)
         if extend_cap_edges:
             pieces = _extend_run_endpoints(pieces, grams, k, merge_gap_limit)
@@ -709,7 +698,8 @@ def remove_duplicate_spans_keep_first(
 
     Same output contract as remove_duplicate_spans:
     (id, n_tokens, n_kept, clean_text)."""
-    tok, grams = _span_grams(df, id_col, text_col, k, cache=True)
+    tok, grams = _span_grams(df, id_col, text_col, k)
+    tok, grams = scoped_cache(tok), scoped_cache(grams)
     # min_by struct: the gram's first (id, pos) corpus occurrence
     first = grams.groupBy("gh").agg(
         F.min(F.struct("id", "pos")).alias("f"),
@@ -1022,10 +1012,7 @@ def _simhash_band_candidates(
     ≤ probe_bits bits — by pigeonhole that guarantees detection of
     every pair with total hamming ≤ bands·(probe_bits+1)−1 while the
     band keyspace stays the full 2^(bits/bands)."""
-    sh = scoped_cache(
-        "dedup.simhash.fingerprints",
-        simhash_table(df, id_col, text_col, ngram, bits),
-    )
+    sh = scoped_cache(simhash_table(df, id_col, text_col, ngram, bits))
     return band_candidates_from_fingerprints(
         sh, bits, bands, probe_bits, carry_sig
     )
@@ -1174,10 +1161,7 @@ def ngram_jaccard_pairs(
     sh = (
         shingles
         if shingles is not None
-        else scoped_cache(
-            "dedup.ngram_jaccard.shingles",
-            shingle_table(df, id_col, text_col, ngram),
-        )
+        else scoped_cache(shingle_table(df, id_col, text_col, ngram))
     )
     if max_df is not None:
         sh = cap_shingles(sh, max_df)
@@ -1236,10 +1220,7 @@ def ngram_containment_pairs(
     sh = (
         shingles
         if shingles is not None
-        else scoped_cache(
-            "dedup.containment.shingles",
-            shingle_table(df, id_col, text_col, ngram),
-        )
+        else scoped_cache(shingle_table(df, id_col, text_col, ngram))
     )
     if max_df is not None:
         sh = cap_shingles(sh, max_df)
@@ -1416,7 +1397,6 @@ def _prefix_docs_and_candidates(
     # times (measured: 8 Window nodes / 12 Exchanges in the
     # dedup_jaccard_prefix plan before, 4 scans of the corpus).
     docs = scoped_cache(
-        "dedup.prefix.docs",
         sh.select("id", "s", dfc.alias("df"))
         .groupBy("id")
         .agg(
@@ -1497,10 +1477,7 @@ def weighted_jaccard_pairs(
         # uncached, each leg replays the tokenize+explode+groupBy
         # corpus pass — the same replay bug scoped_cache already
         # fixes in ngram_jaccard_pairs/ngram_containment_pairs.
-        else scoped_cache(
-            "dedup.weighted_jaccard.tf",
-            shingle_tf_table(df, id_col, text_col, ngram),
-        )
+        else scoped_cache(shingle_tf_table(df, id_col, text_col, ngram))
     )
     if max_df is not None:
         # cap_shingles counts rows per s, which on a (id, s, tf) table
@@ -1581,10 +1558,7 @@ def weighted_minhash_candidates(
     x10/x100; VERDICT r10 item 6)."""
     tf = shingle_tf_table(df, id_col, text_col, ngram)
     expanded = _tf_expand(_capped_tf(tf, tf_cap))
-    sig = scoped_cache(
-        "dedup.weighted_minhash_candidates.sig",
-        minhash_signatures(expanded, num_hashes),
-    )
+    sig = scoped_cache(minhash_signatures(expanded, num_hashes))
     return band_join(_minhash_banded_rows(sig, num_hashes, bands, []))
 
 
@@ -1634,10 +1608,7 @@ def weighted_minhash_pairs(
     tf = (
         tf_table
         if tf_table is not None
-        else scoped_cache(
-            "dedup.weighted_minhash.tf",
-            shingle_tf_table(df, id_col, text_col, ngram),
-        )
+        else scoped_cache(shingle_tf_table(df, id_col, text_col, ngram))
     )
     capped = _capped_tf(tf, tf_cap)
     expanded = _tf_expand(capped)
@@ -1800,7 +1771,7 @@ def winnow_pairs(
     # SAME fingerprint table — cache it so the winnow window pipeline
     # runs once, not once per leg (measured: 4 scans / 4 Window nodes
     # in the plan before).
-    fp = scoped_cache("dedup.winnow.fp", fp)
+    fp = scoped_cache(fp)
     a = fp.select(F.col("id").alias("id_a"), "h")
     b = fp.select(F.col("id").alias("id_b"), "h")
     return (
@@ -1871,9 +1842,7 @@ def incremental_minhash_dedup(
     signature metadata ever shuffles. The corpus text is read once
     (shingle → signature aggregation, map-side combinable)."""
     sh = shingle_table(new_docs, id_col, text_col, ngram)
-    sig_new = scoped_cache(
-        "dedup.incremental_minhash.sig", minhash_signatures(sh, num_hashes)
-    )
+    sig_new = scoped_cache(minhash_signatures(sh, num_hashes))
     mh_cols = [f"mh{i}" for i in range(num_hashes)]
     need = int(-(-threshold * num_hashes // 1))  # ceil(threshold·n)
     agree = F.lit(0)
@@ -1904,10 +1873,7 @@ def incremental_minhash_dedup(
     # left_anti — and its lineage contains the whole vs-seen band
     # join; uncached, that pipeline re-executed per leg. The relation
     # is tiny (id + num_hashes longs per surviving doc), so cache it.
-    fresh = scoped_cache(
-        "dedup.incremental_minhash.fresh",
-        sig_new.join(dup_vs_seen, "id", "left_anti"),
-    )
+    fresh = scoped_cache(sig_new.join(dup_vs_seen, "id", "left_anti"))
     # in-batch pair dominance among the still-fresh rows: same
     # carried-signature band self-join (the two legs are identical
     # subtrees, so the exchange is planned once and reused)

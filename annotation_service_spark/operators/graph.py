@@ -231,7 +231,6 @@ def triangle_counts(
     from annotation_service_spark.caching import scoped_cache
 
     e = scoped_cache(
-        "graph.triangles.edges",
         pairs.select(
             F.least(F.col(src_col), F.col(dst_col)).alias("lo"),
             F.greatest(F.col(src_col), F.col(dst_col)).alias("hi"),

@@ -1430,7 +1430,6 @@ def image_phash_pairs(
     )
 
     sh = scoped_cache(
-        "multimodal.image_phash.fingerprints",
         image_phash_table(media, id_col, media_col)
         .where(F.col("decoded"))
         .select("id", "sh"),
@@ -1550,7 +1549,6 @@ def audio_fingerprint_pairs(
     )
 
     sh = scoped_cache(
-        "multimodal.audio_afp.fingerprints",
         audio_fingerprint_table(media, id_col, media_col)
         .where(F.col("decoded"))
         .select("id", "sh"),
@@ -1646,10 +1644,7 @@ def video_near_dup_pairs(
     # passed `shingles` table three times (sizes + both self-join
     # sides) under a caller-owns-persistence contract — scope-cache it
     # like the image/audio siblings (ADVICE r10)
-    sh = scoped_cache(
-        "multimodal.video_frames.bandkeys",
-        video_frame_hashes(videos, id_col, frames_col, every_n),
-    )
+    sh = scoped_cache(video_frame_hashes(videos, id_col, frames_col, every_n))
     return ngram_jaccard_pairs(
         videos, id_col=id_col, text_col="unused",
         threshold=threshold, shingles=sh,

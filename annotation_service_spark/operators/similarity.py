@@ -25,6 +25,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from annotation_service_spark import caching
 from annotation_service_spark.caching import scoped_cache
 from annotation_service_spark.operators.banding import band_join, fingerprint_bands
 
@@ -428,29 +429,31 @@ def ivf_build_centroids(
     At 100 TB the corpus passes are the only cost: each iteration is
     one crossJoin-to-k-literals argmin + one groupBy mean — both
     map-side heavy, no large shuffle."""
-    base = embeddings.select(
-        F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("ve")
-    ).cache()
-    init = (
-        base.withColumn("h", F.md5(F.col("id").cast("string")))
-        .orderBy("h")
-        .limit(n_centroids)
-        .collect()
-    )
-    centroids = [list(r.ve) for r in init]
-    dim = len(centroids[0])
-    for _ in range(iterations):
-        assigned = base.withColumn("c", _nearest_centroid(centroids)(F.col("ve")))
-        agg = assigned.groupBy("c").agg(
-            *[F.avg(F.col("ve")[i]).alias(f"d{i}") for i in range(dim)],
-            F.count(F.lit(1)).alias("n"),
+    with caching.scope():
+        base = scoped_cache(
+            embeddings.select(
+                F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("ve")
+            )
         )
-        rows = {r.c: r for r in agg.collect()}
-        centroids = [
-            [rows[k][f"d{i}"] for i in range(dim)] if k in rows else centroids[k]
-            for k in range(n_centroids)
-        ]
-    base.unpersist()
+        init = (
+            base.withColumn("h", F.md5(F.col("id").cast("string")))
+            .orderBy("h")
+            .limit(n_centroids)
+            .collect()
+        )
+        centroids = [list(r.ve) for r in init]
+        dim = len(centroids[0])
+        for _ in range(iterations):
+            assigned = base.withColumn("c", _nearest_centroid(centroids)(F.col("ve")))
+            agg = assigned.groupBy("c").agg(
+                *[F.avg(F.col("ve")[i]).alias(f"d{i}") for i in range(dim)],
+                F.count(F.lit(1)).alias("n"),
+            )
+            rows = {r.c: r for r in agg.collect()}
+            centroids = [
+                [rows[k][f"d{i}"] for i in range(dim)] if k in rows else centroids[k]
+                for k in range(n_centroids)
+            ]
     return centroids
 
 
@@ -762,7 +765,6 @@ def _lsh_base_and_candidates(
     # over the corpus. (id, band, key) is three small ints per
     # (vector x band) — cache it.
     banded = scoped_cache(
-        "similarity.lsh.banded",
         base.select("id", F.explode(band_arr).alias("bb")).select(
             "id", "bb.band", "bb.key"
         ),
@@ -918,10 +920,7 @@ def ann_quantized_topk(
     # join legs; uncached each leg replays the interpreted
     # aggregate/transform quantization over the corpus scan. One int8
     # vector + a float per row — cache it.
-    q = scoped_cache(
-        "similarity.quantized.q",
-        quantize_embeddings(embeddings, id_col, vec_col),
-    )
+    q = scoped_cache(quantize_embeddings(embeddings, id_col, vec_col))
 
     def idot(a: str, b: str) -> Column:
         s = F.lit(0).cast("long")
@@ -1030,13 +1029,8 @@ def semantic_dedup(
         kmeans_centroids,
     )
 
-    q = scoped_cache(
-        "similarity.semantic_dedup.quantized",
-        _quantized(embeddings, vec_col, id_col, FIXED_SCALE),
-    )
-    centroids = kmeans_centroids(
-        embeddings, k, iterations, vec_col, id_col, FIXED_SCALE, quantized=q
-    )
+    q = scoped_cache(_quantized(embeddings, vec_col, id_col, FIXED_SCALE))
+    centroids = kmeans_centroids(embeddings, k, iterations, vec_col, id_col, FIXED_SCALE)
     assign = q.mapInPandas(_assign_ids_fn(centroids), "id long, c int")
 
     q8 = quantize_embeddings(embeddings, id_col, vec_col).select(

@@ -15,7 +15,9 @@ import zipfile
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# SPARK_GRAFT_CPUS is the local master's thread spec: "N", or "N,F" for
+# N threads with F task attempts; the partition default takes N
+DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32").split(",")[0])
 
 
 def ensure_shipped(spark: SparkSession) -> None:

@@ -98,7 +98,9 @@ def geolite2_blocks(spark: SparkSession, path: str, strict: bool = True) -> Data
     # `_corrupt_record`, so the strict budget passes a malformed file
     # and count() disagrees with collect()
     # (test_sources.py::test_blocks_malformed_records). The cache is
-    # never released — one persisted RDD per loaded file.
+    # never released — one persisted RDD per loaded file. It stays a
+    # raw .cache(), not caching.scoped_cache: releasing it would change
+    # answers, and a scoped cache's release may only lose a cache hit.
     raw = spark.read.csv(
         path,
         header=True,

@@ -381,6 +381,7 @@ def start_near_dedup_maintenance(
 
     from pyspark.sql import functions as F
 
+    from .. import caching
     from ..operators.dedup import incremental_minhash_dedup
 
     spark = docs_stream.sparkSession
@@ -406,18 +407,20 @@ def start_near_dedup_maintenance(
             )
         else:
             seen = spark.read.parquet(vdir)
-        survivors = incremental_minhash_dedup(
-            batch_df,
-            seen,
-            id_col=id_col,
-            text_col=text_col,
-            num_hashes=num_hashes,
-            bands=bands,
-            threshold=threshold,
-        ).withColumnRenamed("id", id_col)
-        merged = seen.unionByName(survivors)
         out = os.path.join(state_dir, f"v{int(epoch_id)}")
-        merged.write.mode("overwrite").parquet(out)
+        # the batch's signature caches are new plans every epoch: the
+        # scope releases them once the state version is written
+        with caching.scope():
+            survivors = incremental_minhash_dedup(
+                batch_df,
+                seen,
+                id_col=id_col,
+                text_col=text_col,
+                num_hashes=num_hashes,
+                bands=bands,
+                threshold=threshold,
+            ).withColumnRenamed("id", id_col)
+            seen.unionByName(survivors).write.mode("overwrite").parquet(out)
         os.makedirs(state_dir, exist_ok=True)
         fd, tmp = tempfile.mkstemp(dir=state_dir, suffix=".tmp")
         with os.fdopen(fd, "w") as fh:

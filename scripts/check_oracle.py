@@ -21,6 +21,7 @@ sys.path.insert(0, ".")
 import duckdb
 
 import __spark_entry__ as entrymod
+from annotation_service_spark import caching
 from annotation_service_spark.session import get_session
 
 
@@ -39,8 +40,9 @@ def norm_rows(cols, rows):
 
 def check_gate(spark, con, sf_dir, fn, oracle):
     """(evidence row, mismatch details) for one gate."""
-    sdf = fn(spark, sf_dir)
-    srows, scols = sdf.collect(), sdf.columns
+    with caching.scope():  # the gate's caches go once its rows are in
+        sdf = fn(spark, sf_dir)
+        srows, scols = sdf.collect(), sdf.columns
     orel = con.sql(oracle)
     ocols, orows = [d[0] for d in orel.description], orel.fetchall()
     row = dict(rows_match=len(srows) == len(orows), schema_match=sorted(scols) == sorted(ocols),

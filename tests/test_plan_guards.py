@@ -428,13 +428,16 @@ def test_unit_cache_and_spread_follow_the_input(spark):
     from its input: the composition hands it cached survivors, so
     it adds no second corpus-sized cache and no RoundRobin exchange;
     the bare gate's uncached input still gets the unit cache."""
+    def unit_cache_registered() -> bool:  # the unit table has line_no
+        return any("line_no" in df.columns for _h, df, _o in caching._live_caches)
+
     caching.release_caches()
     p = _plan(em.q_html_pipeline(spark, SF))
-    assert "curation.boilerplate.units" not in caching._live_caches
+    assert not unit_cache_registered()
     assert "RoundRobinPartitioning" not in p
     caching.release_caches()
     em.q_boilerplate_lines(spark, SF)
-    assert "curation.boilerplate.units" in caching._live_caches
+    assert unit_cache_registered()
     caching.release_caches()
 
 
