@@ -14,14 +14,23 @@ probe stream flows through without shuffling. At 100 TB of probes
 this stays a map-side operation; the alternative join-then-rank
 formulation would shuffle the probe table and is deliberately
 avoided.
+
+A server asks the same question of the same registry on every
+request, so ``asof_column`` answers it with no join at all: the
+registry's dates are collected once per (owning table, registry
+plan) and the selection rule becomes one native projection over
+them.
 """
 
 from __future__ import annotations
 
+import threading
+import weakref
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def validity_windows(
@@ -99,6 +108,78 @@ def asof_join(
         F.col("__snap_date").alias(snapshot_date),
         *[v[c] for c in payload],
     )
+
+
+class _Registry:
+    """One memoized registry: its identity and its as-of Column."""
+
+    __slots__ = ("key", "plan", "lock", "column")
+
+    def __init__(self, key: tuple, plan) -> None:
+        self.key, self.plan = key, plan
+        self.lock = threading.Lock()
+        self.column = None
+
+
+# owning table (by identity) -> its most recently used registries
+_REGISTRIES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_REGISTRIES_LOCK = threading.Lock()
+# registries kept per owner: a caller that builds a new registry plan
+# per request (e.g. ``createDataFrame``) must not grow the memo
+_REGISTRIES_PER_OWNER = 8
+
+
+def _asof_expr(dates: list, probe: Column, dtype: T.DataType) -> Column:
+    """The selection rule over ``dates`` (sorted, NULL-free) as one
+    expression: the last date strictly earlier than ``probe``, else the
+    first; with two or more dates a NULL ``probe`` selects nothing."""
+    if not dates:
+        return F.lit(None).cast(dtype)
+    first = F.lit(dates[0]).cast(dtype)
+    if len(dates) == 1:
+        return first
+    arr = F.array(*[F.lit(d) for d in dates]).cast(T.ArrayType(dtype))
+    last_earlier = F.array_max(F.filter(arr, lambda d: d < probe))
+    return F.when(probe.isNotNull(), F.coalesce(last_earlier, first))
+
+
+def asof_column(
+    snapshots: DataFrame,
+    probe_date: str,
+    owner: DataFrame,
+    snapshot_date: str = "dataset_date",
+) -> Column:
+    """J2 as a projection: the ``snapshot_date`` that ``asof_join``
+    attaches to each probe row, as one native ``Column`` over
+    ``probe_date`` — same rule, same comparisons (a timestamp probe
+    compares with the date's midnight), no join and no broadcast.
+
+    The registry's dates are collected on the first call and the
+    Column is built once; later calls return it without running Spark
+    work. A registry is identified by its analyzed plan (candidates by
+    ``semanticHash``, confirmed by ``sameResult``), so a server that
+    rebuilds ``table.select(date).distinct()`` per request still hits.
+    The memo lives as long as ``owner`` (the published table the
+    registry lists), so a refresh that publishes a new table re-reads
+    its registry. NULL snapshot dates are ignored."""
+    plan = snapshots._jdf.queryExecution().analyzed()
+    key = (probe_date, snapshot_date, plan.semanticHash())
+    with _REGISTRIES_LOCK:
+        entries = _REGISTRIES.setdefault(owner, [])
+        entry = next((e for e in entries if e.key == key and e.plan.sameResult(plan)), None)
+        if entry is None:
+            entry = _Registry(key, plan)
+        else:
+            entries.remove(entry)
+        entries.append(entry)
+        del entries[:-_REGISTRIES_PER_OWNER]
+    with entry.lock:
+        if entry.column is None:
+            sd = F.col(snapshot_date)
+            dates = [r[0] for r in snapshots.where(sd.isNotNull()).select(sd).orderBy(sd).collect()]
+            dtype = snapshots.schema[snapshot_date].dataType
+            entry.column = _asof_expr(dates, F.col(probe_date), dtype)
+    return entry.column
 
 
 def merge_sources(

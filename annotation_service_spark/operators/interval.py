@@ -29,21 +29,28 @@ equivalent pure-SQL formulation (boundaries → elementary segments →
 innermost-covering winner via ``max_by``) is provided for
 long-typed bounds and used for DuckDB-oracle differential checks.
 
-``range_join`` is the QUERY-SIDE hot path: the build table is small
-(≤ a few GB), the probe side is the 100 TB stream, so the scalable
-plan is a BROADCAST of the sorted ranges + a vectorized binary search
-per Arrow batch (np.searchsorted, O(log n) per probe, zero shuffle)
-— the distributed analog of the reference's in-memory search. Like
-the reference, which loads each dataset once and only searches per
-request (directory/directory.go:230-240, manager/manager.go:38-57),
-the broadcast is built ONCE per published ``ranges`` DataFrame and
-lives exactly as long as that DataFrame: later requests on the same
-table run no Spark job before their own action, and a refresh that
-publishes a new DataFrame gets a new build. This holds while
-Catalyst's size estimate of the whole table fits the broadcast gate;
-past it each call prunes the table to the snapshots its probes
-reference, and a bucketed shuffle variant covers build tables still
-too big to broadcast.
+``range_join_broadcast`` is the QUERY-SIDE hot path: the build table
+is small (≤ a few GB), the probe side is the 100 TB stream, so the
+scalable plan is a BROADCAST of the sorted ranges + a vectorized binary
+search per Arrow batch (np.searchsorted, O(log n) per probe, zero
+shuffle) — the distributed analog of the reference's in-memory search.
+One ``mapInPandas`` serves a whole request: it parses the IP text,
+searches several range tables (one sorted array per snapshot key), and
+maps payload values through dimension builds (a sorted key array plus
+attribute arrays) with one more search each — the reference's one
+parse, binary searches and map lookups (iputils/iputils.go:111-128,
+geolite2v2/geo-ip.go:99-125, asn/asn-annotator.go:82-86). Like the
+reference, which loads each dataset once and only searches per request
+(directory/directory.go:230-240, manager/manager.go:38-57), every
+build is made ONCE per published DataFrame and lives exactly as long
+as that DataFrame: later requests on the same tables run no Spark job
+before their own action, and a refresh that publishes a new DataFrame
+gets a new build of that table only. A payload may be a Spark
+expression over the table, evaluated once in the build. This holds
+while Catalyst's size estimate of a whole range table fits the
+broadcast gate; past it each call prunes the table to the snapshots
+its probes reference, and a bucketed shuffle variant covers build
+tables still too big to broadcast.
 """
 
 from __future__ import annotations
@@ -423,17 +430,17 @@ def _estimated_bytes(df: DataFrame) -> int:
 
 
 class _Build:
-    """One memoized build: its broadcast, and a lock so concurrent
-    misses on the same (table, signature) build once."""
+    """One memoized build: its value, and a lock so concurrent misses
+    on the same (table, signature) build once."""
 
-    __slots__ = ("lock", "bc")
+    __slots__ = ("lock", "value")
 
     def __init__(self) -> None:
         self.lock = threading.Lock()
-        self.bc = None
+        self.value = None
 
 
-# ranges DataFrame (by identity) -> {(low, high, payload, keys): _Build}
+# table DataFrame (by identity) -> {signature: _Build}
 _BUILDS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 _BUILDS_LOCK = threading.Lock()
 # broadcasts whose table has died, unpersisted by the next build: a
@@ -442,34 +449,35 @@ _BUILDS_LOCK = threading.Lock()
 _RELEASED: deque = deque()
 
 
-def _built_once(ranges: DataFrame, signature: tuple, build):
-    """The broadcast ``build()`` makes for ``ranges``, built on the
-    first call per (``ranges`` object, ``signature``) and shared by
-    every later one. The entry dies with ``ranges``; its broadcast is
-    then unpersisted, never destroyed, because a task still running
-    may re-fetch it from the driver."""
+def _built_once(table: DataFrame, signature: tuple, build):
+    """The ``(broadcast, fields)`` pair ``build()`` makes for ``table``,
+    built on the first call per (``table`` object, ``signature``) and
+    shared by every later one. The entry dies with ``table``; its
+    broadcast is then unpersisted, never destroyed, because a task
+    still running may re-fetch it from the driver."""
     with _BUILDS_LOCK:
         while _RELEASED:
             _RELEASED.popleft().unpersist()
-        slot = _BUILDS.setdefault(ranges, {}).setdefault(signature, _Build())
+        slot = _BUILDS.setdefault(table, {}).setdefault(signature, _Build())
     with slot.lock:
-        if slot.bc is None:
-            slot.bc = build()
-            weakref.finalize(ranges, _RELEASED.append, slot.bc)
-    return slot.bc
+        if slot.value is None:
+            slot.value = build()
+            weakref.finalize(table, _RELEASED.append, slot.value[0])
+    return slot.value
 
 
 def range_join_broadcast(
     probes: DataFrame,
-    ranges: DataFrame | Sequence[tuple[DataFrame, Sequence[str]]],
+    ranges: DataFrame | Sequence[tuple[DataFrame, Sequence[str | Column]]],
     probe_col: str,
     low: str = "ip_low",
     high: str = "ip_high",
-    payload: Sequence[str] = (),
+    payload: Sequence[str | Column] = (),
     how: str = "left",
     keys: Sequence[str] = (),
     parse_ips: bool = False,
     max_broadcast_bytes: int = 512 << 20,
+    dims: Sequence[tuple[DataFrame, str, str, Sequence[str]]] = (),
 ) -> DataFrame:
     """J1 via broadcast + vectorized binary search
     (iputils/iputils.go:111-128 distributed analog).
@@ -494,9 +502,22 @@ def range_join_broadcast(
     iputils/iputils.go:111-128). ``how='inner'`` keeps rows hit in
     every table.
 
+    A payload entry may be a ``Column`` over the table's columns
+    (aliased to its output name): it is evaluated by Spark once, in the
+    build, and its text is part of the build's identity.
+
+    ``dims``: dimension lookups in the same crossing, each
+    ``(table, on, key, attributes)``: every row's payload column ``on``
+    is looked up in ``table``'s ``key`` (one more ``searchsorted`` over
+    the sorted keys) and the matching row's ``attributes`` are
+    appended after the payloads, NULL on a miss — the left equi-join
+    on a unique key, as the reference's LocationIndex and AS-name map
+    lookups (geolite2v2/geo-ip.go:99-125, asn/asn-annotator.go:82-86).
+    A key that repeats answers with one of its rows.
+
     Build once per published table: when Catalyst's free size
-    estimate of a WHOLE table fits ``max_broadcast_bytes``, its build
-    is memoized on the table object itself (by identity, per
+    estimate of a WHOLE range table fits ``max_broadcast_bytes``, its
+    build is memoized on the table object itself (by identity, per
     low/high/payload/keys). The first call collects and broadcasts
     it; every later call on the same DataFrame — alone or beside other
     tables — goes straight to the probe with no Spark job before the
@@ -506,7 +527,9 @@ def range_join_broadcast(
     (``SnapshotStore.swap``) gets a new build, and the old broadcast
     is unpersisted once in-flight requests drop the old one. Each
     table of a multi-table call is gated on its own estimate, so
-    swapping one table rebuilds only that one.
+    swapping one table rebuilds only that one. Dimension tables are
+    always built once per object (per key/attributes), like the
+    broadcast hash join they replace.
 
     ``keys``: optional equi-join columns shared by probes and ranges
     (e.g. ``dataset_date`` after an as-of join) — the broadcast holds
@@ -538,10 +561,6 @@ def range_join_broadcast(
         raise ValueError("range_join_broadcast: pass payload inside each (table, payload) pair")
     else:
         tables = [(t, list(p)) for t, p in ranges]
-    payloads = [pl for _, pl in tables]
-    names = [c for pl in payloads for c in pl]
-    if len(set(names)) != len(names):
-        raise ValueError(f"range_join_broadcast: payload columns repeat across tables: {names}")
     keys = list(keys)
     bound_kinds = {
         isinstance(t.schema[low].dataType, (T.LongType, T.IntegerType)) for t, _ in tables
@@ -550,16 +569,19 @@ def range_join_broadcast(
         raise ValueError("range_join_broadcast: every table needs the same bound type")
     is_long = bound_kinds.pop()
     width = 8 if is_long else 16
+    sc = probes.sparkSession.sparkContext
 
-    def build(table: DataFrame, pl: list[str]):
+    def build(table: DataFrame, pl: list):
+        sel = table.select(*keys, low, high, *pl)
         # Arrow toPandas: an order of magnitude faster than collect() for
         # wide/binary build tables (measured ~3s -> ~0.3s at 20k ranges)
-        rpdf = table.select(*keys, low, high, *pl).orderBy(*keys, low).toPandas()
+        rpdf = sel.orderBy(*keys, low).toPandas()
+        fields = sel.schema.fields[len(keys) + 2:]
 
         def build_group(g: pd.DataFrame):
             lows = _u8_to_s(_to_u8(g[low], width, is_long))
             highs = _u8_to_s(_to_u8(g[high], width, is_long))
-            return lows, highs, {c: g[c].to_numpy(dtype=object) for c in pl}
+            return lows, highs, {f.name: g[f.name].to_numpy(dtype=object) for f in fields}
 
         if keys:
             bc_val = {
@@ -568,34 +590,61 @@ def range_join_broadcast(
             }
         else:
             bc_val = {(): build_group(rpdf)} if len(rpdf) else {}
-        return probes.sparkSession.sparkContext.broadcast(bc_val)
+        return sc.broadcast(bc_val), fields
 
-    bcs = []
+    def build_dim(table: DataFrame, key: str, attrs: list[str]):
+        sel = table.select(key, *attrs).where(F.col(key).isNotNull())
+        dpdf = sel.orderBy(key).toPandas()
+        value = (dpdf[key].to_numpy(), {c: dpdf[c].to_numpy(dtype=object) for c in attrs})
+        return sc.broadcast(value), sel.schema.fields[1:]
+
+    bcs, payloads = [], []
     for table, pl in tables:
         if _estimated_bytes(table) <= max_broadcast_bytes:
-            signature = (low, high, tuple(pl), tuple(keys))
-            bcs.append(_built_once(table, signature, functools.partial(build, table, pl)))
-            continue
-        pruned = _pruned_ranges(probes, table, keys)
-        # Catalyst (over)estimates the semi-join at the whole table's
-        # size; one count() job gives the per-row-bytes estimate
-        est_bytes = pruned.count() * (2 * width + 64 * len(pl) + 16 * len(keys))
-        if est_bytes > max_broadcast_bytes:
-            if is_long and not parse_ips and len(tables) == 1:
-                return range_join_bucketed(
-                    probes, pruned, probe_col, low=low, high=high,
-                    payload=pl, how=how, keys=keys,
+            signature = (low, high, tuple(map(str, pl)), tuple(keys))
+            bc, fields = _built_once(table, signature, functools.partial(build, table, pl))
+        else:
+            pruned = _pruned_ranges(probes, table, keys)
+            # Catalyst (over)estimates the semi-join at the whole table's
+            # size; one count() job gives the per-row-bytes estimate
+            est_bytes = pruned.count() * (2 * width + 64 * len(pl) + 16 * len(keys))
+            if est_bytes > max_broadcast_bytes:
+                if is_long and not parse_ips and len(tables) == 1 and not dims:
+                    return range_join_bucketed(
+                        probes, pruned, probe_col, low=low, high=high,
+                        payload=pl, how=how, keys=keys,
+                    )
+                raise ValueError(
+                    f"range_join_broadcast: build table ~{est_bytes >> 20} MiB exceeds "
+                    f"max_broadcast_bytes ({max_broadcast_bytes >> 20} MiB) and no "
+                    "bucketed fallback exists for binary bounds / parse_ips / several "
+                    "tables — flatten per snapshot and use range_join_bucketed on long bounds"
                 )
-            raise ValueError(
-                f"range_join_broadcast: build table ~{est_bytes >> 20} MiB exceeds "
-                f"max_broadcast_bytes ({max_broadcast_bytes >> 20} MiB) and no "
-                "bucketed fallback exists for binary bounds / parse_ips / several "
-                "tables — flatten per snapshot and use range_join_bucketed on long bounds"
-            )
-        bcs.append(build(pruned, pl))
+            bc, fields = build(pruned, pl)
+        bcs.append(bc)
+        payloads.append(fields)
+    dim_bcs, dim_fields = [], []
+    for table, on, key, attrs in dims:
+        bc, fields = _built_once(
+            table, ("dim", key, tuple(attrs)), functools.partial(build_dim, table, key, list(attrs))
+        )
+        dim_bcs.append(bc)
+        dim_fields.append(fields)
+
+    pl_names = [[f.name for f in fields] for fields in payloads]
+    names = [c for pl in pl_names for c in pl]
+    dim_names = [[f.name for f in fields] for fields in dim_fields]
+    out_names = names + [c for attrs in dim_names for c in attrs]
+    if len(set(out_names)) != len(out_names):
+        raise ValueError(f"range_join_broadcast: output columns repeat: {out_names}")
+    dim_on = [on for _, on, _, _ in dims]
+    if not set(dim_on) <= set(names):
+        raise ValueError(f"range_join_broadcast: dims look up payload columns, not {dim_on}")
 
     out_fields = list(probes.schema.fields) + [
-        T.StructField(c, t.schema[c].dataType, True) for t, pl in tables for c in pl
+        T.StructField(f.name, f.dataType, True)
+        for fields in payloads + dim_fields
+        for f in fields
     ]
     out_schema = T.StructType(out_fields)
     probe_names = [f.name for f in probes.schema.fields]
@@ -614,13 +663,29 @@ def range_join_broadcast(
         for c in pl:
             res[c][hit_pos] = pl_b[c][hit_idx]
 
+    def look_up(dim, on, attrs, res):
+        """One dimension's lookup: write the attributes of the row whose
+        key equals each row's ``on`` value."""
+        dkeys, attrs_b = dim
+        pos = np.flatnonzero(pd.notna(res[on]))
+        if not len(dkeys) or not len(pos):
+            return
+        vals = res[on][pos].astype(dkeys.dtype)
+        idx = np.searchsorted(dkeys, vals, side="right") - 1
+        ok = idx >= 0
+        safe = np.where(ok, idx, 0)
+        ok &= dkeys[safe] == vals
+        for c in attrs:
+            res[c][pos[ok]] = attrs_b[c][safe[ok]]
+
     def lookup(it):
         by_key = [bc.value for bc in bcs]
+        dim_tables = [bc.value for bc in dim_bcs]
         for pdf in it:
             pv = pdf[probe_col]
             if parse_ips:
                 pv = parse_ip_series(pv, six_to_four=True)
-            res = {c: np.full(len(pdf), None, dtype=object) for c in names}
+            res = {c: np.full(len(pdf), None, dtype=object) for c in out_names}
             valid = pv.notna().to_numpy()
             if valid.any():
                 pos = np.flatnonzero(valid)
@@ -631,13 +696,15 @@ def range_join_broadcast(
                     groups = {(): np.arange(len(pos))}
                 for kv, ix in groups.items():
                     kt = kv if isinstance(kv, tuple) else (kv,)
-                    for tables_by_key, pl in zip(by_key, payloads):
+                    for tables_by_key, pl in zip(by_key, pl_names):
                         table = tables_by_key.get(kt)
                         if table is not None:
                             search(table, pl, pb[ix], pos[ix], res)
+                for dim, on, attrs in zip(dim_tables, dim_on, dim_names):
+                    look_up(dim, on, attrs, res)
             out = pd.concat([pdf[probe_names], pd.DataFrame(res, index=pdf.index)], axis=1)
             if how == "inner":
-                for pl in payloads:
+                for pl in pl_names:
                     if pl:
                         out = out[out[pl[0]].notna()]
             yield out

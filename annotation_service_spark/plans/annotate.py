@@ -7,8 +7,8 @@ geolite2v2/geo-ip.go:99-176, asn/asn-annotator.go:29-92):
       → as-of snapshot selection (J2)
       → parse/validate (P3) → 6to4 rewrite (P4)
         → geo range join (J1) + asn range join (J1), one probe pass
-      → location dim join (J3 tail)
-      → AS decode (P8/P9) → AS-name join (J4)
+      → location dim lookup (J3 tail)
+      → AS decode (P8/P9) → AS-name lookup (J4)
       → GeolocationIP/ASData struct projection (P13)
       → Missing backfill (P15)
       → JSON shaping (S11)
@@ -18,33 +18,63 @@ representation makes v4 and v6 ranges disjoint in one sorted table,
 so a single binary search replaces the reference's per-family lists
 (manager/manager.go:213-226 becomes a representation choice).
 
-Scale notes: the probe side (the 100 TB stream) crosses into Python
-ONCE: a single mapInPandas parses each IP (P3 + P4) and binary-searches
-both the geo and the ASN table (keyed by snapshot after the as-of
-join), like the reference's one parse and two searches per IP
-(iputils/iputils.go:111-128). Then it flows through TWO broadcast hash
-joins (locations, asnames). No probe-side shuffle anywhere. The range
-tables are broadcast once per published DataFrame, not once per
-request: a server that passes the tables it holds in ``SnapshotStore``
-plans every request after the first with no Spark job before the
-response action, and a refresh's ``swap`` publishes a new DataFrame,
-so the next request builds from the new snapshot
-(``range_join_broadcast``). Tables whose size estimate exceeds the
-broadcast gate are instead pruned per request to the snapshots the
-probes reference.
+One plan per request, like the reference's one parse, two binary
+searches and two map lookups against datasets loaded once
+(iputils/iputils.go:111-128, geolite2v2/geo-ip.go:99-125,
+asn/asn-annotator.go:82-86, directory/directory.go:230-240). A warm
+request plans as
+
+    request scan → as-of projection → ONE mapInPandas → struct projection
+
+and nothing that does not depend on the request is planned again:
+
+- the as-of selection is a native projection over the registry's
+  snapshot dates, collected once per (published geo table, registry
+  plan) (``asof.asof_column``);
+- the mapInPandas parses each IP (P3 + P4), binary-searches the geo
+  and the ASN table (keyed by snapshot), and maps each hit's ``gid``
+  and best ASN through the location and AS-name builds with one more
+  binary search each (``range_join_broadcast(dims=...)``). Every build
+  is broadcast once per published DataFrame, so a refresh's ``swap``
+  rebuilds only the table it replaced. Best ASN is the Spark expression
+  ``best_asn(asn_decode(as_string))``, evaluated once inside the ASN
+  build;
+- the ``geo`` and ``network`` struct Columns name columns only and are
+  built once per JVM.
+
+No probe-side shuffle and no per-request join or broadcast. The
+dimensions stay normalized (``build_geo_ranges``): denormalizing them
+into ~4M range rows per real snapshot would multiply the broadcast
+bytes. Tables whose size estimate exceeds the broadcast gate are
+instead pruned per request to the snapshots the probes reference.
 """
 
 from __future__ import annotations
 
+import threading
+
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import ip as ipf
-from ..operators.asof import asof_join
+from ..operators.asof import asof_column
 from ..operators.interval import range_join_broadcast
 
 GEO_PAYLOAD = ["gid", "postal_code", "latitude", "longitude"]
 ASN_PAYLOAD = ["as_string", "cidr"]
+LOCATION_ATTRS = [
+    "continent_code",
+    "country_code",
+    "country_name",
+    "subdivision_1_iso_code",
+    "subdivision_1_name",
+    "subdivision_2_iso_code",
+    "subdivision_2_name",
+    "city_name",
+    "metro_code",
+    "accuracy_radius_km",
+]
 
 # the v4-mapped /96: canonical home of every v4 address (J7)
 _V4_SPAN_LOW = b"\x00" * 10 + b"\xff\xff" + b"\x00" * 4
@@ -91,8 +121,9 @@ def prepare_probes(requests: DataFrame, ip_col: str = "ip") -> DataFrame:
     )
 
 
-def geolocation_struct(locations_joined: DataFrame) -> Column:
-    """P13 (geolite2v2/geo-ip.go:99-125): assemble GeolocationIP.
+def geolocation_struct() -> Column:
+    """P13 (geolite2v2/geo-ip.go:99-125): assemble GeolocationIP from
+    the geo payload and the location attributes.
     CountryCode3 is always empty and AreaCode 0 for GeoLite2, as in
     the reference."""
     hit = F.col("gid").isNotNull()
@@ -143,8 +174,9 @@ def geolocation_struct(locations_joined: DataFrame) -> Column:
 
 def asdata_struct() -> Column:
     """ASData assembly (asn/asn-annotator.go:61-90): decode the AS
-    string (P8), BestASN (P9), CIDR from the flattened range (P2 at
-    build time → ``cidr`` column), Missing backfill (P15)."""
+    string (P8), BestASN (P9, the ``as_number`` payload), CIDR from
+    the flattened range (P2 at build time → ``cidr`` column), AS name,
+    Missing backfill (P15)."""
     hit = F.col("as_string").isNotNull()
     systems = ipf.asn_decode(F.col("as_string"))
     return F.when(
@@ -152,7 +184,7 @@ def asdata_struct() -> Column:
         F.struct(
             F.lit("").alias("ip_prefix"),
             F.coalesce("cidr", F.lit("")).alias("cidr"),
-            ipf.best_asn(systems).alias("as_number"),
+            F.col("as_number"),
             F.coalesce("as_name", F.lit("")).alias("as_name"),
             F.lit(False).alias("missing"),
             systems.alias("systems"),
@@ -169,6 +201,28 @@ def asdata_struct() -> Column:
     )
 
 
+_COLUMNS_LOCK = threading.Lock()
+_COLUMNS: tuple = (None,)
+
+
+def _plan_columns() -> tuple[Column, Column, Column]:
+    """(best-ASN payload, ``geo`` struct, ``network`` struct), built once
+    per JVM: they name columns only, and building them anew cost every
+    request ~280 ms of py4j round trips."""
+    global _COLUMNS
+    jvm = SparkContext._jvm
+    with _COLUMNS_LOCK:
+        if _COLUMNS[0] is not jvm:
+            _COLUMNS = (
+                jvm,
+                # P9 of the decoded AS string (P8): an ASN-build payload
+                ipf.best_asn(ipf.asn_decode(F.col("as_string"))).alias("as_number"),
+                geolocation_struct().alias("geo"),
+                asdata_struct().alias("network"),
+            )
+        return _COLUMNS[1:]
+
+
 def annotate(
     requests: DataFrame,
     geo_ranges: DataFrame,
@@ -182,53 +236,34 @@ def annotate(
     """Full composite annotate (J9): every request row gains ``geo``
     and ``network`` structs.
 
-    When ``date_col`` + ``registry`` are given, an as-of join selects
-    the snapshot per request and the range joins are keyed by
-    ``dataset_date`` (J2∘J1); otherwise the single-snapshot tables
-    are used directly.
+    When ``date_col`` + ``registry`` are given, the as-of rule selects
+    the snapshot per request (a ``dataset_date`` column) and the range
+    searches are keyed by it (J2∘J1); otherwise the single-snapshot
+    tables are used directly.
     """
+    best_asn, geo, network = _plan_columns()
     probes, keys = requests, []
     if date_col is not None and registry is not None:
-        probes = asof_join(requests, registry, probe_date=date_col)
+        probes = requests.withColumn(
+            "dataset_date", asof_column(registry, date_col, owner=geo_ranges)
+        )
         keys = ["dataset_date"]
 
-    # P3 + P4 and both J1 searches in one Python crossing
+    # P3 + P4, both J1 searches and both dimension lookups in one
+    # Python crossing
     hits = range_join_broadcast(
         probes,
-        [(geo_ranges, GEO_PAYLOAD), (asn_ranges, ASN_PAYLOAD)],
+        [(geo_ranges, GEO_PAYLOAD), (asn_ranges, [*ASN_PAYLOAD, best_asn])],
         probe_col=ip_col,
         how="left",
         keys=keys,
         parse_ips=True,
+        dims=[
+            (locations, "gid", "geoname_id", LOCATION_ATTRS),
+            (asnames, "as_number", "asn", ["as_name"]),
+        ],
     )
-    with_loc = hits.join(
-        F.broadcast(locations), on=hits["gid"] == locations["geoname_id"], how="left"
-    ).drop("geoname_id")
-    with_geo = with_loc.withColumn("geo", geolocation_struct(with_loc)).drop(
-        *GEO_PAYLOAD,
-        "continent_code",
-        "country_code",
-        "country_name",
-        "subdivision_1_iso_code",
-        "subdivision_1_name",
-        "subdivision_2_iso_code",
-        "subdivision_2_name",
-        "city_name",
-        "metro_code",
-        "accuracy_radius_km",
-    )
-    systems = ipf.asn_decode(F.col("as_string"))
-    with_asname = with_geo.withColumn(
-        "__best", ipf.best_asn(systems)
-    ).join(
-        F.broadcast(asnames.select("asn", "as_name")),
-        on=F.col("__best") == F.col("asn"),
-        how="left",
-    )
-    out = with_asname.withColumn("network", asdata_struct()).drop(
-        *ASN_PAYLOAD, "as_name", "asn", "__best"
-    )
-    return out
+    return hits.select(*requests.columns, *keys, geo, network)
 
 
 def to_v2_response(annotated: DataFrame, ip_col: str = "ip") -> DataFrame:

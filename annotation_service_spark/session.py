@@ -43,6 +43,23 @@ def ensure_shipped(spark: SparkSession) -> None:
     sc._asvc_shipped = True
 
 
+def _driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` when set, else 16g capped at half of
+    physical memory.
+
+    16g, not "all the RAM": G1 young regions and concurrent cycles
+    scale with heap capacity, so an oversized heap ages into
+    multi-second stalls (measured: same bench 39s at 48g, 31s at 16g
+    with lower variance). Half of physical memory on smaller hosts: a
+    heap the host cannot back gets the JVM killed, not slowed. Raise
+    via SPARK_GRAFT_DRIVER_MEM for genuinely large broadcasts."""
+    explicit = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if explicit:
+        return explicit
+    half_mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2 >> 20
+    return f"{min(16 << 10, half_mib)}m"
+
+
 def get_session(
     app_name: str = "annotation_service_spark",
     shuffle_partitions: int | None = None,
@@ -77,12 +94,7 @@ def get_session(
         # carry the OOM risk; this one does not have it.
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # 16g, not "all the RAM": G1 young regions and concurrent
-        # cycles scale with heap capacity, so an oversized heap ages
-        # into multi-second stalls (measured: same bench 39s at 48g,
-        # 31s at 16g with lower variance). Raise via
-        # SPARK_GRAFT_DRIVER_MEM for genuinely large broadcasts.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         # Split the broadcast budget between the two planners (r10,
         # from the tpch_q3 sf1 slope investigation): the STATIC

@@ -90,24 +90,20 @@ def geolite2_blocks(spark: SparkSession, path: str, strict: bool = True) -> Data
         [T.StructField(c, T.StringType()) for c in BLOCKS_COLUMNS]
         + [T.StructField("_corrupt_record", T.StringType())]
     )
-    # cache: Spark disallows plans whose pruned file scan reads only
-    # `_corrupt_record` (e.g. a count() after our malformed-row filter);
-    # caching the parsed result is the documented workaround, and these
-    # are small ingest files, never probe-scale data. It is also what
-    # keeps malformed records visible: uncached, column pruning hides
-    # `_corrupt_record`, so the strict budget passes a malformed file
-    # and count() disagrees with collect()
-    # (test_sources.py::test_blocks_malformed_records). The cache is
-    # never released — one persisted RDD per loaded file. It stays a
-    # raw .cache(), not caching.scoped_cache: releasing it would change
-    # answers, and a scoped cache's release may only lose a cache hit.
-    raw = spark.read.csv(
+    # columnPruning off for this read only: a pruned CSV scan parses
+    # just the columns a query needs, which hides `_corrupt_record` for
+    # a row with too many or too few fields, so the strict budget would
+    # pass a malformed file and count() would disagree with collect()
+    # (test_sources.py::test_blocks_malformed_records). Every query
+    # reads more than `_corrupt_record` alone (the filter below needs
+    # latitude/longitude), which Spark requires of a raw CSV scan.
+    raw = spark.read.option("columnPruning", "false").csv(
         path,
         header=True,
         schema=str_schema,
         mode="PERMISSIVE",
         columnNameOfCorruptRecord="_corrupt_record",
-    ).cache()
+    )
 
     def num(c, typ):
         return F.coalesce(F.col(c).try_cast(typ), F.lit(0).cast(typ))
@@ -206,10 +202,10 @@ def build_geo_ranges(
     the FIRST location row in file order (the reference's silent
     default).
 
-    The location attributes stay normalized (broadcast-joined at
-    query time) exactly like the reference's LocationIndex
-    indirection; at 100 TB probe scale this keeps the broadcast table
-    small.
+    The location attributes stay normalized (looked up in their own
+    build at query time, ``plans.annotate``) exactly like the
+    reference's LocationIndex indirection; at 100 TB probe scale this
+    keeps the broadcast tables small.
 
     Family note: real GeoLite2 v4/v6 blocks are disjoint in the
     canonical 16-byte space, so a unioned ``blocks`` input flattens

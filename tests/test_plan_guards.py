@@ -565,3 +565,62 @@ def test_annotate_request_stage_crosses_into_python_once(spark, fixture_dir):  #
         assert got["1.0.0.5"].geo.postal_code == "3095", form
         assert got["1.0.0.5"].network.as_number == 13335, form
         assert got["junk"].geo.missing and got["junk"].network.missing, form
+
+
+def test_annotate_warm_asof_request_is_one_plan(spark, tmp_path, fixture_dir):  # noqa: F811
+    """A warm as-of request on published tables plans as request scan →
+    as-of projection → one MapInPandas (parse, both range searches, both
+    dimension lookups) → struct projection → the document aggregate: no
+    per-request registry scan, join or broadcast, and the action runs at
+    most 2 jobs (its one Exchange feeds the document aggregate)."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    from annotation_service_spark.plans import annotate as plan
+    from annotation_service_spark.sources import dims, geolite2, routeviews
+    from tests.test_interval import sql_executions
+
+    locs = geolite2.geolite2_locations(spark, str(fixture_dir / "locations.csv"))
+    names = dims.asnames(spark, str(fixture_dir / "asnames.csv"))
+    tables = {
+        "geo": geolite2.build_geo_ranges(
+            geolite2.geolite2_blocks(spark, str(fixture_dir / "blocks.csv")), locs
+        ),
+        "asn": routeviews.build_asn_ranges(
+            routeviews.routeviews_pfx2as(spark, str(fixture_dir / "pfx2as.tsv"))
+        ),
+    }
+    for name, df in tables.items():
+        dated = [df.withColumn("dataset_date", F.lit(dt.date(y, 1, 1))) for y in (2017, 2018)]
+        dated[0].unionByName(dated[1]).write.parquet(str(tmp_path / name))
+        tables[name] = spark.read.parquet(str(tmp_path / name))
+    geo, asn = tables["geo"], tables["asn"]
+
+    def request():
+        req = spark.createDataFrame(
+            [("1.0.0.5", dt.date(2018, 6, 1)), ("junk", dt.date(2016, 1, 1))],
+            "ip string, req_date date",
+        )
+        out = plan.annotate(req, geo, locs, asn, names, date_col="req_date",
+                            registry=geo.select("dataset_date").distinct())
+        return plan.to_v2_response_document(out)
+
+    request().collect()  # warm-up: every build once
+    n, doc = sql_executions(spark, request)
+    assert n == 0
+    p = _plan(doc)
+    assert p.count("MapInPandas") == 1, p
+    for node in ("BroadcastExchange", "BroadcastNestedLoopJoin", "FileScan", "InMemoryTableScan"):
+        assert node not in p, (node, p)
+    lines = p.splitlines()
+    exchanges = [i for i, line in enumerate(lines) if "Exchange" in line]
+    assert len(exchanges) == 1 and "SinglePartition" in lines[exchanges[0]], p
+    assert "collect_list" in lines[exchanges[0] - 1], p
+
+    sc = spark.sparkContext
+    before = set(sc.statusTracker().getJobIdsForGroup(None))
+    (row,) = doc.collect()
+    jobs = [j for j in sc.statusTracker().getJobIdsForGroup(None) if j not in before]
+    assert len(jobs) <= 2, jobs
+    assert '"postal_code":"3095"' in row.response_json
