@@ -969,7 +969,7 @@ def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     customers by lost revenue. Same scale stance as q3/q5: no
     fact-side broadcast hints — only the fixed 25-row nation keeps
     one; AQE + the bucketed layout carry the fact joins; the date
-    filter pushes to the orders scan (PushedFilters in PLANS.md)."""
+    filter pushes to the orders scan (PushedFilters)."""
     cust = _t(spark, sf_dir, "customer")
     orders = _t(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= F.lit("1996-01-01"))
@@ -3713,12 +3713,7 @@ def q_html_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("passes"))
         .select(F.col("id").alias("doc_id"))
     )
-    # r13: the boilerplate stage's hot-set limit probe executes its
-    # input once before the main action does — scoped-cache the
-    # staged survivors so the probe's execution is the one the main
-    # query reuses (without it the HTML extraction ran twice; A/B
-    # showed the probe regressing this composition ~+2.5 s cold).
-    staged = scoped_cache(ext.join(bw_keep, "doc_id").join(gq_pass, "doc_id"))
+    staged = ext.join(bw_keep, "doc_id").join(gq_pass, "doc_id")
     return cu.remove_boilerplate_lines(staged, max_line_df=15)
 
 
@@ -3972,10 +3967,6 @@ def _web_pipeline(
             .select(F.col("id").alias("doc_id"))
         )
         staged = staged.join(rep_keep, "doc_id")
-    # r13: same probe-reuse cache as q_html_pipeline — the boilerplate
-    # stage's hot-set limit probe otherwise re-executes the whole
-    # synthesize+C4+Gopher upstream a second time.
-    staged = scoped_cache(staged)
     return cu.remove_boilerplate_lines(staged, max_line_df=15)
 
 
@@ -3985,10 +3976,10 @@ def q_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     lines whose normalized form appears in > 15 distinct documents are
     template furniture and are removed everywhere; documents come back
     reassembled in original line order with (n_lines, n_kept). Plan:
-    linear line explode + one content-keyed distinct-doc count +
-    left_anti join — no all-pairs, hot lines are single aggregation
-    keys. The oracle replays the same threshold over the same
-    synthesized lines."""
+    linear line explode + one content-keyed distinct-doc count + a
+    left join that marks hot lines — no all-pairs, hot lines are
+    single aggregation keys. The oracle replays the same threshold
+    over the same synthesized lines."""
     return cu.remove_boilerplate_lines(
         _lined_documents(spark, sf_dir), max_line_df=15
     )
@@ -4678,6 +4669,48 @@ def q_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship annotate query on /root/testdata/sf0.001."""
     return q_annotate(spark, "/root/testdata/sf0.001")
+
+
+# The gates that still start Spark jobs while their DataFrame is built,
+# each line under its reason; every other gate builds without one.
+# tests/test_planning.py checks the set both ways at sf0.001.
+EAGER_GATES = frozenset({
+    # iterative driver: localCheckpoint rounds until nothing changes
+    "kcore", "lpa_communities", "knn_pagerank", "knn_pagerank_lsh",
+    # iterative driver: k-means rounds collect each round's centroids
+    "kmeans_fixed", "semantic_dedup",
+    # iterative driver: perceptron epochs collect the weight deltas
+    "perceptron_filter", "filter_calibration",
+    # build-once memo: range tables collected and broadcast once per table
+    "annotate", "annotate_multisnapshot", "legacy_annotate",
+    "annotate_nearest_site",
+    # build-once memo: the vector dimension, once per embeddings plan
+    "embedding_gram", "embedding_decontam",
+    # bounded collect: range-shard bounds and per-shard totals
+    "epoch_shuffle", "length_buckets", "token_budget_sample",
+    "token_budget_sample_tokens",
+    # bounded collect: the query vectors (every 50th id)
+    "ann_gemm_topk", "ann_ivf_topk", "ann_pq_topk", "ann_ivfpq_topk",
+    # bounded collect: the size-gated vectors for the driver-side GEMM
+    "dedup_embedding_cosine",
+    # bounded collect: connected_components' size-gated edge list
+    "dedup_keep_best", "dedup_clusters", "leakage_safe_split",
+    # bounded collect: the report's counts are driver scalars
+    "dedup_eval_report", "dedup_eval_weighted",
+    # bounded collect: bm25's one-row corpus statistics, source_kl's
+    # top-V vocabulary size, the bloom bitmap folded on the driver
+    "bm25_rank", "source_kl", "bloom_join",
+    # stream start: an availableNow stream drains into a sink
+    "stream_rollup", "stream_hot_lines", "stream_url_dedup",
+    "stream_dedup_exact", "stream_sentence_dedup", "stream_annotate",
+    # kept by measurement: cap_shingles' hot-shingle literal (a plain
+    # anti-join doubled pipeline_full's build jobs and slowed the
+    # curation_docs pass; docs/SCALE.md "Planning runs no jobs")
+    "pipeline_full", "dedup_winnow", "shared_passages",
+    # kept by measurement: the localCheckpoint of the weight postings
+    # (2.5x over recomputing them) runs their shuffles when built
+    "tfidf_pairs",
+})
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

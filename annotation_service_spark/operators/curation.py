@@ -28,11 +28,11 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from annotation_service_spark.caching import is_cached, scoped_cache
+from annotation_service_spark.caching import scoped_cache
 
 
 def concat_chunk_map(
@@ -840,7 +840,6 @@ def remove_boilerplate_lines(
     text_col: str = "text",
     sep: str = "\n",
     max_line_df: int = 30,
-    hot_broadcast_limit: int = 100_000,
 ) -> DataFrame:
     """Line-level boilerplate removal (the CCNet/RefinedWeb line-hash
     family; public: Wenzek et al. 2020 "CCNet", Penedo et al. 2023
@@ -856,63 +855,32 @@ def remove_boilerplate_lines(
     always kept, so a corpus-wide '' never strips every paragraph
     break once it crosses the threshold.
 
-    Plan (r13 optimization — guide §2.3/§2.4): linear line explode ->
-    count(DISTINCT doc) per normalized line (one content-keyed
-    shuffle, partial-aggregated; scoped-cached so the limit probe and
-    the join read one materialization) -> the hot set is BROADCAST
-    (limit-probe gated, shuffle fallback) into a left join that marks
-    hot occurrences -> ONE groupBy doc reassembles, counting and
-    collecting only unmarked lines. The per-doc line total rides the
-    explode, so there is no second scan of ``docs`` and no doc-id
-    re-join; the line fan-out itself never shuffles by content. No
+    Plan: linear line explode -> count(DISTINCT doc) per normalized
+    line (one content-keyed shuffle, partial-aggregated) -> a left
+    join of the hot set that marks hot occurrences -> ONE groupBy doc
+    reassembles, counting and collecting only unmarked lines. The hot
+    set is tiny by construction (it IS the boilerplate), so AQE turns
+    the join into a broadcast at run time from the aggregate's real
+    size; a hot set past the session's broadcast budget stays a
+    content-keyed join (AQE skew-split applies). Building the plan
+    runs no Spark job. The per-doc line total rides the explode, so
+    there is no second scan of ``docs`` and no doc-id re-join. No
     all-pairs anywhere; a line shared by 10^9 documents is one
     aggregation key, not a fan-out.
 
-    Unit cache (r13, guide §5): the hot-set probe executes the unit
-    explode's upstream once before the main action does, so the unit
-    table is scoped-cached and that upstream (parquet scan + synthesis
-    + split) runs ONCE (A/B: bare-gate cold ~0.75x, warm ~0.3x) —
-    unless ``docs`` is itself cached (the composed pipelines cache
-    their staged survivors): a re-split of a cached input is cheaper
-    than materializing a second corpus-sized cache (A/B: html_pipeline
-    regressed ~10% with the double cache)."""
-    lines = _doc_lines(docs, id_col, text_col, sep)
-    if not is_cached(docs):
-        lines = scoped_cache(lines)
-    hot = scoped_cache(
+    The unit table feeds both the aggregate and the join, so it is
+    scoped-cached: its upstream (scan, synthesis, split) runs once
+    per action instead of twice."""
+    lines = scoped_cache(_doc_lines(docs, id_col, text_col, sep))
+    hot = (
         lines.where(F.col("norm") != "")
         .groupBy("norm")
         .agg(F.count_distinct("id").alias("docs"))
         .where(F.col("docs") > max_line_df)
-        .select("norm", F.lit(True).alias("__hot")),
+        .select("norm", F.lit(True).alias("__hot"))
     )
-    # limit(+1) probe: materializes the (tiny) hot set once; bounds
-    # the broadcast decision — same contract as _keep_first_units.
-    fits = (
-        len(hot.limit(hot_broadcast_limit + 1).take(hot_broadcast_limit + 1))
-        <= hot_broadcast_limit
-    )
-    right = F.broadcast(hot) if fits else hot
     keep = F.col("__hot").isNull() & F.col("line").isNotNull()
-    return (
-        lines.join(right, "norm", "left")
-        .groupBy("id", "n_lines")
-        .agg(
-            F.count(F.when(keep, 1)).cast("long").alias("n_kept"),
-            F.concat_ws(
-                sep,
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(keep, F.struct("line_no", "line"))
-                        )
-                    ),
-                    lambda s: s["line"],
-                ),
-            ).alias("clean_text"),
-        )
-        .select("id", "n_lines", "n_kept", "clean_text")
-    )
+    return _reassemble(lines.join(hot, "norm", "left"), keep, sep)
 
 
 def dedup_lines_keep_first(
@@ -920,7 +888,6 @@ def dedup_lines_keep_first(
     id_col: str = "doc_id",
     text_col: str = "text",
     sep: str = "\n",
-    broadcast_dup_limit: int = 500_000,
 ) -> DataFrame:
     """Paragraph/line-level exact dedup keeping ONE canonical copy —
     the literal CCNet paragraph-dedup semantics: every normalized
@@ -935,43 +902,36 @@ def dedup_lines_keep_first(
     Shuffle shape: the keep-first decision only needs the
     DUPLICATED-norm subset (count > 1) with its winning (id,
     line_no) — unique lines decide themselves. That subset is
-    usually tiny relative to the corpus, so when a limit probe shows
-    it fits (≤ ``broadcast_dup_limit`` rows) it is BROADCAST into a
-    left join and the line fan-out never shuffles by content — a
-    cookie banner in 10^9 documents costs its occurrences one
-    broadcast-map lookup each, not a single-reducer pile-up. Above
-    the limit the same left join runs content-keyed (AQE skew-split
-    applies). The groupBy that finds the subset is partial-aggregated
-    either way. r13: the per-doc line total rides the explode
-    (``_doc_lines``), so there is no second scan of ``docs``."""
-    lines = _doc_lines(docs, id_col, text_col, sep)
-    return _keep_first_units(lines, sep, broadcast_dup_limit)
+    usually tiny relative to the corpus, so AQE broadcasts it into
+    the left join at run time and the line fan-out never shuffles by
+    content — a cookie banner in 10^9 documents costs its
+    occurrences one broadcast-map lookup each, not a single-reducer
+    pile-up. A subset past the broadcast budget stays a content-keyed
+    join (AQE skew-split applies). The groupBy that finds the subset
+    is partial-aggregated either way; the per-doc line total rides
+    the explode (``_doc_lines``), so there is no second scan of
+    ``docs``."""
+    return _keep_first_units(_doc_lines(docs, id_col, text_col, sep), sep)
 
 
-def _keep_first_units(
-    lines: DataFrame, sep: str, broadcast_dup_limit: int
-) -> DataFrame:
+def _keep_first_units(lines: DataFrame, sep: str) -> DataFrame:
     """Shared keep-first core over any (id, n_lines, line_no, line,
     norm) unit table (lines OR sentences): duplicated norms keep
     their min-(id, line_no) occurrence, blank norms are structure
     (always kept), reassembly joins by ``sep`` in original order.
 
-    r13 (optimization, guide §2.3/§2.4): the duplicated-norm subset
-    is scoped-cached, so the limit probe's materialization is the one
-    the join reuses instead of replaying the whole explode+agg; the
-    per-doc unit total rides the explode (see ``_doc_lines``), so the
-    old (id, n_lines) base scan and its doc-id re-join are gone —
-    one groupBy(id) reassembly over flag-marked lines emits the
-    final rows directly (null-line rows from the outer explode keep
+    One left join of the duplicated-norm subset, whose strategy AQE
+    picks at run time; building the plan runs no Spark job. One
+    groupBy(id) reassembly over flag-marked lines emits the final
+    rows directly (null-line rows from the outer explode keep
     empty/null-text docs in the output without a join).
 
-    The unit table itself is scoped-cached so the broadcast probe's
-    materialization of the dup subset and the main action's join left
-    side read ONE execution of the upstream (parquet scan + text
-    synthesis + split) instead of two (guide §5 — reused AND expensive
-    to recompute; the cache spills to disk above memory)."""
+    The unit table feeds both the subset's aggregate and the join,
+    so it is scoped-cached: the upstream (parquet scan + text
+    synthesis + split) runs once per action instead of twice (the
+    cache spills to disk above memory)."""
     lines = scoped_cache(lines)
-    dup_first = scoped_cache(
+    dup_first = (
         lines.where(F.col("norm") != "")
         .groupBy("norm")
         .agg(
@@ -979,17 +939,8 @@ def _keep_first_units(
             F.count(F.lit(1)).alias("cnt"),
         )
         .where(F.col("cnt") > 1)
-        .select("norm", "f"),
+        .select("norm", "f")
     )
-    # limit(+1) probe: materializes the (small) dup subset once,
-    # bounds the broadcast decision — same bounded-decision contract
-    # as token_budget_sample's offset guard, but degrading to the
-    # shuffle join instead of raising.
-    fits = (
-        len(dup_first.limit(broadcast_dup_limit + 1).take(broadcast_dup_limit + 1))
-        <= broadcast_dup_limit
-    )
-    right = F.broadcast(dup_first) if fits else dup_first
     keep = (
         F.col("f").isNull()
         | (
@@ -997,9 +948,15 @@ def _keep_first_units(
             & (F.col("line_no") == F.col("f.line_no"))
         )
     ) & F.col("line").isNotNull()
+    return _reassemble(lines.join(dup_first, "norm", "left"), keep, sep)
+
+
+def _reassemble(marked: DataFrame, keep: Column, sep: str) -> DataFrame:
+    """(id, n_lines, n_kept, clean_text): one groupBy doc over the
+    marked unit rows, rejoining the ``keep`` units by ``sep`` in
+    ``line_no`` order."""
     return (
-        lines.join(right, "norm", "left")
-        .groupBy("id", "n_lines")
+        marked.groupBy("id", "n_lines")
         .agg(
             F.count(F.when(keep, 1)).cast("long").alias("n_kept"),
             F.concat_ws(
@@ -1068,7 +1025,6 @@ def dedup_sentences_keep_first(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_dup_limit: int = 500_000,
 ) -> DataFrame:
     """SENTENCE-level exact dedup keeping one canonical copy — the
     Dolma toolkit's sentence/paragraph dedup stage (public: Soldaini
@@ -1081,12 +1037,13 @@ def dedup_sentences_keep_first(
 
     Same shuffle shape as dedup_lines_keep_first (the shared
     ``_keep_first_units`` core): the keep-first decision reads only
-    the DUPLICATED-norm subset, broadcast when a limit probe says it
-    fits — a corpus-hot sentence never piles onto one reducer. r13:
-    the per-doc sentence count rides the explode, so the old separate
-    base scan (a second full pass over ``docs``) is gone."""
+    the DUPLICATED-norm subset, which AQE broadcasts at run time when
+    it fits the session's budget — a corpus-hot sentence never piles
+    onto one reducer, and building the plan runs no Spark job. The
+    per-doc sentence count rides the explode, so there is no separate
+    base scan of ``docs``."""
     sents = _doc_sentences(docs, id_col, text_col, outer=True)
-    out = _keep_first_units(sents, " ", broadcast_dup_limit)
+    out = _keep_first_units(sents, " ")
     return out.withColumnRenamed("n_lines", "n_sents")
 
 

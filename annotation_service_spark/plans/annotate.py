@@ -112,15 +112,6 @@ def family_union(
     return clipped.unionByName(v4_mapped.select(low, high, *others)).orderBy(low)
 
 
-def prepare_probes(requests: DataFrame, ip_col: str = "ip") -> DataFrame:
-    """P3 + P4: parse to canonical bytes, rewrite 6to4. Invalid IPs
-    keep NULL bytes (they fall out as Missing, like the reference's
-    per-IP error suppression, handler/handler.go:216-229)."""
-    return requests.withColumn("__ipb", ipf.ip_to_bytes(F.col(ip_col))).withColumn(
-        "__eff", ipf.ip6to4(F.col("__ipb"))
-    )
-
-
 def geolocation_struct() -> Column:
     """P13 (geolite2v2/geo-ip.go:99-125): assemble GeolocationIP from
     the geo payload and the location attributes.

@@ -8,12 +8,23 @@ double's 2^53 mantissa — a float division here would silently corrupt
 timestamps). DuckDB coerces the same values to microseconds, and the
 generator emits microsecond-resolution data, so the conversion is
 lossless and oracle-comparable.
+
+Each file's inferred schema is remembered, keyed by its path and
+modification time, and later reads pass it to ``spark.read.schema``:
+a parquet read without a schema starts one Spark job to infer it,
+so without the memo every gate would run a job while it is planned.
+The memo lives as long as the process, like Spark's own file-status
+cache; a rewritten file gets a new modification time and is
+inferred again.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -25,6 +36,8 @@ _TS_COLS = {
     "lineitem": ["l_shipdate"],
     "events": ["ts"],
 }
+
+_SCHEMAS: dict[tuple[str, int], StructType] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -38,7 +51,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     ensure_shipped(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    key = (path, os.stat(path).st_mtime_ns)
+    schema = _SCHEMAS.get(key)
+    df = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
+    _SCHEMAS[key] = df.schema
     dtypes = dict(df.dtypes)
     for c in _TS_COLS.get(name, []):
         if dtypes.get(c) == "bigint":

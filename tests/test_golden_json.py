@@ -167,19 +167,18 @@ def test_family_union_straddling_v6_clip(spark):
     for lo, hi in pieces:
         assert hi < an._V4_SPAN_LOW or lo > an._V4_SPAN_HIGH
 
-    probes = an.prepare_probes(
-        spark.createDataFrame(
-            [("::1:0:0",),          # 2^32: below the /96, above old buggy bound
-             ("::1:0:0:0",),        # 2^48: first address above the /96
-             ("2001:db8::1",),      # ordinary v6 far above the /96
-             ("8.8.8.8",)],         # v4: must hit the v4 row, not "wide"
-            "ip string",
-        )
+    probes = spark.createDataFrame(
+        [("::1:0:0",),          # 2^32: below the /96, above old buggy bound
+         ("::1:0:0:0",),        # 2^48: first address above the /96
+         ("2001:db8::1",),      # ordinary v6 far above the /96
+         ("8.8.8.8",)],         # v4: must hit the v4 row, not "wide"
+        "ip string",
     )
     got = {
         r.ip: r.p
         for r in range_join_broadcast(
-            probes, ranges, probe_col="__eff", payload=["p"], how="left"
+            probes, ranges, probe_col="ip", parse_ips=True, payload=["p"],
+            how="left",
         ).collect()
     }
     assert got == {

@@ -11,6 +11,7 @@ and both must reassemble documents in original line order.
 from __future__ import annotations
 
 import re
+from contextlib import contextmanager
 
 from annotation_service_spark.operators.curation import (
     dedup_lines_keep_first,
@@ -144,21 +145,51 @@ def test_blank_lines_are_structure_not_boilerplate(spark):
         assert kf[i] == (5, 5, f"para one {i}\n\npara two {i}\n \nend {i}")
 
 
+_BROADCAST_CONFS = (
+    "spark.sql.autoBroadcastJoinThreshold",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold",
+)
+
+
+@contextmanager
+def _no_broadcast(spark):
+    """Both the static and the adaptive planner refuse every
+    broadcast inside the block; the session's values come back after."""
+    saved = {k: spark.conf.get(k) for k in _BROADCAST_CONFS}
+    try:
+        for k in _BROADCAST_CONFS:
+            spark.conf.set(k, "-1")
+        yield
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
+def _rows_and_plan(df):
+    """(rows, final adaptive plan text) of one action on ``df``."""
+    rows = sorted(tuple(r) for r in df.collect())
+    return rows, df._jdf.queryExecution().executedPlan().toString()
+
+
+def _paths_agree(spark, build):
+    """The join strategy AQE picks for the hot/duplicated subset
+    changes the plan, never the answer: the same call with every
+    broadcast refused (a content-keyed shuffle join) returns
+    identical rows."""
+    fast, fast_plan = _rows_and_plan(build())
+    with _no_broadcast(spark):
+        slow, slow_plan = _rows_and_plan(build())
+    assert "BroadcastHashJoin" in fast_plan, fast_plan
+    assert "BroadcastHashJoin" not in slow_plan, slow_plan
+    assert fast == slow and fast
+
+
 def test_keep_first_broadcast_and_shuffle_paths_agree(spark):
-    """The broadcast fast path (dup subset fits) and the content-keyed
-    fallback (broadcast_dup_limit=0 forces it) must return identical
-    results — the limit probe changes the PLAN, never the answer."""
-    rows = _docs()
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    fast = {
-        r.id: (r.n_lines, r.n_kept, r.clean_text)
-        for r in dedup_lines_keep_first(df).collect()
-    }
-    slow = {
-        r.id: (r.n_lines, r.n_kept, r.clean_text)
-        for r in dedup_lines_keep_first(df, broadcast_dup_limit=0).collect()
-    }
-    assert fast == slow
+    """Keep-first line dedup and boilerplate removal return identical
+    rows whether their subset join broadcasts or shuffles."""
+    df = spark.createDataFrame(_docs(), "doc_id long, text string")
+    _paths_agree(spark, lambda: dedup_lines_keep_first(df))
+    _paths_agree(spark, lambda: remove_boilerplate_lines(df, max_line_df=5))
 
 
 def test_line_ops_randomized_differential(spark):
@@ -320,12 +351,7 @@ def test_sentence_dedup_paths_agree(spark):
     df = spark.createDataFrame(
         [(i, t) for i, t in docs.items()], "doc_id long, text string"
     )
-    a = {(r.id, r.n_kept, r.clean_text)
-         for r in dedup_sentences_keep_first(df).collect()}
-    b = {(r.id, r.n_kept, r.clean_text)
-         for r in dedup_sentences_keep_first(
-             df, broadcast_dup_limit=0).collect()}
-    assert a == b
+    _paths_agree(spark, lambda: dedup_sentences_keep_first(df))
     # and the shared sentence survives exactly once, in doc 0
     texts = {r.id: r.clean_text
              for r in dedup_sentences_keep_first(df).collect()}

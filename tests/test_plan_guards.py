@@ -424,20 +424,22 @@ def test_html_pipeline_plan(spark):
 
 
 def test_unit_cache_and_spread_follow_the_input(spark):
-    """The boilerplate stage derives its unit cache and its spread
-    from its input: the composition hands it cached survivors, so
-    it adds no second corpus-sized cache and no RoundRobin exchange;
-    the bare gate's uncached input still gets the unit cache."""
-    def unit_cache_registered() -> bool:  # the unit table has line_no
-        return any("line_no" in df.columns for _h, df, _o in caching._live_caches)
+    """The boilerplate stage always scoped-caches its unit table (it
+    feeds both the hot-line aggregate and the join), and its spread
+    follows the input's plan: the composition's survivors already
+    hold the verdict joins' exchanges, so html_pipeline registers
+    exactly one corpus-sized cache, the unit table, and no RoundRobin
+    exchange; the bare gate registers the same one cache."""
+    def unit_caches() -> int:  # the unit table has line_no
+        return sum("line_no" in df.columns for _h, df, _o in caching._live_caches)
 
     caching.release_caches()
     p = _plan(em.q_html_pipeline(spark, SF))
-    assert not unit_cache_registered()
+    assert unit_caches() == caching.live_cache_count() == 1
     assert "RoundRobinPartitioning" not in p
     caching.release_caches()
     em.q_boilerplate_lines(spark, SF)
-    assert unit_cache_registered()
+    assert unit_caches() == caching.live_cache_count() == 1
     caching.release_caches()
 
 

@@ -51,7 +51,7 @@ def test_weighted_jaccard_cached_tf_matches_explicit_tf(spark):
 
 
 def test_span_family_cached_equals_uncached(spark):
-    """cache=True in _span_grams is reuse-only: the three span
+    """The scoped caches in _span_grams are reuse-only: the three span
     consumers' outputs are byte-identical to a manual uncached
     rebuild of the same plan."""
     caching.release_caches()

@@ -351,9 +351,9 @@ def test_blocks_malformed_records(spark, tmp_path):
     """Malformed CSV records (here an extra-columns row and an
     unterminated quote) abort a strict load and are dropped from a
     lenient one — consistently across actions. Both hold only because
-    the parsed file is cached: without the cache, column pruning
-    hides ``_corrupt_record`` from the budget check and from
-    ``count()``."""
+    the file is read with CSV column pruning off: a pruned scan parses
+    just the columns a query needs, which hides ``_corrupt_record``
+    from the budget check and from ``count()``."""
     hdr = "network,geoname_id,registered_country_geoname_id,represented_country_geoname_id,is_anonymous_proxy,is_satellite_provider,postal_code,latitude,longitude,accuracy_radius\n"
     ok_row = "1.0.0.0/24,1,2,,0,0,x,1.0,10.0,5\n"
     extra_cols = "1.0.1.0/24,1,2,,0,0,x,1.0,10.0,5,surplus,columns\n"
