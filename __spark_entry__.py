@@ -4697,9 +4697,9 @@ EAGER_GATES = frozenset({
     "dedup_keep_best", "dedup_clusters", "leakage_safe_split",
     # bounded collect: the report's counts are driver scalars
     "dedup_eval_report", "dedup_eval_weighted",
-    # bounded collect: bm25's one-row corpus statistics, source_kl's
-    # top-V vocabulary size, the bloom bitmap folded on the driver
-    "bm25_rank", "source_kl", "bloom_join",
+    # bounded collect: bm25's one-row corpus statistics, the bloom
+    # bitmap folded on the driver
+    "bm25_rank", "bloom_join",
     # stream start: an availableNow stream drains into a sink
     "stream_rollup", "stream_hot_lines", "stream_url_dedup",
     "stream_dedup_exact", "stream_sentence_dedup", "stream_annotate",
@@ -4708,7 +4708,8 @@ EAGER_GATES = frozenset({
     # curation_docs pass; docs/SCALE.md "Planning runs no jobs")
     "pipeline_full", "dedup_winnow", "shared_passages",
     # kept by measurement: the localCheckpoint of the weight postings
-    # (2.5x over recomputing them) runs their shuffles when built
+    # (2.5x over recomputing them) runs their shuffles when built; a
+    # lazy scoped cache was slower cold (docs/SCALE.md)
     "tfidf_pairs",
 })
 

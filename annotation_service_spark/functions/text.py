@@ -775,8 +775,12 @@ def source_kl_table(
     n_s = st.join(top.select("t"), "t").groupBy("src").agg(
         F.sum("c_st").cast("double").alias("n_s")
     )
-    n_q = top.agg(F.sum("c_t").cast("double").alias("n_q"))
-    v = top.count()
+    # the vocabulary size V rides in the same one-row aggregate, so the
+    # formula reads it as a column and building the plan runs no job
+    n_q = top.agg(
+        F.sum("c_t").cast("double").alias("n_q"),
+        F.count(F.lit(1)).cast("double").alias("v"),
+    )
     dense = (
         n_s.crossJoin(F.broadcast(top))
         .join(st, ["src", "t"], "left")
@@ -785,12 +789,8 @@ def source_kl_table(
         .select(
             "src",
             "n_s",
-            ((F.col("c_st") + 1.0) / (F.col("n_s") + F.lit(float(v)))).alias(
-                "p"
-            ),
-            ((F.col("c_t") + 1.0) / (F.col("n_q") + F.lit(float(v)))).alias(
-                "q"
-            ),
+            ((F.col("c_st") + 1.0) / (F.col("n_s") + F.col("v"))).alias("p"),
+            ((F.col("c_t") + 1.0) / (F.col("n_q") + F.col("v"))).alias("q"),
         )
     )
     return (

@@ -149,9 +149,9 @@ def compact_parquet(
     if partition_cols:
         w = w.partitionBy(*partition_cols)
     w.parquet(tmp)
-    # carry over sidecar metadata dirs (e.g. the refresh sink's
-    # _manifest/) — they are the recovery state of incremental
-    # loaders and must survive compaction
+    # carry over sidecar metadata dirs (names starting with "_") —
+    # they can hold a loader's recovery state and must survive
+    # compaction
     for entry in os.listdir(path):
         src = os.path.join(path, entry)
         if entry.startswith("_") and os.path.isdir(src):

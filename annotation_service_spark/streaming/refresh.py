@@ -14,12 +14,17 @@ Spark-first mapping:
   readStream source with the same sink.
 - ST3 (incremental load): each micro-batch holds ONLY the new files;
   ``foreachBatch`` builds their interval tables and appends them as
-  new ``dataset_date`` partitions.
-- ST4 (atomic swap): partitioned-parquet append + ``SnapshotStore``
-  re-resolution. Readers hold the previous cached DataFrame until
-  ``swap`` republishes — the copy-on-write snapshot semantics of the
-  reference's directory swap, with Spark's immutable DataFrames
-  giving the isolation.
+  new ``dataset_date`` partitions. The event sink's loaded-path set
+  (the reference's cache map) lives in the same version manifest
+  that lists the data directories, so one commit records both.
+- ST4 (atomic swap): every sink commits through one
+  ``VersionedTableManifest`` — one JSON manifest per version naming
+  the data directories and the loaded source paths, behind an atomic
+  CURRENT pointer — then ``SnapshotStore`` re-resolves. Readers hold
+  the previous cached DataFrame until ``swap`` republishes — the
+  copy-on-write snapshot semantics of the reference's directory
+  swap. The state-maintenance sinks (``stateful.py``) replace their
+  state through the same manifest and ``retain`` old versions.
 - ST5 (readiness): ``SnapshotStore.ready`` — queries against an
   empty store raise, mirroring errNoAnnotator → HTTP 503.
 """
@@ -88,9 +93,10 @@ class VersionedTableManifest:
       foreachBatch retry of a crashed epoch — when no manifest, and
       therefore no reader, can reference it.
     - A COMMIT is one JSON manifest (``_versions/v<epoch>.json``)
-      listing every batch directory in the snapshot, then an atomic
-      rename of the CURRENT pointer. Write-ahead ordering: data, then
-      manifest, then pointer.
+      listing every batch directory in the snapshot and every source
+      path loaded into it, then an atomic rename of the CURRENT
+      pointer. Write-ahead ordering: data, then manifest, then
+      pointer. It is the only commit record a stream sink writes.
     - READERS resolve CURRENT once, at open: the returned DataFrame
       scans exactly the manifest's immutable directory list, so a scan
       that straddles a refresh still yields ONE consistent version.
@@ -171,13 +177,20 @@ class VersionedTableManifest:
 
     # -- commit side ----------------------------------------------------
     def commit(
-        self, epoch_id: int, new_dirs: list[str], replace: bool = False
+        self,
+        epoch_id: int,
+        new_dirs: list[str],
+        replace: bool = False,
+        paths: list[str] = (),
     ) -> int:
         """Publish snapshot = previous snapshot + ``new_dirs`` (or
         exactly ``new_dirs`` when ``replace=True`` — the reference's
         full-directory swap; superseded directories stay on disk until
         ``retain`` ages their manifests out, which is precisely what
-        keeps in-flight readers consistent).
+        keeps in-flight readers consistent). ``paths`` (the source
+        files the new directories were built from) accumulate the same
+        way, so the manifest that makes the data visible also marks
+        its files loaded.
 
         Idempotent under at-least-once replay AND safe under
         concurrent writers (both inside the writer lock):
@@ -200,14 +213,15 @@ class VersionedTableManifest:
                 version = cur + 1  # overtaken by a concurrent writer
             else:
                 version = epoch_id
-            dirs = [] if replace or cur is None else list(self.resolve(cur))
-            for d in new_dirs:
-                if d not in dirs:
-                    dirs.append(d)
+            prev = {} if replace or cur is None else self._load(cur)
+            dirs = list(prev.get("dirs", []))
+            dirs += [d for d in new_dirs if d not in dirs]
+            loaded = list(prev.get("paths", []))
+            loaded += [p for p in paths if p not in loaded]
             manifest = os.path.join(self.versions_dir, f"v{version}.json")
             fd, tmp = tempfile.mkstemp(dir=self.versions_dir, suffix=".tmp")
             with os.fdopen(fd, "w") as fh:
-                json.dump({"epoch": version, "dirs": dirs}, fh)
+                json.dump({"epoch": version, "dirs": dirs, "paths": loaded}, fh)
             os.replace(tmp, manifest)  # manifest durable before the pointer
             fd, tmp = tempfile.mkstemp(dir=self.versions_dir, suffix=".tmp")
             with os.fdopen(fd, "w") as fh:
@@ -234,14 +248,23 @@ class VersionedTableManifest:
             if n.startswith("v") and n.endswith(".json")
         )
 
-    def resolve(self, version: int | None = None) -> list[str]:
-        """The immutable directory list of ``version`` (default CURRENT)."""
+    def _load(self, version: int | None = None) -> dict:
         if version is None:
             version = self.current_version()
             if version is None:
                 raise RuntimeError("no committed snapshot version yet")
         with open(os.path.join(self.versions_dir, f"v{version}.json")) as fh:
-            return json.load(fh)["dirs"]
+            return json.load(fh)
+
+    def resolve(self, version: int | None = None) -> list[str]:
+        """The immutable directory list of ``version`` (default CURRENT)."""
+        return self._load(version)["dirs"]
+
+    def loaded_paths(self) -> set[str]:
+        """The source paths CURRENT's snapshot was built from (empty
+        before the first commit)."""
+        cur = self.current_version()
+        return set() if cur is None else set(self._load(cur).get("paths", []))
 
     def read(
         self, spark: SparkSession, version: int | None = None
@@ -430,6 +453,38 @@ def start_pubsub_subscriber(
     )
 
 
+def _batch_dir(output_dir: str, epoch_id: int, writer_id: str | None = None) -> str:
+    """The epoch's data directory: a foreachBatch retry (same epoch id)
+    overwrites its own uncommitted copy; ``writer_id`` keeps jobs that
+    number epochs independently apart."""
+    tag = f"{writer_id}-{int(epoch_id)}" if writer_id else str(int(epoch_id))
+    return os.path.join(output_dir, f"batch={tag}")
+
+
+def _start_sink(stream, process, checkpoint_dir, available_now, trigger_interval=None):
+    """Start ``process`` as a checkpointed foreachBatch sink that drains
+    and stops, or runs on ``trigger_interval`` (Spark's default if None)."""
+    writer = stream.writeStream.foreachBatch(process).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    elif trigger_interval is not None:
+        writer = writer.trigger(processingTime=trigger_interval)
+    return writer.start()
+
+
+def _publish(built, manifest, store, table_name, epoch_id, writer_id, paths=()) -> int:
+    """Write ``built`` as the epoch's batch directory, commit it with the
+    source ``paths`` it was built from, swap the store; returns the version."""
+    bdir = _batch_dir(manifest.output_dir, epoch_id, writer_id)
+    # overwrite is safe: no manifest names bdir until the commit below
+    built.write.mode("overwrite").partitionBy("dataset_date").parquet(bdir)
+    version = manifest.commit(epoch_id, [bdir], paths=paths)
+    store.swap(table_name, manifest.read(built.sparkSession))
+    return version
+
+
 def start_event_refresh(
     event_stream: DataFrame,
     build_paths_batch,
@@ -457,14 +512,13 @@ def start_event_refresh(
     the retry instead of leaving stray rows behind.
 
     ST3 cache-awareness: the checkpoint dedupes message BATCHES, and
-    a driver-side loaded-set dedupes re-announced PATHS (the
-    reference's loader cache map, geoloader/geoloader.go:122-152).
-    On restart the set rebuilds from a tiny per-batch MANIFEST
-    (``<output_dir>/_manifest/``, one text file per committed batch,
-    written atomically via rename AFTER the data commit) — never from
-    the data files, so a partially-written batch is re-loaded rather
-    than silently skipped, and recovery cost is O(batches), not
-    O(rows).
+    the loaded-path set dedupes re-announced PATHS (the reference's
+    loader cache map, geoloader/geoloader.go:122-152). The set is the
+    CURRENT version manifest's ``paths``: the commit that makes a
+    batch's data visible also marks its files loaded, so a crash
+    leaves both or neither, and a restart recovers the set from that
+    one file. A replayed batch whose commit landed before the crash
+    loads nothing and only completes the store swap.
 
     ``writer_id`` namespaces the batch directories — REQUIRED (with a
     distinct value per job) when more than one refresh job publishes
@@ -472,59 +526,37 @@ def start_event_refresh(
     independently, so without the namespace they could both stage
     ``batch=5`` and overwrite each other's data before commit. The
     commit protocol itself is multi-writer-safe (lock + epoch-CAS in
-    ``VersionedTableManifest``); the namespace closes the data-plane
-    side.
+    ``VersionedTableManifest``), and a path either job loaded counts
+    as loaded for both.
     """
     spark = event_stream.sparkSession
-    manifest_dir = os.path.join(output_dir, "_manifest")
+    manifest = VersionedTableManifest(output_dir)
+    published = None  # the version this sink last swapped into the store
 
     def norm(p: str) -> str:
         # input_file_name() yields URIs (file:///…); messages may carry
         # plain paths — compare scheme-stripped
         return p.split("://", 1)[-1] if "://" in p else p
 
-    loaded: set[str] = set()
-    if os.path.isdir(manifest_dir):  # restart: recover the cache map
-        for name in os.listdir(manifest_dir):
-            with open(os.path.join(manifest_dir, name)) as fh:
-                loaded.update(line.strip() for line in fh if line.strip())
-
-    version_manifest = VersionedTableManifest(output_dir)
-
     def process(batch_df: DataFrame, epoch_id: int) -> None:
+        nonlocal published
         paths = [r[0] for r in batch_df.select(path_col).distinct().collect()]
+        loaded = manifest.loaded_paths()
         new = sorted(p for p in paths if norm(p) not in loaded)
-        if not new:
+        if new:
+            published = _publish(
+                build_paths_batch(new), manifest, store, table_name,
+                epoch_id, writer_id, paths=[norm(p) for p in new],
+            )
             return
-        built = build_paths_batch(new)
-        tag = f"{writer_id}-{int(epoch_id)}" if writer_id else str(int(epoch_id))
-        bdir = os.path.join(output_dir, f"batch={tag}")
-        # overwrite is safe pre-commit: no version manifest names bdir yet
-        built.write.mode("overwrite").partitionBy("dataset_date").parquet(bdir)
-        version_manifest.commit(epoch_id, [bdir])
-        # Publish the loaded-paths manifest only AFTER the version
-        # commit: a crash between the two must leave the paths
-        # UN-marked so the at-least-once retry re-loads them (commit
-        # is idempotent under same-epoch replay, so the reordering is
-        # safe); the reverse order would mark the paths loaded while
-        # the batch dir stays invisible — permanent data loss.
-        os.makedirs(manifest_dir, exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=manifest_dir, suffix=".tmp")
-        with os.fdopen(fd, "w") as fh:
-            fh.write("\n".join(norm(p) for p in new) + "\n")
-        os.replace(tmp, os.path.join(manifest_dir, f"batch-{int(epoch_id)}.txt"))
-        loaded.update(norm(p) for p in new)
-        store.swap(table_name, version_manifest.read(spark))
+        current = manifest.current_version()
+        if current is not None and current != published:
+            published = current
+            store.swap(table_name, manifest.read(spark))
 
-    writer = (
-        event_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start_sink(
+        event_stream, process, checkpoint_dir, available_now, trigger_interval
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()
 
 
 def start_refresh(
@@ -556,28 +588,15 @@ def start_refresh(
     ``writer_id``: see ``start_event_refresh`` — distinct per job when
     multiple refresh jobs share one ``output_dir``.
     """
-    spark = stream_df.sparkSession
-
     manifest = VersionedTableManifest(output_dir)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        built = build_batch(batch_df)
-        tag = f"{writer_id}-{int(epoch_id)}" if writer_id else str(int(epoch_id))
-        bdir = os.path.join(output_dir, f"batch={tag}")
-        # overwrite is safe: bdir is uncommitted (no manifest names it)
-        # until the commit below, so no reader can be scanning it
-        built.write.mode("overwrite").partitionBy("dataset_date").parquet(bdir)
-        manifest.commit(epoch_id, [bdir])
-        store.swap(table_name, manifest.read(spark))
+        if not batch_df.isEmpty():
+            _publish(
+                build_batch(batch_df), manifest, store, table_name,
+                epoch_id, writer_id,
+            )
 
-    writer = (
-        stream_df.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start_sink(
+        stream_df, process, checkpoint_dir, available_now, trigger_interval
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()

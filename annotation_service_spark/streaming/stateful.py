@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .refresh import VersionedTableManifest, _batch_dir, _start_sink
+
 SESSION_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType()),
@@ -266,6 +268,17 @@ def streaming_funnel(
     )
 
 
+def _commit_state(
+    manifest: VersionedTableManifest, state: DataFrame, epoch_id: int
+) -> None:
+    """Write the epoch's state version, make it the manifest's whole
+    snapshot and age out the versions ``retain`` no longer keeps."""
+    out = _batch_dir(manifest.output_dir, epoch_id)
+    state.write.mode("overwrite").parquet(out)
+    manifest.commit(epoch_id, [out], replace=True)
+    manifest.retain()
+
+
 def start_rollup_maintenance(
     events_stream: DataFrame,
     state_dir: str,
@@ -282,69 +295,40 @@ def start_rollup_maintenance(
     ``incremental_rollup`` proves merge == full recompute; this
     wrapper adds the delivery contract.
 
-    Idempotency under at-least-once foreachBatch: state versions are
-    named by epoch and a CURRENT pointer records the last APPLIED
-    epoch — a replayed epoch (crash after data write, before/after
-    pointer publish) is detected by ``epoch_id <= last`` and skipped,
-    so a delta can never be double-merged. The pointer is published
-    by atomic rename AFTER the merged state is durably written
-    (write-ahead ordering, same discipline as refresh.py's
-    manifest). Readers resolve CURRENT → a complete immutable
-    version directory, so they never observe a half-written merge.
+    Idempotency under at-least-once foreachBatch: each merged state is
+    written to its own epoch directory and committed through a
+    ``VersionedTableManifest`` on ``state_dir`` as the whole snapshot
+    (``replace=True``), whose version is the last APPLIED epoch — a
+    replayed epoch (crash after data write, before/after the commit)
+    is detected by ``epoch_id <= current_version()`` and skipped, so
+    a delta can never be double-merged. Readers resolve CURRENT → a
+    complete immutable state directory, so they never observe a
+    half-written merge; ``retain`` deletes the state directories of
+    versions it no longer keeps, so disk use stays bounded.
     """
-    import os
-    import tempfile
-
     from ..operators.rollup import merge_rollups, tumbling_rollup
 
     spark = events_stream.sparkSession
-    cur_path = os.path.join(state_dir, "CURRENT")
-
-    def read_current():
-        if not os.path.exists(cur_path):
-            return None, -1
-        with open(cur_path) as fh:
-            epoch, vdir = fh.read().strip().split("\n")
-        return vdir, int(epoch)
+    manifest = VersionedTableManifest(state_dir)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        vdir, last = read_current()
-        if epoch_id <= last:  # at-least-once replay of an applied epoch
-            return
+        cur = manifest.current_version()
+        if batch_df.isEmpty() or (cur is not None and epoch_id <= cur):
+            return  # nothing to merge, or a replay of an applied epoch
         delta = tumbling_rollup(batch_df, window_width, dims=dims)
-        merged = (
-            delta
-            if vdir is None
-            else merge_rollups(spark.read.parquet(vdir), delta)
-        )
-        out = os.path.join(state_dir, f"v{int(epoch_id)}")
-        merged.write.mode("overwrite").parquet(out)
-        os.makedirs(state_dir, exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=state_dir, suffix=".tmp")
-        with os.fdopen(fd, "w") as fh:
-            fh.write(f"{int(epoch_id)}\n{out}")
-        os.replace(tmp, cur_path)
+        if cur is not None:
+            delta = merge_rollups(manifest.read(spark, cur), delta)
+        _commit_state(manifest, delta, epoch_id)
 
-    writer = events_stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_sink(events_stream, process, checkpoint_dir, available_now)
 
 
 def current_rollup_state(spark, state_dir: str) -> DataFrame | None:
-    """Resolve the CURRENT pointer to the standing rollup table."""
-    import os
-
-    cur_path = os.path.join(state_dir, "CURRENT")
-    if not os.path.exists(cur_path):
+    """The standing rollup table of the CURRENT state version."""
+    manifest = VersionedTableManifest(state_dir)
+    if manifest.current_version() is None:
         return None
-    with open(cur_path) as fh:
-        _, vdir = fh.read().strip().split("\n")
-    return spark.read.parquet(vdir)
+    return manifest.read(spark)
 
 
 def start_near_dedup_maintenance(
@@ -369,45 +353,30 @@ def start_near_dedup_maintenance(
     evidence for the screen itself; this wrapper adds the delivery
     contract.
 
-    Same idempotency discipline as ``start_rollup_maintenance``:
-    epoch-named immutable state versions, a CURRENT pointer written
-    by atomic rename only AFTER the new state is durable, and
-    replayed epochs (``epoch_id <= last``) skipped — an
-    at-least-once foreachBatch can never admit a batch twice or
-    double-append signatures.
+    Same commit discipline as ``start_rollup_maintenance``: each
+    state version is its own epoch directory committed through the
+    ``state_dir`` manifest, replayed epochs (``epoch_id <=
+    current_version()``) are skipped — an at-least-once foreachBatch
+    can never admit a batch twice or double-append signatures — and
+    ``retain`` deletes the superseded copies.
     """
-    import os
-    import tempfile
-
-    from pyspark.sql import functions as F
-
     from .. import caching
     from ..operators.dedup import incremental_minhash_dedup
 
     spark = docs_stream.sparkSession
-    cur_path = os.path.join(state_dir, "CURRENT")
+    manifest = VersionedTableManifest(state_dir)
     mh_cols = [f"mh{i}" for i in range(num_hashes)]
 
-    def read_current():
-        if not os.path.exists(cur_path):
-            return None, -1
-        with open(cur_path) as fh:
-            epoch, vdir = fh.read().strip().split("\n")
-        return vdir, int(epoch)
-
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        vdir, last = read_current()
-        if epoch_id <= last:  # at-least-once replay of an applied epoch
-            return
-        if vdir is None:
+        cur = manifest.current_version()
+        if batch_df.isEmpty() or (cur is not None and epoch_id <= cur):
+            return  # nothing to screen, or a replay of an applied epoch
+        if cur is None:
             seen = spark.createDataFrame(
                 [], f"{id_col} long, " + ", ".join(f"{c} long" for c in mh_cols)
             )
         else:
-            seen = spark.read.parquet(vdir)
-        out = os.path.join(state_dir, f"v{int(epoch_id)}")
+            seen = manifest.read(spark, cur)
         # the batch's signature caches are new plans every epoch: the
         # scope releases them once the state version is written
         with caching.scope():
@@ -420,19 +389,9 @@ def start_near_dedup_maintenance(
                 bands=bands,
                 threshold=threshold,
             ).withColumnRenamed("id", id_col)
-            seen.unionByName(survivors).write.mode("overwrite").parquet(out)
-        os.makedirs(state_dir, exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=state_dir, suffix=".tmp")
-        with os.fdopen(fd, "w") as fh:
-            fh.write(f"{int(epoch_id)}\n{out}")
-        os.replace(tmp, cur_path)
+            _commit_state(manifest, seen.unionByName(survivors), epoch_id)
 
-    writer = docs_stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_sink(docs_stream, process, checkpoint_dir, available_now)
 
 
 BUDGET_OUT_SCHEMA = T.StructType(

@@ -22,6 +22,7 @@ from annotation_service_spark.operators import clustering as cl
 from annotation_service_spark.operators import dedup as dd
 from annotation_service_spark.operators import similarity as sim
 from annotation_service_spark.streaming import stateful
+from annotation_service_spark.streaming.refresh import VersionedTableManifest
 from tests.test_plan_guards import SF
 
 
@@ -148,8 +149,7 @@ def test_near_dedup_stream_batches_release_their_caches(spark, tmp_path):
         )
         q = stateful.start_near_dedup_maintenance(stream, str(state), str(ckpt))
         q.awaitTermination(120)
-        epoch = int((state / "CURRENT").read_text().split("\n")[0])
-        assert epoch == batch
+        assert VersionedTableManifest(str(state)).current_version() == batch
         assert caching.live_cache_count() == live0
         assert _persisted(spark) == persisted0
 

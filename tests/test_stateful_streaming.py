@@ -4,7 +4,10 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
+
 from annotation_service_spark.streaming import stateful
+from annotation_service_spark.streaming.refresh import VersionedTableManifest
 
 
 def _run_batch(spark, src_dir, ckpt, qname):
@@ -378,9 +381,7 @@ def test_streaming_near_dedup_maintenance(spark, tmp_path):
         q.awaitTermination(120)
 
     run()
-    got = spark.read.parquet(
-        open(state / "CURRENT").read().strip().split("\n")[1]
-    )
+    got = VersionedTableManifest(str(state)).read(spark)
     ids = {r.doc_id for r in got.select("doc_id").collect()}
     assert set(range(1, 21)) <= ids          # all originals accepted
     assert 211 not in ids                    # in-batch twin dominated
@@ -389,10 +390,62 @@ def test_streaming_near_dedup_maintenance(spark, tmp_path):
     n_before = got.count()
     # restart on the drained checkpoint: no re-processing, no growth
     run()
-    got2 = spark.read.parquet(
-        open(state / "CURRENT").read().strip().split("\n")[1]
-    )
+    got2 = VersionedTableManifest(str(state)).read(spark)
     assert got2.count() == n_before
+
+
+@pytest.mark.parametrize("sink", ["rollup", "near_dedup"])
+def test_maintenance_sinks_keep_bounded_state(spark, tmp_path, sink):
+    """Six data-carrying epochs through a state-maintenance sink leave
+    no more state directories in state_dir than ``retain`` keeps, and
+    a restart on the drained checkpoint leaves the state unchanged."""
+    import inspect
+    import json as _json
+    import os
+    import random
+
+    src, state, ckpt = tmp_path / "src", tmp_path / "state", tmp_path / "ck"
+    src.mkdir()
+    base = dt.datetime(2024, 1, 1)
+    for epoch in range(6):
+        with open(src / f"f{epoch}.json", "w") as fh:
+            for i in range(epoch * 10, epoch * 10 + 10):
+                rng = random.Random(i)
+                text = " ".join(f"w{rng.randrange(5000)}" for _ in range(30))
+                fh.write(_json.dumps({
+                    "doc_id": i, "text": text, "event_type": "view",
+                    "ts": (base + dt.timedelta(minutes=41 * i)).isoformat(),
+                    "value": 1.25,
+                }) + "\n")
+    schema = "doc_id long, text string, event_type string, ts timestamp, value double"
+
+    def run():
+        stream = (
+            spark.readStream.format("json").schema(schema)
+            .option("maxFilesPerTrigger", 1).load(str(src))
+        )
+        if sink == "rollup":
+            q = stateful.start_rollup_maintenance(
+                stream, str(state), str(ckpt), window_width="1 hour"
+            )
+        else:
+            q = stateful.start_near_dedup_maintenance(stream, str(state), str(ckpt))
+        q.awaitTermination(180)
+
+    def snapshot():
+        m = VersionedTableManifest(str(state))
+        return m.current_version(), sorted(map(tuple, m.read(spark).collect()))
+
+    run()
+    keep = inspect.signature(VersionedTableManifest.retain).parameters["keep"].default
+    state_dirs = [n for n in os.listdir(state) if not n.startswith("_")]
+    assert 0 < len(state_dirs) <= keep, state_dirs
+    version, rows = snapshot()
+    assert version == 5
+    if sink == "near_dedup":
+        assert [r[0] for r in rows] == list(range(60))
+    run()
+    assert snapshot() == (version, rows)
 
 
 def test_streaming_token_budget_across_batches(spark, tmp_path):

@@ -391,32 +391,14 @@ def test_refresh_writer_id_namespaces_batch_dirs(spark, tmp_path):
     assert os.path.isdir(dirs[0])
 
 
-def test_event_refresh_crash_between_commit_and_marker(spark, tmp_path):
-    """The r10 ADVICE-medium window, pinned end-to-end: a crash AFTER
-    version_manifest.commit() but BEFORE the loaded-paths marker
-    write must leave the path un-marked, so the at-least-once retry
-    re-builds it; the epoch-keyed overwrite + idempotent same-dir
-    commit make the net effect exactly-once (no loss — the old
-    reversed order lost the batch forever; no dup — same directory
-    name, overwritten not appended)."""
-    import json
-
-    data_dir = tmp_path / "datasets"
-    data_dir.mkdir()
-    events = tmp_path / "events"
-    events.mkdir()
-    out = tmp_path / "table"
-    ckpt = tmp_path / "ckpt"
-    store = rf.SnapshotStore()
-
-    f1 = data_dir / "20200101T000000Z-data.csv"
-    f1.write_text("k,v\na,1\nb,2\n")
-    f2 = data_dir / "20200601T000000Z-data.csv"
-    f2.write_text("k,v\nc,3\nd,4\n")
+def _dated_csv_build(spark, calls=None):
+    """build_paths_batch for dated CSV files; appends each call's paths
+    to ``calls`` when given."""
 
     def build(paths):
-        df = spark.read.csv(paths, header=True)
-        return df.withColumn(
+        if calls is not None:
+            calls.append(list(paths))
+        return spark.read.csv(paths, header=True).withColumn(
             "dataset_date",
             F.to_date(
                 F.regexp_extract(F.input_file_name(), r"(\d{8})T", 1),
@@ -424,38 +406,96 @@ def test_event_refresh_crash_between_commit_and_marker(spark, tmp_path):
             ),
         )
 
+    return build
+
+
+def _announce_and_drain(spark, events, name, paths, store, calls, ckpt, out,
+                        writer_id=None):
+    """Announce ``paths`` in message ``name`` and drain the event
+    refresh sink on ``events`` once (available-now), recording each
+    build's paths in ``calls``."""
+    import json
+
+    (events / name).write_text("\n".join(json.dumps({"path": str(p)}) for p in paths))
     msg_schema = T.StructType([T.StructField("path", T.StringType())])
-    (events / "m1.json").write_text(json.dumps({"path": str(f1)}))
     stream = spark.readStream.format("json").schema(msg_schema).load(str(events))
-    q = rf.start_event_refresh(stream, build, store, "geo", str(ckpt), str(out))
+    q = rf.start_event_refresh(
+        stream, _dated_csv_build(spark, calls), store, "geo", str(ckpt),
+        str(out), writer_id=writer_id,
+    )
     q.awaitTermination(120)
+
+
+def test_event_refresh_crash_between_commit_and_swap(spark, tmp_path):
+    """A crash AFTER the version commit but BEFORE the store swap: the
+    commit already marked the batch's files loaded, so on restart the
+    replayed announcement builds nothing, the sink completes the swap,
+    and every row appears once."""
+    data_dir = tmp_path / "datasets"
+    data_dir.mkdir()
+    events = tmp_path / "events"
+    events.mkdir()
+    out = tmp_path / "table"
+    ckpt = tmp_path / "ckpt"
+    store = rf.SnapshotStore()
+    calls = []
+
+    f1 = data_dir / "20200101T000000Z-data.csv"
+    f1.write_text("k,v\na,1\nb,2\n")
+    f2 = data_dir / "20200601T000000Z-data.csv"
+    f2.write_text("k,v\nc,3\nd,4\n")
+
+    _announce_and_drain(spark, events, "m1.json", [f1], store, calls, ckpt, out)
     assert store.get("geo").count() == 2
 
-    # simulate the crash window for the NEXT batch: f2's data is fully
-    # written AND version-committed (visible in CURRENT), but the
-    # loaded-paths marker was never written
+    # the crash window for the NEXT batch: f2's data is written and
+    # committed with its path, but the store never swapped
     bdir = out / "batch=1"
-    build([str(f2)]).write.mode("overwrite").partitionBy(
+    _dated_csv_build(spark)([str(f2)]).write.mode("overwrite").partitionBy(
         "dataset_date"
     ).parquet(str(bdir))
     vm = rf.VersionedTableManifest(str(out))
-    v_after_crash = vm.commit(1, [str(bdir)])
-    marker = out / "_manifest" / "batch-1.txt"
-    assert not marker.exists()  # the crash window: committed, unmarked
+    vm.commit(1, [str(bdir)], paths=[str(f2)])
+    assert store.get("geo").count() == 2
+    calls.clear()
 
-    # restart: f2's announcement replays; the recovered loaded-set
-    # does NOT contain f2, so it re-builds into the SAME directory and
-    # re-commits idempotently
-    (events / "m2.json").write_text(json.dumps({"path": str(f2)}))
-    stream2 = spark.readStream.format("json").schema(msg_schema).load(str(events))
-    q2 = rf.start_event_refresh(stream2, build, store, "geo", str(ckpt), str(out))
-    q2.awaitTermination(120)
-
-    t = store.get("geo")
-    assert t.count() == 4  # exactly-once: no loss, no dup
-    assert t.where(F.col("dataset_date") == "2020-06-01").count() == 2
-    assert marker.exists()  # the retry completed the marker
-    # CURRENT must list batch=1 exactly once (idempotent re-commit of
-    # the same dir, not a second copy)
+    # restart: f2's announcement replays and is already loaded
+    _announce_and_drain(spark, events, "m2.json", [f2], store, calls, ckpt, out)
+    assert calls == []  # nothing rebuilt
+    assert vm.loaded_paths() == {str(f1), str(f2)}
+    for t in (store.get("geo"), vm.read(spark)):
+        assert sorted(r.k for r in t.collect()) == ["a", "b", "c", "d"]
     dirs = vm.resolve()
     assert sum(1 for d in dirs if d.rstrip("/").endswith("batch=1")) == 1
+
+
+def test_event_refresh_writers_sharing_output_dir_load_once(spark, tmp_path):
+    """Two event refresh jobs with distinct writer_ids publish into one
+    output_dir. Writer A restarts and its file is announced again: the
+    loaded set recovered from the shared manifest holds both writers'
+    files, so A builds nothing and the table holds each row once."""
+    data_dir = tmp_path / "datasets"
+    data_dir.mkdir()
+    out = tmp_path / "table"
+    store = rf.SnapshotStore()
+    calls = []
+    fa = data_dir / "20200101T000000Z-a.csv"
+    fa.write_text("k,v\na,1\nb,2\n")
+    fb = data_dir / "20200601T000000Z-b.csv"
+    fb.write_text("k,v\nc,3\n")
+
+    def drain(writer, name, f):
+        events = tmp_path / f"events-{writer}"
+        events.mkdir(exist_ok=True)
+        _announce_and_drain(spark, events, name, [f], store, calls,
+                            tmp_path / f"ckpt-{writer}", out, writer_id=writer)
+
+    drain("A", "m1.json", fa)
+    drain("B", "m1.json", fb)
+    assert len(calls) == 2
+    # writer A restarts on its checkpoint; its file is announced again
+    drain("A", "m2.json", fa)
+    assert len(calls) == 2
+    table = rf.VersionedTableManifest(str(out)).read(spark)
+    assert sorted(r.k for r in table.collect()) == ["a", "b", "c"]
+    assert sorted(r.k for r in store.get("geo").collect()) == ["a", "b", "c"]
