@@ -2080,8 +2080,13 @@ def q_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_mom_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Month-over-month revenue deltas: rollup to months, then lag
     arithmetic over the AGGREGATED series (the BI trend pattern —
-    the window runs on month-cardinality rows, not the fact table).
-    Decimal sums; delta in exact decimal, pct rounded 1e-6."""
+    the lag runs on month-cardinality rows, not the fact table).
+    Decimal sums; delta in exact decimal, pct rounded 1e-6.
+
+    The lag is an offset lookup in one month-sorted array of the
+    series (the ``asof.validity_windows`` idiom), not a window over no
+    partition key, for which Spark logs "No Partition Defined for
+    Window" each time the gate is planned."""
     orders = _t(spark, sf_dir, "orders")
     dec = "decimal(14,2)"
     monthly = (
@@ -2093,15 +2098,18 @@ def q_mom_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_orders"),
         )
     )
-    w = Window.orderBy("month")
-    prev = F.lag("rev").over(w)
-    return monthly.select(
-        "month",
-        F.col("rev").cast("double").alias("revenue"),
-        "n_orders",
-        (F.col("rev") - prev).cast("double").alias("mom_delta"),
+    series = monthly.agg(
+        F.sort_array(F.collect_list(F.struct("month", "rev", "n_orders"))).alias("__m")
+    )
+    e = F.col("__e")
+    prev = F.get("__m", F.col("__i") - 1)["rev"]
+    return series.select("__m", F.posexplode("__m").alias("__i", "__e")).select(
+        e["month"].alias("month"),
+        e["rev"].cast("double").alias("revenue"),
+        e["n_orders"].alias("n_orders"),
+        (e["rev"] - prev).cast("double").alias("mom_delta"),
         txt.round_fixed(
-            (F.col("rev") - prev).cast("double") / prev.cast("double"), 6
+            (e["rev"] - prev).cast("double") / prev.cast("double"), 6
         ).alias("mom_pct"),
     )
 

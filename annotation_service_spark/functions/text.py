@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.dedup import tokens, word_ngrams
+from ..operators.dedup import token_grams, tokens, word_ngrams
 
 # tiny per-language stopword profiles (deterministic heuristic)
 LANG_PROFILES: dict[str, list[str]] = {
@@ -131,18 +131,10 @@ def text_metrics_table(
         F.sum(F.length("tok")).alias("tok_len_total"),
         F.sum(F.array_contains(stops, F.col("tok")).cast("int")).alias("n_stop"),
     )
-    # 5-gram shingles via window leads over the SAME exploded tokens
-    # (explode of a transform() array re-evaluates per output row —
-    # see operators.dedup.shingle_table)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("id").orderBy("pos")
-    parts = [F.col("tok")] + [F.lead("tok", j).over(w) for j in range(1, 5)]
-    sh = (
-        tok.select("id", F.concat_ws(" ", *parts).alias("s"), parts[-1].alias("_last"))
-        .where(F.col("_last").isNotNull())
+    # 5-gram shingles over the SAME exploded tokens
+    fp = token_grams(tok, 5).groupBy("id").agg(
+        F.min(F.md5("s")).alias("fingerprint")
     )
-    fp = sh.groupBy("id").agg(F.min(F.md5("s")).alias("fingerprint"))
 
     j = (
         base.withColumn("norm", F.concat_ws(" ", "toks"))

@@ -53,12 +53,7 @@ def concat_chunk_map(
     (0 tokens) occupy no span and map to the block of their offset.
 
     With no ``partition_by`` (one global concatenation order) the
-    cumsum is TWO-PHASE (VERDICT r3 #3 — the old form was a
-    single-partition Window, a one-task bottleneck): rows are
-    range-sharded on ``id_col`` by approximate quantiles, each shard
-    windows its own contiguous id range in parallel, and the
-    shard-level token totals (a ≤n_shards-row collect) become
-    broadcast prefix offsets added below the window. Identical
+    cumsum is a ``_range_sharded`` scan on ``id_col``: identical
     output, no SinglePartition exchange in the plan.
     """
     part = list(partition_by)
@@ -115,57 +110,89 @@ def _range_shard_bounds(docs: DataFrame, id_col: str, n_shards: int) -> list:
     return sorted(set(sample[step::step][: n_shards - 1]))
 
 
+# Bound on the per-(group, shard) offset table a sharded scan collects:
+# a high-cardinality group column (user ids, URLs) fails loudly at the
+# driver instead of being collected silently (the bounded-collect
+# contract of the vocab/centroid paths).
+_MAX_OFFSET_ROWS = 100_000
+
+
+def _range_sharded(
+    src: DataFrame,
+    key: str,
+    weight: str | None,
+    by: Sequence[str] = (),
+    n_shards: int | None = None,
+) -> DataFrame:
+    """The two-phase distributed scan: ``src`` plus ``__shard`` and
+    ``__off``, so that a window over ``(*by, "__shard")`` in ``key``
+    order adds the shard-local prefix to ``__off`` and gives the exact
+    global prefix per ``by`` group, with no single-partition window.
+
+    Phase 1 range-shards rows on ``key``: ``__shard`` counts the
+    sampled bounds below the row's key, so each shard holds a
+    contiguous key range whatever the bounds (they only set the
+    balance). Phase 2 collects the per-(``by``, shard) totals of
+    ``weight`` (rows when None; at most ``_MAX_OFFSET_ROWS`` rows) and
+    broadcasts back ``__off``, the total of the group's earlier
+    shards."""
+    spark = src.sparkSession
+    if n_shards is None:
+        n_shards = max(2, spark.sparkContext.defaultParallelism)
+    shard = F.lit(0)
+    for b in _range_shard_bounds(src, key, n_shards):
+        shard = shard + F.when(F.col(key) > F.lit(b), 1).otherwise(0)
+    src = src.withColumn("__shard", shard.cast("int"))
+    keys = [*by, "__shard"]
+    total = F.count(F.lit(1)) if weight is None else F.sum(weight)
+    totals = (
+        src.groupBy(*keys)
+        .agg(total.alias("n"))
+        .limit(_MAX_OFFSET_ROWS + 1)
+        .collect()
+    )
+    if len(totals) > _MAX_OFFSET_ROWS:
+        raise ValueError(
+            f"offset table exceeds {_MAX_OFFSET_ROWS} rows (distinct "
+            f"{list(by)} x n_shards={n_shards}); a group column this wide "
+            "is not a mixture spec"
+        )
+    offsets, acc = [], {}
+    for r in sorted(totals, key=lambda r: ([str(r[c]) for c in by], r["__shard"])):
+        g = tuple(r[c] for c in by)
+        offsets.append((*g, r["__shard"], acc.get(g, 0)))
+        acc[g] = acc.get(g, 0) + (r["n"] or 0)
+    schema = T.StructType(
+        [T.StructField(c, src.schema[c].dataType) for c in by]
+        + [
+            T.StructField("__shard", T.IntegerType()),
+            T.StructField("__off", T.LongType()),
+        ]
+    )
+    return src.join(F.broadcast(spark.createDataFrame(offsets, schema)), keys)
+
+
 def _concat_chunk_global(
     docs: DataFrame,
     block_size: int,
     token_col: str,
     id_col: str,
-    n_shards: int | None = None,
 ) -> DataFrame:
-    """Two-phase global prefix sum over ``id_col`` order (numeric ids).
-
-    Phase 1 range-shards rows by approximate ``id_col`` quantiles
-    (shard i holds a contiguous id range, so a shard-local cumsum is a
-    contiguous slice of the global one). Phase 2 aggregates per-shard
-    token totals — n_shards rows to the driver — and turns their
-    running sum into broadcast prefix offsets. The classic distributed
-    scan decomposition: global_prefix(r) = offset(shard(r)) +
-    local_prefix(r)."""
-    spark = docs.sparkSession
-    if n_shards is None:
-        n_shards = max(2, spark.sparkContext.defaultParallelism)
-    bounds = _range_shard_bounds(docs, id_col, n_shards)
-    shard = F.lit(0)
-    for b in bounds:
-        shard = shard + F.when(F.col(id_col) > F.lit(b), 1).otherwise(0)
-    src = docs.select(id_col, token_col).withColumn(
-        "__shard", shard.cast("int")
-    )
-    totals = (
-        src.groupBy("__shard").agg(F.sum(token_col).alias("t")).collect()
-    )
-    offsets, acc = {}, 0
-    for r in sorted(totals, key=lambda r: r["__shard"]):
-        offsets[r["__shard"]] = acc
-        acc += r["t"] or 0
-    off_df = spark.createDataFrame(
-        [(s, o) for s, o in offsets.items()], "__shard int, __off long"
-    )
+    """Global prefix sum of ``token_col`` over ``id_col`` order, as a
+    ``_range_sharded`` scan."""
+    src = _range_sharded(docs.select(id_col, token_col), id_col, token_col)
     w = Window.partitionBy("__shard").orderBy(id_col)
     end = F.col("__off") + F.sum(token_col).over(w)
     first = F.floor((end - F.col(token_col)) / block_size)
     last = F.when(
         F.col(token_col) > 0, F.floor((end - 1) / block_size)
     ).otherwise(first)
-    return (
-        src.join(F.broadcast(off_df), "__shard")
-        .select(
-            id_col,
-            token_col,
-            (end - F.col(token_col)).alias("start_off"),
-            first.cast("long").alias("first_block"),
-            last.cast("long").alias("last_block"),
-        )
+    return src.select(
+        id_col,
+        token_col,
+        (end - F.col(token_col)).alias("start_off"),
+        first.cast("long").alias("first_block"),
+        last.cast("long").alias("last_block"),
     )
 
 
@@ -648,41 +675,22 @@ def epoch_shuffle(
     on any cluster, any partitioning, any restart; next epoch → a
     fresh permutation, no RNG state to checkpoint).
 
-    Scale shape: the global rank uses the same two-phase scan
-    decomposition as _concat_chunk_global — range-shard on the coin
-    (sample-based bounds; boundary VALUES only affect balance, never
-    correctness), shard-local row_number, n_shards-row offset table
-    broadcast back. No SinglePartition window, no global sort of the
-    corpus. Output: (id, rank, batch_idx, pos_in_batch), all exact
-    integers."""
-    spark = docs.sparkSession
-    if n_shards is None:
-        n_shards = max(2, spark.sparkContext.defaultParallelism)
+    Scale shape: the global rank is a ``_range_sharded`` scan on the
+    coin with a shard-local row_number; no SinglePartition window, no
+    global sort of the corpus. Output: (id, rank, batch_idx,
+    pos_in_batch), all exact integers."""
     coin = F.md5(F.concat(F.lit(f"ep{epoch}|"), F.col(id_col).cast("string")))
-    src = docs.select(F.col(id_col), coin.alias("__coin"))
-    bounds = _range_shard_bounds(src, "__coin", n_shards)
-    shard = F.lit(0)
-    for b in bounds:
-        shard = shard + F.when(F.col("__coin") > F.lit(b), 1).otherwise(0)
-    src = src.withColumn("__shard", shard.cast("int"))
-    totals = src.groupBy("__shard").agg(F.count(F.lit(1)).alias("n")).collect()
-    offsets, acc = {}, 0
-    for r in sorted(totals, key=lambda r: r["__shard"]):
-        offsets[r["__shard"]] = acc
-        acc += r["n"]
-    off_df = spark.createDataFrame(
-        [(s, o) for s, o in offsets.items()], "__shard int, __off long"
+    src = _range_sharded(
+        docs.select(F.col(id_col), coin.alias("__coin")), "__coin", None,
+        n_shards=n_shards,
     )
     w = Window.partitionBy("__shard").orderBy("__coin", id_col)
     rank = (F.col("__off") + F.row_number().over(w) - 1).cast("long")
-    return (
-        src.join(F.broadcast(off_df), "__shard")
-        .select(
-            id_col,
-            rank.alias("rank"),
-            F.floor(rank / batch_size).cast("long").alias("batch_idx"),
-            F.pmod(rank, F.lit(batch_size)).cast("long").alias("pos_in_batch"),
-        )
+    return src.select(
+        id_col,
+        rank.alias("rank"),
+        F.floor(rank / batch_size).cast("long").alias("batch_idx"),
+        F.pmod(rank, F.lit(batch_size)).cast("long").alias("pos_in_batch"),
     )
 
 
@@ -694,7 +702,6 @@ def token_budget_sample(
     weight_col: str = "n_chars",
     seed: int = 0,
     n_shards: int | None = None,
-    max_offset_rows: int = 100_000,
 ) -> DataFrame:
     """Assemble a pretraining mixture under per-source token budgets:
     each source contributes documents — in a deterministic
@@ -711,28 +718,18 @@ def token_budget_sample(
     NOTHING (budget 0) — an explicit mixture spec is exactly the
     sources it names.
 
-    Scale shape: the per-source running total uses the same
-    two-phase decomposition as epoch_shuffle — range-shard on the
-    priority coin (boundary values affect balance only), shard-local
-    window cumsum, then a bounded (sources x n_shards rows) offset
-    table broadcast back. No per-source SinglePartition window: a
-    source with 10^9 documents costs the same as ten sources with
-    10^8. Returns kept rows only: (id, source, weight, cum_before),
-    where cum_before is the source's running total before this
-    document (exact integers, engine-portable).
+    Scale shape: the per-source running total is a ``_range_sharded``
+    scan on the priority coin grouped by source, with a shard-local
+    window cumsum. No per-source SinglePartition window: a source with
+    10^9 documents costs the same as ten sources with 10^8. Returns
+    kept rows only: (id, source, weight, cum_before), where cum_before
+    is the source's running total before this document (exact
+    integers, engine-portable).
 
-    The offset collect is GUARDED: a dict ``budgets`` prunes the scan
-    to the spec's named sources up front (unnamed sources keep
-    nothing, so reading them is pure waste), and either way the
-    collect raises once sources x n_shards would exceed
-    ``max_offset_rows`` — a high-cardinality source column (user ids,
-    URLs) fails loudly at the driver instead of collecting silently
-    (same bounded-collect contract as the vocab/centroid paths)."""
-    from pyspark.sql import Window
-
-    spark = docs.sparkSession
-    if n_shards is None:
-        n_shards = max(2, spark.sparkContext.defaultParallelism)
+    A dict ``budgets`` prunes the scan to the spec's named sources up
+    front (unnamed sources keep nothing, so reading them is pure
+    waste); either way the offset collect raises once sources x
+    n_shards would exceed ``_MAX_OFFSET_ROWS``."""
     coin = F.md5(
         F.concat(F.lit(f"tb{seed}|"), F.col(id_col).cast("string"))
     )
@@ -755,46 +752,13 @@ def token_budget_sample(
         )
     else:
         budget = F.lit(int(budgets))
-    bounds = _range_shard_bounds(src, "__coin", n_shards)
-    shard = F.lit(0)
-    for b in bounds:
-        shard = shard + F.when(F.col("__coin") > F.lit(b), 1).otherwise(0)
-    src = src.withColumn("__shard", shard.cast("int"))
-    # bounded collect: sources x n_shards rows. The limit(+1) rides the
-    # same aggregation job, so detecting the overflow costs nothing —
-    # and a high-cardinality source column raises instead of silently
-    # pulling millions of rows to the driver.
-    totals = (
-        src.groupBy("source", "__shard")
-        .agg(F.sum("w").alias("n"))
-        .limit(max_offset_rows + 1)
-        .collect()
-    )
-    if len(totals) > max_offset_rows:
-        raise ValueError(
-            f"token_budget_sample offset table exceeds max_offset_rows="
-            f"{max_offset_rows} (sources x n_shards={n_shards}); a source "
-            "column this wide is not a mixture spec — pass a dict budgets "
-            "naming the real sources, reduce n_shards, or raise "
-            "max_offset_rows explicitly"
-        )
-    offsets: dict[tuple, int] = {}
-    acc: dict = {}
-    for r in sorted(totals, key=lambda r: (str(r["source"]), r["__shard"])):
-        key = r["source"]
-        offsets[(key, r["__shard"])] = acc.get(key, 0)
-        acc[key] = acc.get(key, 0) + r["n"]
-    off_df = spark.createDataFrame(
-        [(s, sh, o) for (s, sh), o in offsets.items()],
-        "source string, __shard int, __off long",
-    )
+    src = _range_sharded(src, "__coin", "w", by=("source",), n_shards=n_shards)
     w = Window.partitionBy("source", "__shard").orderBy("__coin").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
     cum_local = F.sum("w").over(w)
     return (
-        src.join(F.broadcast(off_df), ["source", "__shard"])
-        .withColumn(
+        src.withColumn(
             "cum_before", (F.col("__off") + cum_local - F.col("w")).cast("long")
         )
         .where(F.col("cum_before") < budget)
@@ -1062,36 +1026,20 @@ def length_bucket_batches(
     near-minimal. Returns (id, length, rank, batch_idx,
     batch_max_len, pad_waste) — exact integers, engine-portable.
 
-    Scale shape: the global rank is the epoch_shuffle two-phase scan
-    — range-shard on the LENGTH (equal lengths land in one shard, so
-    shard-local row_number + broadcast prefix offset IS the exact
-    global rank; bounds are sampled and affect balance only), then
-    one window keyed by batch_idx for the batch max (each partition
-    is one batch, ≤ batch_size rows). No global sort, no
-    SinglePartition window, no corpus-sized collect."""
-    spark = docs.sparkSession
-    if n_shards is None:
-        n_shards = max(2, spark.sparkContext.defaultParallelism)
+    Scale shape: the global rank is a ``_range_sharded`` scan on the
+    LENGTH (equal lengths land in one shard, so the shard-local
+    row_number plus ``__off`` IS the exact global rank), then one
+    window keyed by batch_idx for the batch max (each partition is
+    one batch, ≤ batch_size rows). No global sort, no SinglePartition
+    window, no corpus-sized collect."""
     src = docs.select(
         F.col(id_col).alias("id"),
         F.col(length_col).cast("long").alias("length"),
     )
-    bounds = _range_shard_bounds(src, "length", n_shards)
-    shard = F.lit(0)
-    for b in bounds:
-        shard = shard + F.when(F.col("length") > F.lit(b), 1).otherwise(0)
-    src = src.withColumn("__shard", shard.cast("int"))
-    totals = src.groupBy("__shard").agg(F.count(F.lit(1)).alias("n")).collect()
-    offsets, acc = {}, 0
-    for r in sorted(totals, key=lambda r: r["__shard"]):
-        offsets[r["__shard"]] = acc
-        acc += r["n"]
-    off_df = spark.createDataFrame(
-        [(s, o) for s, o in offsets.items()], "__shard int, __off long"
-    )
+    src = _range_sharded(src, "length", None, n_shards=n_shards)
     w = Window.partitionBy("__shard").orderBy("length", "id")
     rank = (F.col("__off") + F.row_number().over(w) - 1).cast("long")
-    ranked = src.join(F.broadcast(off_df), "__shard").select(
+    ranked = src.select(
         "id",
         "length",
         rank.alias("rank"),

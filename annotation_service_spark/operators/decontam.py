@@ -164,7 +164,7 @@ def decontaminate_spans(
     self-joins, nothing driver-side."""
     from pyspark.sql import Window
 
-    from .dedup import shingle_table, tokens
+    from .dedup import shingle_table, token_grams, tokens
 
     # The token fan-out feeds two plan legs (gram builder + coverage
     # join); caching it was measured ~par cold (a corpus-token-sized
@@ -174,20 +174,7 @@ def decontaminate_spans(
         F.col(id_col).alias("id"),
         F.posexplode(tokens(F.col(text_col))).alias("pos", "tok"),
     )
-    w_lead = Window.partitionBy("id").orderBy("pos")
-    parts = [F.col("tok")] + [
-        F.lead("tok", j).over(w_lead) for j in range(1, ngram)
-    ]
-    grams = (
-        tok.select(
-            "id",
-            "pos",
-            F.concat_ws(" ", *parts).alias("s"),
-            parts[-1].alias("_last"),
-        )
-        .where(F.col("_last").isNotNull())
-        .select("id", "pos", "s")
-    )
+    grams = token_grams(tok, ngram)
     bsh = F.broadcast(
         shingle_table(benchmark, id_col, text_col, ngram)
         .select("s")

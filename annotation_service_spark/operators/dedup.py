@@ -19,7 +19,7 @@ to md5 — no RNG, same output everywhere.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from annotation_service_spark.caching import scoped_cache
@@ -50,6 +50,36 @@ def word_ngrams(text: Column, n: int = 3) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
+def token_grams(tok: DataFrame, k: int) -> DataFrame:
+    """``(id, pos, tok)`` token rows to ``(id, pos, s)``: one row per
+    complete k-token window, ``s`` the space-joined tokens from
+    ``pos`` on — the rows of ``posexplode(word_ngrams(text, k))``.
+
+    Window ``lead``s over the exploded tokens, NOT
+    ``explode(word_ngrams(...))``: Spark re-evaluates a generator's
+    child per emitted row and higher-order functions are interpreted,
+    making that form O(n_grams²) per doc (measured 14s for 5k docs;
+    this form is <2s and the window shuffle is keyed by doc id —
+    scales out)."""
+    if k == 1:
+        return tok.select("id", "pos", F.col("tok").alias("s"))
+    w = Window.partitionBy("id").orderBy("pos")
+    parts = [F.col("tok")] + [F.lead("tok", j).over(w) for j in range(1, k)]
+    # naming tok before pos makes the window's input (id, tok, pos), the
+    # column order the shingle plans of the dedup gates were measured with
+    return (
+        tok.select(
+            "id",
+            "tok",
+            "pos",
+            F.concat_ws(" ", *parts).alias("s"),
+            parts[-1].alias("_last"),
+        )
+        .where(F.col("_last").isNotNull())
+        .select("id", "pos", "s")
+    )
+
+
 def dedup_exact(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -70,30 +100,12 @@ def shingle_table(
     """(id, shingle) pairs — the feature relation shared by the
     minhash / jaccard / simhash paths (``distinct=True``, their set
     semantics) and the tf-idf path (``distinct=False``: one row per
-    OCCURRENCE, so a downstream count gives tf).
-
-    Implementation: posexplode tokens once, then window ``lead``s
-    assemble the n-gram. NOT ``explode(word_ngrams(...))`` — Spark
-    re-evaluates a generator's child per emitted row and higher-order
-    functions are interpreted, making that form O(n_grams²) per doc
-    (measured 14s for 5k docs; this form is <2s and the window
-    shuffle is keyed by doc id — scales out)."""
+    OCCURRENCE, so a downstream count gives tf)."""
     tok = df.select(
         F.col(id_col).alias("id"),
         F.posexplode(tokens(F.col(text_col))).alias("pos", "tok"),
     )
-    if ngram == 1:
-        out = tok.select("id", F.col("tok").alias("s"))
-        return out.distinct() if distinct else out
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("id").orderBy("pos")
-    parts = [F.col("tok")] + [F.lead("tok", j).over(w) for j in range(1, ngram)]
-    out = (
-        tok.select("id", F.concat_ws(" ", *parts).alias("s"), parts[-1].alias("_last"))
-        .where(F.col("_last").isNotNull())
-        .select("id", "s")
-    )
+    out = token_grams(tok, ngram).select("id", "s")
     return out.distinct() if distinct else out
 
 
@@ -307,8 +319,6 @@ def _span_grams(
     ones included — through the collect_list reassembly instead of
     only survivors. The separate cheap base scan + left_anti shape
     stays deliberately."""
-    from pyspark.sql import Window
-
     from annotation_service_spark.partitioning import spread_underparallel
 
     # r14 (guide §2.5): the regex tokenize + posexplode feed the
@@ -319,18 +329,7 @@ def _span_grams(
         F.col(id_col).alias("id"),
         F.posexplode(tokens(F.col(text_col))).alias("pos", "tok"),
     )
-    w = Window.partitionBy("id").orderBy("pos")
-    parts = [F.col("tok")] + [F.lead("tok", j).over(w) for j in range(1, k)]
-    grams = (
-        tok.select(
-            "id",
-            "pos",
-            F.md5(F.concat_ws(" ", *parts)).alias("gh"),
-            parts[-1].alias("_last"),
-        )
-        .where(F.col("_last").isNotNull())
-        .drop("_last")
-    )
+    grams = token_grams(tok, k).select("id", "pos", F.md5("s").alias("gh"))
     return tok, grams
 
 
@@ -402,8 +401,6 @@ def _merge_cap_split_runs(
     fan-out never re-enters; cost is bounded by (adjacent piece
     pairs) x (gap length <= merge_gap_limit). Merging is applied
     along chains (gaps-and-islands over verified adjacencies)."""
-    from pyspark.sql import Window
-
     w = Window.partitionBy("id_a", "id_b", "diag").orderBy("start_a")
     p = pieces.withColumn("rn", F.row_number().over(w))
     nxt = p.select(
@@ -485,8 +482,6 @@ def _extend_run_endpoints(
     additionally bounded to half the gap; exactness there (and for a
     hot edge region longer than ``limit``) is the documented bounded-
     restoration caveat — raise ``merge_gap_limit`` if it matters."""
-    from pyspark.sql import Window
-
     w = Window.partitionBy("id_a", "id_b", "diag").orderBy("start_a")
     base = (
         pieces.withColumn("end_a", F.col("start_a") + F.col("length") - k)
@@ -648,8 +643,6 @@ def shared_passages(
     verification needs the uncapped gram table, scope-cached) and run
     BEFORE the min_tokens filter, so split pieces individually under
     the floor still surface once merged."""
-    from pyspark.sql import Window
-
     if extend_cap_edges and not merge_cap_splits:
         raise ValueError(
             "extend_cap_edges requires merge_cap_splits=True (extension "
@@ -804,9 +797,9 @@ def duplicate_span_coverage(
     (id, n_tokens, dup_tokens, dup_frac).
 
     Spark shape, designed for 100 TB:
-    - token positions come from ONE posexplode; k-grams assemble via
-      window ``lead`` per doc (the shingle_table trick — never a
-      per-row O(n²) generator);
+    - token positions come from ONE posexplode; k-grams are
+      ``token_grams`` (window ``lead`` per doc — never a per-row
+      O(n²) generator);
     - "duplicated" is one groupBy on the gram hash (map-side
       combinable, uniform key) + one equi-join back on the same key —
       both shuffles are keyed by content hash, skew-free;
@@ -815,8 +808,6 @@ def duplicate_span_coverage(
       successor p', each occurrence covers min(k, p'-p) new tokens —
       one window per doc id, no interval explode.
     """
-    from pyspark.sql import Window
-
     tok, marked = _span_tokens_and_marks(df, id_col, text_col, k)
     w2 = Window.partitionBy("id").orderBy("pos")
     cov = (
@@ -1383,8 +1374,6 @@ def _prefix_docs_and_candidates(
     prefix shingle and pass the length filter. See
     prefix_filter_jaccard_pairs for the pigeonhole argument and the
     alpha epsilon guard."""
-    from pyspark.sql import Window
-
     # global df per shingle via a window over s: same shuffle key the
     # candidate join needs anyway, no separate agg+join round trip
     dfc = F.count(F.lit(1)).over(Window.partitionBy("s"))
@@ -1692,26 +1681,11 @@ def winnow_fingerprints(
     ~25%-density sparse representation downstream pair stages join
     on. A document with >= 2^20 grams (~4 MB of text) RAISES rather
     than silently corrupting packed keys."""
-    from pyspark.sql import Window
-
     tok = df.select(
         F.col(id_col).alias("id"),
         F.posexplode(tokens(F.col(text_col))).alias("pos", "tok"),
     )
-    w_lead = Window.partitionBy("id").orderBy("pos")
-    parts = [F.col("tok")] + [
-        F.lead("tok", j).over(w_lead) for j in range(1, k)
-    ]
-    grams = (
-        tok.select(
-            "id",
-            "pos",
-            F.concat_ws(" ", *parts).alias("s"),
-            parts[-1].alias("_last"),
-        )
-        .where(F.col("_last").isNotNull())
-        .select("id", "pos", "s")
-    )
+    grams = token_grams(tok, k)
     h = F.conv(F.substring(F.md5(F.col("s")), 1, 10), 16, 10).cast("long")
     pos_cap = 1 << WINNOW_POS_BITS
     key = F.when(

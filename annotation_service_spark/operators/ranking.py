@@ -270,7 +270,7 @@ def tfidf_shingle_pairs(
     # occurrence-level shingles via posexplode + window leads — NOT
     # explode(word_ngrams(...)), whose generator re-evaluates the
     # interpreted HOF child per emitted row (O(n_grams^2) per doc; see
-    # shingle_table's docstring — 3x on the gate corpus)
+    # token_grams' docstring — 3x on the gate corpus)
     sh = shingle_table(docs, id_col, text_col, n, distinct=False)
     tf = sh.groupBy("id", "s").agg(F.count(F.lit(1)).alias("tf"))
     n_docs = docs.agg(F.count(F.lit(1)).alias("n_docs"))

@@ -119,6 +119,18 @@ def _prune_topk_per_query(
     return np.concatenate(rows_out), np.concatenate(cols_out)
 
 
+def _topk_per_query(scored: DataFrame, score: str, k: int) -> DataFrame:
+    """The ``k`` best ``(qid, nid, score)`` rows of each ``qid``:
+    ``score`` descending, ties to the smaller ``nid`` (the order
+    ``_prune_topk_per_query`` prunes by)."""
+    w = Window.partitionBy("qid").orderBy(F.col(score).desc(), F.col("nid"))
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") <= k)
+        .select("qid", "nid", score)
+    )
+
+
 _DIM_MEMO: dict[tuple[int, str], int] = {}
 
 
@@ -169,12 +181,7 @@ def ann_bruteforce_topk(
             round_digits,
         ).alias("cos"),
     )
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("qid", "nid", "cos")
-    )
+    return _topk_per_query(scored, "cos", k)
 
 
 def ann_bruteforce_topk_gemm(
@@ -250,12 +257,7 @@ def ann_bruteforce_topk_gemm(
             ).alias("cos"),
         )
     )
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("qid", "nid", "cos")
-    )
+    return _topk_per_query(scored, "cos", k)
 
 
 def embedding_dup_pairs(
@@ -669,12 +671,7 @@ def ann_ivf_topk(
             ).alias("cos"),
         )
     )
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("qid", "nid", "cos")
-    )
+    return _topk_per_query(scored, "cos", k)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 7) -> np.ndarray:
@@ -881,12 +878,7 @@ def ann_lsh_topk(
             ).alias("cos"),
         )
     )
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("qid", "nid", "cos")
-    )
+    return _topk_per_query(scored, "cos", k)
 
 
 def ann_quantized_topk(
@@ -941,12 +933,7 @@ def ann_quantized_topk(
         )
         .select("qid", "nid", idot("qa", "qb").alias("qdot"))
     )
-    w = Window.partitionBy("qid").orderBy(F.col("qdot").desc(), F.col("nid"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("qid", "nid", "qdot")
-    )
+    return _topk_per_query(scored, "qdot", k)
 
 
 def quantize_embeddings(
@@ -1278,12 +1265,7 @@ def ann_pq_topk(
         F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("ve")
     )
     local = base.mapInPandas(adc_prune, "qid long, nid long, adc long")
-    wadc = Window.partitionBy("qid").orderBy(F.col("adc").desc(), F.col("nid"))
-    cand = (
-        local.withColumn("rn", F.row_number().over(wadc))
-        .where(F.col("rn") <= adc_top)
-        .select("qid", "nid")
-    )
+    cand = _topk_per_query(local, "adc", adc_top).select("qid", "nid")
 
     vecs = embeddings.select(
         F.col(id_col).alias("nid"), as_double(F.col(vec_col)).alias("ce")
@@ -1303,12 +1285,7 @@ def ann_pq_topk(
             ).alias("cos"),
         )
     )
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("qid", "nid", "cos")
-    )
+    return _topk_per_query(scored, "cos", k)
 
 
 def ann_ivfpq_topk(

@@ -24,9 +24,11 @@ Spark-first mapping:
   the previous cached DataFrame until ``swap`` republishes — the
   copy-on-write snapshot semantics of the reference's directory
   swap. The state-maintenance sinks (``stateful.py``) replace their
-  state through the same manifest and ``retain`` old versions.
+  state through the same manifest. Every sink ``retain``s the newest
+  manifests after each commit.
 - ST5 (readiness): ``SnapshotStore.ready`` — queries against an
-  empty store raise, mirroring errNoAnnotator → HTTP 503.
+  empty store raise, mirroring errNoAnnotator → HTTP 503. A sink
+  restarted on a committed table swaps it in when it starts.
 """
 
 from __future__ import annotations
@@ -476,12 +478,26 @@ def _start_sink(stream, process, checkpoint_dir, available_now, trigger_interval
 
 def _publish(built, manifest, store, table_name, epoch_id, writer_id, paths=()) -> int:
     """Write ``built`` as the epoch's batch directory, commit it with the
-    source ``paths`` it was built from, swap the store; returns the version."""
+    source ``paths`` it was built from, swap the store, then age out old
+    manifests (each lists every directory so far, so ``retain`` deletes
+    no data); returns the version."""
     bdir = _batch_dir(manifest.output_dir, epoch_id, writer_id)
     # overwrite is safe: no manifest names bdir until the commit below
     built.write.mode("overwrite").partitionBy("dataset_date").parquet(bdir)
     version = manifest.commit(epoch_id, [bdir], paths=paths)
     store.swap(table_name, manifest.read(built.sparkSession))
+    manifest.retain()
+    return version
+
+
+def _swap_committed(manifest, store, table_name, spark) -> int | None:
+    """At sink start, give a store that lacks ``table_name`` (a
+    restarted process) CURRENT's committed snapshot, so it is ready
+    before the next batch arrives; returns the version swapped in."""
+    version = manifest.current_version()
+    if version is None or table_name in store._tables:
+        return None
+    store.swap(table_name, manifest.read(spark, version))
     return version
 
 
@@ -518,7 +534,10 @@ def start_event_refresh(
     batch's data visible also marks its files loaded, so a crash
     leaves both or neither, and a restart recovers the set from that
     one file. A replayed batch whose commit landed before the crash
-    loads nothing and only completes the store swap.
+    loads nothing and only completes the store swap. A sink started
+    on an existing ``output_dir`` swaps CURRENT into a store that
+    lacks ``table_name`` at once, so a restarted process is ready
+    without waiting for the next announcement.
 
     ``writer_id`` namespaces the batch directories — REQUIRED (with a
     distinct value per job) when more than one refresh job publishes
@@ -531,7 +550,8 @@ def start_event_refresh(
     """
     spark = event_stream.sparkSession
     manifest = VersionedTableManifest(output_dir)
-    published = None  # the version this sink last swapped into the store
+    # the version this sink last swapped into the store
+    published = _swap_committed(manifest, store, table_name, spark)
 
     def norm(p: str) -> str:
         # input_file_name() yields URIs (file:///…); messages may carry
@@ -586,9 +606,12 @@ def start_refresh(
     False for a continuously-running watcher.
 
     ``writer_id``: see ``start_event_refresh`` — distinct per job when
-    multiple refresh jobs share one ``output_dir``.
+    multiple refresh jobs share one ``output_dir``. As there, a sink
+    started on an existing ``output_dir`` swaps CURRENT into a store
+    that lacks ``table_name``.
     """
     manifest = VersionedTableManifest(output_dir)
+    _swap_committed(manifest, store, table_name, stream_df.sparkSession)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         if not batch_df.isEmpty():

@@ -32,6 +32,40 @@ def test_dedup_exact(spark, docs_df):
     assert dup.keep_id == 1
 
 
+@pytest.mark.parametrize("k", [1, 2, 3, 4, 5])
+def test_token_grams_match_word_ngrams(spark, k):
+    """The window form of the k-gram relation equals ``posexplode`` of
+    the array form ``word_ngrams``, position for position: texts
+    shorter than k, empty and NULL text and repeated tokens
+    included."""
+    texts = [
+        (1, "the cat sat on the mat the cat sat"),
+        (2, "a a a a a a"),
+        (3, "short one"),
+        (4, ""),
+        (5, None),
+        (6, "x"),
+        (7, "Punct!! and, MIXED case -- the the"),
+        (8, "one two three four five"),
+    ]
+    df = spark.createDataFrame(texts, "doc_id long, text string")
+    tok = df.select(
+        F.col("doc_id").alias("id"),
+        F.posexplode(dd.tokens(F.col("text"))).alias("pos", "tok"),
+    )
+    got = sorted(tuple(r) for r in dd.token_grams(tok, k).collect())
+    want = sorted(
+        tuple(r)
+        for r in df.select(
+            F.col("doc_id").alias("id"),
+            F.posexplode(dd.word_ngrams(F.col("text"), k)).alias("pos", "s"),
+        ).collect()
+    )
+    assert got == want
+    assert {r[0] for r in got} <= {1, 2, 3, 6, 7, 8}
+    assert len(got) == sum(max(0, n - k + 1) for n in (9, 6, 2, 0, 0, 1, 6, 5))
+
+
 def test_ngram_jaccard_finds_near_dup(spark, docs_df):
     pairs = dd.ngram_jaccard_pairs(docs_df, threshold=0.5).collect()
     got = {(r.id_a, r.id_b) for r in pairs}

@@ -274,7 +274,7 @@ def test_token_budget_sample_shard_invariance(spark):
     assert outs[0]  # non-degenerate
 
 
-def test_token_budget_sample_offset_collect_guarded(spark):
+def test_token_budget_sample_offset_collect_guarded(spark, monkeypatch):
     """VERDICT r11 item 3: an int budget over a high-cardinality
     source column must fail loudly at the bounded-collect contract,
     not silently pull sources x n_shards rows to the driver; a dict
@@ -282,17 +282,19 @@ def test_token_budget_sample_offset_collect_guarded(spark):
     succeeds."""
     import pytest
 
+    from annotation_service_spark.operators import curation
     from annotation_service_spark.operators.curation import (
         token_budget_sample,
     )
 
+    monkeypatch.setattr(curation, "_MAX_OFFSET_ROWS", 100)
     rows = [(i, f"user-{i}", 10) for i in range(300)]  # source ~ user id
     df = spark.createDataFrame(rows, "doc_id long, source string, n_chars long")
-    with pytest.raises(ValueError, match="max_offset_rows"):
-        token_budget_sample(df, 50, n_shards=4, max_offset_rows=100)
+    with pytest.raises(ValueError, match="offset table exceeds 100 rows"):
+        token_budget_sample(df, 50, n_shards=4)
     # a real mixture spec names its sources; the scan prunes to them
     out = token_budget_sample(
-        df, {"user-1": 15, "user-2": 5}, n_shards=4, max_offset_rows=100
+        df, {"user-1": 15, "user-2": 5}, n_shards=4
     ).collect()
     assert {r.source for r in out} == {"user-1", "user-2"}
 

@@ -499,3 +499,90 @@ def test_event_refresh_writers_sharing_output_dir_load_once(spark, tmp_path):
     table = rf.VersionedTableManifest(str(out)).read(spark)
     assert sorted(r.k for r in table.collect()) == ["a", "b", "c"]
     assert sorted(r.k for r in store.get("geo").collect()) == ["a", "b", "c"]
+
+
+def test_event_refresh_retains_bounded_manifests(spark, tmp_path):
+    """Each publish ages out old manifests: after five single-file
+    announcements ``_versions/`` holds at most ``retain``'s default of
+    3 manifests, the table still holds every file's rows (manifests
+    are cumulative, so no directory is deleted), and a restart that
+    re-announces a file loads nothing again."""
+    import os
+
+    data_dir = tmp_path / "datasets"
+    data_dir.mkdir()
+    events = tmp_path / "events"
+    events.mkdir()
+    out = tmp_path / "table"
+    ckpt = tmp_path / "ckpt"
+    store = rf.SnapshotStore()
+    calls = []
+    files = []
+    for i in range(5):
+        f = data_dir / f"2020010{i + 1}T000000Z-data.csv"
+        f.write_text(f"k,v\nk{i}a,{i}\nk{i}b,{i}\n")
+        files.append(f)
+        _announce_and_drain(spark, events, f"m{i}.json", [f], store, calls, ckpt, out)
+    assert len(calls) == 5
+    manifests = [n for n in os.listdir(out / "_versions") if n.endswith(".json")]
+    assert len(manifests) <= 3, sorted(manifests)
+    want = sorted(f"k{i}{s}" for i in range(5) for s in "ab")
+    vm = rf.VersionedTableManifest(str(out))
+    for t in (store.get("geo"), vm.read(spark)):
+        assert sorted(r.k for r in t.collect()) == want
+    assert vm.loaded_paths() == {str(f) for f in files}
+
+    _announce_and_drain(spark, events, "m5.json", [files[0]], store, calls, ckpt, out)
+    assert len(calls) == 5  # nothing rebuilt
+    assert sorted(r.k for r in vm.read(spark).collect()) == want
+
+
+def test_refresh_restart_ready_before_new_data(spark, tmp_path):
+    """A clean restart (fresh store, drained checkpoint, nothing new to
+    load) swaps the committed snapshot in when the sink starts: the
+    store is ready and holds every committed row before any new file
+    is announced, for the event sink and the file-stream sink."""
+    data_dir = tmp_path / "datasets"
+    data_dir.mkdir()
+    events = tmp_path / "events"
+    events.mkdir()
+    out, ckpt = tmp_path / "table", tmp_path / "ckpt"
+    f1 = data_dir / "20200101T000000Z-data.csv"
+    f1.write_text("k,v\na,1\nb,2\n")
+    f2 = data_dir / "20200601T000000Z-data.csv"
+    f2.write_text("k,v\nc,3\n")
+    calls = []
+    for name, f in (("m1.json", f1), ("m2.json", f2)):
+        _announce_and_drain(spark, events, name, [f], rf.SnapshotStore(), calls,
+                            ckpt, out)
+    store = rf.SnapshotStore()
+    msg_schema = T.StructType([T.StructField("path", T.StringType())])
+    stream = spark.readStream.format("json").schema(msg_schema).load(str(events))
+    q = rf.start_event_refresh(
+        stream, _dated_csv_build(spark, calls), store, "geo", str(ckpt), str(out)
+    )
+    q.awaitTermination(120)
+    assert len(calls) == 2
+    assert store.ready
+    assert sorted(r.k for r in store.get("geo").collect()) == ["a", "b", "c"]
+
+    watch = tmp_path / "in"
+    watch.mkdir()
+    (watch / "20240101-a.csv").write_text("v\nx1\nx2\n")
+    schema = T.StructType([T.StructField("v", T.StringType())])
+
+    def build(batch_df):
+        return batch_df.withColumn(
+            "dataset_date",
+            F.to_date(F.regexp_extract("_src_path", r"(\d{8})-", 1), "yyyyMMdd"),
+        ).select("v", "dataset_date")
+
+    for _ in range(2):  # the second start finds nothing new to load
+        store = rf.SnapshotStore()
+        stream = rf.watch_new_files(spark, str(watch), schema, fmt="csv", header=True)
+        q = rf.start_refresh(
+            stream, build, store, "t", str(tmp_path / "ck2"), str(tmp_path / "t2")
+        )
+        q.awaitTermination(120)
+        assert store.ready
+        assert sorted(r.v for r in store.get("t").collect()) == ["x1", "x2"]
