@@ -501,42 +501,39 @@ def q_dedup_eval_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays both methods' SQL as subqueries and the same
     counts, so the report itself is driver-hash-verified."""
     docs = _t(spark, sf_dir, "documents")
-    # r13 (guide §2.3): all three methods consume the IDENTICAL (id, s)
-    # 3-gram shingle relation — tokenize+explode+distinct the corpus
-    # ONCE and share the cached table (before: each method built and
-    # separately cached its own copy — two redundant corpus passes)
-    sh = scoped_cache(dd.shingle_table(docs, "doc_id", "text", 3))
-    # cache each PAIR SET (tiny: the near-dup pairs, not the corpus) —
-    # without it every count/intersection replays the whole pipeline
-    # (measured 21.5 s -> the cached form's cost is one run of each)
+    # all three methods build the same (id, s) 3-gram shingle plan;
+    # ngram_jaccard_pairs caches it and Spark's cache manager swaps
+    # that cache into the other two, so the corpus is shingled once.
+    # Each PAIR SET is cached too (tiny: the near-dup pairs, not the
+    # corpus) — without it every count/intersection replays the whole
+    # pipeline (measured 21.5 s -> the cached form's cost is one run
+    # of each)
     exact = scoped_cache(
-        dd.ngram_jaccard_pairs(docs, ngram=3, threshold=0.5, shingles=sh)
+        dd.ngram_jaccard_pairs(docs, ngram=3, threshold=0.5)
         .select("id_a", "id_b"),
     )
     methods = {
-        # r13 (guide §2.4): the exact relation IS the verify's accept
-        # set — truth_pairs turns minhash's shingle⨝shingle verify
-        # into candidates ⨝ exact (identical set by definition). The
-        # bool marks method ⊆ exact BY CONSTRUCTION (built as
-        # candidates ⨝ exact), so n_common == n_method and the
-        # intersection count action is redundant — provably the same
-        # number, one less job. prefix's 1.0/1.0 is an algorithmic
-        # RESULT (PPJoin losslessness), not a construction, so its
-        # intersection is still counted — the report must be able to
-        # catch a prefix-filter bug.
+        # the exact relation IS minhash's verify accept set, so the
+        # method is candidates ⨝ exact (the same set as
+        # minhash_lsh_pairs). The bool marks method ⊆ exact BY
+        # CONSTRUCTION, so n_common == n_method and the intersection
+        # count action is redundant — provably the same number, one
+        # less job. prefix's 1.0/1.0 is an algorithmic RESULT (PPJoin
+        # losslessness), not a construction, so its intersection is
+        # still counted — the report must be able to catch a
+        # prefix-filter bug.
         "minhash": (
             scoped_cache(
-                dd.minhash_lsh_pairs(
-                    docs, ngram=3, num_hashes=16, bands=8, threshold=0.5,
-                    shingles=sh, truth_pairs=exact,
-                ).select("id_a", "id_b"),
+                dd.minhash_candidates(
+                    docs, ngram=3, num_hashes=16, bands=8
+                ).join(exact, ["id_a", "id_b"]),
             ),
             True,
         ),
         "prefix": (
             scoped_cache(
                 dd.prefix_filter_jaccard_pairs(
-                    docs, ngram=3, threshold=0.5, shingles=sh
+                    docs, ngram=3, threshold=0.5
                 ).select("id_a", "id_b"),
             ),
             False,
@@ -594,35 +591,31 @@ def q_dedup_eval_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     the tf-expansion MinHash scale path (weighted_minhash_pairs,
     16/8, tf_cap=8) against the exact CAPPED weighted Jaccard at the
     same threshold — apples-to-apples because both compute J_w over
-    min(tf, 8) frequencies (the exact form fed a capped tf_table).
+    min(tf, 8) frequencies (the exact form over a capped tf table).
     Same report shape as dedup_eval_report; the oracle replays both
     methods' SQL as subqueries, so the report is hash-verified."""
     docs = _t(spark, sf_dir, "documents")
-    # r13 (guide §2.3): both methods consume the SAME (id, s, tf)
-    # relation — tokenize once, share the cached table (before: the
-    # minhash path re-built its own tf table from the raw text)
+    # both methods build the same (id, s, tf) plan: cached here, and
+    # Spark's cache manager swaps it into the candidates' plan
     tf = scoped_cache(dd.shingle_tf_table(docs, "doc_id", "text", 3))
     capped = tf.select(
         "id", "s", F.least(F.col("tf"), F.lit(8)).alias("tf")
     )
     exact = scoped_cache(
-        dd.weighted_jaccard_pairs(
-            docs, ngram=3, threshold=0.5, tf_table=capped
-        ).select("id_a", "id_b"),
+        dd.weighted_set_jaccard_pairs(capped, threshold=0.5)
+        .select("id_a", "id_b"),
     )
-    # r13 (guide §2.4): verify = candidates ⨝ exact (same set by
-    # definition — see weighted_minhash_pairs' truth_pairs contract)
+    # verify = candidates ⨝ exact, the same set as
+    # weighted_minhash_pairs at these parameters
     approx = scoped_cache(
-        dd.weighted_minhash_pairs(
-            docs, ngram=3, num_hashes=16, bands=8, threshold=0.5, tf_cap=8,
-            tf_table=tf, truth_pairs=exact,
-        ).select("id_a", "id_b"),
+        dd.weighted_minhash_candidates(
+            docs, ngram=3, num_hashes=16, bands=8, tf_cap=8
+        ).join(exact, ["id_a", "id_b"]),
     )
     n_exact = exact.count()
     n_method = approx.count()
-    # approx ⊆ exact BY CONSTRUCTION (truth_pairs built it as
-    # candidates ⨝ exact), so the intersection count IS n_method —
-    # same number, one less count job (guide §2.4)
+    # approx ⊆ exact BY CONSTRUCTION (candidates ⨝ exact), so the
+    # intersection count IS n_method — same number, one less count job
     n_common = n_method
     return spark.createDataFrame(
         [
@@ -791,9 +784,6 @@ def q_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     corpus = docs.where(F.col("doc_id") % 100 != 0)
     bench = docs.where(F.col("doc_id") % 100 == 0)
-    # tokenize+shingle the corpus ONCE; decontam and the jaccard
-    # pair stage both consume the shared cached table
-    csh = scoped_cache(dd.shingle_table(corpus, "doc_id", "text", 3))
     rep_keep = (
         txt.repetition_metrics_table(corpus)
         .where(F.col("keep"))
@@ -804,17 +794,11 @@ def q_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(~F.col("contaminated"))
         .select("doc_id")
     )
-    # df-cap the shared table ONCE (VERDICT r8 #3; reworked r10):
-    # cap_shingles probes the hot set eagerly and embeds it as a
-    # broadcast literal, so the df aggregation runs a single time and
-    # each downstream consumer replays only the map-side broadcast
-    # anti-join from the cached shingle table; semantics are
-    # identical to passing max_df=1000 through — the oracle replays
-    # the same cap
-    capped = dd.cap_shingles(csh, max_df=1000)
-    pairs = dd.ngram_jaccard_pairs(
-        corpus, ngram=3, threshold=0.5, shingles=capped
-    )
+    # the pair stage caches the corpus shingle table, and Spark swaps
+    # that cache into decontam's identical shingle subtree, so the
+    # corpus is tokenized once; max_df's hot-shingle probe embeds the
+    # hot set as a broadcast literal — the oracle replays the same cap
+    pairs = dd.ngram_jaccard_pairs(corpus, ngram=3, threshold=0.5, max_df=1000)
     dupes = (
         cl.connected_components(pairs)
         .where(F.col("id") != F.col("cluster_id"))
@@ -3324,6 +3308,32 @@ def q_token_budget_sample_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cu.token_budget_sample(docs, budgets, seed=11, weight_col="n_tok")
 
 
+def _two_token_lines() -> "F.Column":
+    """The ``text`` column re-cut into 2-token lines: line i =
+    words[2i:2i+2], the line structure the line-family oracles
+    reproduce."""
+    words = F.split(F.col("text"), " ")
+    return F.transform(
+        F.sequence(F.lit(0), F.ceil(F.size(words) / 2).cast("int") - 1),
+        lambda i: F.concat_ws(" ", F.slice(words, i * 2 + 1, 2)),
+    )
+
+
+def _dotted_text(sep: str) -> "F.Column":
+    """The 2-token lines, each with '.' appended when md5(line) leads
+    < '8' (half of them, the same in both engines), joined by
+    ``sep``: sentence punctuation for a corpus that has none."""
+    return F.concat_ws(
+        sep,
+        F.transform(
+            _two_token_lines(),
+            lambda l: F.when(
+                F.substring(F.md5(l), 1, 1) < F.lit("8"), F.concat(l, F.lit("."))
+            ).otherwise(l),
+        ),
+    )
+
+
 def _lined_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Documents re-cut into deterministic 2-token lines (newline
     joined) — the synthetic corpus has no real line structure, so the
@@ -3337,12 +3347,9 @@ def _lined_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spreading ABOVE the synthesis is a net loss: the exchange is
     # paid but the bottleneck stays serial)
     docs = spread_underparallel(_t(spark, sf_dir, "documents"))
-    words = F.split(F.col("text"), " ")
-    lines = F.transform(
-        F.sequence(F.lit(0), F.ceil(F.size(words) / 2).cast("int") - 1),
-        lambda i: F.concat_ws(" ", F.slice(words, i * 2 + 1, 2)),
+    return docs.select(
+        "doc_id", F.concat_ws("\n", _two_token_lines()).alias("text")
     )
-    return docs.select("doc_id", F.concat_ws("\n", lines).alias("text"))
 
 
 def q_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3374,18 +3381,7 @@ def q_c4_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from annotation_service_spark.functions import text as tx
 
     docs = _t(spark, sf_dir, "documents")
-    words = F.split(F.col("text"), " ")
-    lines_arr = F.transform(
-        F.sequence(F.lit(0), F.ceil(F.size(words) / 2).cast("int") - 1),
-        lambda i: F.concat_ws(" ", F.slice(words, i * 2 + 1, 2)),
-    )
-    dotted = F.transform(
-        lines_arr,
-        lambda l: F.when(
-            F.substring(F.md5(l), 1, 1) < F.lit("8"), F.concat(l, F.lit("."))
-        ).otherwise(l),
-    )
-    txt = F.concat_ws("\n", dotted)
+    txt = _dotted_text("\n")
     txt = F.when(
         F.col("doc_id") % 97 == 0, F.concat(txt, F.lit(" {"))
     ).otherwise(txt)
@@ -3740,18 +3736,7 @@ def q_stream_sentence_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    words = F.split(F.col("text"), " ")
-    lines_arr = F.transform(
-        F.sequence(F.lit(0), F.ceil(F.size(words) / 2).cast("int") - 1),
-        lambda i: F.concat_ws(" ", F.slice(words, i * 2 + 1, 2)),
-    )
-    dotted = F.transform(
-        lines_arr,
-        lambda l: F.when(
-            F.substring(F.md5(l), 1, 1) < F.lit("8"), F.concat(l, F.lit("."))
-        ).otherwise(l),
-    )
-    txt = F.concat_ws(" ", dotted)
+    txt = _dotted_text(" ")
     stream = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet")
@@ -3836,18 +3821,7 @@ def q_sentence_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14: spread before the O(words^2) dotting synthesis (see
     # _lined_documents)
     docs = spread_underparallel(_t(spark, sf_dir, "documents"))
-    words = F.split(F.col("text"), " ")
-    lines_arr = F.transform(
-        F.sequence(F.lit(0), F.ceil(F.size(words) / 2).cast("int") - 1),
-        lambda i: F.concat_ws(" ", F.slice(words, i * 2 + 1, 2)),
-    )
-    dotted = F.transform(
-        lines_arr,
-        lambda l: F.when(
-            F.substring(F.md5(l), 1, 1) < F.lit("8"), F.concat(l, F.lit("."))
-        ).otherwise(l),
-    )
-    txt = F.concat_ws(" ", dotted)
+    txt = _dotted_text(" ")
     return cu.dedup_sentences_keep_first(
         docs.select("doc_id", txt.alias("text"))
     ).withColumnRenamed("id", "doc_id")
@@ -3931,18 +3905,7 @@ def _web_pipeline(
     ).select(F.col("first_id").alias("doc_id"))
     survivors = docs.join(first, "doc_id")
 
-    words = F.split(F.col("text"), " ")
-    lines_arr = F.transform(
-        F.sequence(F.lit(0), F.ceil(F.size(words) / 2).cast("int") - 1),
-        lambda i: F.concat_ws(" ", F.slice(words, i * 2 + 1, 2)),
-    )
-    dotted = F.transform(
-        lines_arr,
-        lambda l: F.when(
-            F.substring(F.md5(l), 1, 1) < F.lit("8"), F.concat(l, F.lit("."))
-        ).otherwise(l),
-    )
-    txt = F.concat_ws("\n", dotted)
+    txt = _dotted_text("\n")
     txt = F.when(
         F.col("doc_id") % 97 == 0, F.concat(txt, F.lit(" {"))
     ).otherwise(txt)
@@ -4465,16 +4428,11 @@ def q_stream_hot_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-input occurrence count."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    words = F.split(F.col("text"), " ")
-    lines_arr = F.transform(
-        F.sequence(F.lit(0), F.ceil(F.size(words) / 2).cast("int") - 1),
-        lambda i: F.concat_ws(" ", F.slice(words, i * 2 + 1, 2)),
-    )
     stream = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet")
         .parquet(sf_dir)
-        .select(F.explode(lines_arr).alias("line"))
+        .select(F.explode(_two_token_lines()).alias("line"))
         .select(
             F.trim(
                 F.regexp_replace(F.lower(F.col("line")), r"\s+", " ")

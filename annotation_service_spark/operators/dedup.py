@@ -208,8 +208,6 @@ def minhash_lsh_pairs(
     num_hashes: int | None = 16,
     bands: int | None = 8,
     threshold: float = 0.5,
-    shingles: DataFrame | None = None,
-    truth_pairs: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash + banded LSH near-duplicate pairs, exact-verified.
 
@@ -226,23 +224,10 @@ def minhash_lsh_pairs(
     is one-sided approximation only — the exact-Jaccard verify runs
     either way — so planning affects recall, never precision.
 
-    ``shingles`` lets a composite pipeline pass a shared (id, s)
-    table (same contract as ngram_jaccard_pairs — r13: the eval
-    report shingles the corpus ONCE for all three methods); the
-    caller then owns its persistence.
-
-    ``truth_pairs`` (r13, guide §2.4): when the caller has ALREADY
-    computed the exact ground-truth pair relation at the SAME
-    threshold over the SAME shingle space (the eval report does —
-    ngram_jaccard_pairs output, id_a < id_b), the verify stage is a
-    join against it instead of a second shingle⨝shingle + aggregate:
-    the verify accepts exactly the banded candidates whose exact
-    Jaccard ≥ threshold, i.e. candidates ∩ truth, and any accepted
-    pair shares ≥ 1 shingle (J ≥ threshold > 0) so it is in the
-    truth relation's blocking by construction — the output SET is
-    identical by definition, only the plan changes. The caller owns
-    the contract that truth_pairs really is the same-parameter exact
-    relation.
+    The verify accepts exactly the banded candidates whose exact
+    Jaccard ≥ threshold, so a caller that already holds the exact
+    pair set at the same parameters gets the same pair SET as
+    ``minhash_candidates(...).join(exact, ["id_a", "id_b"])``.
     """
     if bands is None:
         bands, rows_per_band = lsh_band_plan(threshold, num_hashes=num_hashes)
@@ -253,15 +238,7 @@ def minhash_lsh_pairs(
             "only meaningful with bands=None; pass bands=None to plan the "
             "banding from threshold, or give a concrete num_hashes"
         )
-    sh = (
-        shingles
-        if shingles is not None
-        else scoped_cache(shingle_table(df, id_col, text_col, ngram))
-    )
-    if truth_pairs is not None:
-        sig = minhash_signatures(sh, num_hashes)
-        cand_ids = band_join(_minhash_banded_rows(sig, num_hashes, bands, []))
-        return cand_ids.join(truth_pairs, ["id_a", "id_b"])
+    sh = scoped_cache(shingle_table(df, id_col, text_col, ngram))
     sig = minhash_signatures(sh, num_hashes, include_size=True)
 
     # the per-doc shingle count n rides the band rows (2 extra longs
@@ -1084,15 +1061,15 @@ def simhash_pairs(
 
 
 def cap_shingles(sh: DataFrame, max_df: int, hot_limit: int = 100_000) -> DataFrame:
-    """Drop shingles with document frequency > ``max_df`` from a shared
+    """Drop shingles with document frequency > ``max_df`` from an
     (id, s) shingle table — the stop-shingle cap that keeps one hot
     boilerplate shingle from fanning out df² candidate pairs on a
     single shuffle key. The hot set is usually tiny (it IS the skew),
     so the common path embeds it as a broadcast literal table —
     AQE-independent; the plan guard pins the broadcast anti-join.
-    Composite pipelines (pipeline_full) call this ONCE over the shared
-    cached shingle table and hand the capped result to every pair
-    stage, so the df aggregation isn't re-run per stage.
+    The pair operators' ``max_df`` applies it to their cached shingle
+    table, so each consumer of the capped table replays only the
+    broadcast anti-join, not the df aggregation.
 
     Size-gated, EAGER: a bounded ``limit(hot_limit+1)`` probe (one
     Arrow fetch, ≤ hot_limit+1 short strings) runs the df aggregation
@@ -1120,22 +1097,16 @@ def cap_shingles(sh: DataFrame, max_df: int, hot_limit: int = 100_000) -> DataFr
     return sh.join(F.broadcast(hot), "s", "left_anti")
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ngram: int = 3,
-    threshold: float = 0.5,
-    shingles: DataFrame | None = None,
-    max_df: int | None = None,
+def set_jaccard_pairs(
+    sh: DataFrame, threshold: float = 0.5, max_df: int | None = None
 ) -> DataFrame:
-    """Exact all-pairs n-gram Jaccard via shingle equi-join (the
-    non-approximate baseline; the shingle join IS the blocking — only
-    docs sharing a shingle ever meet). Returns (id_a, id_b, jaccard).
-    At 100 TB prefer minhash_lsh_pairs; this is the ground-truth
-    operator for differential testing and small corpora.
+    """Exact all-pairs Jaccard over a distinct (id, s) set table via
+    its equi-join on s (the join IS the blocking — only ids sharing an
+    element ever meet). Returns (id_a, id_b, jaccard), id_a < id_b.
+    The plan reads ``sh`` three times (sizes and both join sides), so
+    pass a cached table.
 
-    ``max_df`` caps the document frequency of join-eligible shingles
+    ``max_df`` caps the document frequency of join-eligible elements
     (the tfidf_shingle_pairs pattern): one hot shingle (boilerplate,
     a viral quote) otherwise fans out df² candidate pairs on a single
     shuffle key — the quadratic blob that kills the self-join at
@@ -1144,16 +1115,7 @@ def ngram_jaccard_pairs(
     the df ≤ max_df shingle space (sizes and intersections both) — a
     true Jaccard of the capped sets, so the semantics stay exact and
     engine-portable. None (default) keeps the uncapped ground-truth
-    form for oracles and differential tests.
-
-    ``shingles`` lets a composite pipeline pass a shared (id, s)
-    table (see decontam / pipeline_full) so the tokenize+explode runs
-    once corpus-wide; the caller then owns its persistence."""
-    sh = (
-        shingles
-        if shingles is not None
-        else scoped_cache(shingle_table(df, id_col, text_col, ngram))
-    )
+    form for oracles and differential tests."""
     if max_df is not None:
         sh = cap_shingles(sh, max_df)
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
@@ -1180,13 +1142,29 @@ def ngram_jaccard_pairs(
     )
 
 
+def ngram_jaccard_pairs(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    ngram: int = 3,
+    threshold: float = 0.5,
+    max_df: int | None = None,
+) -> DataFrame:
+    """Exact all-pairs n-gram Jaccard: ``set_jaccard_pairs`` over the
+    docs' cached shingle table (the non-approximate baseline). At
+    100 TB prefer minhash_lsh_pairs; this is the ground-truth operator
+    for differential testing and small corpora. A composite pipeline
+    that caches the same shingle plan shares that one cache."""
+    sh = scoped_cache(shingle_table(df, id_col, text_col, ngram))
+    return set_jaccard_pairs(sh, threshold, max_df)
+
+
 def ngram_containment_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     ngram: int = 3,
     threshold: float = 0.8,
-    shingles: DataFrame | None = None,
     max_df: int | None = None,
 ) -> DataFrame:
     """Directed near-CONTAINMENT pairs: C(A→B) = |A∩B| / |A| over
@@ -1208,11 +1186,7 @@ def ngram_containment_pairs(
     from sizes and intersections alike) bounds the worst key's
     fan-out at 100 TB the same way it does for jaccard.
     """
-    sh = (
-        shingles
-        if shingles is not None
-        else scoped_cache(shingle_table(df, id_col, text_col, ngram))
-    )
+    sh = scoped_cache(shingle_table(df, id_col, text_col, ngram))
     if max_df is not None:
         sh = cap_shingles(sh, max_df)
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
@@ -1243,7 +1217,6 @@ def prefix_filter_jaccard_pairs(
     text_col: str = "text",
     ngram: int = 3,
     threshold: float = 0.5,
-    shingles: DataFrame | None = None,
     max_df: int | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard pairs via PPJoin-style PREFIX FILTERING
@@ -1307,11 +1280,7 @@ def prefix_filter_jaccard_pairs(
     (e.g. 0.3*10) and silently shortening the prefix (a missed-pair
     bug); under-shooting alpha only lengthens the prefix, which is
     always safe."""
-    sh = (
-        shingles
-        if shingles is not None
-        else shingle_table(df, id_col, text_col, ngram)
-    )
+    sh = shingle_table(df, id_col, text_col, ngram)
     if max_df is not None:
         sh = cap_shingles(sh, max_df)
     docs, cand = _prefix_docs_and_candidates(sh, threshold)
@@ -1347,18 +1316,13 @@ def prefix_filter_candidates(
     text_col: str = "text",
     ngram: int = 3,
     threshold: float = 0.5,
-    shingles: DataFrame | None = None,
     max_df: int | None = None,
 ) -> DataFrame:
     """Candidate (id_a, id_b) pairs of the prefix-filter join only —
     the observability hook the bench uses to measure how many pairs
     reach verification vs the plain shingle equi-join's candidate
     count (``jaccard_candidates_*`` in BENCH_DETAIL)."""
-    sh = (
-        shingles
-        if shingles is not None
-        else shingle_table(df, id_col, text_col, ngram)
-    )
+    sh = shingle_table(df, id_col, text_col, ngram)
     if max_df is not None:
         sh = cap_shingles(sh, max_df)
     return _prefix_docs_and_candidates(sh, threshold)[1]
@@ -1429,17 +1393,11 @@ def shingle_tf_table(
     return occ.groupBy("id", "s").agg(F.count(F.lit(1)).alias("tf"))
 
 
-def weighted_jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ngram: int = 3,
-    threshold: float = 0.5,
-    tf_table: DataFrame | None = None,
-    max_df: int | None = None,
+def weighted_set_jaccard_pairs(
+    tf: DataFrame, threshold: float = 0.5, max_df: int | None = None
 ) -> DataFrame:
-    """Exact WEIGHTED Jaccard pairs over n-gram term frequencies:
-    J_w(A,B) = Σ_s min(tf_A(s), tf_B(s)) / Σ_s max(tf_A(s), tf_B(s)).
+    """Exact WEIGHTED Jaccard pairs over an (id, s, tf) term-frequency
+    table: J_w(A,B) = Σ_s min(tf_A(s), tf_B(s)) / Σ_s max(tf_A(s), tf_B(s)).
     The standard multiset generalization of set Jaccard ("generalized
     Jaccard", e.g. Ioffe, ICDM 2010 — public): set Jaccard treats a
     phrase pasted 50 times the same as pasted once; the weighted form
@@ -1454,20 +1412,9 @@ def weighted_jaccard_pairs(
     able weight attaches. Same blocking (only docs sharing a shingle
     meet), same ``max_df`` stop-shingle cap semantics (cap first, then
     weights/intersections over the capped space), same scale
-    properties as ``ngram_jaccard_pairs``.
-
-    ``tf_table`` lets a composite pipeline pass a shared (id, s, tf)
-    relation (see shingle_tf_table) so tokenization runs once."""
-    tf = (
-        tf_table
-        if tf_table is not None
-        # r14 (guide §2.4/§5): the plan below consumes ``tf`` from
-        # THREE legs (the weight aggregate + both self-join sides);
-        # uncached, each leg replays the tokenize+explode+groupBy
-        # corpus pass — the same replay bug scoped_cache already
-        # fixes in ngram_jaccard_pairs/ngram_containment_pairs.
-        else scoped_cache(shingle_tf_table(df, id_col, text_col, ngram))
-    )
+    properties as ``set_jaccard_pairs``. The plan reads ``tf`` from
+    three legs (the weight aggregate and both self-join sides), so
+    pass a cached table."""
     if max_df is not None:
         # cap_shingles counts rows per s, which on a (id, s, tf) table
         # IS the document frequency (one row per doc containing s)
@@ -1500,6 +1447,21 @@ def weighted_jaccard_pairs(
         )
         .where(F.col("wjaccard") >= threshold)
     )
+
+
+def weighted_jaccard_pairs(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    ngram: int = 3,
+    threshold: float = 0.5,
+    max_df: int | None = None,
+) -> DataFrame:
+    """Exact weighted n-gram Jaccard: ``weighted_set_jaccard_pairs``
+    over the docs' cached ``shingle_tf_table``. Returns
+    (id_a, id_b, wjaccard), id_a < id_b."""
+    tf = scoped_cache(shingle_tf_table(df, id_col, text_col, ngram))
+    return weighted_set_jaccard_pairs(tf, threshold, max_df)
 
 
 def _capped_tf(tf: DataFrame, tf_cap: int) -> DataFrame:
@@ -1560,8 +1522,6 @@ def weighted_minhash_pairs(
     bands: int = 8,
     threshold: float = 0.5,
     tf_cap: int = 8,
-    tf_table: DataFrame | None = None,
-    truth_pairs: DataFrame | None = None,
 ) -> DataFrame:
     """Weighted near-dup pairs at scale: MinHash over the TF-EXPANDED
     multiset (each shingle s with frequency tf becomes distinct
@@ -1582,29 +1542,13 @@ def weighted_minhash_pairs(
     only approximation — identical in kind to minhash_lsh_pairs.
 
     Returns (id_a, id_b, wjaccard), the capped weighted Jaccard,
-    >= threshold. ``tf_table`` lets a composite pipeline pass a
-    shared (id, s, tf) relation (r13: the weighted eval report
-    tokenizes once for both methods); the caller then owns its
-    persistence.
-
-    ``truth_pairs`` (r13, guide §2.4): same contract as
-    minhash_lsh_pairs — when the caller already holds the exact
-    capped-weighted-Jaccard pair relation at the same threshold over
-    the same tf space (weighted_jaccard_pairs fed the capped tf),
-    the verify becomes candidates ⨝ truth; the output set is
-    identical by definition (an accepted pair has J_w ≥ threshold >
-    0, so it shares a shingle and is in the truth blocking)."""
-    tf = (
-        tf_table
-        if tf_table is not None
-        else scoped_cache(shingle_tf_table(df, id_col, text_col, ngram))
-    )
+    >= threshold. As in minhash_lsh_pairs, the verify accepts exactly
+    the candidates in the exact capped-weighted pair set at the same
+    parameters: that set joined to ``weighted_minhash_candidates``
+    gives the same pair SET."""
+    tf = scoped_cache(shingle_tf_table(df, id_col, text_col, ngram))
     capped = _capped_tf(tf, tf_cap)
     expanded = _tf_expand(capped)
-    if truth_pairs is not None:
-        sig = minhash_signatures(expanded, num_hashes)
-        cand_ids = band_join(_minhash_banded_rows(sig, num_hashes, bands, []))
-        return cand_ids.join(truth_pairs, ["id_a", "id_b"])
     # include_size=True: n = count of expanded rows per doc = Σ ctf =
     # the capped total weight W — the denominator rides the signature
     # groupBy, exactly like the set form's size piggyback

@@ -1582,9 +1582,9 @@ def video_frame_hashes(
     sets would treat it as disjoint. Undecodable frames are skipped
     (skip-don't-kill).
 
-    Output (id, s): ready to feed ``dedup.ngram_jaccard_pairs`` via
-    its ``shingles=`` hook — video near-dup is then literally the
-    document set-similarity machinery over frame features."""
+    Output (id, s): a set table for ``dedup.set_jaccard_pairs`` —
+    video near-dup is then literally the document set-similarity
+    machinery over frame features."""
     import pandas as pd
 
     sampled = videos.select(
@@ -1635,20 +1635,14 @@ def video_near_dup_pairs(
     unrelated videos ~0 — pick the threshold for the family you are
     hunting. Same scale shape as document jaccard: the band-key
     equi-join IS the blocking."""
-    from annotation_service_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-    )
+    from annotation_service_spark.operators.dedup import set_jaccard_pairs
 
     # the band-key table is the expensive half (mapInPandas frame
-    # decode + 32x32 DCT per frame) and ngram_jaccard_pairs consumes a
-    # passed `shingles` table three times (sizes + both self-join
-    # sides) under a caller-owns-persistence contract — scope-cache it
-    # like the image/audio siblings (ADVICE r10)
+    # decode + 32x32 DCT per frame) and set_jaccard_pairs reads it
+    # three times (sizes + both self-join sides) — scope-cache it like
+    # the image/audio siblings (ADVICE r10)
     sh = scoped_cache(video_frame_hashes(videos, id_col, frames_col, every_n))
-    return ngram_jaccard_pairs(
-        videos, id_col=id_col, text_col="unused",
-        threshold=threshold, shingles=sh,
-    )
+    return set_jaccard_pairs(sh, threshold)
 
 
 # --- AVI (RIFF) MJPEG container demux --------------------------------

@@ -5,7 +5,7 @@ The reference's only aggregations are operational metrics
 an analytics engine over 100 TB of events needs the general form: a
 tumbling-window rollup keyed by arbitrary dimensions — the batch
 twin of the Structured Streaming windowed aggregation (the streaming
-side lives in streaming/annotate_stream.py; both share Spark's
+side is streaming/annotate_stream.latency_histogram; both share Spark's
 ``window()`` semantics, so a query moves between them verbatim).
 
 Scale notes:

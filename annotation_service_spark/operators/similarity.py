@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from annotation_service_spark import caching
 from annotation_service_spark.caching import scoped_cache
 from annotation_service_spark.operators.banding import band_join, fingerprint_bands
+from annotation_service_spark.operators.interval import _estimated_bytes
 
 
 def as_double(vec: Column) -> Column:
@@ -342,12 +343,7 @@ def embedding_dup_pairs(
         # when that (over)estimate crosses the threshold do we pay one
         # count() for a precise per-row-bytes estimate before refusing.
         slim = embeddings.select(id_col, vec_col)
-        try:
-            est_bytes = int(
-                str(slim._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-            )
-        except Exception:
-            est_bytes = max_broadcast_bytes + 1  # unknown → verify by count
+        est_bytes = _estimated_bytes(slim)  # unknown → verify by count
         if est_bytes > max_broadcast_bytes:
             n_rows = slim.count()
             est_bytes = n_rows * (dim * 8 + 24)

@@ -1,51 +1,22 @@
-"""Request-stream annotation + streaming operational metrics (ST6, A2).
+"""Streaming operational metrics (A2).
 
-Reference: each HTTP batch is annotated against slowly-changing
-dataset tables (handler/handler.go:194-243); late event-time (old
-request dates) is served by the as-of join over historical snapshots
-— the as-of join IS the late-data story, so the annotate stream
-itself is stateless per micro-batch. Watermarks appear only for the
-event-time metric aggregates (metrics/metrics.go:11-88 analogs).
-
-Spark mapping: ``readStream`` → the SAME batch pipeline (the plan is
-identical; Structured Streaming just re-executes it per micro-batch
-against static broadcast dataset tables) → ``writeStream``. Dataset
+Request-stream annotation (ST6) needs no wrapper: ``plans.annotate.
+annotate`` takes a streaming request DataFrame as it is. Each HTTP
+batch is annotated against slowly-changing dataset tables
+(handler/handler.go:194-243); late event-time (old request dates) is
+served by the as-of join over historical snapshots — the as-of join
+IS the late-data story, so the annotate stream itself is stateless
+per micro-batch, and Structured Streaming re-executes the batch plan
+per micro-batch against static broadcast dataset tables. Dataset
 refresh between micro-batches = swapping the static side (see
-refresh.SnapshotStore).
+refresh.SnapshotStore). Watermarks appear only for the event-time
+metric aggregates here (metrics/metrics.go:11-88 analogs).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..plans.annotate import annotate
-
-
-def annotate_stream(
-    request_stream: DataFrame,
-    geo_ranges: DataFrame,
-    locations: DataFrame,
-    asn_ranges: DataFrame,
-    asnames: DataFrame,
-    ip_col: str = "ip",
-    date_col: str | None = None,
-    registry: DataFrame | None = None,
-) -> DataFrame:
-    """ST6: the batch annotate plan applied to a streaming request
-    DataFrame (stream-static joins + the broadcast binary-search
-    range join, which is stream-safe: mapInPandas over a broadcast
-    table keeps the stream stateless)."""
-    return annotate(
-        request_stream,
-        geo_ranges,
-        locations,
-        asn_ranges,
-        asnames,
-        ip_col=ip_col,
-        date_col=date_col,
-        registry=registry,
-    )
 
 
 def latency_histogram(

@@ -165,6 +165,48 @@ def test_pipeline_full_reads_the_shared_shingles_from_cache(spark):
     assert re.search(r"InMemoryTableScan \[id#\d+L?, s#\d+\]", p), p
 
 
+def _documents_scans(plan) -> int:
+    """Scans of ``documents`` a physical plan runs itself: a cached
+    relation it reads is a leaf, whose own scans are not counted."""
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.inputPlan()
+    leaves = plan.collectLeaves()
+    return sum(
+        "documents.parquet" in leaves.apply(i).simpleString(100)
+        for i in range(leaves.size())
+    )
+
+
+def test_eval_report_shares_the_shingle_cache_by_plan(spark):
+    """No operator is handed the shingle table: the exact, minhash and
+    prefix methods each build the same shingle plan, and the gate
+    registers one cache for it. The caches the gate builds scan
+    ``documents`` once between them (as when the table was passed in
+    by hand), so the other two methods read the first one's cache."""
+    docs = em._t(spark, SF, "documents")
+    shingles = dd.shingle_table(docs, "doc_id", "text", 3)
+    shingles = shingles._jdf.queryExecution().analyzed()
+    manager = spark._jsparkSession.sharedState().cacheManager()
+    caching.release_caches()
+    with caching.scope():
+        em.q_dedup_eval_report(spark, SF)
+        token = caching._stack()[-1]
+        mine = [df for _h, df, owner in caching._live_caches if owner is token]
+        plans = [df._jdf.queryExecution().analyzed() for df in mine]
+        assert sum(p.sameResult(shingles) for p in plans) == 1
+        scans = sum(
+            _documents_scans(
+                manager.lookupCachedData(df._jdf)
+                .get()
+                .cachedRepresentation()
+                .cacheBuilder()
+                .cachedPlan()
+            )
+            for df in mine
+        )
+        assert scans <= 1, scans
+
+
 def test_concurrent_registrations_of_one_plan_share_one_cache(spark):
     """Threads that register the same plan at once get one cache, and
     each thread's scope releases only what that thread registered."""

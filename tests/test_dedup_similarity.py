@@ -77,6 +77,38 @@ def test_ngram_jaccard_finds_near_dup(spark, docs_df):
     assert exact.jaccard == 1.0
 
 
+def test_set_jaccard_pairs_matches_bruteforce(spark):
+    """The table-level form over a hand-built (id, s) set table equals
+    a brute-force Jaccard over every id pair: same pairs, same
+    doubles (common / (na + nb - common))."""
+    import itertools
+    import random
+
+    rng = random.Random(11)
+    sets = {
+        i: {f"e{rng.randrange(12)}" for _ in range(rng.randrange(1, 9))}
+        for i in range(25)
+    }
+    sets[40] = set(sets[3])  # an exact twin
+    sets[41] = {"lonely"}  # shares nothing
+    sh = spark.createDataFrame(
+        [(i, s) for i, elems in sets.items() for s in sorted(elems)],
+        "id long, s string",
+    )
+    got = {
+        (r.id_a, r.id_b): r.jaccard
+        for r in dd.set_jaccard_pairs(sh, threshold=0.3).collect()
+    }
+    want = {}
+    for (i, a), (j, b) in itertools.combinations(sorted(sets.items()), 2):
+        common = len(a & b)
+        v = common / (len(a) + len(b) - common)
+        if v >= 0.3:
+            want[(i, j)] = v
+    assert got == want
+    assert got[(3, 40)] == 1.0 and all(41 not in p for p in got)
+
+
 def test_minhash_lsh_agrees_with_exact(spark, docs_df):
     """Differential: LSH candidates that verify ≥ threshold must be a
     subset of exact pairs; with these few docs, recall is total."""
@@ -814,9 +846,9 @@ def test_weighted_jaccard_exact_vs_bruteforce(spark):
 
 
 def test_weighted_jaccard_max_df_and_tf_table(spark):
-    """The max_df stop-shingle cap and the shared tf_table path must
-    agree with the direct form (cap semantics: weights and
-    intersections both computed over the df <= max_df space)."""
+    """The max_df stop-shingle cap of the operator must agree with the
+    table-level form over an uncached tf table (cap semantics: weights
+    and intersections both computed over the df <= max_df space)."""
     boiler = " common boilerplate phrase here"
     rows = [
         (i, f"doc {i} unique words number {i * 3}" + boiler * 2)
@@ -830,8 +862,8 @@ def test_weighted_jaccard_max_df_and_tf_table(spark):
     tf = dd.shingle_tf_table(df, "doc_id", "text", 3)
     shared = {
         (r.id_a, r.id_b): r.wjaccard
-        for r in dd.weighted_jaccard_pairs(
-            df, threshold=0.1, max_df=5, tf_table=tf
+        for r in dd.weighted_set_jaccard_pairs(
+            tf, threshold=0.1, max_df=5
         ).collect()
     }
     assert direct == shared

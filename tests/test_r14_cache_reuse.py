@@ -30,8 +30,9 @@ def _docs(spark, n=40):
 
 
 def test_weighted_jaccard_cached_tf_matches_explicit_tf(spark):
-    """The internally-cached tf path must equal the caller-supplied
-    (uncached) tf_table path — same relation, same pairs."""
+    """The operator's internally-cached tf path must equal the
+    table-level form over an uncached tf table — same relation, same
+    pairs."""
     caching.release_caches()
     docs = _docs(spark)
     via_cache = {
@@ -40,13 +41,11 @@ def test_weighted_jaccard_cached_tf_matches_explicit_tf(spark):
     }
     assert caching.live_cache_count() >= 1  # the tf cache registered
     tf = dd.shingle_tf_table(docs, "doc_id", "text", 3)
-    via_param = {
+    via_table = {
         (r.id_a, r.id_b, round(r.wjaccard, 9))
-        for r in dd.weighted_jaccard_pairs(
-            docs, threshold=0.2, tf_table=tf
-        ).collect()
+        for r in dd.weighted_set_jaccard_pairs(tf, threshold=0.2).collect()
     }
-    assert via_cache == via_param and via_cache
+    assert via_cache == via_table and via_cache
     caching.release_caches()
 
 

@@ -10,6 +10,7 @@ from pyspark.sql import types as T
 
 from annotation_service_spark.functions import ip as ipf
 from annotation_service_spark.operators.interval import flatten_intervals
+from annotation_service_spark.plans.annotate import annotate
 from annotation_service_spark.sources import dims, geolite2, routeviews
 from annotation_service_spark.streaming import refresh as rf
 from annotation_service_spark.streaming import annotate_stream as astream
@@ -92,7 +93,7 @@ def test_annotate_request_stream(spark, tmp_path, fixture_dir):  # noqa: F811
     reqs.write.parquet(str(req_dir))
 
     stream = spark.readStream.schema("ip string").parquet(str(req_dir))
-    out = astream.annotate_stream(stream, geo_ranges, locs, asn_ranges, names)
+    out = annotate(stream, geo_ranges, locs, asn_ranges, names)
     assert out.isStreaming
 
     q = (
