@@ -32,8 +32,12 @@ long-typed bounds and used for DuckDB-oracle differential checks.
 ``range_join_broadcast`` is the QUERY-SIDE hot path: the build table
 is small (≤ a few GB), the probe side is the 100 TB stream, so the
 scalable plan is a BROADCAST of the sorted ranges + a vectorized binary
-search per Arrow batch (np.searchsorted, O(log n) per probe, zero
-shuffle) — the distributed analog of the reference's in-memory search.
+search per Arrow batch (np.searchsorted, O(log n) per probe, no shuffle
+of a probe stream) — the distributed analog of the reference's
+in-memory search. A small probe plan that is split into a few
+partitions (a request frame) is rebalanced first, so AQE runs the
+kernel in as few Python tasks as its bytes need
+(``partitioning.rebalance_for_python``).
 One ``mapInPandas`` serves a whole request: it parses the IP text,
 searches several range tables (one sorted array per snapshot key), and
 maps payload values through dimension builds (a sorted key array plus
@@ -68,6 +72,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.ip import parse_ip_series
+from ..partitioning import rebalance_for_python
 
 # ---------------------------------------------------------------------------
 # numpy helpers on big-endian fixed-width byte bounds ('S16' / 'S8')
@@ -484,11 +489,19 @@ def range_join_broadcast(
 
     ``ranges`` (sorted disjoint per key group) is collected and
     broadcast to every executor; each probe Arrow batch does
-    np.searchsorted — O(log n) per probe, NO shuffle of the 100 TB
-    probe side, no Python-per-row cost. This is the plan a
-    1000-executor cluster wants whenever the build table fits in
-    executor memory (MaxMind snapshots do: ~4M rows ≪ broadcast
+    np.searchsorted — O(log n) per probe, no Python-per-row cost. This
+    is the plan a 1000-executor cluster wants whenever the build table
+    fits in executor memory (MaxMind snapshots do: ~4M rows ≪ broadcast
     limits).
+
+    The probe side is shuffled only when its plan is a batch plan with
+    no Exchange or cache that splits into more than one and at most
+    ``defaultParallelism`` partitions: it then gets one round-robin
+    ``rebalance``, which AQE coalesces by bytes, so a request of a few
+    hundred IPs runs the kernel in one Python task instead of one per
+    slice (``partitioning.rebalance_for_python`` holds the cost model).
+    A probe stream with more splits than cores, a streaming probe and a
+    probe already behind an exchange keep their partitioning.
 
     Several tables, one crossing: ``ranges`` may also be a sequence of
     ``(table, payload)`` pairs (``payload`` then stays empty). Every
@@ -533,8 +546,8 @@ def range_join_broadcast(
 
     ``keys``: optional equi-join columns shared by probes and ranges
     (e.g. ``dataset_date`` after an as-of join) — the broadcast holds
-    one sorted array per key group, composing J2∘J1 without any
-    probe-side shuffle.
+    one sorted array per key group, composing J2∘J1 without a
+    key-partitioned shuffle of the probes.
 
     Misses keep NULL payloads (how='left') or are dropped ('inner'),
     mirroring ErrNodeNotFound handling (geolite2v2/geo-ip.go:162).
@@ -709,7 +722,7 @@ def range_join_broadcast(
                         out = out[out[pl[0]].notna()]
             yield out
 
-    return probes.mapInPandas(lookup, out_schema)
+    return rebalance_for_python(probes).mapInPandas(lookup, out_schema)
 
 
 def range_join_bucketed(

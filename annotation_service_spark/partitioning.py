@@ -32,6 +32,11 @@ deserializing the broadcast ranges; the GEMM top-k: per-partition
 candidate fan-out grows with partition count) LOSE more than the
 exchange costs. The operator knows whether its per-row work is heavy;
 the reader does not.
+
+The fused range join's cost is per TASK, not per row, so it gets the
+opposite rule, ``rebalance_for_python``, which lets AQE size its
+Python input by bytes (usually to fewer tasks, never to more than the
+bytes call for). Both rules read the same plan and run no job.
 """
 
 from __future__ import annotations
@@ -75,6 +80,23 @@ def _planned_partitions(plan) -> int:
     return max(counts)
 
 
+def _unsettled_partitions(df: DataFrame) -> int | None:
+    """The planned partition count of ``df``'s narrow chain, or None
+    when the plan is not the scan's business (streaming, cached, an
+    Exchange or in-memory scan inside) or fails to plan."""
+    if df.isStreaming or is_cached(df):
+        return None
+    try:
+        plan = df._jdf.queryExecution().executedPlan()
+        if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            plan = plan.executedPlan()  # the initial plan until it runs
+        if _is_settled(plan):
+            return None
+        return _planned_partitions(plan)
+    except Py4JError:  # planning failure — never block the data path
+        return None
+
+
 def spread_underparallel(df: DataFrame) -> DataFrame:
     """Round-robin repartition ``df`` to the session's default
     parallelism iff its planned partition count is at least
@@ -82,18 +104,44 @@ def spread_underparallel(df: DataFrame) -> DataFrame:
     plan rule). Content-neutral (sort-before-repartition keeps the
     assignment deterministic under task retry); cost when it fires
     is one exchange of at most (splits x maxPartitionBytes)."""
-    if df.isStreaming or is_cached(df):
-        return df
-    try:
-        plan = df._jdf.queryExecution().executedPlan()
-        if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-            plan = plan.executedPlan()  # the initial plan until it runs
-        if _is_settled(plan):
-            return df
-        n = _planned_partitions(plan)
-        target = df.sparkSession.sparkContext.defaultParallelism
-    except Py4JError:  # planning failure — never block the data path
-        return df
-    if n * _FACTOR <= target:
+    n = _unsettled_partitions(df)
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if n is not None and n * _FACTOR <= target:
         return df.repartition(target)
+    return df
+
+
+def rebalance_for_python(df: DataFrame) -> DataFrame:
+    """``df`` under one ``rebalance`` hint iff its plan is unsettled (as
+    for ``spread_underparallel``) and plans more than one but at most
+    ``defaultParallelism`` partitions; otherwise ``df`` as it is.
+
+    For the input of a Python crossing (``mapInPandas``) whose kernel is
+    cheap. Cost model, per crossing over n input partitions:
+
+    - each Python task pays a fixed start cost c_task before its first
+      batch (on a 4-core host with Python 3.11, 150-180 ms: PySpark's
+      worker ``setup_spark_files`` calls ``importlib.invalidate_caches()``,
+      which re-reads the zip directory of ``pyspark.zip`` and the
+      spark-core jar on every task), against 3-15 ms of kernel work for
+      a few hundred rows;
+    - unbalanced, the crossing costs n x c_task of CPU; at n <= cores
+      those tasks run in one wave, so that CPU is taken from whatever
+      runs beside the request (other requests, refresh streams);
+    - rebalanced, AQE coalesces the round-robin exchange by bytes
+      (``parallelismFirst``: max(1 MiB, min(advisory size, bytes /
+      cores)) per partition), so a request of a few hundred rows runs
+      the kernel in ONE task, and m tasks remain only when the bytes
+      fill m such partitions. The exchange costs the upstream stage one
+      shuffle write of the probe bytes and the action one more job.
+
+    So it pays when n > 1 and the input is small, and is skipped where
+    it cannot: one partition is already one task; more partitions than
+    cores are a probe stream whose scan splits already fill every core,
+    and shuffling it would cost more than the task starts it saves. No
+    job runs; sort-before-repartition keeps the round robin retry-stable.
+    """
+    n = _unsettled_partitions(df)
+    if n is not None and 1 < n <= df.sparkSession.sparkContext.defaultParallelism:
+        return df.hint("rebalance")
     return df

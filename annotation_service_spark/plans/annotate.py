@@ -24,7 +24,8 @@ searches and two map lookups against datasets loaded once
 asn/asn-annotator.go:82-86, directory/directory.go:230-240). A warm
 request plans as
 
-    request scan → as-of projection → ONE mapInPandas → struct projection
+    request scan → as-of projection → (rebalance) → ONE mapInPandas
+      → struct projection
 
 and nothing that does not depend on the request is planned again:
 
@@ -42,10 +43,14 @@ and nothing that does not depend on the request is planned again:
 - the ``geo`` and ``network`` struct Columns name columns only and are
   built once per JVM.
 
-No probe-side shuffle and no per-request join or broadcast. The
-dimensions stay normalized (``build_geo_ranges``): denormalizing them
-into ~4M range rows per real snapshot would multiply the broadcast
-bytes. Tables whose size estimate exceeds the broadcast gate are
+No per-request join or broadcast, and no probe shuffle by key. The
+request frame reaches the mapInPandas through one round-robin
+rebalance when it is split into several slices (a list-built frame is
+one slice per core); AQE coalesces it by bytes, so a request of a few
+hundred IPs runs the kernel in one Python task
+(``partitioning.rebalance_for_python``). The dimensions stay
+normalized (``build_geo_ranges``): denormalizing them into ~4M range
+rows per real snapshot would multiply the broadcast bytes. Tables whose size estimate exceeds the broadcast gate are
 instead pruned per request to the snapshots the probes reference.
 """
 

@@ -155,10 +155,15 @@ def test_v2_response_document(spark, tables):
 
 def test_annotate_plan_has_no_probe_shuffle(spark, tables):
     """Scale contract of the flagship path: the probe stream flows
-    scan → mapInPandas (broadcast range join) → broadcast dim joins →
-    project with NO shuffle Exchange anywhere — dims ride
-    BroadcastExchange only. This is the property that makes the plan
-    hold at 100 TB of probes."""
+    scan → mapInPandas (broadcast range join, dimension lookups inside)
+    → project with no hash or range Exchange — nothing is shuffled by
+    key. The probe side is shuffled only when its batch plan has no
+    Exchange or cache and splits into 2..defaultParallelism partitions
+    (a list-built request is one slice per core): one round-robin
+    rebalance that AQE coalesces by bytes, so the kernel runs in as few
+    Python tasks as the request needs. A probe stream with more splits
+    than cores keeps its scan partitioning. This is the property that
+    makes the plan hold at 100 TB of probes."""
     geo_ranges, locations, asn_ranges, asnames = tables
     requests = spark.createDataFrame(
         [("1.0.0.5",), ("8.8.8.8",)], "ip string"
@@ -167,3 +172,52 @@ def test_annotate_plan_has_no_probe_shuffle(spark, tables):
     ptxt = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange hashpartitioning" not in ptxt
     assert "Exchange rangepartitioning" not in ptxt
+
+
+def test_request_kernel_runs_in_one_python_task(spark, tables):
+    """A request of 300 IPs split one slice per core runs its
+    mapInPandas kernel in ONE Python task: the probe side gets a
+    round-robin rebalance that AQE coalesces by bytes. Built from a
+    list (an RDD scan) or from a pandas frame (a LocalTableScan), it
+    answers with the document of the same request in one slice."""
+    import json
+
+    import pandas as pd
+
+    geo_ranges, locs, asn_ranges, names = tables
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    rows = [(f"1.0.{k // 25}.{k % 25}",) for k in range(300)]
+
+    def annotate(req):
+        return plan.annotate(req, geo_ranges, locs, asn_ranges, names)
+
+    def document(out):
+        return json.loads(plan.to_v2_response_document(out).collect()[0].response_json)
+
+    def kernel_tasks(out) -> int:
+        """Tasks of the stage running ``out``'s MapInPandas: no Exchange
+        is above it, so that is the action's result stage, the newest
+        stage of its last job."""
+        p = out._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in p[: p.index("MapInPandas")], p
+        bus.waitUntilEmpty()
+        before = set(sc.statusTracker().getJobIdsForGroup(None))
+        out.collect()
+        bus.waitUntilEmpty()
+        last = max(set(sc.statusTracker().getJobIdsForGroup(None)) - before)
+        stage = max(sc.statusTracker().getJobInfo(last).stageIds)
+        return sc.statusTracker().getStageInfo(stage).numTasks
+
+    expected = document(annotate(spark.createDataFrame(rows, "ip string").coalesce(1)))
+    assert len(expected["Annotations"]) == 300
+    assert expected["Annotations"]["1.0.0.5"]["geo"]["country_code"] == "AU"
+    assert expected["Annotations"]["1.0.5.9"]["network"]["as_number"] == 38803
+    frames = {
+        "list": spark.createDataFrame(rows, "ip string"),
+        "pandas": spark.createDataFrame(pd.DataFrame(rows, columns=["ip"]), "ip string"),
+    }
+    for form, req in frames.items():
+        out = annotate(req)
+        assert kernel_tasks(out) == 1, form
+        assert document(out) == expected, form

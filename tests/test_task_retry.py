@@ -5,7 +5,13 @@ per failure), and ``sentence_dedup`` (a plan-decided spread site),
 ``annotate`` request on a ``SnapshotStore`` of parquet-published tables
 (the ``range_join_broadcast`` memo and the one-crossing Arrow kernel)
 must return the rows of a failure-free run in the same session. The
-subprocess is this module: ``python -m tests.test_task_retry FIXTURES OUT``.
+request also fails the first attempt of every task after the
+round-robin rebalance below its kernel, so tasks on both sides of that
+exchange retry. (A retried map task assigns its rows round-robin as
+before: Spark sorts them first, ``spark.sql.execution.sortBeforeRepartition``,
+on by default. Here the request's rows also arrive in a fixed order,
+so the run does not depend on that sort.) The subprocess is this module:
+``python -m tests.test_task_retry FIXTURES OUT``.
 """
 
 from __future__ import annotations
@@ -115,8 +121,9 @@ def main(fixtures: str, out: pathlib.Path) -> None:
         compare(gate, lambda: fn(spark, SF), flaky_gate)
     request = _annotate_request(spark, fixtures, out)
     request().collect()  # warm-up: builds both published tables once
+    markers = out / "annotate_warm"
     compare("annotate_warm", request,
-            lambda: request(lambda df: _flaky(df, out / "annotate_warm")))
+            lambda: _flaky(request(lambda df: _flaky(df, markers)), markers))
     (out / "report.json").write_text(json.dumps(report))
     spark.stop()
 
