@@ -120,10 +120,12 @@ def rebalance_for_python(df: DataFrame) -> DataFrame:
     cheap. Cost model, per crossing over n input partitions:
 
     - each Python task pays a fixed start cost c_task before its first
-      batch (on a 4-core host with Python 3.11, 150-180 ms: PySpark's
-      worker ``setup_spark_files`` calls ``importlib.invalidate_caches()``,
-      which re-reads the zip directory of ``pyspark.zip`` and the
-      spark-core jar on every task), against 3-15 ms of kernel work for
+      batch (on a 4-core host with Python 3.11, 150-180 ms under
+      PySpark's own worker: its ``setup_spark_files`` calls
+      ``importlib.invalidate_caches()``, which re-reads the zip directory
+      of ``pyspark.zip`` and the spark-core jar on every task;
+      ``session.get_session``'s worker entry drops those re-reads, the
+      task's fork and set-up remain), against 3-15 ms of kernel work for
       a few hundred rows;
     - unbalanced, the crossing costs n x c_task of CPU; at n <= cores
       those tasks run in one wave, so that CPU is taken from whatever

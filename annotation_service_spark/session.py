@@ -19,6 +19,10 @@ from pyspark.sql import SparkSession
 # N threads with F task attempts; the partition default takes N
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32").split(",")[0])
 
+# holds pyspark_graft_worker.py and nothing else: the whole directory
+# goes on the Python workers' PYTHONPATH
+WORKER_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "pyworker")
+
 
 def ensure_shipped(spark: SparkSession) -> None:
     """Ship this package to executor Python workers via addPyFile.
@@ -72,6 +76,13 @@ def get_session(
     total cores on a real cluster; AQE coalesces down from there.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    conf = dict(extra_conf or {})
+    # a caller's worker path is kept beside the entry's directory, not
+    # in place of it: without the directory the daemon cannot import
+    # the worker module and every Python task fails
+    python_path = os.pathsep.join(
+        p for p in (WORKER_DIR, conf.pop("spark.executorEnv.PYTHONPATH", "")) if p
+    )
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -94,6 +105,17 @@ def get_session(
         # carry the OOM risk; this one does not have it.
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Every Python task calls importlib.invalidate_caches(), and on
+        # Python 3.11 that re-reads the directory of each of the ~16
+        # zip importers on the worker's path: 150-180 ms per task before
+        # its kernel runs. This entry re-reads a zip only when its stat
+        # changed (4 cores: a 40-task mapInPandas 2.0-2.2 s -> 0.8-0.9 s;
+        # docs/SCALE.md "The shipped worker entry" has the rest).
+        .config("spark.python.worker.module", "pyspark_graft_worker")
+        # The daemon imports the entry before any task runs, so its
+        # directory must be on the workers' PYTHONPATH; addPyFile
+        # arrives only with a task, too late.
+        .config("spark.executorEnv.PYTHONPATH", python_path)
         .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         # Split the broadcast budget between the two planners (r10,
@@ -142,7 +164,7 @@ def get_session(
         .config("spark.ui.retainedStages", "200")
         .config("spark.ui.retainedTasks", "5000")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
