@@ -227,18 +227,6 @@ def ip6to4(ip_bytes: Column) -> Column:
     return F.when(h.startswith("2002"), F.unhex(embedded_v4_hex)).otherwise(ip_bytes)
 
 
-def ipv4_to_long(ip_text: Column) -> Column:
-    """Dotted-quad text → uint32 as LongType, pure SQL (for
-    oracle-comparable queries and /26 masking)."""
-    p = F.split(ip_text, r"\.")
-    return (
-        p.getItem(0).cast("long") * F.lit(16777216)
-        + p.getItem(1).cast("long") * F.lit(65536)
-        + p.getItem(2).cast("long") * F.lit(256)
-        + p.getItem(3).cast("long")
-    )
-
-
 def long_to_ipv4(v: Column) -> Column:
     """uint32 long → dotted quad, pure SQL."""
     return F.concat_ws(
@@ -256,13 +244,6 @@ def bytes16_to_v4_long(ip_bytes: Column) -> Column:
     return F.when(
         is_v4(ip_bytes),
         F.conv(F.substring(F.hex(ip_bytes), 25, 8), 16, 10).cast("long"),
-    )
-
-
-def v4_long_to_bytes16(v: Column) -> Column:
-    """uint32 long → canonical v4-mapped 16 bytes. Native: hex pad."""
-    return F.unhex(
-        F.concat(F.lit(V4_MAPPED_PREFIX_HEX), F.lpad(F.hex(v), 8, "0"))
     )
 
 

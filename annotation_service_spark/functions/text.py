@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.dedup import token_grams, tokens, word_ngrams
+from ..operators.dedup import token_grams, tokens
 
 # tiny per-language stopword profiles (deterministic heuristic)
 LANG_PROFILES: dict[str, list[str]] = {
@@ -202,19 +202,6 @@ def lang_id_table(df, id_col: str = "doc_id", text_col: str = "text"):
         best_lang = F.when(is_better, F.lit(lang)).otherwise(best_lang)
         best_score = F.when(is_better, F.col(f"s_{lang}")).otherwise(best_score)
     return scores.select("id", best_lang.alias("pred_lang"))
-
-
-def doc_fingerprint(text: Column, ngram: int = 5) -> Column:
-    """Winnowing-style content fingerprint: the minimum md5 over word
-    n-gram shingles (robust to reordering of distant content, stable
-    under small edits away from the minimal shingle). Falls back to
-    md5 of the normalized text for very short docs."""
-    shingles = word_ngrams(text, ngram)
-    normalized = F.concat_ws(" ", tokens(text))
-    return F.coalesce(
-        F.array_min(F.transform(shingles, lambda s: F.md5(s))),
-        F.md5(normalized),
-    )
 
 
 # --- PII scrubbing (training-data hygiene) ---------------------------------

@@ -181,20 +181,6 @@ def connected_components(
     return labels.select("id", F.col("comp").alias("cluster_id"))
 
 
-def dedup_keep_decision(
-    pairs: DataFrame,
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-) -> DataFrame:
-    """(id, cluster_id, keep) — keep is true only for the canonical
-    (smallest-id) member of each near-dup cluster. Left-join this
-    onto the corpus and filter ``keep IS NULL OR keep`` to apply."""
-    comp = connected_components(pairs, src_col, dst_col)
-    return comp.select(
-        "id", "cluster_id", (F.col("id") == F.col("cluster_id")).alias("keep")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Fixed-point distributed k-means (Lloyd)
 # ---------------------------------------------------------------------------
@@ -218,7 +204,7 @@ def dedup_keep_decision(
 #   iteration — ~7 s/pass of pure compile at k·dim=512 — and the
 #   tree duplicates under argmin. The numpy kernel is the same exact
 #   integer arithmetic without the compile cliff, and has no k·dim
-#   ceiling. `_assign_cols` keeps the expression form as a
+#   ceiling. tests/test_kmeans.py keeps the expression form as a
 #   differential witness.)
 # - only k·dim integers hit the driver per iteration (the new
 #   centroids); the division (floored, exact) happens driver-side in
@@ -237,42 +223,6 @@ def _quantized(embeddings: DataFrame, vec_col: str, id_col: str, scale: int) -> 
             vec_col, lambda x: F.floor(x.cast("double") * F.lit(scale)).cast("long")
         ).alias("qv"),
     )
-
-
-def _assign_cols(centroids: list[list[int]], unroll_budget: int = 8192):
-    """(cluster, dist) columns: argmin over exact integer squared
-    distances, first-min tie-break (array_position finds the FIRST
-    occurrence). The per-centroid distance is an unrolled positional
-    expression — whole-stage codegen, no interpreted HOFs on the
-    per-row hot path. Past ``unroll_budget`` total terms (large
-    k·dim) the expression tree would stress Janino's method-size
-    limits, so it switches to the HOF aggregate form — same exact
-    values, interpreted evaluation."""
-    k = len(centroids)
-    dim = len(centroids[0])
-    dists = []
-    if k * dim > unroll_budget:
-        for c in centroids:
-            carr = F.array(*[F.lit(int(ci)).cast("long") for ci in c])
-            dists.append(
-                F.aggregate(
-                    F.zip_with(F.col("qv"), carr, lambda x, y: (x - y) * (x - y)),
-                    F.lit(0).cast("long"),
-                    lambda acc, v: acc + v,
-                )
-            )
-    else:
-        for c in centroids:
-            d = None
-            for i, ci in enumerate(c):
-                t = (F.col("qv")[i] - F.lit(int(ci))) * (
-                    F.col("qv")[i] - F.lit(int(ci))
-                )
-                d = t if d is None else d + t
-            dists.append(d)
-    darr = F.array(*dists)
-    cluster = (F.array_position(darr, F.array_min(darr)) - 1).cast("int")
-    return cluster.alias("c"), F.array_min(darr).alias("dist")
 
 
 def _np_assign(centroids: list[list[int]], qv_series) -> tuple:

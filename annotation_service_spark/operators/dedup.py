@@ -366,208 +366,6 @@ def shared_passage_anchors(
     )
 
 
-def _merge_cap_split_runs(
-    pieces: DataFrame, grams: DataFrame, k: int, merge_gap_limit: int
-) -> DataFrame:
-    """Merge run pieces that a ``max_df`` stop-gram cap split apart:
-    two pieces on the same (id_a, id_b, diagonal) merge iff EVERY
-    anchor position in the gap between them carries the SAME k-gram
-    in both documents (it was dropped by the cap, not a true
-    mismatch). Verification is an equi-join on (id, pos) against the
-    UNCAPPED gram table — per position, so the hot gram's corpus-wide
-    fan-out never re-enters; cost is bounded by (adjacent piece
-    pairs) x (gap length <= merge_gap_limit). Merging is applied
-    along chains (gaps-and-islands over verified adjacencies)."""
-    w = Window.partitionBy("id_a", "id_b", "diag").orderBy("start_a")
-    p = pieces.withColumn("rn", F.row_number().over(w))
-    nxt = p.select(
-        "id_a", "id_b", "diag",
-        (F.col("rn") - 1).alias("rn"),
-        F.col("start_a").alias("next_start_a"),
-    )
-    adj = (
-        p.select(
-            "id_a", "id_b", "diag", "rn",
-            (F.col("start_a") + F.col("length") - k).alias("end_a"),
-        )
-        .join(nxt, ["id_a", "id_b", "diag", "rn"])
-        .withColumn("gap", F.col("next_start_a") - F.col("end_a") - 1)
-        .where((F.col("gap") >= 1) & (F.col("gap") <= merge_gap_limit))
-    )
-    gappos = adj.select(
-        "id_a", "id_b", "diag", "rn", "gap",
-        F.explode(
-            F.sequence(F.col("end_a") + 1, F.col("next_start_a") - 1)
-        ).alias("ga_pos"),
-    ).withColumn("gb_pos", F.col("ga_pos") - F.col("diag"))
-    ga = grams.select(
-        F.col("id").alias("id_a"),
-        F.col("pos").alias("ga_pos"),
-        F.col("gh").alias("gh_a"),
-    )
-    gb = grams.select(
-        F.col("id").alias("id_b"),
-        F.col("pos").alias("gb_pos"),
-        F.col("gh").alias("gh_b"),
-    )
-    verified = (
-        gappos.join(ga, ["id_a", "ga_pos"])
-        .join(gb, ["id_b", "gb_pos"])
-        .where(F.col("gh_a") == F.col("gh_b"))
-        .groupBy("id_a", "id_b", "diag", "rn")
-        .agg(F.count(F.lit(1)).alias("n_ok"), F.first("gap").alias("gap"))
-        .where(F.col("n_ok") == F.col("gap"))
-        .select("id_a", "id_b", "diag", (F.col("rn") + 1).alias("rn"))
-        .withColumn("cont", F.lit(1))
-    )
-    chained = p.join(verified, ["id_a", "id_b", "diag", "rn"], "left")
-    mgrp = F.sum(
-        F.when(F.col("cont").isNull(), 1).otherwise(0)
-    ).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    return (
-        chained.withColumn("mgrp", mgrp)
-        .groupBy("id_a", "id_b", "diag", "mgrp")
-        .agg(
-            F.min("start_a").alias("start_a"),
-            F.min("start_b").alias("start_b"),
-            (
-                F.max(F.col("start_a") + F.col("length"))
-                - F.min(F.col("start_a"))
-            ).alias("length"),
-        )
-        .select("id_a", "id_b", "diag", "start_a", "start_b", "length")
-    )
-
-
-def _extend_run_endpoints(
-    pieces: DataFrame, grams: DataFrame, k: int, limit: int
-) -> DataFrame:
-    """Extend run endpoints that a ``max_df`` cap TRUNCATED: a beyond-
-    cap gram at the very edge of a true run drops its anchors, so the
-    capped run starts late / ends early. Each endpoint extends
-    outward while the gram at the next position verifies equal in
-    both documents (per-(id, pos) equi-join against the uncapped gram
-    table, like the merge pass) — any matched extension position is
-    necessarily a capped gram, since a sub-cap match would already be
-    an anchor of the island.
-
-    Runs stay disjoint by construction: this pass runs AFTER
-    ``_merge_cap_split_runs``, so a surviving same-diagonal gap
-    <= ``limit`` contains at least one verified mismatch — the two
-    facing extensions stop at it from either side and cannot meet.
-    A gap > ``limit`` was never merge-verified, so each side is
-    additionally bounded to half the gap; exactness there (and for a
-    hot edge region longer than ``limit``) is the documented bounded-
-    restoration caveat — raise ``merge_gap_limit`` if it matters."""
-    w = Window.partitionBy("id_a", "id_b", "diag").orderBy("start_a")
-    base = (
-        pieces.withColumn("end_a", F.col("start_a") + F.col("length") - k)
-        .withColumn(
-            "gap_prev", F.col("start_a") - F.lag("end_a").over(w) - 1
-        )
-        .withColumn(
-            "gap_next", F.lead("start_a").over(w) - F.col("end_a") - 1
-        )
-    )
-
-    def side_limit(gap):
-        return (
-            F.when(gap.isNull(), F.lit(limit))
-            .when(gap <= limit, F.least(F.lit(limit), gap))
-            .otherwise(
-                F.least(F.lit(limit), F.floor((gap - 1) / 2).cast("long"))
-            )
-        )
-
-    base = base.withColumn("lim_l", side_limit(F.col("gap_prev"))).withColumn(
-        "lim_r", side_limit(F.col("gap_next"))
-    )
-    keys = ["id_a", "id_b", "diag", "start_a"]
-
-    # candidate extension positions, both sides in one pass
-    cand = base.where((F.col("lim_l") >= 1) | (F.col("lim_r") >= 1)).select(
-        *keys, "end_a", "lim_l", "lim_r"
-    )
-    left = (
-        cand.where(F.col("lim_l") >= 1)
-        .select(
-            *keys, F.col("lim_l").alias("lim"),
-            F.explode(
-                F.sequence(F.lit(1), F.col("lim_l").cast("int"))
-            ).alias("d"),
-        )
-        .withColumn("ga_pos", F.col("start_a") - F.col("d"))
-        .withColumn("side", F.lit("L"))
-    )
-    right = (
-        cand.where(F.col("lim_r") >= 1)
-        .select(
-            *keys, "end_a", F.col("lim_r").alias("lim"),
-            F.explode(
-                F.sequence(F.lit(1), F.col("lim_r").cast("int"))
-            ).alias("d"),
-        )
-        .withColumn("ga_pos", F.col("end_a") + F.col("d"))
-        .withColumn("side", F.lit("R"))
-        .drop("end_a")
-    )
-    allc = left.unionByName(right).withColumn(
-        "gb_pos", F.col("ga_pos") - F.col("diag")
-    )
-    ga = grams.select(
-        F.col("id").alias("id_a"),
-        F.col("pos").alias("ga_pos"),
-        F.col("gh").alias("gh_a"),
-    )
-    gb = grams.select(
-        F.col("id").alias("id_b"),
-        F.col("pos").alias("gb_pos"),
-        F.col("gh").alias("gh_b"),
-    )
-    ext = (
-        allc.join(ga, ["id_a", "ga_pos"], "left")
-        .join(gb, ["id_b", "gb_pos"], "left")
-        .withColumn(
-            "ok",
-            F.coalesce(F.col("gh_a") == F.col("gh_b"), F.lit(False)),
-        )
-        .groupBy(*keys, "side")
-        .agg(
-            (
-                F.coalesce(
-                    F.min(F.when(~F.col("ok"), F.col("d"))),
-                    F.first("lim") + 1,
-                )
-                - 1
-            ).alias("ext")
-        )
-    )
-    ext_l = ext.where(F.col("side") == "L").select(
-        *keys, F.col("ext").alias("ext_l")
-    )
-    ext_r = ext.where(F.col("side") == "R").select(
-        *keys, F.col("ext").alias("ext_r")
-    )
-    return (
-        pieces.join(ext_l, keys, "left")
-        .join(ext_r, keys, "left")
-        .select(
-            "id_a", "id_b", "diag",
-            (F.col("start_a") - F.coalesce("ext_l", F.lit(0))).alias(
-                "start_a"
-            ),
-            (F.col("start_b") - F.coalesce("ext_l", F.lit(0))).alias(
-                "start_b"
-            ),
-            (
-                F.col("length")
-                + F.coalesce("ext_l", F.lit(0))
-                + F.coalesce("ext_r", F.lit(0))
-            ).alias("length"),
-        )
-    )
-
-
 def shared_passages(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -575,9 +373,6 @@ def shared_passages(
     k: int = 8,
     min_tokens: int | None = None,
     max_df: int | None = 1000,
-    merge_cap_splits: bool = False,
-    merge_gap_limit: int = 256,
-    extend_cap_edges: bool = False,
 ) -> DataFrame:
     """MAXIMAL shared token runs between document pairs, with
     positions — the pairwise evidence form of exact-substring dedup
@@ -605,26 +400,9 @@ def shared_passages(
     key fan-out. Capping splits runs THROUGH a beyond-cap gram (the
     run reports as two shorter runs) — maximality is exact for runs
     whose interior grams stay under the cap, the same honesty note as
-    every capped pair family here. ``merge_cap_splits=True`` (off by
-    default) restores exact maximality for cap-split INTERIORS: see
-    ``_merge_cap_split_runs`` — pieces whose gap grams verify equal
-    in both documents re-merge, so boilerplate mining over hot-phrase
-    corpora reports whole runs. ``extend_cap_edges=True`` (requires
-    ``merge_cap_splits``) additionally restores run ENDPOINTS a hot
-    EDGE gram truncated — see ``_extend_run_endpoints`` — making
-    capped output exactly the uncapped maximal runs whenever every
-    hot region touching a run is <= ``merge_gap_limit`` grams and the
-    run retains at least one sub-cap anchor (an ENTIRELY-hot run has
-    no anchors and is unrecoverable under any cap — raise max_df
-    there). The merge/extend passes re-read the text once (their gram
-    verification needs the uncapped gram table, scope-cached) and run
-    BEFORE the min_tokens filter, so split pieces individually under
-    the floor still surface once merged."""
-    if extend_cap_edges and not merge_cap_splits:
-        raise ValueError(
-            "extend_cap_edges requires merge_cap_splits=True (extension "
-            "disjointness relies on interiors being merged first)"
-        )
+    every capped pair family here: a run whose hot gram sits at its
+    edge reports shorter, and an entirely-hot run has no anchors and
+    does not report (raise ``max_df`` there)."""
     if min_tokens is None:
         min_tokens = 2 * k - 1
     anchors = shared_passage_anchors(df, id_col, text_col, k, max_df)
@@ -637,12 +415,6 @@ def shared_passages(
         F.min("pb").alias("start_b"),
         (F.max("pa") - F.min("pa") + k).alias("length"),
     )
-    if merge_cap_splits and max_df is not None:
-        _tok, grams = _span_grams(df, id_col, text_col, k)
-        grams = scoped_cache(grams)
-        pieces = _merge_cap_split_runs(pieces, grams, k, merge_gap_limit)
-        if extend_cap_edges:
-            pieces = _extend_run_endpoints(pieces, grams, k, merge_gap_limit)
     return (
         pieces.where(F.col("length") >= F.lit(min_tokens))
         .select("id_a", "id_b", "start_a", "start_b", "length")
@@ -969,21 +741,18 @@ def _simhash_band_candidates(
     bits: int,
     bands: int,
     probe_bits: int,
-    carry_sig: bool,
 ) -> DataFrame:
     """Shared banding block of the SimHash family: fingerprint →
     band keys (shift+mask) → self-equi-join → deduped (id_a, id_b)
-    candidates, optionally carrying both fingerprints for the
-    hamming verify (``carry_sig``). With ``probe_bits=1`` the LEFT
+    candidates carrying both fingerprints (sh_a, sh_b) for the
+    hamming verify. With ``probe_bits=1`` the LEFT
     side of the self-join also probes every band key within hamming
     1 of its own, so a pair is a candidate when SOME band differs by
     ≤ probe_bits bits — by pigeonhole that guarantees detection of
     every pair with total hamming ≤ bands·(probe_bits+1)−1 while the
     band keyspace stays the full 2^(bits/bands)."""
     sh = scoped_cache(simhash_table(df, id_col, text_col, ngram, bits))
-    return band_candidates_from_fingerprints(
-        sh, bits, bands, probe_bits, carry_sig
-    )
+    return band_candidates_from_fingerprints(sh, bits, bands, probe_bits)
 
 
 def band_candidates_from_fingerprints(
@@ -991,40 +760,16 @@ def band_candidates_from_fingerprints(
     bits: int,
     bands: int,
     probe_bits: int,
-    carry_sig: bool,
 ) -> DataFrame:
     """Generic banded candidate join over ANY (id, sh) fingerprint
     table (simhash, image phash, audio fingerprint): shift+mask band
     keys, multi-probe ``band_join``, deduped (id_a, id_b) pairs
-    (optionally carrying both fingerprints, sh_a / sh_b, for a
-    hamming verify)."""
-    sig_cols = ["sh"] if carry_sig else []
+    carrying both fingerprints, sh_a / sh_b, for a hamming verify."""
     band_arr = fingerprint_bands(F.col("sh"), bits, bands)
-    banded = sh.select("id", *sig_cols, F.explode(band_arr).alias("bb")).select(
-        "id", *sig_cols, "bb.band", "bb.key"
+    banded = sh.select("id", "sh", F.explode(band_arr).alias("bb")).select(
+        "id", "sh", "bb.band", "bb.key"
     )
-    return band_join(banded, carry=sig_cols, probe=(bits // bands, probe_bits))
-
-
-def simhash_candidates(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ngram: int = 3,
-    bits: int = 60,
-    bands: int = 4,
-    probe_bits: int = 1,
-) -> DataFrame:
-    """Candidate-pair observability for SimHash: the deduped
-    (id_a, id_b) table the band equi-join produces BEFORE the
-    hamming verify. Count it to measure the regime — with the 60-bit
-    default (15-bit band keys, 32,768 buckets/band, hamming-1
-    probing) candidates stay ∝ true near-dups; 4-bit keys (16
-    buckets) degrade to ~n²/16. Bounded by
-    tests/test_candidate_bounds.py on a planted-dup corpus."""
-    return _simhash_band_candidates(
-        df, id_col, text_col, ngram, bits, bands, probe_bits, carry_sig=False
-    )
+    return band_join(banded, carry=["sh"], probe=(bits // bands, probe_bits))
 
 
 def simhash_pairs(
@@ -1051,7 +796,7 @@ def simhash_pairs(
     explicit oracle regimes — at corpus scale they produce ~n²/16
     pairs."""
     cand = _simhash_band_candidates(
-        df, id_col, text_col, ngram, bits, bands, probe_bits, carry_sig=True
+        df, id_col, text_col, ngram, bits, bands, probe_bits
     )
     return cand.select(
         "id_a",
@@ -1769,7 +1514,7 @@ def incremental_minhash_dedup(
     is_dup = agree >= need
 
     # r13 (guide §2.4): the banded rows CARRY their signature (the
-    # simhash_pairs carry_sig shape), so the dup decision is one band
+    # simhash_pairs sh_a / sh_b shape), so the dup decision is one band
     # equi-join + an in-line estimator filter + a tiny id distinct —
     # the r12 form shuffled band keys, distinct-ed the candidate
     # PAIRS, then re-joined both signature tables back on each side

@@ -161,40 +161,10 @@ def knn_pagerank(
     ).withColumnRenamed("node", id_col)
 
 
-def pagerank_reference(
-    edge_list: list[tuple[int, int]],
-    iterations: int = 3,
-    damping_pct: int = 85,
-    scale: int = PR_SCALE,
-) -> dict[int, int]:
-    """Sequential pure-Python replica of ``pagerank_fixed`` — an
-    independent implementation of the same integer recurrence, for
-    differential tests."""
-    from collections import defaultdict
-
-    base = ((100 - damping_pct) * scale) // 100
-    deg: dict[int, int] = defaultdict(int)
-    nodes = set()
-    for s, d in edge_list:
-        deg[s] += 1
-        nodes.add(s)
-        nodes.add(d)
-    scores = {v: scale for v in nodes}
-    for _ in range(iterations):
-        in_sum: dict[int, int] = defaultdict(int)
-        for s, d in edge_list:
-            in_sum[d] += scores[s] // deg[s]
-        scores = {
-            v: base + (damping_pct * in_sum.get(v, 0)) // 100 for v in nodes
-        }
-    return scores
-
-
 def triangle_counts(
     pairs: DataFrame,
     src_col: str = "id_a",
     dst_col: str = "id_b",
-    degree_ordered: bool = False,
 ) -> DataFrame:
     """Per-node triangle counts over an undirected edge list — the
     clustering-coefficient / community-density primitive. Input rows
@@ -205,19 +175,6 @@ def triangle_counts(
     triangle a<b<c is found exactly once as e(a,b) ⋈ e(b,c) ⋈ e(a,c),
     then each of its three corners gets +1 via an explode. All three
     joins are equi-joins on node ids; the shuffle key is the node id.
-
-    ``degree_ordered=True`` switches to compact-forward enumeration:
-    edges orient from low (degree, id) rank to high, wedges expand
-    only along out-edges, so per-vertex join fan-out is bounded by
-    the oriented out-degree (O(sqrt(m)) worst case — the arboricity
-    bound) instead of the raw degree. Choose it for power-law /
-    skewed-degree graphs where one celebrity vertex would fan out
-    deg² wedge rows on a single join key. On the near-dup graphs this
-    engine's dedup family produces, degrees are bounded by cluster
-    size and the DEFAULT is measurably cheaper (the orientation pays
-    two extra degree-attach joins: ~2.1 vs ~2.9 s at sf0.1, parity at
-    10x) — pick by graph shape, both forms are value-identical
-    (pytest-pinned).
 
     Returns (id, n_triangles) for every node on ≥1 edge (nodes with
     zero triangles included — their count is 0).
@@ -243,45 +200,10 @@ def triangle_counts(
         .union(e.select(F.col("hi").alias("id")))
         .distinct()
     )
-    if degree_ordered:
-        deg = (
-            e.select(F.col("lo").alias("id"))
-            .union(e.select(F.col("hi").alias("id")))
-            .groupBy("id")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-        el = e.join(
-            deg.select(F.col("id").alias("lo"), F.col("d").alias("dlo")), "lo"
-        ).join(
-            deg.select(F.col("id").alias("hi"), F.col("d").alias("dhi")), "hi"
-        )
-        lo_first = (F.col("dlo") < F.col("dhi")) | (
-            (F.col("dlo") == F.col("dhi")) & (F.col("lo") < F.col("hi"))
-        )
-        fwd = el.select(
-            F.when(lo_first, F.col("lo")).otherwise(F.col("hi")).alias("u"),
-            F.when(lo_first, F.col("hi")).otherwise(F.col("lo")).alias("v"),
-            F.when(lo_first, F.col("dhi")).otherwise(F.col("dlo")).alias("dv"),
-        )
-        x = fwd.select("u", F.col("v").alias("vx"), F.col("dv").alias("dvx"))
-        y = fwd.select("u", F.col("v").alias("vy"), F.col("dv").alias("dvy"))
-        wedge = (
-            x.join(y, "u")
-            .where(
-                (F.col("dvx") < F.col("dvy"))
-                | ((F.col("dvx") == F.col("dvy")) & (F.col("vx") < F.col("vy")))
-            )
-            .select("u", F.col("vx").alias("v"), F.col("vy").alias("w"))
-        )
-        closing = fwd.select(F.col("u").alias("v"), F.col("v").alias("w"))
-        tri = wedge.join(closing, ["v", "w"]).select(
-            F.col("u").alias("a"), F.col("v").alias("b"), F.col("w").alias("c")
-        )
-    else:
-        ab = e.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
-        bc = e.select(F.col("lo").alias("b"), F.col("hi").alias("c"))
-        ac = e.select(F.col("lo").alias("a"), F.col("hi").alias("c"))
-        tri = ab.join(bc, "b").join(ac, ["a", "c"])
+    ab = e.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
+    bc = e.select(F.col("lo").alias("b"), F.col("hi").alias("c"))
+    ac = e.select(F.col("lo").alias("a"), F.col("hi").alias("c"))
+    tri = ab.join(bc, "b").join(ac, ["a", "c"])
     corner = tri.select(
         F.explode(F.array("a", "b", "c")).alias("id")
     ).groupBy("id").agg(F.count(F.lit(1)).alias("n_triangles"))

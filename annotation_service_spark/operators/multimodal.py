@@ -1184,7 +1184,7 @@ def extract_features(
     for PPM/WAV, stub for everything else (see module docstring).
     The id comes back under the CALLER'S ``id_col`` name and type
     (derived from the input schema, same contract as
-    ``_frames_table``) — string/long ids both work."""
+    ``video_frames_table``) — string/long ids both work."""
     out_schema = T.StructType(
         [
             T.StructField(id_col, media.schema[id_col].dataType),
@@ -1434,9 +1434,7 @@ def image_phash_pairs(
         .where(F.col("decoded"))
         .select("id", "sh"),
     )
-    cand = band_candidates_from_fingerprints(
-        sh, 63, bands, probe_bits, carry_sig=True
-    )
+    cand = band_candidates_from_fingerprints(sh, 63, bands, probe_bits)
     return cand.select(
         "id_a",
         "id_b",
@@ -1553,9 +1551,7 @@ def audio_fingerprint_pairs(
         .where(F.col("decoded"))
         .select("id", "sh"),
     )
-    cand = band_candidates_from_fingerprints(
-        sh, 63, bands, probe_bits, carry_sig=True
-    )
+    cand = band_candidates_from_fingerprints(sh, 63, bands, probe_bits)
     return cand.select(
         "id_a",
         "id_b",
@@ -2203,12 +2199,16 @@ def demux_video_mjpeg(payload: bytes) -> list[bytes]:
     raise ValueError("unrecognized video container (not RIFF/AVI or ISO-BMFF)")
 
 
-def _frames_table(
-    media: DataFrame, demux, id_col: str, media_col: str
+def video_frames_table(
+    media: DataFrame,
+    id_col: str = "media_id",
+    media_col: str = "payload",
 ) -> DataFrame:
-    """Shared Spark stage of the video demux family: container bytes →
-    (id, frames array<binary>). Arrow-batched ``mapInPandas``; rows
-    whose payload the demuxer rejects are SKIPPED (skip-don't-kill —
+    """Container-sniffing demux stage: AVI/MJPEG and MP4/MJPEG
+    container bytes → (id, frames array<binary>). This is the general
+    entry point for video near-dup from raw container bytes.
+    Arrow-batched ``mapInPandas``; rows whose payload
+    ``demux_video_mjpeg`` rejects are SKIPPED (skip-don't-kill —
     junk payloads and foreign codecs reduce coverage, never fake
     pairs or kill the job). The id comes back under the CALLER'S
     ``id_col`` name and type (derived from the input schema), so
@@ -2225,7 +2225,7 @@ def _frames_table(
             ids, idxs, frames = [], [], []
             for mid, payload in zip(pdf[id_col], pdf[media_col]):
                 try:
-                    fr = demux(bytes(payload))
+                    fr = demux_video_mjpeg(bytes(payload))
                 except (ValueError, NotImplementedError, IndexError):
                     continue
                 for i, f in enumerate(fr):
@@ -2246,26 +2246,3 @@ def _frames_table(
         ).alias("frames")
     )
 
-
-def avi_frames_table(
-    media: DataFrame,
-    id_col: str = "media_id",
-    media_col: str = "payload",
-) -> DataFrame:
-    """AVI-only demux stage feeding ``video_frame_hashes``/
-    ``video_near_dup_pairs``; see ``_frames_table`` for the contract.
-    Prefer ``video_frames_table`` — it sniffs the container and also
-    accepts MP4."""
-    return _frames_table(media, demux_avi_mjpeg, id_col, media_col)
-
-
-def video_frames_table(
-    media: DataFrame,
-    id_col: str = "media_id",
-    media_col: str = "payload",
-) -> DataFrame:
-    """Container-sniffing demux stage: AVI/MJPEG and MP4/MJPEG rows
-    both land in (id, frames array<binary>); everything else is
-    skipped per-row. This is the general entry point for video
-    near-dup from raw container bytes."""
-    return _frames_table(media, demux_video_mjpeg, id_col, media_col)

@@ -69,10 +69,6 @@ def dot(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
     )
 
 
-def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
-    return dot(a, b, dim) / (F.sqrt(dot(a, a, dim)) * F.sqrt(dot(b, b, dim)))
-
-
 def _prune_topk_per_query(
     s: "np.ndarray", ids: "np.ndarray", kk: int
 ) -> tuple["np.ndarray", "np.ndarray"]:
@@ -531,28 +527,6 @@ def _nearest_centroid(centroids: list[list[float]]):
         return pd.Series(np.argmin(d, axis=1).astype("int32"))
 
     return assign
-
-
-def _probe_centroids(centroids: list[list[float]], n_probe: int):
-    """Per query row: ids of its ``n_probe`` nearest centroids
-    (stable argsort ⇒ ties break toward the smaller centroid id,
-    matching the assignment argmin)."""
-    c = np.asarray(centroids, dtype=np.float64)
-    cc = (c * c).sum(axis=1)
-    neg2ct = -2.0 * c.T
-
-    @F.pandas_udf("array<int>")
-    def probes(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype="object")
-        v = np.vstack(vecs.to_numpy()).astype(np.float64)
-        # same 1e-6 rounding as the assignment argmin (see
-        # _nearest_centroid) so probe order is engine-portable
-        d = np.floor((v @ neg2ct + cc) * 1e6 + 0.5)
-        idx = np.argsort(d, axis=1, kind="stable")[:, :n_probe]
-        return pd.Series(list(idx.astype("int32")))
-
-    return probes
 
 
 def ann_ivf_topk(
@@ -1203,7 +1177,7 @@ def ann_pq_topk(
         ccc = (cmat * cmat).sum(axis=1)
         neg2ct = -2.0 * cmat.T
         # per-query probed lists: same rounded distance + stable
-        # order as _probe_centroids / _nearest_centroid
+        # order as _nearest_centroid
         qd = np.floor((qm @ neg2ct + ccc) * 1e6 + 0.5)
         qorder = np.argsort(qd, axis=1, kind="stable")[:, :n_probe]
         probe_mask = np.zeros((len(qids), len(cmat)), dtype=bool)

@@ -34,10 +34,6 @@ def write_interval_table(
     out.write.mode(mode).partitionBy(partition_col).parquet(path)
 
 
-def read_interval_table(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def write_bucketed_table(
     df: DataFrame,
     table: str,

@@ -323,14 +323,6 @@ def start_rollup_maintenance(
     return _start_sink(events_stream, process, checkpoint_dir, available_now)
 
 
-def current_rollup_state(spark, state_dir: str) -> DataFrame | None:
-    """The standing rollup table of the CURRENT state version."""
-    manifest = VersionedTableManifest(state_dir)
-    if manifest.current_version() is None:
-        return None
-    return manifest.read(spark)
-
-
 def start_near_dedup_maintenance(
     docs_stream: DataFrame,
     state_dir: str,

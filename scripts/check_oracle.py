@@ -69,6 +69,11 @@ def main(argv=None):
     ap.add_argument("--evidence", metavar="PATH")
     args = ap.parse_args(argv)
     sf_dir = args.sf_dir
+    if not os.path.isdir(sf_dir):
+        ap.error(
+            f"sf_dir {sf_dir!r} is not a directory"
+            " (it comes first when gates are named)"
+        )
     # data-dependent oracle literals (IVF centroids, embedding dim)
     # must come from the SAME sf dir the Spark side reads, or the
     # comparison is between two different queries

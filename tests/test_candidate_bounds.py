@@ -61,8 +61,13 @@ def test_lsh_candidates_bounded(spark):
 def test_simhash_candidates_bounded(spark, planted_docs):
     """SimHash candidates at the shipped defaults (60 bits / 4 bands /
     hamming-1 probe) stay ∝ planted near-dups: measured exactly the 5
-    planted pairs on this corpus (quadratic would be C(40,2) = 780)."""
-    n = dd.simhash_candidates(planted_docs).count()
+    planted pairs on this corpus (quadratic would be C(40,2) = 780).
+    The carried fingerprints depend only on the id, so the row count is
+    the distinct (id_a, id_b) count."""
+    n = dd._simhash_band_candidates(
+        planted_docs, "doc_id", "text",
+        ngram=3, bits=60, bands=4, probe_bits=1,
+    ).count()
     assert 0 < n <= 3 * N_PLANTED, f"candidate blow-up: {n}"
 
 

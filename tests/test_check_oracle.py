@@ -1,6 +1,7 @@
 """``scripts/check_oracle.py`` on three stand-in gates: a gate that
 raises is recorded and the sweep goes on, and ``--evidence`` writes one
-CORRECTNESS_r*.json row per gate run."""
+CORRECTNESS_r*.json row per gate run. An ``sf_dir`` that is not a
+directory is rejected before anything starts."""
 
 from __future__ import annotations
 
@@ -8,6 +9,7 @@ import importlib.util
 import json
 import pathlib
 
+import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as em
@@ -27,12 +29,34 @@ def _nation(key_offset=0, raises=False):
     return gate
 
 
-def test_sweep_records_every_gate_and_survives_a_raising_one(
-    spark, tmp_path, monkeypatch, capsys
-):
+def _script():
     spec = importlib.util.spec_from_file_location("check_oracle", SCRIPT)
     script = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(script)
+    return script
+
+
+def test_sf_dir_not_a_directory_is_an_argument_error(monkeypatch, capsys):
+    """A gate name in the sf_dir slot stops at argument parsing, naming
+    the argument, before a Spark session or a DuckDB view starts."""
+    script = _script()
+
+    def started(*_a, **_k):
+        raise AssertionError("started before the argument check")
+
+    monkeypatch.setattr(script, "get_session", started)
+    monkeypatch.setattr(script.duckdb, "connect", started)
+    with pytest.raises(SystemExit) as exc:
+        script.main(["annotate", "annotate_asof"])
+    assert exc.value.code == 2
+    err = capsys.readouterr().err
+    assert "sf_dir 'annotate' is not a directory" in err
+
+
+def test_sweep_records_every_gate_and_survives_a_raising_one(
+    spark, tmp_path, monkeypatch, capsys
+):
+    script = _script()
     gates = {"raises": _nation(raises=True), "matches": _nation(), "differs": _nation(1)}
     monkeypatch.setattr(em, "queries", lambda: gates)
     oracle = "SELECT n_nationkey, n_name FROM nation"

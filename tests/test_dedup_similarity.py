@@ -261,23 +261,13 @@ def test_text_functions(spark, docs_df):
         txt.token_count(F.col("text")).alias("n"),
         txt.stopword_ratio(F.col("text")).alias("sr"),
         txt.lang_id(F.col("text")).alias("lang"),
-        txt.doc_fingerprint(F.col("text")).alias("fp"),
         txt.quality_score(F.col("text")).alias("q"),
     ).collect()
     m = {r.doc_id: r for r in out}
     assert m[1].n == 13
     assert m[1].lang == "en"
-    assert m[1].fp == m[4].fp          # identical docs → same fingerprint
-    assert m[1].fp != m[3].fp
     assert 0.0 <= m[1].q <= 1.0
     assert m[1].sr == pytest.approx(3 / 13)  # 'the' x3 of 13 tokens
-    # fingerprint robust to a trailing edit away from the min shingle
-    df2 = spark.createDataFrame(
-        [(1, DOCS[0][1]), (2, DOCS[0][1] + " extra trailing words here")],
-        "doc_id long, text string",
-    )
-    fps = df2.select(txt.doc_fingerprint(F.col("text")).alias("fp")).collect()
-    assert fps[0].fp == fps[1].fp or fps[0].fp != fps[1].fp  # deterministic either way
 
 
 def test_multimodal_plumbing(spark):

@@ -4,12 +4,40 @@ and recurrence properties on hand-built graphs."""
 
 from __future__ import annotations
 
+from collections import defaultdict
+
 from pyspark.sql import functions as F
 
 import __spark_entry__ as em
 from annotation_service_spark.operators import graph as g
 
 SF = "/root/testdata/sf0.001"
+
+
+def pagerank_reference(
+    edge_list: list[tuple[int, int]],
+    iterations: int = 3,
+    damping_pct: int = 85,
+    scale: int = g.PR_SCALE,
+) -> dict[int, int]:
+    """Sequential pure-Python replica of ``pagerank_fixed`` — an
+    independent implementation of the same integer recurrence."""
+    base = ((100 - damping_pct) * scale) // 100
+    deg: dict[int, int] = defaultdict(int)
+    nodes = set()
+    for s, d in edge_list:
+        deg[s] += 1
+        nodes.add(s)
+        nodes.add(d)
+    scores = {v: scale for v in nodes}
+    for _ in range(iterations):
+        in_sum: dict[int, int] = defaultdict(int)
+        for s, d in edge_list:
+            in_sum[d] += scores[s] // deg[s]
+        scores = {
+            v: base + (damping_pct * in_sum.get(v, 0)) // 100 for v in nodes
+        }
+    return scores
 
 
 def test_distributed_matches_sequential_replica(spark):
@@ -19,7 +47,7 @@ def test_distributed_matches_sequential_replica(spark):
         r.node: r.pr_score
         for r in g.pagerank_fixed(edges_df, iterations=3).collect()
     }
-    assert dist == g.pagerank_reference(edge_list, iterations=3)
+    assert dist == pagerank_reference(edge_list, iterations=3)
 
 
 def test_knn_graph_degree_and_no_self_loops(spark):
@@ -44,7 +72,7 @@ def test_star_graph_center_dominates(spark):
     spokes = {got[i] for i in range(1, 6)}
     assert len(spokes) == 1
     assert got[0] > spokes.pop()
-    assert got == g.pagerank_reference(
+    assert got == pagerank_reference(
         [(i, 0) for i in range(1, 6)], 3
     )
 
@@ -97,7 +125,7 @@ def test_knn_pagerank_lsh_matches_sequential_replica(spark):
             emb, method="lsh", n_planes=16, bands=8
         ).collect()
     }
-    assert got == g.pagerank_reference(edge_list, iterations=3)
+    assert got == pagerank_reference(edge_list, iterations=3)
 
 
 def test_knn_edges_unknown_method_raises(spark):
@@ -183,36 +211,3 @@ def test_lpa_deterministic_under_repartition(spark):
         for r in lpa_communities(pairs.repartition(17), 3).collect()
     }
     assert a == b and len(a) > 0
-
-
-def test_triangle_counts_degree_ordered_parity(spark):
-    """compact-forward (degree_ordered=True) must be value-identical
-    to the id-ordered default — on a skewed star-plus-cliques graph
-    (the shape degree-ordering exists FOR: one hub whose raw-degree
-    fan-out would be deg² wedge rows) and with both-orientation
-    duplicate input rows."""
-    from annotation_service_spark.operators.graph import triangle_counts
-
-    edges = []
-    hub = 0
-    for i in range(1, 41):  # star: hub connected to everyone
-        edges.append((hub, i))
-    for base in (1, 11, 21):  # three 4-cliques among the leaves
-        ids = [base, base + 1, base + 2, base + 3]
-        edges += [(a, b) for a in ids for b in ids if a < b]
-    # duplicates + reversed orientations must not change counts
-    edges += [(b, a) for (a, b) in edges[:20]]
-    df = spark.createDataFrame(edges, "id_a long, id_b long")
-    a = {(r.id, r.n_triangles) for r in triangle_counts(df).collect()}
-    b = {
-        (r.id, r.n_triangles)
-        for r in triangle_counts(df, degree_ordered=True).collect()
-    }
-    assert a == b
-    by_id = dict(a)
-    # hub closes a triangle with every clique edge: 3 cliques x 6 edges
-    assert by_id[hub] == 18
-    # a clique corner: C(3,2)=3 in-clique + 2 hub triangles (its 2
-    # other clique neighbours... each clique vertex: triangles with
-    # hub = one per clique-neighbour = 3) -> 3 + 3 = 6
-    assert by_id[1] == 6

@@ -1,6 +1,6 @@
-"""String-id corpora through every Arrow-batched media/text stage
-(VERDICT r12 item 2): ``_frames_table`` derives the id column's name
-and type from the caller's schema since r12; this pins the SAME
+"""String-id corpora through every Arrow-batched media/text stage:
+``video_frames_table`` derives the id column's name and type from
+the caller's schema; this pins the SAME
 contract on the sibling stages that used to hardcode a long id —
 ``extract_features``, ``resize_media``, and
 ``compression_ratio_table``. Template:

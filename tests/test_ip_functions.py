@@ -131,24 +131,21 @@ def test_v4_long_math(spark):
     df = spark.createDataFrame([("1.2.3.4",), ("255.255.255.255",)], "ip string")
     out = df.select(
         "ip",
-        ipf.ipv4_to_long(F.col("ip")).alias("v"),
+        ipf.bytes16_to_v4_long(ipf.ip_to_bytes(F.col("ip"))).alias("v"),
     ).withColumn("back", ipf.long_to_ipv4(F.col("v"))).collect()
     m = {r.ip: r for r in out}
     assert m["1.2.3.4"].v == 16909060
     assert m["1.2.3.4"].back == "1.2.3.4"
     assert m["255.255.255.255"].v == 4294967295
-    # bytes16 <-> v4 long
+    # v6 bytes have no v4 long
     out2 = (
-        spark.createDataFrame([("9.8.7.6",)], "ip string")
-        .select(ipf.ip_to_bytes(F.col("ip")).alias("b"))
-        .select(
-            ipf.bytes16_to_v4_long(F.col("b")).alias("v"),
-            ipf.bytes_to_ip(ipf.v4_long_to_bytes16(ipf.bytes16_to_v4_long(F.col("b")))).alias("rt"),
-        )
-        .collect()[0]
+        spark.createDataFrame([("9.8.7.6",), ("2001:db8::1",)], "ip string")
+        .select("ip", ipf.bytes16_to_v4_long(ipf.ip_to_bytes(F.col("ip"))).alias("v"))
+        .collect()
     )
-    assert out2.v == 9 * 16777216 + 8 * 65536 + 7 * 256 + 6
-    assert out2.rt == "9.8.7.6"
+    m2 = {r.ip: r.v for r in out2}
+    assert m2["9.8.7.6"] == 9 * 16777216 + 8 * 65536 + 7 * 256 + 6
+    assert m2["2001:db8::1"] is None
 
 
 def test_asn_decode(spark):
@@ -172,7 +169,9 @@ def test_site_network_key(spark):
     """site/site.go:130-139: /26 v4 key, /64 v6 prefix."""
     df = spark.createDataFrame([("5.6.7.77",)], "ip string")
     out = df.select(
-        ipf.site_network_key_v4(ipf.ipv4_to_long(F.col("ip"))).alias("k")
+        ipf.site_network_key_v4(
+            ipf.bytes16_to_v4_long(ipf.ip_to_bytes(F.col("ip")))
+        ).alias("k")
     ).collect()[0]
     assert out.k == "5.6.7.64/26"
     df6 = spark.createDataFrame([("2001:db8:aa:bb:cc::1",)], "ip string")

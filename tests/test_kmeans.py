@@ -16,6 +16,42 @@ from annotation_service_spark.operators import clustering as cl
 SF = "/root/testdata/sf0.001"
 
 
+def _assign_cols(centroids: list[list[int]], unroll_budget: int = 8192):
+    """(cluster, dist) columns: argmin over exact integer squared
+    distances, first-min tie-break (array_position finds the FIRST
+    occurrence). The per-centroid distance is an unrolled positional
+    expression — whole-stage codegen, no interpreted HOFs on the
+    per-row hot path. Past ``unroll_budget`` total terms (large
+    k·dim) the expression tree would stress Janino's method-size
+    limits, so it switches to the HOF aggregate form — same exact
+    values, interpreted evaluation."""
+    k = len(centroids)
+    dim = len(centroids[0])
+    dists = []
+    if k * dim > unroll_budget:
+        for c in centroids:
+            carr = F.array(*[F.lit(int(ci)).cast("long") for ci in c])
+            dists.append(
+                F.aggregate(
+                    F.zip_with(F.col("qv"), carr, lambda x, y: (x - y) * (x - y)),
+                    F.lit(0).cast("long"),
+                    lambda acc, v: acc + v,
+                )
+            )
+    else:
+        for c in centroids:
+            d = None
+            for i, ci in enumerate(c):
+                t = (F.col("qv")[i] - F.lit(int(ci))) * (
+                    F.col("qv")[i] - F.lit(int(ci))
+                )
+                d = t if d is None else d + t
+            dists.append(d)
+    darr = F.array(*dists)
+    cluster = (F.array_position(darr, F.array_min(darr)) - 1).cast("int")
+    return cluster.alias("c"), F.array_min(darr).alias("dist")
+
+
 def test_distributed_centroids_match_numpy_replica(spark):
     emb = em._t(spark, SF, "embeddings")
     dist = cl.kmeans_centroids(emb, k=8, iterations=2)
@@ -55,15 +91,15 @@ def test_empty_cluster_keeps_previous_centroid(spark, tmp_path):
 
 
 def test_expression_form_matches_numpy_kernel(spark):
-    """The retired codegen expression form (`_assign_cols`, kept as a
-    differential witness) and the Arrow/numpy kernel that replaced it
+    """The retired codegen expression form (`_assign_cols` above, kept
+    as a differential witness) and the Arrow/numpy kernel that replaced it
     on the hot path must produce identical (cluster, dist) for every
     row — three independent evaluations of the same exact-int64
     argmin (expression, kernel, replica) all agreeing."""
     emb = em._t(spark, SF, "embeddings")
     cents = cl.kmeans_fixed_reference(f"{SF}/embeddings.parquet", 8, 2)
     q = cl._quantized(emb, "embedding", "vec_id", cl.FIXED_SCALE)
-    cl_col, dist_col = cl._assign_cols(cents)
+    cl_col, dist_col = _assign_cols(cents)
     expr = {
         r.id: (r.c, r.dist)
         for r in q.select("id", cl_col, dist_col).collect()
@@ -87,7 +123,7 @@ def test_expression_form_matches_numpy_kernel(spark):
     }
     assert expr == kern
     # and the HOF fallback branch (forced via a tiny unroll budget)
-    hof_cl, hof_d = cl._assign_cols(cents, unroll_budget=1)
+    hof_cl, hof_d = _assign_cols(cents, unroll_budget=1)
     hof = {
         r.id: (r.c, r.dist)
         for r in q.select("id", hof_cl, hof_d).collect()

@@ -160,7 +160,7 @@ def test_avi_foreign_codec_declined_by_name():
 
 
 def test_avi_to_near_dup_pipeline_end_to_end(spark):
-    """Container bytes -> avi_frames_table -> video_near_dup_pairs:
+    """Container bytes -> video_frames_table -> video_near_dup_pairs:
     a re-encoded twin (same images, re-quantized) pairs with its
     original; an unrelated video does not; junk payloads and a
     foreign-codec AVI are skipped without failing the job."""
@@ -203,7 +203,7 @@ def test_avi_to_near_dup_pipeline_end_to_end(spark):
         [(1, v1), (2, v2), (3, v3), (4, junk), (5, foreign)],
         "media_id long, payload binary",
     )
-    vids = mm.avi_frames_table(df)
+    vids = mm.video_frames_table(df)
     assert {r.media_id for r in vids.select("media_id").collect()} == {1, 2, 3}
     pairs = {
         (r.id_a, r.id_b)

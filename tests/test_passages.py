@@ -198,30 +198,27 @@ def test_shared_passage_anchors_superset_of_runs(spark, passage_docs):
     assert len(akey) >= sum(r.length - k + 1 for r in runs)
 
 
-def test_shared_passages_merge_cap_splits_restores_maximality(spark):
-    """VERDICT r11 item 7: with merge_cap_splits=True, runs that a
-    max_df stop-gram cap split through a hot interior re-merge to the
-    exact uncapped maximal run (verified against the brute-force
-    diagonal scan on the pair), runs with a GENUINELY differing
-    middle on the same diagonal stay split, and a run split by TWO
-    hot phrases chain-merges. Merge happens before the min_tokens
-    filter, so a split piece under the floor still surfaces merged."""
+def test_shared_passages_max_df_cap_splits_through_hot_grams(spark):
+    """A max_df stop-gram cap drops every k-gram in more than max_df
+    documents, so a shared run through a hot phrase comes back split
+    or shortened, while a run with a genuinely differing middle is
+    reported exactly as the uncapped brute-force scan reports it.
+    Pair 1/2 shares a run with a hot interior; pair 3/4 shares two
+    runs on one diagonal around a differing token; pair 6/7 shares a
+    run split by two hot phrases. The 20 filler documents make both
+    phrases hot (document frequency 22 or more against a cap of 10)."""
     hot = "h1 h2 h3 h4 h5 h6 h7 h8"
     hot2 = "g1 g2 g3 g4 g5 g6 g7 g8"
     fillers = [
         (100 + i, f"pre{i} junk{i} " + hot + f" mid{i} " + hot2 + f" tail{i}")
         for i in range(20)
     ]
-    # docs 1/2: shared run with the hot phrase interior; the prefix
-    # piece (u1 u2 + straddle) is SHORTER than min_tokens on its own
     shared = "u1 u2 " + hot + " v1 v2 v3 v4 v5 v6"
     pair = [(1, "aaa bbb " + shared + " ccc"), (2, "xxx " + shared + " yyy zzz")]
-    # docs 3/4: same-diagonal runs around a truly differing middle
     ctrl = [
         (3, "w1 w2 w3 w4 w5 w6 w7 w8 mida q1 q2 q3 q4 q5 q6 q7 q8"),
         (4, "w1 w2 w3 w4 w5 w6 w7 w8 midb q1 q2 q3 q4 q5 q6 q7 q8"),
     ]
-    # docs 6/7: one run split by TWO hot phrases (chain merge)
     shared2 = "m1 m2 m3 " + hot + " n1 n2 n3 " + hot2 + " o1 o2 o3"
     chain = [(6, "lead " + shared2), (7, shared2 + " trail words")]
     rows = pair + ctrl + chain + fillers
@@ -235,113 +232,23 @@ def test_shared_passages_merge_cap_splits_restores_maximality(spark):
             if (r.id_a, r.id_b) == (a, b)
         }
 
+    def brute(a, b):
+        docs = [r for r in rows if r[0] in (a, b)]
+        return {t[2:] for t in _brute_passages(docs, k, mt)}
+
     uncapped = dd.shared_passages(df, k=k, min_tokens=mt, max_df=None).collect()
     split = dd.shared_passages(df, k=k, min_tokens=mt, max_df=cap).collect()
-    merged = dd.shared_passages(
-        df, k=k, min_tokens=mt, max_df=cap, merge_cap_splits=True
-    ).collect()
 
-    # pair 1/2: capped-unmerged loses the run's hot interior AND its
-    # under-floor prefix piece; merged == uncapped == brute force
-    exp_12 = {
-        t[2:] for t in _brute_passages([r for r in rows if r[0] in (1, 2)], k, mt)
-    }
-    assert runs(merged, 1, 2) == runs(uncapped, 1, 2) == exp_12
+    assert runs(uncapped, 1, 2) == brute(1, 2)
     assert len(runs(uncapped, 1, 2)) == 1
     assert runs(split, 1, 2) != runs(uncapped, 1, 2)
 
-    # control 3/4: truly differing middle — merge must NOT join
-    exp_34 = {
-        t[2:] for t in _brute_passages([r for r in rows if r[0] in (3, 4)], k, mt)
-    }
-    assert len(exp_34) == 2
-    assert runs(merged, 3, 4) == runs(split, 3, 4) == exp_34
+    assert len(brute(3, 4)) == 2
+    assert runs(split, 3, 4) == runs(uncapped, 3, 4) == brute(3, 4)
 
-    # chain 6/7: two hot interiors, three pieces -> one merged run
-    exp_67 = {
-        t[2:] for t in _brute_passages([r for r in rows if r[0] in (6, 7)], k, mt)
-    }
-    assert runs(merged, 6, 7) == runs(uncapped, 6, 7) == exp_67
-    assert len(exp_67) == 1
-    # unmerged, only the middle piece clears the floor (the outer
-    # pieces are under min_tokens) — the merged run is the full span
-    assert runs(split, 6, 7) != runs(merged, 6, 7)
+    assert runs(uncapped, 6, 7) == brute(6, 7)
+    assert len(brute(6, 7)) == 1
+    assert runs(split, 6, 7)
     assert max(t[2] for t in runs(split, 6, 7)) < max(
-        t[2] for t in runs(merged, 6, 7)
+        t[2] for t in runs(uncapped, 6, 7)
     )
-
-
-def test_shared_passages_extend_cap_edges_restores_endpoints(spark):
-    """extend_cap_edges=True restores run ENDPOINTS a hot edge gram
-    truncated: hot-prefix, hot-suffix, and hot-everywhere-but-anchor
-    shapes all come back equal to the uncapped brute force; genuinely
-    differing neighborhoods stop extension exactly at the mismatch
-    (the control pair is byte-equal to brute force too); and the flag
-    demands merge_cap_splits."""
-    hot = "h1 h2 h3 h4 h5 h6 h7 h8"
-    hot2 = "g1 g2 g3 g4 g5 g6 g7 g8"
-    hot3 = "f1 f2 f3 f4 f5 f6 f7 f8"
-    fillers = [
-        (
-            100 + i,
-            f"pre{i} junk{i} " + hot + f" mid{i} " + hot2
-            + f" via{i} " + hot3 + f" tail{i}",
-        )
-        for i in range(20)
-    ]
-    # 1/2: hot PREFIX — the run's left edge is truncated under the cap
-    sh_a = hot + " u1 u2 u3 u4 u5 u6 u7 u8"
-    # 3/4: hot SUFFIX
-    sh_b = "v1 v2 v3 v4 v5 v6 v7 v8 " + hot
-    # 6/7: hot prefix AND interior AND suffix (merge + both edges);
-    # three DISTINCT hot phrases so no entirely-hot off-diagonal run
-    # exists between the pair (those have no anchors and are
-    # unrecoverable under any cap by construction)
-    sh_c = hot + " m1 m2 m3 m4 m5 " + hot2 + " n1 n2 n3 n4 n5 " + hot3
-    # 8/9: control — differing token right next to the shared run
-    rows = (
-        [(1, "aa bb " + sh_a + " cc"), (2, "xx " + sh_a + " yy zz")]
-        + [(3, "aa bb " + sh_b + " cc"), (4, "xx " + sh_b + " yy zz")]
-        + [(6, "lead " + sh_c), (7, sh_c + " trail")]
-        + [
-            (8, "p1 p2 p3 p4 p5 p6 p7 p8 enda"),
-            (9, "p1 p2 p3 p4 p5 p6 p7 p8 endb"),
-        ]
-        + fillers
-    )
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    k, mt, cap = 4, 7, 10
-
-    def runs(out, a, b):
-        return {
-            (r.start_a, r.start_b, r.length)
-            for r in out
-            if (r.id_a, r.id_b) == (a, b)
-        }
-
-    merged_only = dd.shared_passages(
-        df, k=k, min_tokens=mt, max_df=cap, merge_cap_splits=True
-    ).collect()
-    extended = dd.shared_passages(
-        df, k=k, min_tokens=mt, max_df=cap,
-        merge_cap_splits=True, extend_cap_edges=True,
-    ).collect()
-
-    for a, b in ((1, 2), (3, 4), (6, 7), (8, 9)):
-        exp = {
-            t[2:]
-            for t in _brute_passages([r for r in rows if r[0] in (a, b)], k, mt)
-        }
-        assert runs(extended, a, b) == exp, (a, b)
-    # without extension the hot-edge pairs are truncated
-    assert runs(merged_only, 1, 2) != runs(extended, 1, 2)
-    assert runs(merged_only, 3, 4) != runs(extended, 3, 4)
-    # the full prefix+interior+suffix run is ONE maximal run
-    assert len(runs(extended, 6, 7)) == 1
-    # control pair: extension stopped at the true mismatch
-    assert runs(merged_only, 8, 9) == runs(extended, 8, 9)
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="merge_cap_splits"):
-        dd.shared_passages(df, max_df=cap, extend_cap_edges=True)

@@ -332,30 +332,6 @@ def test_url_host_filter_plan(spark):
     assert "partial_max_by" in p or "partial_max" in p, p
 
 
-def test_shared_passages_merge_pass_plan(spark):
-    """The cap-split merge pass (r12): gap verification joins the
-    uncapped gram table per (id, position) — equi-joins only, no
-    cross product — and both its windows stay keyed by
-    (pair, diagonal), never single-partition."""
-    from annotation_service_spark.operators import dedup as dd
-    from annotation_service_spark.sources.testdata import load_table
-
-    docs = load_table(spark, SF, "documents")
-    out = dd.shared_passages(docs, k=8, max_df=1000, merge_cap_splits=True)
-    p = _plan(out)
-    _assert_no_blowups(p)
-    assert any(j in p for j in EQUI_JOINS)
-    assert "Window" in p and "SinglePartition" not in p
-    # the endpoint-extension pass adds per-(id, pos) verification
-    # joins and lead/lag windows — same constraints hold
-    ext = dd.shared_passages(
-        docs, k=8, max_df=1000, merge_cap_splits=True, extend_cap_edges=True
-    )
-    p2 = _plan(ext)
-    _assert_no_blowups(p2)
-    assert "Window" in p2 and "SinglePartition" not in p2
-
-
 def test_url_and_length_bucket_plans(spark):
     """url_dedup: one content-keyed hash aggregate, no joins at all.
     length_buckets: the two-phase ranked scan — keyed windows only

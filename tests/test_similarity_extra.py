@@ -451,3 +451,19 @@ def test_prune_topk_heavily_tied_matches_full_sort():
     s1 = np.ones((n, 1))
     rows1, _ = sim._prune_topk_per_query(s1, ids, kk)
     assert ids[rows1].tolist() == sorted(ids)[:kk]
+
+
+def test_lsh_signature_kernel_matches_expression(spark, vec_df):
+    """The Arrow signature kernel on the LSH hot path is bit-identical
+    to the JVM-expression signature it replaced, on every row: same
+    sequential projection sums, so the same sign decisions."""
+    planes = sim._hyperplanes(12, 16, seed=7)
+    vec = sim.as_double(F.col("embedding"))
+    rows = vec_df.select(
+        "vec_id",
+        sim.lsh_signature(vec, planes).alias("expr"),
+        sim.lsh_signature_kernel(planes)(vec).alias("kern"),
+    ).collect()
+    assert len(rows) == 155
+    assert all(r.expr == r.kern for r in rows)
+    assert len({r.expr for r in rows}) > 100

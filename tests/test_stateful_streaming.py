@@ -85,7 +85,7 @@ def test_storage_roundtrip(spark, tmp_path):
         "dataset_date date, ip_low long, ip_high long, payload string",
     )
     storage.write_interval_table(df, str(tmp_path / "t"), low="ip_low")
-    back = storage.read_interval_table(spark, str(tmp_path / "t"))
+    back = spark.read.parquet(str(tmp_path / "t"))
     assert back.count() == 3
     # partition pruning works on dataset_date
     pruned = back.where("dataset_date = DATE '2020-01-01'")
@@ -297,7 +297,7 @@ def test_streaming_rollup_maintenance_matches_batch(spark, tmp_path):
         q.awaitTermination(120)
 
     run()
-    got_df = stateful.current_rollup_state(spark, str(state))
+    got_df = VersionedTableManifest(str(state)).read(spark)
     key = lambda df: {  # noqa: E731
         (r.window_start, r.event_type): (r.n_events, r.sum_v_milli)
         for r in df.collect()
@@ -323,7 +323,7 @@ def test_streaming_rollup_maintenance_matches_batch(spark, tmp_path):
     assert got == full
     # restart on the drained checkpoint: no new epochs, state unchanged
     run()
-    assert key(stateful.current_rollup_state(spark, str(state))) == full
+    assert key(VersionedTableManifest(str(state)).read(spark)) == full
 
 
 def test_streaming_near_dedup_maintenance(spark, tmp_path):
