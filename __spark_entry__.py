@@ -130,7 +130,7 @@ def q_interval_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p_brand").alias("payload"),
     )
     return iv.flatten_intervals_sql(
-        src, low="low", high="high", payload=["payload"], seq="seq", merge=True
+        src, low="low", high="high", payload=["payload"], seq="seq"
     )
 
 
@@ -233,8 +233,7 @@ def _annotate_join(
     # fused kernel: parse (P3) + 6to4 (P4) + binary search (J1) in one
     # Arrow crossing — ~40% more probe throughput than UDF-then-join
     joined = iv.range_join_broadcast(
-        probes, ranges, probe_col="ip", payload=["p_brand"], how="left",
-        parse_ips=True,
+        probes, ranges, probe_col="ip", payload=["p_brand"], parse_ips=True,
     )
     return joined.select(
         "event_id",
@@ -1276,7 +1275,6 @@ def q_annotate_multisnapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         low="low",
         high="high",
         payload=["brand"],
-        how="left",
         keys=["dataset_date"],
     )
     return out.select(
@@ -1325,7 +1323,7 @@ def q_legacy_annotate(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = ev.select("event_id", v.cast("long").alias("v"))
     out = iv.range_join_broadcast(
         probes, ranges, probe_col="v", low="low", high="high",
-        payload=["country_code", "city", "metro_code", "area_code"], how="left",
+        payload=["country_code", "city", "metro_code", "area_code"],
     )
     return out.select(
         "event_id",
@@ -1869,7 +1867,6 @@ def q_scd_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         version_ts="vts",
         payload=["tier"],
         partition_by=["user_id"],
-        inclusive=True,
     )
     return out.select("event_id", "user_id", "tier")
 

@@ -36,7 +36,6 @@ from pyspark.sql import types as T
 def validity_windows(
     snapshots: DataFrame,
     date_col: str = "dataset_date",
-    partition_by: Sequence[str] = (),
 ) -> DataFrame:
     """Snapshot registry → validity windows implementing the
     reference's selection rule (directory/directory.go:230-240):
@@ -53,19 +52,18 @@ def validity_windows(
     with valid_from = dataset_date of this snapshot and valid_to =
     dataset_date of the next — i.e. interval (this, next].
 
-    Built as one date-sorted array of rows per partition and its
+    Built as one date-sorted array of rows and its
     ``posexplode``, where each element's successor gives ``valid_to``.
     A window over a constant key would do the same, but Catalyst folds
     the key away and Spark logs "No Partition Defined for Window" for
     every request that plans it. The array sorts whole rows, so
     snapshot columns must be orderable (no map columns).
     """
-    part = list(partition_by)
     cols = snapshots.columns
     rows = F.sort_array(
         F.collect_list(F.struct(F.col(date_col).alias("d"), F.struct(*cols).alias("r")))
     )
-    arr = snapshots.groupBy(*part).agg(rows.alias("__w"))
+    arr = snapshots.agg(rows.alias("__w"))
     i, e = F.col("__i"), F.col("__e")
     return arr.select("__w", F.posexplode("__w").alias("__i", "__e")).select(
         *[e["r"][c].alias(c) for c in cols],
@@ -79,8 +77,6 @@ def asof_join(
     snapshots: DataFrame,
     probe_date: str,
     snapshot_date: str = "dataset_date",
-    payload: Sequence[str] = (),
-    partition_by: Sequence[str] = (),
 ) -> DataFrame:
     """J2: attach to each probe row the snapshot serving its date
     (last strictly-earlier; first as fallback — exact reference
@@ -88,25 +84,18 @@ def asof_join(
 
     The snapshot side is broadcast; the probe side is never shuffled.
     """
-    part = list(partition_by)
-    v = validity_windows(snapshots, snapshot_date, part).select(
-        *part,
+    v = validity_windows(snapshots, snapshot_date).select(
         F.col(snapshot_date).alias("__snap_date"),
         "valid_from",
         "valid_to",
-        *payload,
     )
-    cond = (
+    on = (
         F.col("valid_from").isNull() | (F.col(probe_date) > F.col("valid_from"))
     ) & (F.col("valid_to").isNull() | (F.col(probe_date) <= F.col("valid_to")))
-    on = cond
-    for c in part:
-        on = on & (probes[c] == v[c])
     out = probes.join(F.broadcast(v), on, "left")
     return out.select(
         *[probes[f.name] for f in probes.schema.fields],
         F.col("__snap_date").alias(snapshot_date),
-        *[v[c] for c in payload],
     )
 
 
@@ -185,7 +174,6 @@ def asof_column(
 def merge_sources(
     registries: dict[str, DataFrame],
     date_col: str = "dataset_date",
-    payload: Sequence[str] = (),
 ) -> DataFrame:
     """J8 (MergeAnnotators, directory/directory.go:170-202): align k
     per-source snapshot lists into one composite registry — one row
@@ -194,13 +182,11 @@ def merge_sources(
     (the reference only emits composites once every list has an
     element ≤ d; filter NULLs downstream to match).
 
-    Union all (source, date, payload) rows and pivot one row per
-    date; then, as in ``validity_windows``, one date-sorted array of
-    those rows and its ``posexplode``: each element takes, per source,
-    the last non-NULL payload among the elements up to it. Output
-    column per source: ``{source}_{payload_col}`` plus
-    ``{source}_date``. Payload columns must be orderable (the array
-    sorts whole rows).
+    Union all (source, date) rows and pivot one row per date; then, as
+    in ``validity_windows``, one date-sorted array of those rows and
+    its ``posexplode``: each element takes, per source, the last
+    non-NULL date among the elements up to it. Output column per
+    source: ``{source}_date``.
 
     SIZE CONTRACT: inputs are snapshot REGISTRIES — file listings in
     the hundreds of rows (the reference's whole directory is ~200
@@ -208,14 +194,13 @@ def merge_sources(
     element scans the prefix before it. Do NOT reuse this operator
     for fact-scale inputs.
     """
-    payload = list(payload)
     parts = []
     for name, df in registries.items():
         parts.append(
             df.select(
                 F.lit(name).alias("__src"),
                 F.col(date_col).alias("__d"),
-                F.struct(F.col(date_col).alias("date"), *payload).alias("__pl"),
+                F.struct(F.col(date_col).alias("date")).alias("__pl"),
             )
         )
     u = parts[0]
@@ -241,9 +226,6 @@ def merge_sources(
     sel = [F.col("__e.__d").alias(date_col)]
     for name in registries:
         sel.append(F.col(f"__pl_{name}.date").alias(f"{name}_date"))
-        sel.extend(
-            F.col(f"__pl_{name}.{c}").alias(f"{name}_{c}") for c in payload
-        )
     return out.select(*sel)
 
 
@@ -254,12 +236,10 @@ def asof_join_union(
     version_ts: str,
     payload: Sequence[str],
     partition_by: Sequence[str],
-    inclusive: bool = True,
 ) -> DataFrame:
     """Big-dimension as-of join (SCD2 attachment) via union + window:
     each probe row picks up the payload of the latest version with
-    ``version_ts <= probe_ts`` (or ``<`` when ``inclusive=False``)
-    within its partition keys. Probes with no earlier version keep
+    ``version_ts <= probe_ts`` within its partition keys. Probes with no earlier version keep
     NULL payload.
 
     This is the scale path complementing ``asof_join``: that form
@@ -273,15 +253,11 @@ def asof_join_union(
     """
     part = list(partition_by)
     pay = list(payload)
-    # tag order at equal timestamps decides inclusivity: versions
-    # first (0) -> a probe AT the version's ts sees it; probes first
-    # -> strictly-earlier semantics
-    v_tag, p_tag = (0, 1) if inclusive else (1, 0)
     probe_cols = [f.name for f in probes.schema.fields]
     p_side = probes.select(
         *part,
         F.col(probe_ts).alias("__ts"),
-        F.lit(p_tag).alias("__tag"),
+        F.lit(1).alias("__tag"),
         F.lit(True).alias("__is_probe"),
         *[c for c in probe_cols if c not in part and c != probe_ts],
         *[
@@ -292,7 +268,9 @@ def asof_join_union(
     v_side = versions.select(
         *part,
         F.col(version_ts).alias("__ts"),
-        F.lit(v_tag).alias("__tag"),
+        # at equal timestamps versions sort first, so a probe AT a
+        # version's ts sees it
+        F.lit(0).alias("__tag"),
         F.lit(False).alias("__is_probe"),
         *[
             F.lit(None).cast(probes.schema[c].dataType).alias(c)

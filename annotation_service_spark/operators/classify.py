@@ -85,7 +85,6 @@ def perceptron_scores(
     n_buckets: int = 64,
     epochs: int = 2,
     seed: str = "pc",
-    averaged: bool = False,
 ) -> DataFrame:
     """Train the batch perceptron for ``epochs`` full passes and score
     every document under the final weights. ``label`` must evaluate to
@@ -94,25 +93,15 @@ def perceptron_scores(
 
     Epoch 0 starts from w = 0, under which every row is misclassified
     (y·0 ≤ 0), so w₁ = Σ_d y_d·x_d — the class-difference centroid;
-    later epochs add Σ over the currently-misclassified set only.
-
-    ``averaged=True`` scores with the EPOCH-SUMMED weight vector
-    Σ_t w_t instead of the last w_T — the averaged perceptron
-    (Freund & Schapire 1999), whose decisions equal the true average
-    (1/T)·Σ w_t since a positive scale never flips a sign or a
-    ranking; keeping the sum instead of the mean keeps every margin
-    int64-exact."""
+    later epochs add Σ over the currently-misclassified set only."""
     spark = docs.sparkSession
     feat = scoped_cache(hashed_bow(docs, id_col, text_col, n_buckets, seed))
     lab = docs.select(F.col(id_col).alias("id"), label.cast("long").alias("y"))
 
     w = {b: 0 for b in range(n_buckets + 1)}
-    w_sum = {b: 0 for b in range(n_buckets + 1)}
 
-    def w_df(weights=None):
-        return spark.createDataFrame(
-            [(b, v) for b, v in (weights or w).items()], "b long, w long"
-        )
+    def w_df():
+        return spark.createDataFrame([(b, v) for b, v in w.items()], "b long, w long")
 
     for epoch in range(epochs):
         if epoch == 0:
@@ -136,11 +125,9 @@ def perceptron_scores(
         )
         for r in delta:
             w[r["b"]] += r["dw"]
-        for b in w:
-            w_sum[b] += w[b]
 
     final = (
-        feat.join(F.broadcast(w_df(w_sum if averaged else None)), "b")
+        feat.join(F.broadcast(w_df()), "b")
         .groupBy("id")
         .agg(F.sum(F.col("x") * F.col("w")).cast("long").alias("score"))
         .join(lab, "id")

@@ -76,12 +76,16 @@ def _local_components(src, dst) -> dict[int, int]:
     return {v: find(v) for v in verts}
 
 
+# edges ``connected_components`` labels on the driver (≈ 16 MB) before
+# it takes the distributed path; read at call time
+_LOCAL_EDGE_LIMIT = 1_000_000
+
+
 def connected_components(
     pairs: DataFrame,
     src_col: str = "id_a",
     dst_col: str = "id_b",
     max_iters: int = 25,
-    local_edge_limit: int | None = 1_000_000,
 ) -> DataFrame:
     """Resolve an undirected edge list to (id, cluster_id) where
     cluster_id is the smallest id in the connected component.
@@ -94,19 +98,16 @@ def connected_components(
     near-dup pair lists are usually TINY relative to the corpus —
     often thousands of edges from millions of docs — while each
     pointer-jumping round costs three driver-synchronized jobs.
-    ``limit(local_edge_limit+1).toPandas()`` probes the edge list in
-    ONE Arrow action; when everything arrived (≤ the limit, default
-    1M edges ≈ 16 MB), a driver union-find labels it instantly with
-    the identical min-label contract (differential-tested both ways).
+    ``limit(_LOCAL_EDGE_LIMIT+1).toPandas()`` probes the edge list in
+    ONE Arrow action; when everything arrived (≤ the limit, 1M edges
+    ≈ 16 MB), a driver union-find labels it instantly with the
+    identical min-label contract (differential-tested both ways).
     Larger graphs take the distributed path unchanged — the pair join
     is recomputed there, but one extra pass on a graph that big is
-    noise next to its own clustering rounds. ``local_edge_limit=None``
-    forces the distributed form (used by its own tests).
+    noise next to its own clustering rounds.
 
-    NOTE the fast path is EAGER: the bounded probe executes the
-    (possibly expensive) upstream pairs plan at DataFrame-construction
-    time — composite-plan authors building but not yet executing
-    should pass ``local_edge_limit=None`` to stay lazy. Null src/dst
+    NOTE the probe is EAGER: it executes the (possibly expensive)
+    upstream pairs plan at DataFrame-construction time. Null src/dst
     rows are dropped before the probe, matching the distributed
     path's tolerance (joins there discard null keys).
     """
@@ -114,16 +115,13 @@ def connected_components(
         F.col(src_col).cast("long").alias("src"),
         F.col(dst_col).cast("long").alias("dst"),
     ).na.drop()
-    if local_edge_limit:
-        probe = edges.limit(local_edge_limit + 1).toPandas()
-        if len(probe) <= local_edge_limit:
-            labels = _local_components(
-                probe["src"].to_numpy(), probe["dst"].to_numpy()
-            )
-            return pairs.sparkSession.createDataFrame(
-                [(v, c) for v, c in sorted(labels.items())],
-                "id long, cluster_id long",
-            )
+    probe = edges.limit(_LOCAL_EDGE_LIMIT + 1).toPandas()
+    if len(probe) <= _LOCAL_EDGE_LIMIT:
+        labels = _local_components(probe["src"].to_numpy(), probe["dst"].to_numpy())
+        return pairs.sparkSession.createDataFrame(
+            [(v, c) for v, c in sorted(labels.items())],
+            "id long, cluster_id long",
+        )
     sym = edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint(eager=False)

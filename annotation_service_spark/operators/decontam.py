@@ -14,9 +14,9 @@ Spark shape, designed for the 100 TB asymmetry:
   hit count (the broadcast join is a left join carrying a hit
   marker), so the whole operator is: corpus scan -> shingle explode
   -> broadcast probe -> one map-side-combinable groupBy on doc id.
-- at extreme benchmark sizes (beyond broadcast), the same code
-  degrades gracefully: drop the broadcast hint and Spark plans a
-  shuffle join keyed on the shingle hash — uniform, skew-free.
+- the broadcast hint is unconditional: a benchmark set whose
+  distinct shingles do not fit one broadcast is outside this
+  operator's contract.
 
 The reference has no decontamination surface; this is a
 beyond-reference training-pipeline operator, oracle-checked against
@@ -39,7 +39,6 @@ def contamination_check(
     text_col: str = "text",
     ngram: int = 3,
     threshold: float = 0.1,
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """Per corpus document: distinct-shingle total, how many of those
     shingles appear anywhere in the benchmark set, the contaminated
@@ -51,14 +50,12 @@ def contamination_check(
     tokenizes the corpus once: Spark matches this plan's identical
     shingle subtree to that cache.
     """
-    bsh = (
+    bsh = F.broadcast(
         shingle_table(benchmark, id_col, text_col, ngram)
         .select("s")
         .distinct()
         .withColumn("_hit", F.lit(1))
     )
-    if broadcast_benchmark:
-        bsh = F.broadcast(bsh)
     return (
         shingle_table(corpus, id_col, text_col, ngram)
         .join(bsh, "s", "left")

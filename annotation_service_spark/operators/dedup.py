@@ -805,7 +805,12 @@ def simhash_pairs(
     ).where(F.col("hamming") <= max_hamming)
 
 
-def cap_shingles(sh: DataFrame, max_df: int, hot_limit: int = 100_000) -> DataFrame:
+# hot shingles ``cap_shingles`` embeds as a broadcast literal before it
+# falls back to a shuffle anti-join; read at call time
+_HOT_SHINGLE_LIMIT = 100_000
+
+
+def cap_shingles(sh: DataFrame, max_df: int) -> DataFrame:
     """Drop shingles with document frequency > ``max_df`` from an
     (id, s) shingle table — the stop-shingle cap that keeps one hot
     boilerplate shingle from fanning out df² candidate pairs on a
@@ -816,15 +821,15 @@ def cap_shingles(sh: DataFrame, max_df: int, hot_limit: int = 100_000) -> DataFr
     table, so each consumer of the capped table replays only the
     broadcast anti-join, not the df aggregation.
 
-    Size-gated, EAGER: a bounded ``limit(hot_limit+1)`` probe (one
-    Arrow fetch, ≤ hot_limit+1 short strings) runs the df aggregation
+    Size-gated, EAGER: a bounded ``limit(_HOT_SHINGLE_LIMIT+1)`` probe
+    (one Arrow fetch of short strings) runs the df aggregation
     at CONSTRUCTION time. When the hot set fits, it becomes a driver
     literal — the aggregation runs exactly once for all downstream
     consumers (per-id sizes + both sides of the pair self-join) with
     no lingering ``.cache()`` to leak across invocations (r9 cached
     here and never unpersisted — every call accumulated a cached
     DataFrame for the session's lifetime). When the hot set exceeds
-    ``hot_limit`` (a small max_df over a huge corpus), it falls back
+    ``_HOT_SHINGLE_LIMIT`` (a small max_df over a huge corpus), it falls back
     to a plain shuffle anti-join instead of force-broadcasting an
     oversized table."""
     hot_plan = (
@@ -833,8 +838,8 @@ def cap_shingles(sh: DataFrame, max_df: int, hot_limit: int = 100_000) -> DataFr
         .where(F.col("df") > max_df)
         .select("s")
     )
-    probe = hot_plan.limit(hot_limit + 1).toPandas()
-    if len(probe) > hot_limit:
+    probe = hot_plan.limit(_HOT_SHINGLE_LIMIT + 1).toPandas()
+    if len(probe) > _HOT_SHINGLE_LIMIT:
         # oversized hot set: shuffle anti-join (no broadcast hint)
         return sh.join(hot_plan, "s", "left_anti")
     spark = sh.sparkSession

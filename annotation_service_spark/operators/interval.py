@@ -53,8 +53,8 @@ gets a new build of that table only. A payload may be a Spark
 expression over the table, evaluated once in the build. This holds
 while Catalyst's size estimate of a whole range table fits the
 broadcast gate; past it each call prunes the table to the snapshots
-its probes reference, and a bucketed shuffle variant covers build
-tables still too big to broadcast.
+its probes reference, and a build still too big to broadcast is the
+caller's to join with the bucketed shuffle variant.
 """
 
 from __future__ import annotations
@@ -73,6 +73,11 @@ from pyspark.sql import types as T
 
 from ..functions.ip import parse_ip_series
 from ..partitioning import rebalance_for_python
+
+# The one driver-broadcast budget: a build collected to the driver and
+# broadcast (a range table here, the exact embedding corpus in
+# ``similarity.embedding_dup_pairs``) must fit it. Read at call time.
+MAX_BROADCAST_BYTES = 512 << 20
 
 # ---------------------------------------------------------------------------
 # numpy helpers on big-endian fixed-width byte bounds ('S16' / 'S8')
@@ -131,7 +136,6 @@ def _u8_out(m: np.ndarray, is_long: bool) -> list | np.ndarray:
 def _flatten_group_np(
     low_m: np.ndarray,
     high_m: np.ndarray,
-    merge: bool,
     payload_key: np.ndarray,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Paint-sweep flatten of one snapshot group.
@@ -205,7 +209,7 @@ def _flatten_group_np(
         w = winner[seg_idx]
     seg_low = bounds[seg_idx]
     seg_high_excl = bounds[seg_idx + 1]
-    if merge and len(w):
+    if len(w):
         # merge adjacent segments with equal payload; a dropped (gap)
         # segment breaks adjacency because seg_low != prev seg_high_excl
         contiguous = np.concatenate([[False], seg_low[1:] == seg_high_excl[:-1]])
@@ -233,7 +237,6 @@ def flatten_intervals(
     payload: Sequence[str] = (),
     partition_by: Sequence[str] = (),
     seq: str | None = None,
-    merge: bool = True,
 ) -> DataFrame:
     """T1+T2: flatten nested/overlapping ranges into sorted disjoint
     ranges, innermost/latest wins, merging adjacent equal payloads.
@@ -284,7 +287,7 @@ def flatten_intervals(
             if payload
             else np.zeros(len(pdf), dtype=np.int64)
         )
-        seg_low, seg_high, w = _flatten_group_np(low_m, high_m, merge, pk)
+        seg_low, seg_high, w = _flatten_group_np(low_m, high_m, pk)
         lo_out = _u8_out(seg_low, is_long)
         hi_out = _u8_out(seg_high, is_long)
         out = pd.DataFrame({low: lo_out, high: hi_out})
@@ -307,43 +310,37 @@ def flatten_intervals_sql(
     low: str = "low",
     high: str = "high",
     payload: Sequence[str] = (),
-    partition_by: Sequence[str] = (),
     seq: str | None = None,
-    merge: bool = True,
 ) -> DataFrame:
     """Pure-DataFrame/SQL formulation of ``flatten_intervals`` for
-    LONG bounds (gaps-and-islands): explode all bounds → elementary
-    segments via ``lead`` → winner per segment = covering row with
-    max (low, seq) via ``max_by`` → optional adjacent-equal merge.
+    LONG bounds and one snapshot (gaps-and-islands): explode all
+    bounds → elementary segments via ``lead`` → winner per segment =
+    covering row with max (low, seq) via ``max_by`` → adjacent-equal
+    merge.
 
     Used for differential testing against the vectorized version and
     as the shape the DuckDB oracle replicates. The covering join is
-    an equi-join on partition keys plus a range predicate; for the
-    build-side table sizes this engine flattens (≤ a few M rows per
-    snapshot) AQE handles it; probe-side scale never flows through
-    here.
+    a range predicate; for the build-side table sizes this engine
+    flattens (≤ a few M rows per snapshot) AQE handles it; probe-side
+    scale never flows through here.
     """
     payload = list(payload)
-    part = list(partition_by)
     w_order = [F.col(seq)] if seq else [F.col(low), F.col(high).desc()]
-    r = df.withColumn(
-        "__seq", F.row_number().over(Window.partitionBy(*part or [F.lit(1)]).orderBy(*w_order))
-    )
+    r = df.withColumn("__seq", F.row_number().over(Window.partitionBy(F.lit(1)).orderBy(*w_order)))
 
     bounds = (
-        r.select(*part, F.col(low).alias("__b"))
-        .unionByName(r.select(*part, (F.col(high) + 1).alias("__b")))
+        r.select(F.col(low).alias("__b"))
+        .unionByName(r.select((F.col(high) + 1).alias("__b")))
         .distinct()
     )
-    wseg = Window.partitionBy(*part or [F.lit(1)]).orderBy("__b")
+    wseg = Window.partitionBy(F.lit(1)).orderBy("__b")
     segs = (
         bounds.withColumn("__nxt", F.lead("__b").over(wseg))
         .where(F.col("__nxt").isNotNull())
-        .select(*part, F.col("__b").alias("__seg_low"), (F.col("__nxt") - 1).alias("__seg_high"))
+        .select(F.col("__b").alias("__seg_low"), (F.col("__nxt") - 1).alias("__seg_high"))
     )
 
     rr = r.select(
-        *[F.col(c).alias(f"__r_{c}") for c in part],
         F.col(low).alias("__r_low"),
         F.col(high).alias("__r_high"),
         "__seq",
@@ -352,25 +349,20 @@ def flatten_intervals_sql(
     cond = (F.col("__r_low") <= F.col("__seg_low")) & (
         F.col("__r_high") >= F.col("__seg_high")
     )
-    for c in part:
-        cond = cond & (F.col(f"__r_{c}") == F.col(c))
     cover = segs.join(rr, cond, "inner")
 
-    winner = cover.groupBy(*part, "__seg_low", "__seg_high").agg(
+    winner = cover.groupBy("__seg_low", "__seg_high").agg(
         F.max_by(
             F.struct(*[F.col(f"__p_{c}").alias(c) for c in payload]),
             F.col("__seq"),
         ).alias("__pl")
     )
     flat = winner.select(
-        *part,
         F.col("__seg_low").alias(low),
         F.col("__seg_high").alias(high),
         *[F.col(f"__pl.{c}").alias(c) for c in payload],
     )
-    if merge:
-        flat = merge_adjacent_equal(flat, low=low, high=high, payload=payload, partition_by=part)
-    return flat
+    return merge_adjacent_equal(flat, low=low, high=high, payload=payload)
 
 
 def merge_adjacent_equal(
@@ -378,15 +370,13 @@ def merge_adjacent_equal(
     low: str = "low",
     high: str = "high",
     payload: Sequence[str] = (),
-    partition_by: Sequence[str] = (),
 ) -> DataFrame:
     """T2 (iputils/iputils.go:155-184): collapse runs of
     adjacent-or-overlapping ranges with equal payload into one range
     [min(low), max(high)]. Long bounds. Classic sessionize: lag →
     new-group flag → cumsum → group."""
     payload = list(payload)
-    part = list(partition_by)
-    w = Window.partitionBy(*part or [F.lit(1)]).orderBy(low, high)
+    w = Window.partitionBy(F.lit(1)).orderBy(low, high)
     prev_high = F.lag(high).over(w)
     is_break = prev_high.isNull() | (F.col(low) > prev_high + 1)
     if payload:
@@ -397,9 +387,9 @@ def merge_adjacent_equal(
     )
     return (
         df.withColumn("__grp", grp)
-        .groupBy(*part, "__grp", *payload)
+        .groupBy("__grp", *payload)
         .agg(F.min(low).alias(low), F.max(high).alias(high))
-        .select(*part, low, high, *payload)
+        .select(low, high, *payload)
     )
 
 
@@ -478,10 +468,8 @@ def range_join_broadcast(
     low: str = "ip_low",
     high: str = "ip_high",
     payload: Sequence[str | Column] = (),
-    how: str = "left",
     keys: Sequence[str] = (),
     parse_ips: bool = False,
-    max_broadcast_bytes: int = 512 << 20,
     dims: Sequence[tuple[DataFrame, str, str, Sequence[str]]] = (),
 ) -> DataFrame:
     """J1 via broadcast + vectorized binary search
@@ -512,8 +500,7 @@ def range_join_broadcast(
     payload in order — the same rows as chaining one single-table call
     per table, minus a Python crossing per extra table (the reference
     answers a request with one parse and one search per dataset,
-    iputils/iputils.go:111-128). ``how='inner'`` keeps rows hit in
-    every table.
+    iputils/iputils.go:111-128).
 
     A payload entry may be a ``Column`` over the table's columns
     (aliased to its output name): it is evaluated by Spark once, in the
@@ -529,7 +516,7 @@ def range_join_broadcast(
     A key that repeats answers with one of its rows.
 
     Build once per published table: when Catalyst's free size
-    estimate of a WHOLE range table fits ``max_broadcast_bytes``, its
+    estimate of a WHOLE range table fits ``MAX_BROADCAST_BYTES``, its
     build is memoized on the table object itself (by identity, per
     low/high/payload/keys). The first call collects and broadcasts
     it; every later call on the same DataFrame — alone or beside other
@@ -549,8 +536,9 @@ def range_join_broadcast(
     one sorted array per key group, composing J2∘J1 without a
     key-partitioned shuffle of the probes.
 
-    Misses keep NULL payloads (how='left') or are dropped ('inner'),
-    mirroring ErrNodeNotFound handling (geolite2v2/geo-ip.go:162).
+    Every probe row comes out once; a miss keeps NULL payloads, the
+    left lookup behind the reference's Missing backfill
+    (handler/handler.go:66-76, geolite2v2/geo-ip.go:162).
 
     ``parse_ips=True`` fuses P3 (text parse) + P4 (6to4 rewrite) into
     this same Arrow batch: the probe column is IP TEXT, parsed by
@@ -561,12 +549,11 @@ def range_join_broadcast(
     the annotate hot path.
 
     Past the size gate a table is not memoized: with ``keys`` it is
-    SEMI-JOINED per call to the key groups the probes reference, one
-    ``count()`` makes the estimate precise, and a single-table build
-    still over ``max_broadcast_bytes`` falls back to
-    ``range_join_bucketed`` (long bounds) instead of broadcasting a
-    table that belongs in a shuffle join. A multi-table call raises
-    there instead; probe that table alone to get the fallback.
+    SEMI-JOINED per call to the key groups the probes reference, and
+    one ``count()`` makes the estimate precise. A build still over
+    ``MAX_BROADCAST_BYTES`` raises instead of broadcasting a table
+    that belongs in a shuffle join; the error names
+    ``range_join_bucketed``, which joins one long-bound table per call.
     """
     if isinstance(ranges, DataFrame):
         tables = [(ranges, list(payload))]
@@ -613,7 +600,7 @@ def range_join_broadcast(
 
     bcs, payloads = [], []
     for table, pl in tables:
-        if _estimated_bytes(table) <= max_broadcast_bytes:
+        if _estimated_bytes(table) <= MAX_BROADCAST_BYTES:
             signature = (low, high, tuple(map(str, pl)), tuple(keys))
             bc, fields = _built_once(table, signature, functools.partial(build, table, pl))
         else:
@@ -621,17 +608,11 @@ def range_join_broadcast(
             # Catalyst (over)estimates the semi-join at the whole table's
             # size; one count() job gives the per-row-bytes estimate
             est_bytes = pruned.count() * (2 * width + 64 * len(pl) + 16 * len(keys))
-            if est_bytes > max_broadcast_bytes:
-                if is_long and not parse_ips and len(tables) == 1 and not dims:
-                    return range_join_bucketed(
-                        probes, pruned, probe_col, low=low, high=high,
-                        payload=pl, how=how, keys=keys,
-                    )
+            if est_bytes > MAX_BROADCAST_BYTES:
                 raise ValueError(
-                    f"range_join_broadcast: build table ~{est_bytes >> 20} MiB exceeds "
-                    f"max_broadcast_bytes ({max_broadcast_bytes >> 20} MiB) and no "
-                    "bucketed fallback exists for binary bounds / parse_ips / several "
-                    "tables — flatten per snapshot and use range_join_bucketed on long bounds"
+                    f"range_join_broadcast: a build of ~{est_bytes >> 20} MiB exceeds "
+                    f"MAX_BROADCAST_BYTES ({MAX_BROADCAST_BYTES >> 20} MiB); join the table "
+                    "in a shuffle with range_join_bucketed (long bounds, one table per call)"
                 )
             bc, fields = build(pruned, pl)
         bcs.append(bc)
@@ -715,12 +696,7 @@ def range_join_broadcast(
                             search(table, pl, pb[ix], pos[ix], res)
                 for dim, on, attrs in zip(dim_tables, dim_on, dim_names):
                     look_up(dim, on, attrs, res)
-            out = pd.concat([pdf[probe_names], pd.DataFrame(res, index=pdf.index)], axis=1)
-            if how == "inner":
-                for pl in pl_names:
-                    if pl:
-                        out = out[out[pl[0]].notna()]
-            yield out
+            yield pd.concat([pdf[probe_names], pd.DataFrame(res, index=pdf.index)], axis=1)
 
     return rebalance_for_python(probes).mapInPandas(lookup, out_schema)
 
@@ -781,7 +757,6 @@ def interval_overlap_join(
     right_start: str,
     right_end: str,
     cell_width: int,
-    keys: Sequence[str] = (),
 ) -> DataFrame:
     """General interval×interval OVERLAP join (closed intervals on a
     numeric axis): emit every (left row, right row) pair with
@@ -794,8 +769,8 @@ def interval_overlap_join(
     BroadcastNestedLoopJoin — O(|L|·|R|) and a driver OOM when
     neither side broadcasts. Instead both sides replicate to the
     fixed-width grid cells they overlap (``sequence``+``explode``,
-    JVM-side), the join becomes an EQUI-join on the cell id (plus
-    any ``keys``), and the overlap predicate finishes as a filter.
+    JVM-side), the join becomes an EQUI-join on the cell id, and the
+    overlap predicate finishes as a filter.
     A pair overlapping k shared cells would emit k copies, so the
     cell condition keeps only the pair's FIRST shared cell — the
     standard dedup-free grid trick: cell == max(floor(l.s/w),
@@ -808,7 +783,6 @@ def interval_overlap_join(
     behave like any hot groupBy key — AQE skew-join splits them.
     Column names must be disjoint between the two inputs (rename
     before calling, as the gate does)."""
-    keys = list(keys)
     lc = left.withColumn(
         "__cell",
         F.explode(
@@ -837,10 +811,8 @@ def interval_overlap_join(
         & (lc[left_start] <= rc[right_end])
         & (rc[right_start] <= lc[left_end])
     )
-    for c in keys:
-        cond = cond & (lc[c] == rc[c])
     joined = lc.join(rc, cond, "inner")
     return joined.select(
         *[lc[f.name] for f in left.schema.fields],
-        *[rc[f.name] for f in right.schema.fields if f.name not in keys],
+        *[rc[f.name] for f in right.schema.fields],
     )

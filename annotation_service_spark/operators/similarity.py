@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from annotation_service_spark import caching
 from annotation_service_spark.caching import scoped_cache
 from annotation_service_spark.operators.banding import band_join, fingerprint_bands
-from annotation_service_spark.operators.interval import _estimated_bytes
+from annotation_service_spark.operators import interval
 
 
 def as_double(vec: Column) -> Column:
@@ -267,7 +267,6 @@ def embedding_dup_pairs(
     n_planes: int = 60,
     bands: int = 4,
     probe_bits: int = 1,
-    max_broadcast_bytes: int = 512 << 20,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (id_a, id_b, cos) with
     cosine ≥ threshold and id_a < id_b.
@@ -288,7 +287,7 @@ def embedding_dup_pairs(
     The exact path is SIZE-GATED like ``range_join_broadcast``: the
     corpus must fit the driver + one broadcast (Catalyst sizeInBytes
     estimate first — free; one count() job only when that estimate
-    crosses ``max_broadcast_bytes``). Past the gate the call raises
+    crosses ``interval.MAX_BROADCAST_BYTES``). Past the gate the call raises
     and names ``use_lsh=True`` — silently collecting a 100 TB corpus
     to the driver is the failure mode this guard exists to prevent.
     Ids keep their source dtype (long/int/string all work; no int64
@@ -339,16 +338,16 @@ def embedding_dup_pairs(
         # when that (over)estimate crosses the threshold do we pay one
         # count() for a precise per-row-bytes estimate before refusing.
         slim = embeddings.select(id_col, vec_col)
-        est_bytes = _estimated_bytes(slim)  # unknown → verify by count
-        if est_bytes > max_broadcast_bytes:
+        budget = interval.MAX_BROADCAST_BYTES
+        est_bytes = interval._estimated_bytes(slim)  # unknown → verify by count
+        if est_bytes > budget:
             n_rows = slim.count()
             est_bytes = n_rows * (dim * 8 + 24)
-        if est_bytes > max_broadcast_bytes:
+        if est_bytes > budget:
             raise ValueError(
                 f"embedding_dup_pairs: exact all-pairs path would collect "
                 f"~{est_bytes >> 20} MiB of vectors to the driver (cap "
-                f"{max_broadcast_bytes >> 20} MiB) — use use_lsh=True (the "
-                "banded scale path) or raise max_broadcast_bytes explicitly"
+                f"{budget >> 20} MiB) — use use_lsh=True (the banded scale path)"
             )
         pdf = slim.toPandas()
         all_ids = pdf[id_col].to_numpy()  # keep source dtype

@@ -54,9 +54,8 @@ def salted_join(
     small: DataFrame,
     on: Sequence[str],
     n_salts: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
-    """Skew-safe equi-join of a big (skewed) side with a
+    """Skew-safe inner equi-join of a big (skewed) side with a
     non-broadcastable small side on columns ``on``.
 
     Output columns = big's columns + small's non-key columns (the
@@ -66,7 +65,7 @@ def salted_join(
     s = small.withColumn(
         "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
     ).withColumn("__salt", F.col("__salt").cast("long"))
-    joined = b.join(s, on + ["__salt"], how)
+    joined = b.join(s, on + ["__salt"])
     small_payload = [c for c in small.columns if c not in on]
     return joined.select(*big.columns, *small_payload)
 

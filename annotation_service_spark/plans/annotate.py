@@ -251,7 +251,6 @@ def annotate(
         probes,
         [(geo_ranges, GEO_PAYLOAD), (asn_ranges, [*ASN_PAYLOAD, best_asn])],
         probe_col=ip_col,
-        how="left",
         keys=keys,
         parse_ips=True,
         dims=[
@@ -275,26 +274,23 @@ def to_v2_response(annotated: DataFrame, ip_col: str = "ip") -> DataFrame:
 def to_v2_response_document(
     annotated: DataFrame,
     ip_col: str = "ip",
-    batch_col: str | None = None,
     annotator_date_col: str | None = "dataset_date",
 ) -> DataFrame:
     """S11, full v2 shape (api/v2/api-v2.go:49-55): ONE JSON document
-    per batch — ``{AnnotatorDate, Annotations: {ip: {Geo, Network}}}``.
+    for the request — ``{AnnotatorDate, Annotations: {ip: {Geo, Network}}}``.
     Row-per-ip (``to_v2_response``) is the distributed-native shape;
     this document form is the wire-parity edge for serving, built with
     map_from_entries + to_json (no driver-side assembly).
 
-    ``batch_col`` groups rows into response documents (None = one
-    document for the whole DataFrame); AnnotatorDate = the min
+    The whole DataFrame is one request; AnnotatorDate = the min
     snapshot date used, mirroring CompositeAnnotator's earliest-date
     rule (directory/directory.go:76-85).
 
-    A batch that repeats an IP yields one map key for it: the
+    A request that repeats an IP yields one map key for it: the
     reference fills a Go map keyed by IP, and entries for one IP on
     one date are identical, so ``array_distinct`` drops the repeats
     inside the same aggregate (a duplicate key would otherwise fail
     the whole document with DUPLICATED_MAP_KEY)."""
-    gcols = [batch_col] if batch_col else []
     entries = F.map_from_entries(
         F.array_distinct(
             F.collect_list(F.struct(F.col(ip_col), F.struct("geo", "network")))
@@ -305,11 +301,8 @@ def to_v2_response_document(
         if annotator_date_col and annotator_date_col in annotated.columns
         else F.lit(None).cast("date")
     )
-    doc = annotated.groupBy(*gcols).agg(
-        date_agg.alias("annotator_date"), entries.alias("annotations")
-    )
+    doc = annotated.agg(date_agg.alias("annotator_date"), entries.alias("annotations"))
     return doc.select(
-        *gcols,
         F.to_json(
             F.struct(
                 F.col("annotator_date").alias("AnnotatorDate"),

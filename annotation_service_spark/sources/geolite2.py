@@ -60,12 +60,15 @@ class ErrTooManyErrors(Exception):
     """Loader error budget exceeded (loader/csv-reader.go:14)."""
 
 
+# the reference's per-file budgets (loader/csv-reader.go:17-19)
+MAX_BAD_RECORDS = 0
+MAX_FIELD_ERRORS = 50
+
+
 def check_error_budget(
     df: DataFrame,
     bad_record_col: str = "_corrupt_record",
-    max_bad_records: int = 0,
     field_error_col: str | None = None,
-    max_field_errors: int = 50,
 ) -> None:
     """Enforce the reference's per-file error budgets."""
     aggs = [
@@ -74,13 +77,13 @@ def check_error_budget(
     if field_error_col:
         aggs.append(F.sum(F.col(field_error_col).cast("long")).alias("field"))
     row = df.agg(*aggs).collect()[0]
-    if row["bad"] > max_bad_records:
-        raise ErrTooManyErrors(f"{row['bad']} malformed records (max {max_bad_records})")
-    if field_error_col and (row["field"] or 0) > max_field_errors:
-        raise ErrTooManyErrors(f"{row['field']} field errors (max {max_field_errors})")
+    if row["bad"] > MAX_BAD_RECORDS:
+        raise ErrTooManyErrors(f"{row['bad']} malformed records (max {MAX_BAD_RECORDS})")
+    if field_error_col and (row["field"] or 0) > MAX_FIELD_ERRORS:
+        raise ErrTooManyErrors(f"{row['field']} field errors (max {MAX_FIELD_ERRORS})")
 
 
-def geolite2_blocks(spark: SparkSession, path: str, strict: bool = True) -> DataFrame:
+def geolite2_blocks(spark: SparkSession, path: str) -> DataFrame:
     """S2: GeoLite2 Blocks CSV → typed DataFrame.
 
     Numeric parse failures on NON-empty text are field errors like the
@@ -92,9 +95,8 @@ def geolite2_blocks(spark: SparkSession, path: str, strict: bool = True) -> Data
     )
     # columnPruning off for this read only: a pruned CSV scan parses
     # just the columns a query needs, which hides `_corrupt_record` for
-    # a row with too many or too few fields, so the strict budget would
-    # pass a malformed file and count() would disagree with collect()
-    # (test_sources.py::test_blocks_malformed_records). Every query
+    # a row with too many or too few fields, so the error budget would
+    # pass a malformed file (test_sources.py::test_blocks_malformed_records). Every query
     # reads more than `_corrupt_record` alone (the filter below needs
     # latitude/longitude), which Spark requires of a raw CSV scan.
     raw = spark.read.option("columnPruning", "false").csv(
@@ -113,8 +115,7 @@ def geolite2_blocks(spark: SparkSession, path: str, strict: bool = True) -> Data
         | (F.col("longitude").isNotNull() & (F.col("longitude") != "") & F.col("longitude").try_cast("double").isNull())
     ).cast("int")
     df = raw.withColumn("_field_error", field_err)
-    if strict:
-        check_error_budget(df, field_error_col="_field_error")
+    check_error_budget(df, field_error_col="_field_error")
     # field-error records are SKIPPED (loader/csv-reader.go:76-84
     # counts them and continues); malformed records likewise
     return df.where(
@@ -137,7 +138,7 @@ def geolite2_blocks(spark: SparkSession, path: str, strict: bool = True) -> Data
     )
 
 
-def geolite2_locations(spark: SparkSession, path: str, strict: bool = True) -> DataFrame:
+def geolite2_locations(spark: SparkSession, path: str) -> DataFrame:
     """S3: GeoLite2 Locations CSV (13 or 14 columns) → typed dim.
 
     Code/name validation failures are dropped + counted against the
@@ -162,10 +163,10 @@ def geolite2_locations(spark: SparkSession, path: str, strict: bool = True) -> D
         & F.coalesce(F.col("country_name"), F.lit("")).rlike("^[^0-9]*$")
         & F.col("geoname_id").try_cast("long").isNotNull()
     )
-    named = named.withColumn("_field_error", (~valid).cast("int"))
-    if strict:
-        named = named.withColumn("_corrupt_record", F.lit(None).cast("string"))
-        check_error_budget(named, field_error_col="_field_error")
+    named = named.withColumn("_field_error", (~valid).cast("int")).withColumn(
+        "_corrupt_record", F.lit(None).cast("string")
+    )
+    check_error_budget(named, field_error_col="_field_error")
     out = named.where(valid).select(
         F.col("geoname_id").try_cast("long").alias("geoname_id"),
         F.coalesce("continent_code", F.lit("")).alias("continent_code"),
@@ -268,5 +269,4 @@ def build_geo_ranges(
         payload=["gid", "postal_code", "latitude", "longitude"],
         partition_by=part,
         seq="seq",
-        merge=True,
     )

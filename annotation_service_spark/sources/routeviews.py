@@ -62,7 +62,6 @@ def build_asn_ranges(
         payload=["as_string"],
         partition_by=part,
         seq="seq",
-        merge=True,
     )
     return flat.withColumn(
         "cidr", ipf.range_to_cidr(F.col("ip_low"), F.col("ip_high"))

@@ -59,18 +59,17 @@ def test_merge_sources_alignment(spark):
         [(_d("20100203"), "a1"), (_d("20100401"), "a2")],
         "dataset_date date, path string",
     )
-    out = ao.merge_sources({"geo": geo, "asn": asn}, payload=["path"])
-    rows = {r.dataset_date: (r.geo_path, r.asn_path) for r in out.collect()}
-    assert rows[_d("20100101")] == ("g1", None)
-    assert rows[_d("20100203")] == ("g1", "a1")
-    assert rows[_d("20100301")] == ("g2", "a1")
-    assert rows[_d("20100401")] == ("g2", "a2")
+    out = ao.merge_sources({"geo": geo, "asn": asn})
+    rows = {r.dataset_date: (r.geo_date, r.asn_date) for r in out.collect()}
+    assert rows[_d("20100101")] == (_d("20100101"), None)
+    assert rows[_d("20100203")] == (_d("20100101"), _d("20100203"))
+    assert rows[_d("20100301")] == (_d("20100301"), _d("20100203"))
+    assert rows[_d("20100401")] == (_d("20100301"), _d("20100401"))
 
 
 def test_asof_join_union_bruteforce(spark):
     """Union+window as-of (the no-broadcast SCD path) vs brute force
-    on random data, inclusive and strict modes, incl. ties and
-    probes before any version."""
+    on random data, incl. ties and probes before any version."""
     import random
 
     from annotation_service_spark.operators.asof import asof_join_union
@@ -86,27 +85,19 @@ def test_asof_join_union_bruteforce(spark):
     vdf = spark.createDataFrame(versions, "user_id long, vts long, pay long")
     pdf = spark.createDataFrame(probes, "pid long, user_id long, ts long")
 
-    for inclusive in (True, False):
-        got = {
-            r["pid"]: r["pay"]
-            for r in asof_join_union(
-                pdf, vdf, "ts", "vts", ["pay"], ["user_id"],
-                inclusive=inclusive,
-            ).collect()
-        }
-        for pid, u, ts in probes:
-            cands = [
-                (vt, pay)
-                for (vu, vt, pay) in versions
-                if vu == u and (vt <= ts if inclusive else vt < ts)
-            ]
-            # brute force mirrors the window tie-break: among equal
-            # vts the LAST version row in sort order wins; our sort is
-            # stable only per (ts, tag), so compare the payload SET at
-            # the winning timestamp
-            if not cands:
-                assert got[pid] is None, pid
-            else:
-                best_ts = max(vt for vt, _ in cands)
-                assert got[pid] in {p for vt, p in cands if vt == best_ts}, pid
-        assert len(got) == len(probes)
+    got = {
+        r["pid"]: r["pay"]
+        for r in asof_join_union(pdf, vdf, "ts", "vts", ["pay"], ["user_id"]).collect()
+    }
+    for pid, u, ts in probes:
+        cands = [(vt, pay) for (vu, vt, pay) in versions if vu == u and vt <= ts]
+        # brute force mirrors the window tie-break: among equal
+        # vts the LAST version row in sort order wins; our sort is
+        # stable only per (ts, tag), so compare the payload SET at
+        # the winning timestamp
+        if not cands:
+            assert got[pid] is None, pid
+        else:
+            best_ts = max(vt for vt, _ in cands)
+            assert got[pid] in {p for vt, p in cands if vt == best_ts}, pid
+    assert len(got) == len(probes)

@@ -67,37 +67,3 @@ def test_perceptron_single_class_bias(spark):
     )
     out = cf.perceptron_scores(docs, label=F.lit(1), epochs=2).collect()
     assert all(r.pred == 1 for r in out)
-
-
-def test_averaged_perceptron_learns_and_is_invariant(spark):
-    """Averaged mode: still perfectly separates the planted corpus,
-    still bit-deterministic under repartitioning, and its weights are
-    the epoch SUM (one epoch => averaged == last)."""
-    docs = _corpus(spark, n=120)
-    lab = F.when(F.col("cls") == "pos", 1).otherwise(-1)
-    avg = cf.perceptron_scores(docs, lab, epochs=3, averaged=True).collect()
-    assert all(r.pred == r.label for r in avg)
-    one = {
-        (r.id, r.score)
-        for r in cf.perceptron_scores(
-            docs.repartition(1), lab, epochs=3, averaged=True
-        ).collect()
-    }
-    many = {
-        (r.id, r.score)
-        for r in cf.perceptron_scores(
-            docs.repartition(32), lab, epochs=3, averaged=True
-        ).collect()
-    }
-    assert one == many
-    last1 = {
-        (r.id, r.score)
-        for r in cf.perceptron_scores(docs, lab, epochs=1).collect()
-    }
-    avg1 = {
-        (r.id, r.score)
-        for r in cf.perceptron_scores(
-            docs, lab, epochs=1, averaged=True
-        ).collect()
-    }
-    assert last1 == avg1

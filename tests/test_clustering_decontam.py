@@ -123,7 +123,7 @@ def test_exact_percentile_matches_numpy(spark):
     assert abs(row.approx[0] - want[0]) <= 10.0
 
 
-def test_connected_components_random_differential(spark):
+def test_connected_components_random_differential(spark, monkeypatch):
     """Randomized differential vs a driver-side union-find: 300 edges
     over 120 vertices (fixed seed), labels must match exactly."""
     import random
@@ -154,19 +154,13 @@ def test_connected_components_random_differential(spark):
     got = {r.id: r.cluster_id for r in cl.connected_components(df).collect()}
     assert got == want
     # distributed pointer-jumping path — must agree exactly
-    got_dist = {
-        r.id: r.cluster_id
-        for r in cl.connected_components(df, local_edge_limit=None).collect()
-    }
+    monkeypatch.setattr(cl, "_LOCAL_EDGE_LIMIT", 0)
+    got_dist = {r.id: r.cluster_id for r in cl.connected_components(df).collect()}
     assert got_dist == want
     # gate boundary: a limit smaller than the edge count routes to the
     # distributed path; equal-or-above stays local — same labels both ways
-    got_edge = {
-        r.id: r.cluster_id
-        for r in cl.connected_components(
-            df, local_edge_limit=len(edges) - 1
-        ).collect()
-    }
+    monkeypatch.setattr(cl, "_LOCAL_EDGE_LIMIT", len(edges) - 1)
+    got_edge = {r.id: r.cluster_id for r in cl.connected_components(df).collect()}
     assert got_edge == want
 
 

@@ -587,9 +587,9 @@ def test_ngram_jaccard_max_df_caps_hot_shingles(spark):
     assert (0, 1) not in cont and (1, 0) not in cont
 
 
-def test_cap_shingles_fallback_and_empty_hot_set(spark):
+def test_cap_shingles_fallback_and_empty_hot_set(spark, monkeypatch):
     """r10 ADVICE follow-through: cap_shingles is size-gated — a hot
-    set over ``hot_limit`` must fall back to a shuffle anti-join (no
+    set over ``_HOT_SHINGLE_LIMIT`` must fall back to a shuffle anti-join (no
     forced broadcast of an oversized table) with IDENTICAL results,
     and an EMPTY hot set (nothing above max_df) must pass the table
     through unchanged via the broadcast-literal path."""
@@ -605,10 +605,12 @@ def test_cap_shingles_fallback_and_empty_hot_set(spark):
         # using-joins reorder the key column first; compare by name
         return {tuple(r) for r in df.select("id", "s").collect()}
 
-    # broadcast-literal path (default hot_limit) vs forced shuffle
-    # fallback (hot_limit=0): same capped table, different plans
+    # broadcast-literal path (default limit) vs forced shuffle
+    # fallback (limit 0): same capped table, different plans
     lit_rows = rows_of(dd.cap_shingles(sh, max_df=10))
-    fb = dd.cap_shingles(sh, max_df=10, hot_limit=0)
+    with monkeypatch.context() as m:
+        m.setattr(dd, "_HOT_SHINGLE_LIMIT", 0)
+        fb = dd.cap_shingles(sh, max_df=10)
     fb_rows = rows_of(fb)
     assert lit_rows == fb_rows
     assert len(lit_rows) < sh.count()  # the boilerplate shingles dropped

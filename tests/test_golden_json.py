@@ -178,7 +178,6 @@ def test_family_union_straddling_v6_clip(spark):
         r.ip: r.p
         for r in range_join_broadcast(
             probes, ranges, probe_col="ip", parse_ips=True, payload=["p"],
-            how="left",
         ).collect()
     }
     assert got == {

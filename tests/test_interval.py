@@ -52,9 +52,7 @@ EXPECTED_FLATTEN = [
 
 def test_flatten_truth_table(spark):
     df = _mk_ranges(spark, TRUTH_FLATTEN)
-    flat = iv.flatten_intervals(
-        df, payload=["payload"], seq="seq", merge=True
-    )
+    flat = iv.flatten_intervals(df, payload=["payload"], seq="seq")
     assert _fmt(flat) == EXPECTED_FLATTEN
 
 
@@ -62,7 +60,7 @@ def test_flatten_with_merge_truth_table(spark):
     # iputils_test.go:45-67 — same but custom2→custom1: adjacent-equal merge
     inputs = [(c, "custom1" if p == "custom2" else p) for c, p in TRUTH_FLATTEN]
     df = _mk_ranges(spark, inputs)
-    flat = iv.flatten_intervals(df, payload=["payload"], seq="seq", merge=True)
+    flat = iv.flatten_intervals(df, payload=["payload"], seq="seq")
     assert _fmt(flat) == [
         ("1.0.0.0", "1.0.0.255", "custom1"),
         ("1.0.10.0", "1.0.10.123", "custom3"),
@@ -201,9 +199,7 @@ def test_range_join_broadcast_binary(spark):
     )
     probes = spark.createDataFrame([(q,) for q, _ in SEARCH_QUERIES], "ip string")
     probes = probes.withColumn("ipb", ipf.ip_to_bytes(F.col("ip")))
-    out = iv.range_join_broadcast(
-        probes, ranges, probe_col="ipb", payload=["payload"], how="left"
-    )
+    out = iv.range_join_broadcast(probes, ranges, probe_col="ipb", payload=["payload"])
     got = {r.ip: r.payload for r in out.collect()}
     assert got == dict(SEARCH_QUERIES)
 
@@ -258,41 +254,37 @@ def test_range_join_broadcast_prunes_unreferenced_snapshots(spark):
 
     out = iv.range_join_broadcast(
         probes, ranges, probe_col="v", low="low", high="high",
-        payload=["payload"], how="left", keys=["dataset_date"],
+        payload=["payload"], keys=["dataset_date"],
     )
     for r in out.collect():
         assert r.payload == f"{r.dataset_date.isoformat()}:p{r.v // 100}"
 
 
-def test_range_join_broadcast_size_gate_falls_back_to_bucketed(spark):
+def test_range_join_broadcast_size_gate_falls_back_to_bucketed(spark, monkeypatch):
+    """Past the gate a long-bound table raises with an error naming
+    ``range_join_bucketed``; that shuffle join answers exactly like
+    the memoized broadcast under the gate."""
     dates, ranges, probes = _snapshot_fixture(spark)
-    a = iv.range_join_broadcast(
-        probes, ranges, probe_col="v", low="low", high="high",
-        payload=["payload"], how="left", keys=["dataset_date"],
-    )
-    b = iv.range_join_broadcast(
-        probes, ranges, probe_col="v", low="low", high="high",
-        payload=["payload"], how="left", keys=["dataset_date"],
-        max_broadcast_bytes=1,  # force the bucketed fallback
-    )
+    kw = dict(probe_col="v", low="low", high="high", payload=["payload"], keys=["dataset_date"])
+    a = iv.range_join_broadcast(probes, ranges, **kw)
+    b = iv.range_join_bucketed(probes, ranges, **kw)
     la = sorted((r.pid, r.payload) for r in a.collect())
     lb = sorted((r.pid, r.payload) for r in b.collect())
     assert la == lb
+    monkeypatch.setattr(iv, "MAX_BROADCAST_BYTES", 1)
+    with pytest.raises(ValueError, match="range_join_bucketed"):
+        iv.range_join_broadcast(probes, ranges, **kw)
 
 
-def test_range_join_broadcast_size_gate_raises_for_binary(spark):
-    import pytest as _pytest
-
+def test_range_join_broadcast_size_gate_raises_for_binary(spark, monkeypatch):
     ranges = iv.flatten_intervals(
         _mk_ranges(spark, TRUTH_FLATTEN), payload=["payload"], seq="seq"
     )
     probes = spark.createDataFrame([("1.0.0.5",)], "ip string")
     probes = probes.withColumn("ipb", ipf.ip_to_bytes(F.col("ip")))
-    with _pytest.raises(ValueError, match="bucketed fallback"):
-        iv.range_join_broadcast(
-            probes, ranges, probe_col="ipb", payload=["payload"],
-            max_broadcast_bytes=1,
-        )
+    monkeypatch.setattr(iv, "MAX_BROADCAST_BYTES", 1)
+    with pytest.raises(ValueError, match="range_join_bucketed"):
+        iv.range_join_broadcast(probes, ranges, probe_col="ipb", payload=["payload"])
 
 
 # --- J1 build once per published table --------------------------------------
@@ -420,7 +412,7 @@ def test_range_join_broadcast_concurrent_misses_build_once(spark, tmp_path):
         assert _payloads(out) == _expected(probes, "-v2" if i % 2 else "")
 
 
-def test_range_join_broadcast_memo_matches_pruned_path(spark, tmp_path):
+def test_range_join_broadcast_memo_matches_pruned_path(spark, tmp_path, monkeypatch):
     """Past the size gate each call prunes to the snapshots its probes
     reference; under it the whole table is built once. Same answer."""
     dates, ranges, probes = _snapshot_fixture(spark)
@@ -430,10 +422,12 @@ def test_range_join_broadcast_memo_matches_pruned_path(spark, tmp_path):
         ranges.schema,
     )
     ranges = _published(spark, tmp_path, ranges.unionByName(unreferenced), "v1")
-    gate = iv._estimated_bytes(ranges) - 1  # the whole table no longer fits
-    pruned = iv.range_join_broadcast(probes, ranges, max_broadcast_bytes=gate, **MEMO_KW)
+    # the whole table no longer fits
+    monkeypatch.setattr(iv, "MAX_BROADCAST_BYTES", iv._estimated_bytes(ranges) - 1)
+    pruned = iv.range_join_broadcast(probes, ranges, **MEMO_KW)
     assert ranges not in iv._BUILDS
     assert "MapInPandas" in pruned._jdf.queryExecution().executedPlan().toString()
+    monkeypatch.undo()
     memo = iv.range_join_broadcast(probes, ranges, **MEMO_KW)
     assert ranges in iv._BUILDS
     assert _payloads(memo) == _payloads(pruned) == _expected(probes)
@@ -494,31 +488,25 @@ def _rows(df):
     )
 
 
-@pytest.mark.parametrize("how", ["left", "inner"])
-def test_range_join_broadcast_several_tables_equals_composition(spark, how):
+def test_range_join_broadcast_several_tables_equals_composition(spark):
     """One multi-table call answers exactly like two chained single-table
     calls: v4, v6, 6to4, invalid text, and a key group (d2) that only
     one table has."""
     a, b, probes = _ip_tables(spark)
-    kw = dict(probe_col="ip", keys=["dataset_date"], parse_ips=True, how=how)
+    kw = dict(probe_col="ip", keys=["dataset_date"], parse_ips=True)
     multi = iv.range_join_broadcast(probes, [(a, ["geo"]), (b, ["net"])], **kw)
     chained = iv.range_join_broadcast(
         iv.range_join_broadcast(probes, a, payload=["geo"], **kw), b, payload=["net"], **kw
     )
     assert multi.columns == ["pid", "ip", "dataset_date", "geo", "net"]
     assert _rows(multi) == _rows(chained)
-    if how == "left":
-        got = {(r.dataset_date.year, r.ip): (r.geo, r.net) for r in multi.collect()}
-        assert got[(2020, "1.0.0.5")] == ("a2020:au", "b2020:as1")
-        assert got[(2020, "2002:0100:0005::1")] == ("a2020:au", "b2020:as1")
-        assert got[(2020, " 1.0.0.5")] == ("a2020:au", "b2020:as1")
-        assert got[(2020, "2001:db8:1::1")] == ("a2020:doc", None)
-        assert got[(2021, "1.0.0.5")] == ("a2021:au", None)  # b has no d2
-        assert got[(2021, "junk")] == got[(2021, None)] == (None, None)
-    else:
-        assert {r.ip for r in multi.collect()} == {
-            "1.0.0.5", "2001:db8::1", "2002:0100:0005::1", " 1.0.0.5"
-        }
+    got = {(r.dataset_date.year, r.ip): (r.geo, r.net) for r in multi.collect()}
+    assert got[(2020, "1.0.0.5")] == ("a2020:au", "b2020:as1")
+    assert got[(2020, "2002:0100:0005::1")] == ("a2020:au", "b2020:as1")
+    assert got[(2020, " 1.0.0.5")] == ("a2020:au", "b2020:as1")
+    assert got[(2020, "2001:db8:1::1")] == ("a2020:doc", None)
+    assert got[(2021, "1.0.0.5")] == ("a2021:au", None)  # b has no d2
+    assert got[(2021, "junk")] == got[(2021, None)] == (None, None)
 
 
 def test_range_join_broadcast_several_tables_reuse_single_builds(spark, tmp_path):
@@ -553,17 +541,15 @@ def test_range_join_broadcast_several_tables_reuse_single_builds(spark, tmp_path
     ]
 
 
-def test_range_join_broadcast_several_tables_past_gate_raises(spark):
-    """A table past the gate has no bucketed fallback inside a
-    multi-table call; alone, the same table still falls back."""
+def test_range_join_broadcast_several_tables_past_gate_raises(spark, monkeypatch):
+    """A table past the gate raises inside a multi-table call too."""
     dates, ranges, probes = _snapshot_fixture(spark)
-    kw = dict(probe_col="v", low="low", high="high", keys=["dataset_date"], max_broadcast_bytes=1)
-    with pytest.raises(ValueError, match="several tables"):
+    kw = dict(probe_col="v", low="low", high="high", keys=["dataset_date"])
+    monkeypatch.setattr(iv, "MAX_BROADCAST_BYTES", 1)
+    with pytest.raises(ValueError, match="range_join_bucketed"):
         iv.range_join_broadcast(
             probes, [(ranges, ["payload"]), (ranges.withColumnRenamed("payload", "p2"), ["p2"])], **kw
         )
-    alone = iv.range_join_broadcast(probes, ranges, payload=["payload"], **kw)
-    assert _payloads(alone) == _expected(probes)
 
 
 # ---------------------------------------------------------------------------
@@ -607,12 +593,11 @@ def test_overlap_join_matches_brute_force(spark):
 
 
 def test_overlap_join_with_keys(spark):
+    """An equality key is the caller's filter on the overlap pairs."""
     left = [(1, "u", 0, 100), (2, "v", 0, 100)]
     right = [(10, "u", 50, 60), (11, "v", 50, 60), (12, "w", 50, 60)]
-    ldf = spark.createDataFrame(left, "lid long, k string, ls long, le long")
-    rdf = spark.createDataFrame(right, "rid long, k string, rs long, re long")
-    out = iv.interval_overlap_join(
-        ldf, rdf, "ls", "le", "rs", "re", cell_width=100, keys=["k"]
-    )
-    pairs = sorted((r.lid, r.rid) for r in out.collect())
+    ldf = spark.createDataFrame(left, "lid long, lk string, ls long, le long")
+    rdf = spark.createDataFrame(right, "rid long, rk string, rs long, re long")
+    out = iv.interval_overlap_join(ldf, rdf, "ls", "le", "rs", "re", cell_width=100)
+    pairs = sorted((r.lid, r.rid) for r in out.where(F.col("lk") == F.col("rk")).collect())
     assert pairs == [(1, 10), (2, 11)]

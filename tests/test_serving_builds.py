@@ -44,7 +44,7 @@ def reference_annotate(requests, geo_ranges, locations, asn_ranges, asnames,
         keys = ["dataset_date"]
     hits = iv.range_join_broadcast(
         probes, [(geo_ranges, an.GEO_PAYLOAD), (asn_ranges, an.ASN_PAYLOAD)],
-        probe_col="ip", how="left", keys=keys, parse_ips=True,
+        probe_col="ip", keys=keys, parse_ips=True,
     )
     locs = locations.select("geoname_id", *an.LOCATION_ATTRS)
     with_loc = hits.join(F.broadcast(locs), hits["gid"] == locs["geoname_id"], "left")

@@ -355,18 +355,15 @@ def test_ann_ivfpq_recall_planted(spark):
     assert recall >= 0.8, recall
 
 
-def test_embedding_dup_pairs_size_gate(spark, vec_df):
+def test_embedding_dup_pairs_size_gate(spark, vec_df, monkeypatch):
     """VERDICT r7 #1: the exact all-pairs path is size-gated like
     range_join_broadcast — past the cap it refuses with a message
     naming the LSH fallback instead of collecting the corpus to the
     driver; the LSH path ignores the cap (it never collects)."""
+    monkeypatch.setattr(sim.interval, "MAX_BROADCAST_BYTES", 1024)
     with pytest.raises(ValueError, match="use_lsh=True"):
-        sim.embedding_dup_pairs(
-            vec_df, threshold=0.99, max_broadcast_bytes=1024
-        )
-    lsh = sim.embedding_dup_pairs(
-        vec_df, threshold=0.99, use_lsh=True, max_broadcast_bytes=1024
-    )
+        sim.embedding_dup_pairs(vec_df, threshold=0.99)
+    lsh = sim.embedding_dup_pairs(vec_df, threshold=0.99, use_lsh=True)
     assert lsh.count() >= 0  # plans and runs
 
 

@@ -115,14 +115,14 @@ def test_blocks_error_budget(spark, tmp_path):
 
     p1 = tmp_path / "one_bad.csv"
     p1.write_text(hdr + ok_row + bad_row)
-    df = geolite2.geolite2_blocks(spark, str(p1), strict=True)
+    df = geolite2.geolite2_blocks(spark, str(p1))
     rows = df.collect()
     assert [r.network for r in rows] == ["1.0.0.0/24"]  # bad row skipped
 
     p2 = tmp_path / "many_bad.csv"
     p2.write_text(hdr + ok_row + bad_row * 51)
     with pytest.raises(geolite2.ErrTooManyErrors):
-        geolite2.geolite2_blocks(spark, str(p2), strict=True)
+        geolite2.geolite2_blocks(spark, str(p2))
 
 
 def test_pfx2as_and_asn_ranges(spark, fixture_dir):
@@ -349,11 +349,10 @@ def test_zorder_key_properties(spark):
 
 def test_blocks_malformed_records(spark, tmp_path):
     """Malformed CSV records (here an extra-columns row and an
-    unterminated quote) abort a strict load and are dropped from a
-    lenient one — consistently across actions. Both hold only because
-    the file is read with CSV column pruning off: a pruned scan parses
-    just the columns a query needs, which hides ``_corrupt_record``
-    from the budget check and from ``count()``."""
+    unterminated quote) abort the load (loader/csv-reader.go:17-19).
+    This holds only because the file is read with CSV column pruning
+    off: a pruned scan parses just the columns a query needs, which
+    hides ``_corrupt_record`` from the budget check."""
     hdr = "network,geoname_id,registered_country_geoname_id,represented_country_geoname_id,is_anonymous_proxy,is_satellite_provider,postal_code,latitude,longitude,accuracy_radius\n"
     ok_row = "1.0.0.0/24,1,2,,0,0,x,1.0,10.0,5\n"
     extra_cols = "1.0.1.0/24,1,2,,0,0,x,1.0,10.0,5,surplus,columns\n"
@@ -361,8 +360,4 @@ def test_blocks_malformed_records(spark, tmp_path):
     p = tmp_path / "malformed.csv"
     p.write_text(hdr + ok_row + extra_cols + open_quote)
     with pytest.raises(geolite2.ErrTooManyErrors, match="2 malformed"):
-        geolite2.geolite2_blocks(spark, str(p), strict=True)
-    df = geolite2.geolite2_blocks(spark, str(p), strict=False)
-    rows = df.collect()
-    assert [r.network for r in rows] == ["1.0.0.0/24"]
-    assert df.count() == len(rows)
+        geolite2.geolite2_blocks(spark, str(p))

@@ -41,8 +41,7 @@ def _ranges_df(spark, brand: str):
 
 def _annotate(probes, ranges):
     joined = iv.range_join_broadcast(
-        probes, ranges, probe_col="ip", payload=["brand"], how="left",
-        parse_ips=True,
+        probes, ranges, probe_col="ip", payload=["brand"], parse_ips=True,
     )
     return joined.select(
         "req_id", "ip", F.coalesce("brand", F.lit("MISSING")).alias("brand")
